@@ -20,6 +20,7 @@ sequential fixpoint oracles instead (tests/).
 
 from __future__ import annotations
 
+import dataclasses
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -97,7 +98,7 @@ def _stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _STAGE_CACHE:
         t = transcripts_from_events(spark, sf_dir)
-        stages = build_graph(t, ENTRY_CFG, persist_intermediate=True)
+        stages = build_graph(t, dataclasses.replace(ENTRY_CFG, persist_intermediate=True))
         # raw_records is the expensive intermediate (the extraction UDF);
         # nodes and edges both branch off it, so an unpersisted plan runs
         # extraction twice.  text_units backs the mentions/chunk queries.

@@ -251,11 +251,9 @@ def main(argv=None) -> dict:
     args = parse_args(argv)
     spark = get_spark(app_name="corpus-pipeline", master=args.master)
     io = TableIO(spark, base=args.output, catalog=args.iceberg)
-    if args.force:
-        import shutil
-
-        shutil.rmtree(os.path.join(args.output, "_manifests"), ignore_errors=True)
     runner = StageRunner(io)
+    if args.force:
+        runner.clear()
 
     docs = spark.read.parquet(os.path.join(args.input, "documents.parquet"))
 

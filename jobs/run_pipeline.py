@@ -18,49 +18,25 @@ Sandbox usage (parquet fallback, local master):
     python jobs/run_pipeline.py --input /root/testdata/sf0.01 --from-events \
       --output /tmp/kg_out
 
-Stages are checkpointed (knowledge_graph_spark.checkpoint): re-running
-with the same --output resumes after the last completed stage; pass
---force to rebuild everything.  The transcripts scan is repartitioned by
-hash(conv_id) before extraction (north rule) sized by shuffle.partitions.
+The stages, their order and the transcripts placement are
+``knowledge_graph_spark.pipeline.STAGES``; this job runs each one through
+``knowledge_graph_spark.checkpoint.StageRunner``: re-running with the same
+--output resumes after the last completed stage; pass --force to rebuild
+everything.
 """
 
 from __future__ import annotations
 
 import argparse
-import os
 import sys
+from functools import partial
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from knowledge_graph_spark.checkpoint import StageRunner  # noqa: E402
 from knowledge_graph_spark.io import TableIO  # noqa: E402
-from knowledge_graph_spark.operators.agent_trace import (  # noqa: E402
-    tool_transitions,
-    turn_latency,
-)
-from knowledge_graph_spark.operators.assemble import assemble_conversations  # noqa: E402
-from knowledge_graph_spark.operators.chunk import split_text_units  # noqa: E402
-from knowledge_graph_spark.operators.claims import extract_claims  # noqa: E402
-from knowledge_graph_spark.operators.community import (  # noqa: E402
-    hierarchical_lpa,
-    label_propagation,
-)
-from knowledge_graph_spark.operators.extract import emit_records  # noqa: E402
-from knowledge_graph_spark.operators.graphops import (  # noqa: E402
-    node_degrees,
-    with_edge_ids,
-    with_edge_rank,
-    with_node_ids,
-)
-from knowledge_graph_spark.operators.parse import parse_and_merge  # noqa: E402
-from knowledge_graph_spark.operators.reports import (  # noqa: E402
-    community_hierarchy,
-    leveled_reports,
-)
-from knowledge_graph_spark.operators.summarize import summarize_descriptions  # noqa: E402
+from knowledge_graph_spark.pipeline import SOURCE, STAGES, PipelineConfig, source  # noqa: E402
 from knowledge_graph_spark.session import get_spark  # noqa: E402
 from knowledge_graph_spark.synth import transcripts_from_events  # noqa: E402
 
@@ -83,12 +59,9 @@ def parse_args(argv=None):
 def main(argv=None) -> dict:
     args = parse_args(argv)
     spark = get_spark(app_name="kg-construct", master=args.master)
-    io = TableIO(spark, base=args.output, catalog=args.iceberg)
+    runner = StageRunner(TableIO(spark, base=args.output, catalog=args.iceberg))
     if args.force:
-        import shutil
-
-        shutil.rmtree(os.path.join(args.output, "_manifests"), ignore_errors=True)
-    runner = StageRunner(io)
+        runner.clear()
 
     if args.from_events:
         transcripts = transcripts_from_events(spark, args.input)
@@ -97,115 +70,37 @@ def main(argv=None) -> dict:
     else:
         transcripts = spark.read.parquet(args.input)
 
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    transcripts = transcripts.repartition(n_part, F.hash("conv_id"))
-
-    conv_docs = runner.run(
-        "conv_docs", lambda: assemble_conversations(transcripts), inputs=[]
+    cfg = PipelineConfig(
+        chunk_size=args.chunk_size,
+        chunk_overlap=args.chunk_overlap,
+        tokenizer=args.tokenizer,
+        max_cluster_size=args.max_cluster_size,
+        persist_intermediate=True,
     )
-    text_units = runner.run(
-        "text_units",
-        lambda: split_text_units(
-            conv_docs, size=args.chunk_size, overlap=args.chunk_overlap, tokenizer=args.tokenizer
-        ),
-        inputs=["conv_docs"],
-        partition_by=None,
-    )
-    raw_records = runner.run(
-        "raw_records", lambda: emit_records(text_units), inputs=["text_units"]
-    )
-
-    # parse once: both outputs branch from one persisted record explode
-    # (persist_intermediate), so the nodes and edges stage actions share
-    # the parse work instead of re-running it
-    _parsed: dict = {}
-
-    def _graph(which: str):
-        if not _parsed:
-            _parsed["nodes"], _parsed["edges"] = parse_and_merge(
-                raw_records, persist_intermediate=True
-            )
-        return _parsed[which]
-
-    # nodes/edges are bucketed on their join keys: every later title-keyed
-    # equi-join (degrees, communities, canonicalization) against another
-    # bucketed table — including after a fresh-session resume — skips its
-    # Exchange (asserted in tests/test_physical_plans.py)
-    nodes = runner.run(
-        "nodes", lambda: _graph("nodes"), inputs=["raw_records"], bucket_by=["title"]
-    )
-    edges = runner.run(
-        "edges", lambda: _graph("edges"), inputs=["raw_records"], bucket_by=["source"]
-    )
-    degrees = runner.run("degrees", lambda: node_degrees(edges), inputs=["edges"])
-    nodes_final = runner.run(
-        "nodes_final",
-        lambda: with_node_ids(
-            summarize_descriptions(nodes.join(degrees, "title", "left"))
-        ),
-        inputs=["nodes", "degrees"],
-    )
-    edges_final = runner.run(
-        "edges_final",
-        lambda: with_edge_ids(
-            summarize_descriptions(
-                with_edge_rank(edges, degrees).withColumn(
-                    "pair", F.concat_ws("->", "source", "target")
-                ),
-                title_col="pair",
-            ).drop("pair")
-        ),
-        inputs=["edges", "degrees"],
-    )
-    communities = runner.run(
-        "communities",
-        lambda: label_propagation(nodes, edges),
-        inputs=["nodes", "edges"],
-    )
-    communities_leveled = runner.run(
-        "communities_leveled",
-        lambda: hierarchical_lpa(nodes, edges, max_cluster_size=args.max_cluster_size),
-        inputs=["nodes", "edges"],
-    )
-    hierarchy = runner.run(
-        "community_hierarchy",
-        lambda: community_hierarchy(communities_leveled),
-        inputs=["communities_leveled"],
-    )
-    claims = runner.run(
-        "claims", lambda: extract_claims(transcripts), inputs=[]
-    )
-    # agent-trace views: tool-call Markov transitions + per-conversation
-    # response-latency profile (exact int64 micros).  Both reuse the
-    # conv_id-hash partitioning the transcripts scan already has.
-    runner.run(
-        "tool_transitions", lambda: tool_transitions(transcripts), inputs=[]
-    )
-    runner.run("turn_latency", lambda: turn_latency(transcripts), inputs=[])
-    # hierarchical reports: level-ordered, deepest first, oversized
-    # parents substituting sub-community report summaries (R11/R12) —
-    # the reference's headline flow (pre_community_report_context.py)
-    reports = runner.run(
-        "community_reports",
-        lambda: leveled_reports(
-            nodes,
-            degrees,
-            with_edge_rank(edges, degrees),
-            communities_leveled,
-            claims=claims,
-        ),
-        inputs=["nodes", "edges", "degrees", "communities_leveled", "claims"],
-    )
+    t = source(transcripts)
+    for stage in STAGES:
+        t[stage.name] = runner.run(
+            stage.name,
+            partial(stage.make, t, cfg),
+            inputs=[i for i in stage.inputs if i != SOURCE],
+            bucket_by=stage.bucket_by,
+        )
+        if stage.name == "edges" and "split_records" in t:
+            # nodes and edges are committed: release the parse they shared
+            t.pop("split_records").unpersist()
 
     summary = {
         "computed": runner.computed,
         "skipped": runner.skipped,
         "rows": {
-            "nodes": nodes_final.count(),
-            "edges": edges_final.count(),
-            "communities": communities.count(),
-            "claims": claims.count(),
-            "community_reports": reports.count(),
+            key: runner.manifest(name)["rows"]
+            for key, name in (
+                ("nodes", "nodes_final"),
+                ("edges", "edges_final"),
+                ("communities", "communities"),
+                ("claims", "claims"),
+                ("community_reports", "community_reports"),
+            )
         },
     }
     print(summary)

@@ -18,49 +18,56 @@ The manifest records lineage (input stage names + their manifest
 fingerprints), row count, per-partition row counts (skew diagnosable
 post-hoc), stage wall-clock and materialized files/bytes (per-stage cost
 accounting), and an order-insensitive content fingerprint (xor of row
-xxhash64) — cheap (one pass, map-side combinable) and stable across
-shuffle order, so downstream runs can verify an upstream table hasn't
-drifted without re-reading it.
+xxhash64) — stable across shuffle order, so downstream runs can verify an
+upstream table hasn't drifted without re-reading it.  Row count,
+per-partition counts and fingerprint come from one aggregation over the
+read-back table, keyed by partition id: one Spark action per stage.
 """
 
 from __future__ import annotations
 
 import json
 import time
+from functools import reduce
+from operator import xor
+from typing import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .io import TableIO
 
+MANIFESTS = "_manifests"
+N_BUCKETS = 64
+
+
+def _row_hash(df: DataFrame) -> Column:
+    """xxhash64 over all columns, cast to string for type stability."""
+    return F.xxhash64(*[F.coalesce(F.col(c).cast("string"), F.lit("\0")) for c in df.columns])
+
 
 def content_fingerprint(df: DataFrame) -> int:
     """Order-insensitive fingerprint: XOR of per-row xxhash64 over all
-    columns (cast to string for type stability).  One narrow pass +
-    map-side partial agg; XOR commutes, never overflows (ANSI-safe)."""
-    cols = [F.coalesce(F.col(c).cast("string"), F.lit("\0")) for c in df.columns]
-    row = df.select(F.xxhash64(*cols).alias("h"))
-    out = row.agg(F.expr("bit_xor(h)").alias("fp")).collect()[0].fp
-    return int(out or 0)
+    columns.  One narrow pass + map-side partial agg; XOR commutes, never
+    overflows (ANSI-safe)."""
+    return int(df.agg(F.bit_xor(_row_hash(df))).first()[0] or 0)
 
 
-def partition_profile(df: DataFrame) -> list[int]:
-    """Rows per physical partition at write time (skew diagnostics)."""
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("pid"))
-        .count()
-        .orderBy("pid")
-        .collect()
+def _readback(df: DataFrame) -> tuple[list[int], int]:
+    """(rows per physical partition, content fingerprint) in ONE action:
+    the per-partition XORs combine to the table's XOR."""
+    per_partition = df.groupBy(F.spark_partition_id().alias("pid")).agg(
+        F.count("*").alias("rows"), F.bit_xor(_row_hash(df)).alias("fp")
     )
-    return [int(r["count"]) for r in rows]
+    rows = sorted(per_partition.collect())
+    return [int(r.rows) for r in rows], reduce(xor, (int(r.fp) for r in rows), 0)
 
 
 class StageRunner:
     """Sequential checkpointed execution of named pipeline stages."""
 
-    def __init__(self, io: TableIO, fingerprint: bool = True):
+    def __init__(self, io: TableIO):
         self.io = io
-        self.fingerprint = fingerprint
         self.computed: list[str] = []
         self.skipped: list[str] = []
 
@@ -68,11 +75,16 @@ class StageRunner:
         # through the table Hadoop FS, so manifests live next to the data
         # on any scheme (file://, hdfs://, s3a://) — pathlib would mangle
         # URIs and strand them on the driver's local disk
-        return f"_manifests/{name}.json"
+        return f"{MANIFESTS}/{name}.json"
 
     def manifest(self, name: str) -> dict | None:
         text = self.io.read_text(self._manifest_rel(name))
         return json.loads(text) if text is not None else None
+
+    def clear(self) -> None:
+        """Forget every checkpoint (``--force``): delete the manifests, so
+        each stage recomputes and overwrites its table."""
+        self.io.remove(MANIFESTS)
 
     def is_done(self, name: str, inputs: list[str] | None = None) -> bool:
         """Manifest + table present AND recorded input fingerprints still
@@ -94,9 +106,7 @@ class StageRunner:
         name: str,
         make: "callable[[], DataFrame]",
         inputs: list[str] | None = None,
-        partition_by: list[str] | None = None,
-        bucket_by: list[str] | None = None,
-        n_buckets: int = 64,
+        bucket_by: Sequence[str] = (),
     ) -> DataFrame:
         t0 = time.time()
         if self.is_done(name, inputs):
@@ -113,24 +123,25 @@ class StageRunner:
             return self.io.read(name)
         df = make()
         if bucket_by:
-            self.io.write_bucketed(df, name, bucket_by, n_buckets=n_buckets)
+            self.io.write_bucketed(df, name, list(bucket_by), n_buckets=N_BUCKETS)
             out = self.io.read_bucketed(name)
         else:
-            self.io.write(df, name, partition_by=partition_by)
+            self.io.write(df, name)
             out = self.io.read(name)
+        partition_rows, fingerprint = _readback(out)
         manifest = {
             "stage": name,
-            "rows": out.count(),
-            "partition_rows": partition_profile(out),
+            "rows": sum(partition_rows),
+            "partition_rows": partition_rows,
             "inputs": {
                 i: (self.manifest(i) or {}).get("fingerprint") for i in (inputs or [])
             },
-            "fingerprint": content_fingerprint(out) if self.fingerprint else None,
+            "fingerprint": fingerprint,
             "schema": out.schema.simpleString(),
             "schema_json": out.schema.json(),
-            "bucket_by": bucket_by,
-            "n_buckets": n_buckets if bucket_by else None,
-            # stage metrics: compute+write+count wall clock and the
+            "bucket_by": list(bucket_by) or None,
+            "n_buckets": N_BUCKETS if bucket_by else None,
+            # stage metrics: compute+write+read-back wall clock and the
             # materialized footprint (skew + cost accounting per stage)
             "wall_s": round(time.time() - t0, 3),
             **self.io.table_stats(name),

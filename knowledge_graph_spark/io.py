@@ -18,6 +18,7 @@ and `checkpoint.py` layers marker files + lineage manifests on top.
 
 from __future__ import annotations
 
+import hashlib
 import json
 from dataclasses import dataclass
 
@@ -76,19 +77,11 @@ class TableIO:
     def path(self, name: str) -> str:
         return f"{self.base}/{name}"
 
-    def write(self, df: DataFrame, name: str, partition_by: list[str] | None = None) -> None:
+    def write(self, df: DataFrame, name: str) -> None:
         if self.catalog:
-            w = df.writeTo(self._ident(name)).using("iceberg")
-            if partition_by:
-                from pyspark.sql import functions as F
-
-                w = w.partitionedBy(*[F.col(c) for c in partition_by])
-            w.createOrReplace()
+            df.writeTo(self._ident(name)).using("iceberg").createOrReplace()
             return
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.path(name))
+        df.write.mode("overwrite").parquet(self.path(name))
 
     def read(self, name: str) -> DataFrame:
         if self.catalog:
@@ -125,14 +118,22 @@ class TableIO:
         w = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, *bucket_cols)
         if sort_cols:
             w = w.sortBy(*sort_cols)
-        self.spark.sql(f"DROP TABLE IF EXISTS `{name}`")
+        table = self.bucketed_table(name)
+        self.spark.sql(f"DROP TABLE IF EXISTS `{table}`")
         # external table: DROP leaves files — clear the path so stale
         # bucket files from a previous run never mix into the new table
         self.delete(name)
-        w.option("path", self.path(name)).saveAsTable(name)
+        w.option("path", self.path(name)).saveAsTable(table)
+
+    def bucketed_table(self, name: str) -> str:
+        """Session-catalog name of the bucketed table at ``path(name)``.
+        Keyed by location: two outputs' same-named stages must never
+        resolve to each other's files."""
+        digest = hashlib.sha1(self.path(name).encode("utf-8")).hexdigest()[:16]
+        return f"{name}_{digest}"
 
     def read_bucketed(self, name: str) -> DataFrame:
-        return self.spark.table(name) if not self.catalog else self.read(name)
+        return self.spark.table(self.bucketed_table(name)) if not self.catalog else self.read(name)
 
     def ensure_bucketed(
         self,
@@ -140,7 +141,6 @@ class TableIO:
         schema_json: str,
         bucket_cols: list[str],
         n_buckets: int,
-        sort_cols: list[str] | None = None,
     ) -> None:
         """Re-register a bucketed table in a FRESH session (resume path):
         the default in-memory catalog forgets table metadata across
@@ -148,16 +148,16 @@ class TableIO:
         the exchange-free join property the bucketing bought.  Registers
         an external bucketed table over the existing files (bucket ids
         are recovered from the bucketed file names)."""
-        if self.catalog or self.spark.catalog.tableExists(name):
+        table = self.bucketed_table(name)
+        if self.catalog or self.spark.catalog.tableExists(table):
             return
         ddl = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}"
             for f in _schema_from_json(schema_json).fields
         )
-        sorted_clause = f" SORTED BY ({', '.join(sort_cols)})" if sort_cols else ""
         self.spark.sql(
-            f"CREATE TABLE `{name}` ({ddl}) USING PARQUET "
-            f"CLUSTERED BY ({', '.join(bucket_cols)}){sorted_clause} "
+            f"CREATE TABLE `{table}` ({ddl}) USING PARQUET "
+            f"CLUSTERED BY ({', '.join(bucket_cols)}) "
             f"INTO {n_buckets} BUCKETS LOCATION '{self.path(name)}'"
         )
 
@@ -206,6 +206,12 @@ class TableIO:
     def text_exists(self, relpath: str) -> bool:
         fs, p = self._fs_path(relpath)
         return fs.exists(p)
+
+    def remove(self, relpath: str) -> None:
+        """Recursively delete a file or directory under ``base``."""
+        fs, p = self._fs_path(relpath)
+        if fs.exists(p):
+            fs.delete(p, True)
 
     def compact(self, name: str, target_file_bytes: int = 128 * 1024 * 1024) -> dict:
         """Rewrite a table into size-targeted files.
@@ -285,6 +291,4 @@ class TableIO:
         if self.catalog:
             self.spark.sql(f"DROP TABLE IF EXISTS {self._ident(name)}")
             return
-        fs, p = self._fs_path(name)
-        if fs.exists(p):
-            fs.delete(p, True)
+        self.remove(name)

@@ -38,6 +38,7 @@ state size is O(graph), not O(stream).
 from __future__ import annotations
 
 import json
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -121,7 +122,7 @@ def fold_batch(
     ):
         return  # replay of a fully-committed batch
     k = int(state["version"]) if state is not None else -1
-    stages = build_graph(batch_df, cfg, persist_intermediate=True)
+    stages = build_graph(batch_df, replace(cfg, persist_intermediate=True))
     new_nodes = stages["nodes"].persist()
     new_edges = stages["edges"].persist()
     if k >= 0:

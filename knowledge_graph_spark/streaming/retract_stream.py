@@ -38,6 +38,7 @@ v{k}; replay of a committed epoch is skipped.
 from __future__ import annotations
 
 import json
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -297,7 +298,7 @@ def fold_insert_batch(
         return
     k = int(state["version"]) if state is not None else -1
     segments = list((state or {}).get("segments", []))
-    stages = build_graph(batch_df, cfg, persist_intermediate=True)
+    stages = build_graph(batch_df, replace(cfg, persist_intermediate=True))
     records = stages["raw_records"].persist()
     new_nodes = stages["nodes"].persist()
     new_edges = stages["edges"].persist()

@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 
 from knowledge_graph_spark.checkpoint import StageRunner, content_fingerprint
 from knowledge_graph_spark.io import TableIO
+from knowledge_graph_spark.operators.community import label_propagation
+from knowledge_graph_spark.pipeline import STAGES
 
 
 @pytest.fixture()
@@ -52,6 +54,57 @@ def test_manifest_records_lineage_and_fingerprint(spark, io):
     assert mb["bytes"] > 0 and mb["files"] >= 1
 
 
+def test_readback_is_one_spark_action(spark, io, monkeypatch):
+    """After the stage write, run() submits ONE Spark action: the row
+    count, per-partition profile and fingerprint come from one
+    aggregation, with the values the separate passes give."""
+    sc = spark.sparkContext
+    group = "readback-probe"
+    write = TableIO.write
+
+    def write_then_tag(self, df, name):
+        write(self, df, name)
+        sc.setLocalProperty("spark.jobGroup.id", group)
+
+    monkeypatch.setattr(TableIO, "write", write_then_tag)
+    try:
+        out = StageRunner(io).run("s", lambda: spark.range(100).repartition(3), inputs=[])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    readback_jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    actions = set()
+    for i in range(executions.size()):
+        e = executions.apply(i)
+        jobs = {int(j) for j in e.jobs().keys().mkString(",").split(",") if j}
+        if jobs & readback_jobs:
+            actions.add(e.executionId())
+    assert len(actions) == 1
+
+    m = json.loads((Path(io.base) / "_manifests" / "s.json").read_text())
+    profile = out.groupBy(F.spark_partition_id().alias("pid")).count().collect()
+    assert m["rows"] == out.count() == 100
+    assert m["partition_rows"] == [r["count"] for r in sorted(profile)]
+    assert m["fingerprint"] == content_fingerprint(out)
+
+
+def test_bucketed_resume_reads_its_own_output(spark, tmp_path):
+    """Two outputs with a same-named bucketed stage: resuming one must
+    serve its own files, not the table the other output registered last."""
+
+    def titles(*values):
+        return lambda: spark.createDataFrame([(v,) for v in values], "title string")
+
+    io_a = TableIO(spark, base=str(tmp_path / "a"))
+    io_b = TableIO(spark, base=str(tmp_path / "b"))
+    StageRunner(io_a).run("nodes", titles("A1", "A2"), bucket_by=["title"])
+    StageRunner(io_b).run("nodes", titles("B1"), bucket_by=["title"])
+    resumed = StageRunner(io_a)
+    got = resumed.run("nodes", titles("unused"), bucket_by=["title"])
+    assert resumed.skipped == ["nodes"]
+    assert sorted(r.title for r in got.collect()) == ["A1", "A2"]
+
+
 def test_fingerprint_is_order_insensitive(spark):
     df = spark.range(100).select(F.col("id"))
     shuffled = df.repartition(7)
@@ -84,9 +137,20 @@ def test_job_driver_end_to_end_and_resume(spark, tmp_path):
         "--tokenizer", "ws", "--master", "local[4]",
     ]
     s1 = job.main(argv)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     assert s1["rows"]["nodes"] == 19 and s1["rows"]["edges"] == 161
     assert s1["rows"]["claims"] > 0 and s1["rows"]["community_reports"] >= 1
     assert not s1["skipped"]
+    # one composition: the job computes exactly the pipeline's stage list
+    assert s1["computed"] == [stage.name for stage in STAGES]
+
+    # the flat communities table is the LPA gated against DuckDB
+    # (communities_lpa), run on the job's own graph
+    want = label_propagation(
+        spark.read.parquet(f"{out}/nodes"), spark.read.parquet(f"{out}/edges")
+    )
+    got = spark.read.parquet(f"{out}/communities")
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
     # leveled reports carry the full reference record shape (typing.py:8-18)
     # plus the mixed-context diagnostics
@@ -116,7 +180,15 @@ def test_job_driver_end_to_end_and_resume(spark, tmp_path):
     j = nodes_resumed.hint("merge").join(io2.read_bucketed("probe_nodes"), "title")
     plan = j._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in plan and "Exchange hashpartitioning" not in plan
-    spark.sql("DROP TABLE IF EXISTS probe_nodes")
+    spark.sql(f"DROP TABLE IF EXISTS `{io2.bucketed_table('probe_nodes')}`")
+
+    # --force through a URI output recomputes every stage, and the parse
+    # cache the nodes and edges stages share is released again
+    uri_argv = [f"file://{out}" if a == out else a for a in argv]
+    s3 = job.main(uri_argv + ["--force"])
+    assert s3["computed"] == s1["computed"] and not s3["skipped"]
+    assert s3["rows"] == s1["rows"]
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
 
 
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):
@@ -144,8 +216,8 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
         assert "ShuffleExchange" not in plan and "Exchange hashpartitioning" not in plan
         assert joined.count() == 1000
     finally:
-        spark.sql("DROP TABLE IF EXISTS bt_nodes")
-        spark.sql("DROP TABLE IF EXISTS bt_degrees")
+        for name in ("bt_nodes", "bt_degrees"):
+            spark.sql(f"DROP TABLE IF EXISTS `{io.bucketed_table(name)}`")
 
 
 def test_compact_repacks_small_files(spark, tmp_path):

@@ -8,6 +8,8 @@ down, Python appearing in a native path) at test time.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -534,3 +536,21 @@ def test_coarsen_communities_plan_no_cartesian_no_python(spark):
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
     assert "PythonUDF" not in p
+
+
+def test_build_graph_places_transcripts_once(spark):
+    """One exchange before the chunk UDF: the conv_id repartition of the
+    transcripts at shuffle.partitions width.  The assembly groupBy reuses
+    it, and AQE does not coalesce it, so the UDF runs that many tasks."""
+    from knowledge_graph_spark.pipeline import PipelineConfig, build_graph
+
+    transcripts = spark.createDataFrame(
+        [("c1", 0, "user", "ACME ships"), ("c2", 0, "user", "GLOBEX buys")],
+        "conv_id string, turn_idx int, role string, text string",
+    )
+    stages = build_graph(transcripts, PipelineConfig(chunk_size=16, chunk_overlap=0, tokenizer="ws"))
+    exchanges = [ln for ln in plan(stages["text_units"]).splitlines() if "Exchange " in ln]
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    assert len(exchanges) == 1, exchanges
+    assert "REPARTITION_BY_NUM" in exchanges[0]
+    assert re.search(rf"Exchange hashpartitioning\(conv_id#\d+, {width}\)", exchanges[0])
