@@ -7,7 +7,7 @@ jobs/run_pipeline.py for corpora that keep arriving AND keep shrinking
 fold as graph unions plus one appended record segment; delete batches
 anti-join the accumulated segments and re-run the merge only, so
 extraction never re-runs at 10^12-turn scale.  Exactly-once via the
-versioned single-marker commit protocol (streaming/retract_stream.py);
+versioned single-marker commit protocol (streaming/commit.py);
 re-running with the same --checkpoint resumes and replays nothing.
 
 Cluster usage (north rule: spark-submit --py-files at N / 4N executors):
@@ -36,8 +36,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from knowledge_graph_spark.io import TableIO  # noqa: E402
 from knowledge_graph_spark.pipeline import PipelineConfig  # noqa: E402
 from knowledge_graph_spark.session import get_spark  # noqa: E402
+from knowledge_graph_spark.streaming import commit  # noqa: E402
 from knowledge_graph_spark.streaming.retract_stream import (  # noqa: E402
-    read_current_kg,
+    CDC_MARKER,
     run_kg_cdc,
 )
 
@@ -95,34 +96,30 @@ def main(argv: list[str] | None = None) -> int:
         communities=args.communities, changelog=args.changelog,
         claims=args.claims,
     )
+    version = commit.state(io, CDC_MARKER)["version"]
+    if version < 0:
+        print("kg_stream committed: no batches arrived (empty input dirs)")
+        return 0
+
     def _count(name: str) -> str:
         # A maintained table can legitimately be absent at the committed
         # version even when its flag is on (e.g. --claims enabled on a
         # run whose only batch was a delete against a pre-claims
         # deployment: the fold advances the version without a claims
-        # table).  Spark surfaces the missing path as AnalysisException,
-        # not FileNotFoundError — report "absent", don't crash a job
-        # whose fold committed fine.
-        try:
-            return str(read_current_kg(io, name).count())
-        except Exception:
-            return "absent"
+        # table) — report "absent" rather than fail a committed fold.
+        table = f"{name}__v{version}"
+        return str(io.read(table).count()) if io.exists(table) else "absent"
 
-    try:
-        nodes = read_current_kg(io, "nodes").count()
-        edges = read_current_kg(io, "edges").count()
-        line = f"kg_stream committed: nodes={nodes} edges={edges}"
-        if args.components:
-            line += f" components={_count('components')}"
-        if args.salience:
-            line += f" salience={_count('salience')}"
-        if args.communities:
-            line += f" communities={_count('communities')}"
-        if args.claims:
-            line += f" claims={_count('claims')}"
-        print(line)
-    except FileNotFoundError:
-        print("kg_stream committed: no batches arrived (empty input dirs)")
+    line = f"kg_stream committed: nodes={_count('nodes')} edges={_count('edges')}"
+    if args.components:
+        line += f" components={_count('components')}"
+    if args.salience:
+        line += f" salience={_count('salience')}"
+    if args.communities:
+        line += f" communities={_count('communities')}"
+    if args.claims:
+        line += f" claims={_count('claims')}"
+    print(line)
     return 0
 
 

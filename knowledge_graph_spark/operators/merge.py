@@ -116,10 +116,15 @@ def cluster_union(
     return merged, added, changed
 
 
+def retained(records: DataFrame, deleted: DataFrame) -> DataFrame:
+    """The rows of ``records`` whose conversation is not in ``deleted``
+    (one conv_id-keyed anti-join; broadcast when the delete set is
+    small)."""
+    return records.join(deleted.select("conv_id").distinct(), "conv_id", "left_anti")
+
+
 def retract_conversations(
-    raw_records: DataFrame,
-    deleted: DataFrame,
-    conv_col: str = "conv_id",
+    raw_records: DataFrame, deleted: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """Right-to-be-forgotten retraction: (nodes, edges) with every
     contribution from ``deleted`` conversations removed — WITHOUT
@@ -136,7 +141,7 @@ def retract_conversations(
     retained transcripts (the ``kg_retract`` gate proves this equality
     cross-engine against the DuckDB pipeline oracle).
 
-    Scale shape: one anti-join keyed on ``conv_col`` (broadcast when the
+    Scale shape: one anti-join keyed on ``conv_id`` (broadcast when the
     delete set is small — the common case; AQE decides) + the usual
     name-keyed merge shuffle.  On Iceberg tables the same record-level
     anti-join drives a MERGE INTO/DELETE and the node/edge tables are
@@ -144,7 +149,4 @@ def retract_conversations(
     """
     from .parse import parse_and_merge
 
-    kept = raw_records.join(
-        deleted.select(conv_col).distinct(), conv_col, "left_anti"
-    )
-    return parse_and_merge(kept)
+    return parse_and_merge(retained(raw_records, deleted))

@@ -1,6 +1,6 @@
 """Batch sessionization over the events stream table.
 
-Complements ``streaming/incremental.py``'s stateful
+Complements ``streaming/stateful.py``'s stateful
 ``applyInPandasWithState`` sessionization with the batch equivalent: the
 classic gap-based session-window assignment expressed as pure window
 algebra (lag → new-session flag → running sum), so Catalyst plans it as

@@ -11,47 +11,23 @@ O(batch + matching buckets), state is O(corpus distinct texts) in TABLES
 (not the streaming state store), and the folded pair set equals batch
 mode (dedup.py docstring states the bucket-cap proviso).
 
-Commit protocol mirrors streaming/incremental.py: each fold writes fresh
-``mh_index__v{k+1}`` / ``mh_pairs__v{k+1}`` tables (never overwriting the
-version it read), then publishes both with ONE marker write recording
-(lineage, epoch, version).  Crash before the marker → replay redoes the
-fold from v{k}; replay of a committed epoch is skipped.  Read the
-accumulated pairs via ``read_current_dedup(io, "mh_pairs")``.
+Commit protocol: ``streaming/commit.py``.  Each fold writes fresh
+``mh_index__v{k+1}`` / ``mh_pairs__v{k+1}`` tables and publishes both
+with ONE marker write.  Read the accumulated pairs via
+``commit.read_current(io, DEDUP_MARKER, "mh_pairs")``.
 """
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..io import TableIO
 from ..operators.dedup import minhash_incremental
+from . import commit
 
 DOCUMENT_DDL = "doc_id bigint, text string"
 
 DEDUP_MARKER = "_stream/dedup_commit.json"
-
-
-def stream_documents(spark: SparkSession, input_dir: str) -> DataFrame:
-    return (
-        spark.readStream.schema(DOCUMENT_DDL)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(input_dir)
-    )
-
-
-def _state(io: TableIO) -> dict | None:
-    text = io.read_text(DEDUP_MARKER)
-    return json.loads(text) if text is not None else None
-
-
-def read_current_dedup(io: TableIO, name: str) -> DataFrame:
-    """Committed version of 'mh_index' or 'mh_pairs'."""
-    state = _state(io)
-    if state is None:
-        raise FileNotFoundError(f"no committed dedup stream state under {io.base}")
-    return io.read(f"{name}__v{state['version']}")
 
 
 def fold_dedup_batch(
@@ -60,21 +36,16 @@ def fold_dedup_batch(
     epoch_id: int,
     lineage: str = "",
     threshold: float = 0.5,
-    **mh_params,
 ) -> None:
     """One document micro-batch → index probe + append, committed as a
     unit (index and accumulated name-pair table under one marker)."""
-    state = _state(io)
-    if (
-        state is not None
-        and state.get("lineage") == lineage
-        and int(epoch_id) <= int(state.get("epoch", -1))
-    ):
-        return  # replay of a fully-committed batch
-    k = int(state["version"]) if state is not None else -1
+    state = commit.state(io, DEDUP_MARKER)
+    if commit.committed(state, lineage, epoch_id):
+        return
+    k = state["version"]
     old_index = io.read(f"mh_index__v{k}") if k >= 0 else None
     new_pairs, merged_index = minhash_incremental(
-        batch_df, old_index, threshold=threshold, **mh_params
+        batch_df, old_index, threshold=threshold
     )
     all_pairs = (
         new_pairs
@@ -83,16 +54,8 @@ def fold_dedup_batch(
     )
     io.write(merged_index, f"mh_index__v{k + 1}")
     io.write(all_pairs, f"mh_pairs__v{k + 1}")
-    io.write_text(
-        DEDUP_MARKER,
-        json.dumps({"lineage": lineage, "epoch": int(epoch_id), "version": k + 1}),
-    )
-    if k >= 1:  # GC a superseded version; correctness never depends on it
-        for name in (f"mh_index__v{k - 1}", f"mh_pairs__v{k - 1}"):
-            try:
-                io.delete(name)
-            except Exception:
-                pass
+    commit.publish(io, DEDUP_MARKER, state, lineage, epoch_id, k + 1)
+    commit.gc(io, ("mh_index", "mh_pairs"), k - 1)
 
 
 def run_dedup_stream(
@@ -101,20 +64,12 @@ def run_dedup_stream(
     io: TableIO,
     checkpoint_dir: str,
     threshold: float = 0.5,
-    available_now: bool = True,
-    **mh_params,
-):
-    """Start (and with available_now=True, drain) the streaming dedup."""
-    stream = stream_documents(spark, input_dir)
-    fold = lambda df, epoch: fold_dedup_batch(  # noqa: E731
-        io, df, epoch, lineage=checkpoint_dir, threshold=threshold, **mh_params
+) -> None:
+    """Drain the streaming dedup over every file present now."""
+    commit.drain(
+        commit.file_stream(spark, DOCUMENT_DDL, input_dir),
+        lambda df, epoch: fold_dedup_batch(
+            io, df, epoch, lineage=checkpoint_dir, threshold=threshold
+        ),
+        checkpoint_dir,
     )
-    writer = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q

@@ -10,40 +10,24 @@ the merged table is IDENTICAL to ``dsir_bucket_counts`` over the full
 ingested corpus, hence so is every downstream importance score
 (asserted in tests/test_dsir_stream.py).
 
-Commit protocol mirrors streaming/sketch_stream.py: each fold writes a
-fresh ``dsir_buckets__v{k+1}`` table (never overwriting the version it
-read), then publishes it with ONE marker write recording (lineage,
-epoch, version).  Crash before the marker → replay redoes the fold from
-v{k}; replay of a committed epoch is skipped.  Score via
-``corpus.dsir_scores(..., bucket_counts=read_current_dsir(io))``.
+Commit protocol: ``streaming/commit.py``.  Each fold writes a fresh
+``dsir_buckets__v{k+1}`` table and publishes it with ONE marker write.
+Score via ``corpus.dsir_scores(..., bucket_counts=commit.read_current(
+io, DSIR_MARKER, "dsir_buckets"))``.
 """
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import TableIO
 from ..operators.corpus import dsir_bucket_counts
+from . import commit
 
 DOCUMENT_DDL = "doc_id bigint, text string"
 
 DSIR_MARKER = "_stream/dsir_commit.json"
-
-
-def _state(io: TableIO) -> dict | None:
-    text = io.read_text(DSIR_MARKER)
-    return json.loads(text) if text is not None else None
-
-
-def read_current_dsir(io: TableIO) -> DataFrame:
-    """Committed (b, cr, ct) bucket-model table."""
-    state = _state(io)
-    if state is None:
-        raise FileNotFoundError(f"no committed DSIR stream state under {io.base}")
-    return io.read(f"dsir_buckets__v{state['version']}")
 
 
 def fold_dsir_batch(
@@ -52,23 +36,16 @@ def fold_dsir_batch(
     epoch_id: int,
     target: F.Column,
     lineage: str = "",
-    text_col: str = "text",
     n_buckets: int = 4096,
 ) -> None:
     """One document micro-batch → bucket-count its hashed bigrams, SUM
     into the committed models, publish as a unit."""
-    state = _state(io)
-    if (
-        state is not None
-        and state.get("lineage") == lineage
-        and int(epoch_id) <= int(state.get("epoch", -1))
-    ):
-        return  # replay of a fully-committed batch
-    k = int(state["version"]) if state is not None else -1
+    state = commit.state(io, DSIR_MARKER)
+    if commit.committed(state, lineage, epoch_id):
+        return
+    k = state["version"]
 
-    counts = dsir_bucket_counts(
-        batch_df, target=target, text_col=text_col, n_buckets=n_buckets
-    )
+    counts = dsir_bucket_counts(batch_df, target=target, n_buckets=n_buckets)
     if k >= 0:
         counts = (
             io.read(f"dsir_buckets__v{k}")
@@ -80,15 +57,8 @@ def fold_dsir_batch(
             )
         )
     io.write(counts, f"dsir_buckets__v{k + 1}")
-    io.write_text(
-        DSIR_MARKER,
-        json.dumps({"lineage": lineage, "epoch": int(epoch_id), "version": k + 1}),
-    )
-    if k >= 1:  # GC a superseded version; correctness never depends on it
-        try:
-            io.delete(f"dsir_buckets__v{k - 1}")
-        except Exception:
-            pass
+    commit.publish(io, DSIR_MARKER, state, lineage, epoch_id, k + 1)
+    commit.gc(io, ("dsir_buckets",), k - 1)
 
 
 def run_dsir_stream(
@@ -98,23 +68,12 @@ def run_dsir_stream(
     checkpoint_dir: str,
     target: F.Column,
     n_buckets: int = 4096,
-    available_now: bool = True,
-):
-    """Start (and with available_now=True, drain) the DSIR model stream."""
-    stream = (
-        spark.readStream.schema(DOCUMENT_DDL)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(input_dir)
+) -> None:
+    """Drain the DSIR model stream over every file present now."""
+    commit.drain(
+        commit.file_stream(spark, DOCUMENT_DDL, input_dir),
+        lambda df, epoch: fold_dsir_batch(
+            io, df, epoch, target=target, lineage=checkpoint_dir, n_buckets=n_buckets
+        ),
+        checkpoint_dir,
     )
-    fold = lambda df, epoch: fold_dsir_batch(  # noqa: E731
-        io, df, epoch, target=target, lineage=checkpoint_dir, n_buckets=n_buckets
-    )
-    writer = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q

@@ -16,14 +16,17 @@ tests/test_join_stream.py by draining with availableNow and comparing
 row sets against the batch join).
 
 Sink: parquet append (exactly-once via the sink's own checkpointed file
-manifest — the standard file-sink guarantee; no custom commit protocol
-needed for an append-only inner join).
+manifest — the standard file-sink guarantee; an append-only inner join
+needs no versioned commit, so only the file sources come from
+``streaming/commit.py``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import commit
 
 PURCHASE_DDL = "event_id bigint, user_id bigint, ts timestamp, value double"
 SIGNUP_DDL = "signup_id bigint, user_id bigint, ts timestamp"
@@ -64,30 +67,20 @@ def run_attribution_stream(
     out_dir: str,
     checkpoint_dir: str,
     window_days: int = 7,
-    available_now: bool = True,
-):
-    """Start (and with available_now=True, drain) the streaming join,
-    appending matches to a parquet sink."""
-    p = (
-        spark.readStream.schema(PURCHASE_DDL)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(purchases_dir)
+) -> None:
+    """Drain the streaming join over every file present now, appending
+    matches to a parquet sink."""
+    j = attribution_join(
+        commit.file_stream(spark, PURCHASE_DDL, purchases_dir),
+        commit.file_stream(spark, SIGNUP_DDL, signups_dir),
+        window_days=window_days,
     )
-    s = (
-        spark.readStream.schema(SIGNUP_DDL)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(signups_dir)
-    )
-    j = attribution_join(p, s, window_days=window_days)
-    writer = (
+    (
         j.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q

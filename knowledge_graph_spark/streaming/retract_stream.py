@@ -1,22 +1,22 @@
-"""Structured-Streaming KG maintenance WITH DELETES (CDC-style).
+"""Structured-Streaming KG maintenance with inserts AND deletes (CDC).
 
-``streaming/incremental.py`` folds arriving transcript partitions into
-the node/edge tables but — like the reference's extract-stage union
-(utils/graph.py:68-115) — only ever ADDS.  A production corpus also
-receives deletes (user-data removal, contaminated-source takedowns),
-and at 10^12-turn scale a delete must not re-run extraction.  This sink
-keeps the per-chunk RECORD STREAM alongside the graph tables, so:
+The reference's incremental story is the extract-stage graph union
+(utils/graph.py:68-115), which only ever ADDS.  A production corpus
+also receives deletes (user-data removal, contaminated-source
+takedowns), and at 10^12-turn scale a delete must not re-run
+extraction.  This sink keeps the per-chunk RECORD STREAM alongside the
+graph tables, so:
 
 - insert batches stay cheap: build_graph on the micro-batch, graph
   union against the committed tables, and the batch's ``raw_records``
   land as ONE new record segment (append cost O(batch), never a
   rewrite of the accumulated records);
 - delete batches (a stream of conv_ids) anti-join the accumulated
-  record segments and re-run the MERGE ONLY (``merge.
-  retract_conversations`` semantics): one conv-keyed anti-join + the
-  standard name-keyed merge shuffle, extraction untouched.  The fold
-  also compacts the record segments to the retained set, so segment
-  count is bounded by inserts since the last delete.
+  record segments and re-run the MERGE ONLY (``merge.retained``, the
+  same anti-join as ``merge.retract_conversations``) — extraction
+  untouched.  The fold also compacts the record segments to the
+  retained set, so segment count is bounded by inserts since the last
+  delete.
 
 Semantics note (documented contract): a delete REBASES the graph to the
 canonical merged form — parse_and_merge over the retained records —
@@ -26,88 +26,66 @@ a from-scratch rebuild on the retained corpus produces (the ``kg_
 retract`` gate proves this equality cross-engine), and the framing is
 presentation-layer provenance, not merge state.
 
-Commit protocol mirrors streaming/incremental.py: every fold writes
-fresh ``__v{k+1}`` / segment tables (never overwriting what it read),
-then publishes with ONE marker write recording (version, the record
-segment list, and per-lineage epochs — insert and delete queries are
-separate streams with separate checkpoints, so each carries its own
-lineage id).  Crash before the marker → replay redoes the fold from
-v{k}; replay of a committed epoch is skipped.
+Assumption (documented contract): conversations arrive atomically — all
+turns of a conv_id land in one micro-batch.  Cross-batch conversation
+stitching would need a session-window + watermark aggregation
+(``stateful.turn_counts`` shows the watermark pattern).
+
+Commit protocol: ``streaming/commit.py``.  Every fold writes fresh
+``__v{k+1}`` / segment tables, then publishes them with ONE marker write
+recording the version, the record and claim segment lists and the
+per-lineage epochs — insert and delete queries are separate streams
+with separate checkpoints, so each carries its own lineage id.
 """
 
 from __future__ import annotations
 
-import json
 from dataclasses import replace
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..io import TableIO
-from ..operators.merge import incremental_union_edges, incremental_union_nodes
+from ..operators.merge import (
+    incremental_union_edges,
+    incremental_union_nodes,
+    retained,
+)
 from ..operators.parse import parse_and_merge
 from ..pipeline import PipelineConfig, build_graph
-from .incremental import gc_graph_version
-from .incremental import stream_transcripts  # noqa: F401  (re-export for callers)
+from . import commit
 
 DELETE_DDL = "conv_id string"
 
 CDC_MARKER = "_stream/kg_cdc_commit.json"
 
+# the versioned tables a fold writes; version GC collects these (the
+# changelog is append-only history and stays)
+CDC_TABLES = ("nodes", "edges", "components", "salience", "communities", "claims")
+
 
 def stream_deletes(spark: SparkSession, input_dir: str) -> DataFrame:
-    return (
-        spark.readStream.schema(DELETE_DDL)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(input_dir)
-    )
-
-
-def _state(io: TableIO) -> dict | None:
-    text = io.read_text(CDC_MARKER)
-    return json.loads(text) if text is not None else None
-
-
-def read_current_kg(io: TableIO, name: str) -> DataFrame:
-    """Committed version of 'nodes' or 'edges' (marker-resolved, so a
-    fold that crashed mid-write is invisible)."""
-    state = _state(io)
-    # version -1 means only no-op folds committed (e.g. a delete that
-    # arrived before any insert recorded its epoch) — no graph exists yet
-    if state is None or int(state["version"]) < 0:
-        raise FileNotFoundError(f"no committed kg-cdc state under {io.base}")
-    return io.read(f"{name}__v{state['version']}")
-
-
-def _committed(state: dict | None, lineage: str, epoch_id: int) -> bool:
-    if state is None:
-        return False
-    return int(epoch_id) <= int(state.get("epochs", {}).get(lineage, -1))
+    return commit.file_stream(spark, DELETE_DDL, input_dir)
 
 
 def _publish(
     io: TableIO,
-    state: dict | None,
+    state: dict,
     lineage: str,
     epoch_id: int,
     version: int,
     segments: list[str],
-    claim_segments: list[str] | None = None,
+    claim_segments: list[str],
 ) -> None:
-    epochs = dict((state or {}).get("epochs", {}))
-    epochs[lineage] = int(epoch_id)
-    if claim_segments is None:  # fold not maintaining claims: carry as-is
-        claim_segments = list((state or {}).get("claim_segments", []))
-    io.write_text(
-        CDC_MARKER,
-        json.dumps(
-            {
-                "version": version,
-                "segments": segments,
-                "claim_segments": claim_segments,
-                "epochs": epochs,
-            }
-        ),
+    commit.publish(
+        io, CDC_MARKER, state, lineage, epoch_id, version,
+        segments=segments, claim_segments=claim_segments,
     )
+
+
+def _read_segments(io: TableIO, names: list[str]) -> DataFrame:
+    """Union of the (non-empty) list of segment tables."""
+    return reduce(DataFrame.unionByName, (io.read(n) for n in names))
 
 
 def _fold_components(io: TableIO, version: int, warm_from: int | None) -> None:
@@ -196,18 +174,15 @@ def _fold_claims(io: TableIO, version: int, claim_segments: list[str]) -> None:
     folds only — a conversation inserted while the flag was off has no
     claim segment and stays absent from the claims table after
     re-enabling (extraction never re-runs; rebuild from the batch job
-    if completeness matters).  Deletes purge existing claim segments
-    UNCONDITIONALLY (fold_delete_batch), so retraction is honored even
-    across flag toggles.
+    if completeness matters).  Every fold refreshes the table whenever
+    claim segments exist, whatever its flag, and deletes purge the
+    segments unconditionally, so the table exists at every committed
+    version once claims were extracted and retraction is honored across
+    flag toggles.
     """
     from ..operators.claims import finalize_claims, merge_claims
 
-    rows = None
-    for seg in claim_segments:
-        part = io.read(seg)
-        rows = part if rows is None else rows.unionByName(part)
-    if rows is None:
-        return
+    rows = _read_segments(io, claim_segments)
     io.write(finalize_claims(merge_claims(rows)), f"claims__v{version}")
 
 
@@ -219,8 +194,8 @@ def _fold_changelog(io: TableIO, version: int) -> None:
     per version: added/removed edges and weight deltas only.  Version 0
     diffs against the empty graph, so the first changelog IS the first
     graph (all 'added').  One co-partitioned full-outer join per fold;
-    the changelog is append-only history, so gc_graph_version does NOT
-    collect it (bounded: O(delta) rows per fold, not O(graph))."""
+    the changelog is append-only history, so version GC (CDC_TABLES)
+    does NOT collect it (bounded: O(delta) rows per fold, not O(graph))."""
     from ..operators.temporal import kg_version_diff
 
     new = io.read(f"edges__v{version}")
@@ -268,6 +243,48 @@ def _fold_communities(io: TableIO, version: int, warm_from: int | None) -> None:
     io.write(comm, f"communities__v{version}")
 
 
+def _commit_fold(
+    io: TableIO,
+    state: dict,
+    lineage: str,
+    epoch_id: int,
+    nodes: DataFrame,
+    edges: DataFrame,
+    segments: list[str],
+    claim_segments: list[str],
+    persisted: list[DataFrame],
+    superseded: list[str],
+    warm_components: bool,
+    components: bool,
+    salience: bool,
+    communities: bool,
+    changelog: bool,
+) -> None:
+    """The tail both folds share: write version k+1 of the graph and the
+    maintained tables, publish it, then release the fold's caches and
+    collect version k-1 and the ``superseded`` segments."""
+    k = state["version"]
+    prior = k if k >= 0 else None
+    io.write(nodes, f"nodes__v{k + 1}")
+    io.write(edges, f"edges__v{k + 1}")
+    if components:
+        _fold_components(io, k + 1, warm_from=prior if warm_components else None)
+    if salience:
+        _fold_salience(io, k + 1, warm_from=prior)
+    if communities:
+        _fold_communities(io, k + 1, warm_from=prior)
+    if changelog:
+        _fold_changelog(io, k + 1)
+    if claim_segments:
+        _fold_claims(io, k + 1, claim_segments)
+    _publish(io, state, lineage, epoch_id, k + 1, segments, claim_segments)
+    for df in persisted:
+        df.unpersist()
+    commit.gc(io, CDC_TABLES, k - 1)
+    for seg in superseded:
+        io.delete(seg)
+
+
 def fold_insert_batch(
     io: TableIO,
     batch_df: DataFrame,
@@ -280,7 +297,8 @@ def fold_insert_batch(
     changelog: bool = False,
     claims: bool = False,
 ) -> None:
-    """Insert micro-batch: graph union + ONE new record segment.
+    """Insert micro-batch: graph union + ONE new record segment (and,
+    with ``claims``, one parsed-claim segment).
 
     ``lineage`` identifies the STREAM (its checkpoint location in
     ``run_kg_cdc``); insert and delete folds must never share one — each
@@ -293,11 +311,10 @@ def fold_insert_batch(
     table WARM-STARTED from the previous version's labels — the
     incremental canonicalization step, paying ~one verification round
     per batch instead of a full cold fixpoint (see _fold_components)."""
-    state = _state(io)
-    if _committed(state, lineage, epoch_id):
+    state = commit.state(io, CDC_MARKER)
+    if commit.committed(state, lineage, epoch_id):
         return
-    k = int(state["version"]) if state is not None else -1
-    segments = list((state or {}).get("segments", []))
+    k = state["version"]
     stages = build_graph(batch_df, replace(cfg, persist_intermediate=True))
     records = stages["raw_records"].persist()
     new_nodes = stages["nodes"].persist()
@@ -305,35 +322,27 @@ def fold_insert_batch(
     seg = f"records__s{k + 1}"
     io.write(records, seg)
     if k >= 0:
-        merged_nodes = incremental_union_nodes(io.read(f"nodes__v{k}"), new_nodes)
-        merged_edges = incremental_union_edges(io.read(f"edges__v{k}"), new_edges)
+        nodes = incremental_union_nodes(io.read(f"nodes__v{k}"), new_nodes)
+        edges = incremental_union_edges(io.read(f"edges__v{k}"), new_edges)
     else:
-        merged_nodes, merged_edges = new_nodes, new_edges
-    io.write(merged_nodes, f"nodes__v{k + 1}")
-    io.write(merged_edges, f"edges__v{k + 1}")
-    if components:
-        _fold_components(io, k + 1, warm_from=k if k >= 0 else None)
-    if salience:
-        _fold_salience(io, k + 1, warm_from=k if k >= 0 else None)
-    if communities:
-        _fold_communities(io, k + 1, warm_from=k if k >= 0 else None)
-    if changelog:
-        _fold_changelog(io, k + 1)
-    claim_segments: list[str] | None = None
+        nodes, edges = new_nodes, new_edges
+    claim_segments = list(state.get("claim_segments", []))
     if claims:
         from ..operators.claims import emit_claim_records, parse_claim_records
 
         cseg = f"claims__s{k + 1}"
         io.write(parse_claim_records(emit_claim_records(batch_df)), cseg)
-        claim_segments = list((state or {}).get("claim_segments", [])) + [cseg]
-        _fold_claims(io, k + 1, claim_segments)
-    _publish(
-        io, state, lineage, epoch_id, k + 1, segments + [seg],
+        claim_segments.append(cseg)
+    _commit_fold(
+        io, state, lineage, epoch_id, nodes, edges,
+        segments=state.get("segments", []) + [seg],
         claim_segments=claim_segments,
+        persisted=[records, new_nodes, new_edges, stages["split_records"]],
+        superseded=[],
+        warm_components=True,
+        components=components, salience=salience,
+        communities=communities, changelog=changelog,
     )
-    for df in (records, new_nodes, new_edges, stages["split_records"]):
-        df.unpersist()
-    gc_graph_version(io, k - 1)
 
 
 def fold_delete_batch(
@@ -345,7 +354,6 @@ def fold_delete_batch(
     salience: bool = False,
     communities: bool = False,
     changelog: bool = False,
-    claims: bool = False,
 ) -> None:
     """Delete micro-batch (conv_ids): anti-join the record segments,
     re-merge, compact — extraction never re-runs.  See fold_insert_batch
@@ -353,70 +361,43 @@ def fold_delete_batch(
     With ``components``, the component table is rebuilt COLD (a delete
     can split a component — warm labels are unsound here).  ``salience``
     stays WARM even on deletes: PR converges from any start, so the
-    stale scores remain a valid (and close) seed."""
-    state = _state(io)
-    if _committed(state, lineage, epoch_id):
+    stale scores remain a valid (and close) seed.  Claim segments are
+    purged whenever they exist: a retraction must reach every persisted
+    derivative of the deleted conversation, or a later claims run would
+    re-fold the retracted rows back into the claims table."""
+    state = commit.state(io, CDC_MARKER)
+    if commit.committed(state, lineage, epoch_id):
         return
-    if state is None or not state.get("segments"):
+    if not state.get("segments"):
         # nothing ingested yet — record the epoch so a replay skips
-        _publish(io, state, lineage, epoch_id, int((state or {}).get("version", -1)), [])
+        _publish(io, state, lineage, epoch_id, state["version"], [], [])
         return
-    k = int(state["version"])
-    old_segments = list(state["segments"])
-    records = None
-    for seg in old_segments:
-        part = io.read(seg)
-        records = part if records is None else records.unionByName(part)
-    # same retained-records semantics as merge.retract_conversations
-    # (the kg_retract gate's op); spelled out here because the CDC fold
-    # must WRITE the retained segment and re-merge from the written table
-    deleted = batch_df.select("conv_id").distinct()
-    kept = records.join(deleted, "conv_id", "left_anti").persist()
+    k = state["version"]
+    # the CDC fold WRITES the retained segment and re-merges from the
+    # written table, so a replay after a crash reads the same records
+    kept = retained(_read_segments(io, state["segments"]), batch_df).persist()
     compact = f"records__s{k + 1}c"
     io.write(kept, compact)
     sink: dict = {}
     nodes, edges = parse_and_merge(
         io.read(compact), persist_intermediate=True, records_out=sink
     )
-    io.write(nodes, f"nodes__v{k + 1}")
-    io.write(edges, f"edges__v{k + 1}")
-    if components:
-        _fold_components(io, k + 1, warm_from=None)
-    if salience:
-        _fold_salience(io, k + 1, warm_from=k)
-    if communities:
-        _fold_communities(io, k + 1, warm_from=k)
-    if changelog:
-        _fold_changelog(io, k + 1)
-    claim_segments: list[str] | None = None
-    old_claim_segments: list[str] = []
-    # Purge claim segments whenever they EXIST, regardless of the
-    # `claims` flag: a retraction must reach every persisted derivative
-    # of the deleted conversation, or a later --claims run would re-fold
-    # the retracted rows back into claims__v{k} (review finding).  The
-    # flag only gates whether INSERT folds extract claims.
-    if state.get("claim_segments"):
-        old_claim_segments = list(state["claim_segments"])
-        crows = None
-        for cseg in old_claim_segments:
-            part = io.read(cseg)
-            crows = part if crows is None else crows.unionByName(part)
+    old_claim_segments = state.get("claim_segments", [])
+    claim_segments = []
+    if old_claim_segments:
         ccompact = f"claims__s{k + 1}c"
-        io.write(crows.join(deleted, "conv_id", "left_anti"), ccompact)
+        io.write(retained(_read_segments(io, old_claim_segments), batch_df), ccompact)
         claim_segments = [ccompact]
-        _fold_claims(io, k + 1, claim_segments)
-    _publish(
-        io, state, lineage, epoch_id, k + 1, [compact],
+    _commit_fold(
+        io, state, lineage, epoch_id, nodes, edges,
+        segments=[compact],
         claim_segments=claim_segments,
+        persisted=[kept, sink["split_records"]],
+        superseded=state["segments"] + old_claim_segments,
+        warm_components=False,
+        components=components, salience=salience,
+        communities=communities, changelog=changelog,
     )
-    kept.unpersist()
-    sink["split_records"].unpersist()
-    gc_graph_version(io, k - 1)
-    for seg in old_segments + old_claim_segments:  # superseded by compacts
-        try:
-            io.delete(seg)
-        except Exception:
-            pass
 
 
 def run_kg_cdc(
@@ -443,39 +424,31 @@ def run_kg_cdc(
     see _fold_salience); ``communities`` maintains ``communities__v{k}``
     (weighted LPA labels, warm-chained on every fold — see
     _fold_communities); ``changelog`` emits the per-fold edge change
-    feed ``changelog__v{k}`` (see _fold_changelog); ``claims`` maintains
-    the V1-V5 covariate table ``claims__v{k}`` from persisted
-    parsed-claim segments (see _fold_claims — claim extraction runs once
-    per conversation; deletes anti-join and re-merge only)."""
+    feed ``changelog__v{k}`` (see _fold_changelog); ``claims`` extracts
+    parsed-claim segments on insert folds, from which every fold
+    maintains the V1-V5 covariate table ``claims__v{k}`` (see
+    _fold_claims — claim extraction runs once per conversation; deletes
+    anti-join and re-merge only)."""
     cfg = cfg or PipelineConfig(chunk_size=128, chunk_overlap=16, tokenizer="ws")
-    ins_ckpt = f"{checkpoint_dir}/inserts"
-    q = (
-        stream_transcripts(spark, insert_dir, max_files_per_trigger)
-        .writeStream.foreachBatch(
-            lambda df, e: fold_insert_batch(
-                io, df, cfg, e, lineage=ins_ckpt, components=components,
-                salience=salience, communities=communities,
-                changelog=changelog, claims=claims,
-            )
-        )
-        .option("checkpointLocation", ins_ckpt)
-        .trigger(availableNow=True)
-        .start()
+    maintain = dict(
+        components=components, salience=salience,
+        communities=communities, changelog=changelog,
     )
-    q.awaitTermination()
+    ins_ckpt = f"{checkpoint_dir}/inserts"
+    # the folds resolve through the module globals at call time
+    commit.drain(
+        commit.file_stream(
+            spark, commit.TRANSCRIPT_DDL, insert_dir, max_files_per_trigger
+        ),
+        lambda df, e: fold_insert_batch(
+            io, df, cfg, e, lineage=ins_ckpt, claims=claims, **maintain
+        ),
+        ins_ckpt,
+    )
     if delete_dir is not None:
         del_ckpt = f"{checkpoint_dir}/deletes"
-        q = (
-            stream_deletes(spark, delete_dir)
-            .writeStream.foreachBatch(
-                lambda df, e: fold_delete_batch(
-                    io, df, e, lineage=del_ckpt, components=components,
-                    salience=salience, communities=communities,
-                    changelog=changelog, claims=claims,
-                )
-            )
-            .option("checkpointLocation", del_ckpt)
-            .trigger(availableNow=True)
-            .start()
+        commit.drain(
+            stream_deletes(spark, delete_dir),
+            lambda df, e: fold_delete_batch(io, df, e, lineage=del_ckpt, **maintain),
+            del_ckpt,
         )
-        q.awaitTermination()

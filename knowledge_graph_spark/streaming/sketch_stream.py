@@ -11,18 +11,14 @@ so far (asserted in tests/test_sketch_stream.py).  Work per batch is
 O(batch); state is 2^p + d·w rows in tables, not the streaming state
 store.
 
-Commit protocol mirrors streaming/dedup_stream.py: each fold writes
-fresh ``hll_regs__v{k+1}`` / ``cms_cells__v{k+1}`` tables (never
-overwriting the version it read), then publishes both with ONE marker
-write recording (lineage, epoch, version).  Crash before the marker →
-replay redoes the fold from v{k}; replay of a committed epoch is
-skipped.  Read via ``read_current_sketch(io, "hll_regs")``; estimate via
+Commit protocol: ``streaming/commit.py``.  Each fold writes fresh
+``hll_regs__v{k+1}`` / ``cms_cells__v{k+1}`` / ``len_hist__v{k+1}``
+tables and publishes them with ONE marker write.  Read via
+``commit.read_current(io, SKETCH_MARKER, "hll_regs")``; estimate via
 ``sketches.hll_estimate`` over the committed register table.
 """
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,28 +26,16 @@ from pyspark.sql import functions as F
 from ..functions.textqc import normalized_text, ws_tokens_col
 from ..io import TableIO
 from ..operators.sketches import cms_table, hll_registers, log2_histogram
+from . import commit
 
 DOCUMENT_DDL = "doc_id bigint, text string"
 
 SKETCH_MARKER = "_stream/sketch_commit.json"
 
 
-def _state(io: TableIO) -> dict | None:
-    text = io.read_text(SKETCH_MARKER)
-    return json.loads(text) if text is not None else None
-
-
-def read_current_sketch(io: TableIO, name: str) -> DataFrame:
-    """Committed version of 'hll_regs', 'cms_cells', or 'len_hist'."""
-    state = _state(io)
-    if state is None:
-        raise FileNotFoundError(f"no committed sketch stream state under {io.base}")
-    return io.read(f"{name}__v{state['version']}")
-
-
-def _batch_tokens(batch_df: DataFrame, text_col: str) -> DataFrame:
+def _batch_tokens(batch_df: DataFrame) -> DataFrame:
     return batch_df.select(
-        F.explode(ws_tokens_col(normalized_text(F.col(text_col)))).alias("token")
+        F.explode(ws_tokens_col(normalized_text(F.col("text")))).alias("token")
     )
 
 
@@ -60,26 +44,21 @@ def fold_sketch_batch(
     batch_df: DataFrame,
     epoch_id: int,
     lineage: str = "",
-    text_col: str = "text",
 ) -> None:
     """One document micro-batch → sketch the batch's tokens and lengths,
     merge into the committed versions (MAX / SUM), publish as a unit."""
-    state = _state(io)
-    if (
-        state is not None
-        and state.get("lineage") == lineage
-        and int(epoch_id) <= int(state.get("epoch", -1))
-    ):
-        return  # replay of a fully-committed batch
-    k = int(state["version"]) if state is not None else -1
+    state = commit.state(io, SKETCH_MARKER)
+    if commit.committed(state, lineage, epoch_id):
+        return
+    k = state["version"]
 
-    toks = _batch_tokens(batch_df, text_col)
+    toks = _batch_tokens(batch_df)
     regs_b = hll_registers(toks)
     counts_b = toks.groupBy("token").agg(F.count("*").cast("bigint").alias("cnt"))
     cells_b = cms_table(counts_b)
     hist_b = log2_histogram(
         batch_df.select(
-            F.size(ws_tokens_col(normalized_text(F.col(text_col)))).alias("n_tokens")
+            F.size(ws_tokens_col(normalized_text(F.col("text")))).alias("n_tokens")
         ),
         "n_tokens",
     )
@@ -106,44 +85,16 @@ def fold_sketch_batch(
     io.write(regs_b, f"hll_regs__v{k + 1}")
     io.write(cells_b, f"cms_cells__v{k + 1}")
     io.write(hist_b, f"len_hist__v{k + 1}")
-    io.write_text(
-        SKETCH_MARKER,
-        json.dumps({"lineage": lineage, "epoch": int(epoch_id), "version": k + 1}),
-    )
-    if k >= 1:  # GC a superseded version; correctness never depends on it
-        for name in (
-            f"hll_regs__v{k - 1}",
-            f"cms_cells__v{k - 1}",
-            f"len_hist__v{k - 1}",
-        ):
-            try:
-                io.delete(name)
-            except Exception:
-                pass
+    commit.publish(io, SKETCH_MARKER, state, lineage, epoch_id, k + 1)
+    commit.gc(io, ("hll_regs", "cms_cells", "len_hist"), k - 1)
 
 
 def run_sketch_stream(
-    spark: SparkSession,
-    input_dir: str,
-    io: TableIO,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Start (and with available_now=True, drain) the streaming sketches."""
-    stream = (
-        spark.readStream.schema(DOCUMENT_DDL)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(input_dir)
+    spark: SparkSession, input_dir: str, io: TableIO, checkpoint_dir: str
+) -> None:
+    """Drain the streaming sketches over every file present now."""
+    commit.drain(
+        commit.file_stream(spark, DOCUMENT_DDL, input_dir),
+        lambda df, epoch: fold_sketch_batch(io, df, epoch, lineage=checkpoint_dir),
+        checkpoint_dir,
     )
-    fold = lambda df, epoch: fold_sketch_batch(  # noqa: E731
-        io, df, epoch, lineage=checkpoint_dir
-    )
-    writer = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q

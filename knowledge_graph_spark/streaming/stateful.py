@@ -1,7 +1,7 @@
 """Custom stateful streaming operator: conversation sessionization via
 ``applyInPandasWithState``.
 
-The incremental fold (incremental.py) assumes conversations arrive
+The CDC KG fold (retract_stream.py) assumes conversations arrive
 atomically in one micro-batch.  This operator removes that assumption
 for the assembly stage: turns for a conv_id may arrive across many
 micro-batches; per-key state accumulates (n_turns, first/last event
@@ -25,6 +25,7 @@ from typing import Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -100,4 +101,26 @@ def conversation_sessions(stream: DataFrame, gap_ms: int = 60_000) -> DataFrame:
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    )
+
+
+def turn_counts(
+    stream: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
+) -> DataFrame:
+    """Watermarked per-conversation turn counts by event-time window —
+    the late-data-tolerant streaming aggregate pattern (role mix per
+    window; append-mode compatible)."""
+    return (
+        stream.withWatermark("ts", watermark)
+        .groupBy(F.window("ts", window).alias("w"), F.col("conv_id"))
+        .agg(
+            F.count("*").alias("n_turns"),
+            F.sum(F.when(F.col("role") == "tool", 1).otherwise(0)).alias("n_tool_turns"),
+        )
+        .select(
+            F.col("w.start").alias("window_start"),
+            "conv_id",
+            "n_turns",
+            "n_tool_turns",
+        )
     )

@@ -18,49 +18,30 @@ operator's ``n_convs`` support column is a COUNT DISTINCT, which is not
 SUM-mergeable, so the streamed table intentionally omits it (maintain an
 HLL per transition if an approximate support is ever needed).
 
-Exactness assumption (same contract as incremental.py's assembly fold,
-and the natural log-ingestion shape): a conversation's turns arrive in
-turn_idx order ACROSS batches — within a batch any order is fine (the
-window sorts).  Out-of-order cross-batch arrival would need the full
-per-conversation call log in state; this fold keeps state at one row
-per OPEN conversation instead, which is what survives 10^12 turns.
+Exactness assumption (the natural log-ingestion shape): a
+conversation's turns arrive in turn_idx order ACROSS batches — within a
+batch any order is fine (the window sorts).  Out-of-order cross-batch
+arrival would need the full per-conversation call log in state; this
+fold keeps state at one row per OPEN conversation instead, which is
+what survives 10^12 turns.
 
-Commit protocol mirrors sketch_stream.py: write ``trace_trans__v{k+1}``
-+ ``trace_last__v{k+1}`` fresh (never overwriting the version read),
-publish both with ONE marker write (lineage, epoch, version); crash
-before the marker → replay redoes the fold from v{k}; replay of a
-committed epoch is a no-op.
+Commit protocol: ``streaming/commit.py``.  Each fold writes
+``trace_trans__v{k+1}`` + ``trace_last__v{k+1}`` fresh and publishes
+both with ONE marker write.  Read via ``commit.read_current(io,
+TRACE_MARKER, "trace_trans")`` (prev_tool, tool, n_transitions) or
+``"trace_last"`` (conv_id, last_tool).
 """
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import TableIO
 from ..operators.agent_trace import START_MARKER
-
-TRANSCRIPT_DDL = (
-    "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-)
+from . import commit
 
 TRACE_MARKER = "_stream/trace_commit.json"
-
-
-def _state(io: TableIO) -> dict | None:
-    text = io.read_text(TRACE_MARKER)
-    return json.loads(text) if text is not None else None
-
-
-def read_current_trace(io: TableIO, name: str = "trace_trans") -> DataFrame:
-    """Committed version of 'trace_trans' (prev_tool, tool, n_transitions)
-    or 'trace_last' (conv_id, last_tool)."""
-    state = _state(io)
-    if state is None:
-        raise FileNotFoundError(f"no committed trace stream state under {io.base}")
-    return io.read(f"{name}__v{state['version']}")
 
 
 def fold_trace_batch(
@@ -69,14 +50,10 @@ def fold_trace_batch(
     """One transcript micro-batch → stitch cross-batch predecessors from
     the committed per-conversation state, SUM-merge transition counts,
     publish both tables as a unit."""
-    state = _state(io)
-    if (
-        state is not None
-        and state.get("lineage") == lineage
-        and int(epoch_id) <= int(state.get("epoch", -1))
-    ):
-        return  # replay of a fully-committed batch
-    k = int(state["version"]) if state is not None else -1
+    state = commit.state(io, TRACE_MARKER)
+    if commit.committed(state, lineage, epoch_id):
+        return
+    k = state["version"]
 
     calls = batch_df.filter(
         (F.col("role") == "tool") & (F.col("tool") != "")
@@ -118,41 +95,16 @@ def fold_trace_batch(
 
     io.write(trans_b, f"trace_trans__v{k + 1}")
     io.write(merged_last, f"trace_last__v{k + 1}")
-    io.write_text(
-        TRACE_MARKER,
-        json.dumps({"lineage": lineage, "epoch": int(epoch_id), "version": k + 1}),
-    )
-    if k >= 1:  # GC a superseded version; correctness never depends on it
-        for name in (f"trace_trans__v{k - 1}", f"trace_last__v{k - 1}"):
-            try:
-                io.delete(name)
-            except Exception:
-                pass
+    commit.publish(io, TRACE_MARKER, state, lineage, epoch_id, k + 1)
+    commit.gc(io, ("trace_trans", "trace_last"), k - 1)
 
 
 def run_trace_stream(
-    spark: SparkSession,
-    input_dir: str,
-    io: TableIO,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    max_files_per_trigger: int = 64,
-):
-    """Start (and with available_now=True, drain) the transition fold."""
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_DDL)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
+    spark: SparkSession, input_dir: str, io: TableIO, checkpoint_dir: str
+) -> None:
+    """Drain the transition fold over every file present now."""
+    commit.drain(
+        commit.file_stream(spark, commit.TRANSCRIPT_DDL, input_dir),
+        lambda df, epoch: fold_trace_batch(io, df, epoch, lineage=checkpoint_dir),
+        checkpoint_dir,
     )
-    fold = lambda df, epoch: fold_trace_batch(  # noqa: E731
-        io, df, epoch, lineage=checkpoint_dir
-    )
-    writer = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q

@@ -11,50 +11,32 @@ over everything ingested so far (asserted in
 tests/test_weak_label_stream.py).  Work per batch is O(batch); state is
 one row per labeling function.
 
-Commit protocol mirrors streaming/sketch_stream.py: each fold writes a
-fresh ``wl_counters__v{k+1}`` table (never overwriting the version it
-read), then publishes it with ONE marker write recording (lineage,
-epoch, version).  Crash before the marker → replay redoes the fold from
-v{k}; replay of a committed epoch is skipped.  Read the audit view via
-``read_current_weak_stats`` (coverage is derived at read time, never
-folded).
+Commit protocol: ``streaming/commit.py``.  Each fold writes a fresh
+``wl_counters__v{k+1}`` table and publishes it with ONE marker write.
+Read the audit view via ``read_current_weak_stats`` (coverage is derived
+at read time, never folded).
 """
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import TableIO
-from ..operators.corpus import (
-    WEAK_LFS,
-    weak_lf_counters,
-    weak_stats_from_counters,
-)
+from ..operators.corpus import weak_lf_counters, weak_stats_from_counters
+from . import commit
 
 DOCUMENT_DDL = "doc_id bigint, text string"
 
 WL_MARKER = "_stream/weak_label_commit.json"
 
 
-def _state(io: TableIO) -> dict | None:
-    text = io.read_text(WL_MARKER)
-    return json.loads(text) if text is not None else None
-
-
-def read_current_weak_counters(io: TableIO) -> DataFrame:
-    state = _state(io)
-    if state is None:
-        raise FileNotFoundError(f"no committed weak-label state under {io.base}")
-    return io.read(f"wl_counters__v{state['version']}")
-
-
 def read_current_weak_stats(io: TableIO) -> DataFrame:
     """The committed audit table (lf, label, n_fired, coverage_micro,
     n_overlap, n_conflict, n_agree_vote) over everything ingested."""
-    return weak_stats_from_counters(read_current_weak_counters(io))
+    return weak_stats_from_counters(
+        commit.read_current(io, WL_MARKER, "wl_counters")
+    )
 
 
 def fold_weak_label_batch(
@@ -62,21 +44,15 @@ def fold_weak_label_batch(
     batch_df: DataFrame,
     epoch_id: int,
     lineage: str = "",
-    lfs: tuple = WEAK_LFS,
-    text_col: str = "text",
 ) -> None:
     """One document micro-batch → count the batch's LF indicators, SUM
     into the committed counters, publish as a unit."""
-    state = _state(io)
-    if (
-        state is not None
-        and state.get("lineage") == lineage
-        and int(epoch_id) <= int(state.get("epoch", -1))
-    ):
-        return  # replay of a fully-committed batch
-    k = int(state["version"]) if state is not None else -1
+    state = commit.state(io, WL_MARKER)
+    if commit.committed(state, lineage, epoch_id):
+        return
+    k = state["version"]
 
-    counters = weak_lf_counters(batch_df, lfs=lfs, text_col=text_col)
+    counters = weak_lf_counters(batch_df)
     if k >= 0:
         counters = (
             io.read(f"wl_counters__v{k}")
@@ -96,39 +72,16 @@ def fold_weak_label_batch(
             )
         )
     io.write(counters, f"wl_counters__v{k + 1}")
-    io.write_text(
-        WL_MARKER,
-        json.dumps({"lineage": lineage, "epoch": int(epoch_id), "version": k + 1}),
-    )
-    if k >= 1:  # GC a superseded version; correctness never depends on it
-        try:
-            io.delete(f"wl_counters__v{k - 1}")
-        except Exception:
-            pass
+    commit.publish(io, WL_MARKER, state, lineage, epoch_id, k + 1)
+    commit.gc(io, ("wl_counters",), k - 1)
 
 
 def run_weak_label_stream(
-    spark: SparkSession,
-    input_dir: str,
-    io: TableIO,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Start (and with available_now=True, drain) the streaming monitor."""
-    stream = (
-        spark.readStream.schema(DOCUMENT_DDL)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(input_dir)
+    spark: SparkSession, input_dir: str, io: TableIO, checkpoint_dir: str
+) -> None:
+    """Drain the streaming monitor over every file present now."""
+    commit.drain(
+        commit.file_stream(spark, DOCUMENT_DDL, input_dir),
+        lambda df, epoch: fold_weak_label_batch(io, df, epoch, lineage=checkpoint_dir),
+        checkpoint_dir,
     )
-    fold = lambda df, epoch: fold_weak_label_batch(  # noqa: E731
-        io, df, epoch, lineage=checkpoint_dir
-    )
-    writer = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q

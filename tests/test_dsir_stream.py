@@ -8,9 +8,10 @@ from pyspark.sql import functions as F
 
 from knowledge_graph_spark.io import TableIO
 from knowledge_graph_spark.operators.corpus import dsir_bucket_counts, dsir_scores
+from knowledge_graph_spark.streaming import commit
 from knowledge_graph_spark.streaming.dsir_stream import (
+    DSIR_MARKER,
     fold_dsir_batch,
-    read_current_dsir,
     run_dsir_stream,
 )
 
@@ -25,6 +26,10 @@ ROWS2 = [
     (3, "iota kappa beta gamma gamma iota"),
 ]
 N_BUCKETS = 64
+
+
+def _current(io):
+    return commit.read_current(io, DSIR_MARKER, "dsir_buckets")
 
 
 def _target():
@@ -46,12 +51,12 @@ def test_dsir_fold_equals_batch_and_replay_is_noop(spark, tmp_path):
 
     full = spark.createDataFrame(ROWS1 + ROWS2, DDL)
     want = dsir_bucket_counts(full, target=_target(), n_buckets=N_BUCKETS)
-    got = read_current_dsir(io)
+    got = _current(io)
     assert _rows(got) == _rows(want)
 
     # replay of a committed epoch is a no-op
     fold_dsir_batch(io, b2, 1, target=_target(), lineage="t", n_buckets=N_BUCKETS)
-    assert _rows(read_current_dsir(io)) == _rows(want)
+    assert _rows(_current(io)) == _rows(want)
 
     # downstream scores against the streamed models == one-shot batch DSIR
     batch = dsir_scores(full, target=_target(), n_buckets=N_BUCKETS, keep_k=3)
@@ -60,7 +65,7 @@ def test_dsir_fold_equals_batch_and_replay_is_noop(spark, tmp_path):
         target=_target(),
         n_buckets=N_BUCKETS,
         keep_k=3,
-        bucket_counts=read_current_dsir(io),
+        bucket_counts=_current(io),
     )
     assert _rows(streamed) == _rows(batch)
 
@@ -84,4 +89,4 @@ def test_dsir_stream_end_to_end(spark, tmp_path):
     )
     full = spark.createDataFrame(ROWS1 + ROWS2, DDL)
     want = dsir_bucket_counts(full, target=_target(), n_buckets=N_BUCKETS)
-    assert _rows(read_current_dsir(io)) == _rows(want)
+    assert _rows(_current(io)) == _rows(want)

@@ -1,12 +1,12 @@
 """CDC-style streaming KG maintenance with deletes (retract_stream).
 
-Contract under test: inserts fold like streaming/incremental.py (graph
-union + one appended record segment per batch), a delete batch rebases
-the graph to parse_and_merge over the retained record segments — which
-must be BIT-IDENTICAL to a ground-up batch rebuild on the retained
-transcripts (the same equality the batch ``kg_retract`` gate proves
-cross-engine) — and the versioned-marker commit protocol keeps replays
-idempotent.
+Contract under test: an insert batch folds as a graph union (the
+reference's G5 union) plus one appended record segment, a delete batch
+rebases the graph to parse_and_merge over the retained record segments
+— which must be BIT-IDENTICAL to a ground-up batch rebuild on the
+retained transcripts (the same equality the batch ``kg_retract`` gate
+proves cross-engine) — and the versioned-marker commit protocol
+(streaming/commit.py) keeps replays idempotent.
 """
 
 from __future__ import annotations
@@ -18,12 +18,12 @@ import pytest
 
 from knowledge_graph_spark.io import TableIO
 from knowledge_graph_spark.pipeline import PipelineConfig, build_graph
-from knowledge_graph_spark.streaming.incremental import TRANSCRIPT_DDL
+from knowledge_graph_spark.streaming import commit
+from knowledge_graph_spark.streaming.commit import TRANSCRIPT_DDL
 from knowledge_graph_spark.streaming.retract_stream import (
     CDC_MARKER,
     fold_delete_batch,
     fold_insert_batch,
-    read_current_kg,
     run_kg_cdc,
 )
 
@@ -37,6 +37,10 @@ def _batch(spark, conv, mentions):
         for i, m in enumerate(mentions)
     ]
     return spark.createDataFrame(rows, TRANSCRIPT_DDL)
+
+
+def _current(io, name):
+    return commit.read_current(io, CDC_MARKER, name)
 
 
 def _nodes_dict(df):
@@ -58,15 +62,15 @@ def test_kg_cdc_delete_equals_rebuild(spark, tmp_path):
     b2 = _batch(spark, "c2", ["ALPHA", "GAMMA"])
     b1.write.mode("append").parquet(ins)
     run_kg_cdc(spark, ins, None, io, ckpt, CFG)
-    assert {"ALPHA", "BETA"} <= set(_nodes_dict(read_current_kg(io, "nodes")))
+    assert {"ALPHA", "BETA"} <= set(_nodes_dict(_current(io, "nodes")))
 
     # second insert wave, then retract c1
     b2.write.mode("append").parquet(ins)
     spark.createDataFrame([("c1",)], "conv_id string").write.mode("append").parquet(dels)
     run_kg_cdc(spark, ins, dels, io, ckpt, CFG)
 
-    got_nodes = _nodes_dict(read_current_kg(io, "nodes"))
-    got_edges = _edges_dict(read_current_kg(io, "edges"))
+    got_nodes = _nodes_dict(_current(io, "nodes"))
+    got_edges = _edges_dict(_current(io, "edges"))
     assert "BETA" not in got_nodes  # only c1 mentioned BETA
     # the delete REBASES: bit-identical to a from-scratch build on c2
     stages = build_graph(b2, CFG)
@@ -81,8 +85,8 @@ def test_kg_cdc_delete_equals_rebuild(spark, tmp_path):
     before = (got_nodes, got_edges)
     run_kg_cdc(spark, ins, dels, io, ckpt, CFG)
     after = (
-        _nodes_dict(read_current_kg(io, "nodes")),
-        _edges_dict(read_current_kg(io, "edges")),
+        _nodes_dict(_current(io, "nodes")),
+        _edges_dict(_current(io, "edges")),
     )
     assert before == after
 
@@ -94,14 +98,14 @@ def test_kg_cdc_replay_idempotence(spark, tmp_path):
     fold_insert_batch(io, _batch(spark, "c2", ["GAMMA"]), CFG, 1, lineage="ins")
     fold_delete_batch(io, spark.createDataFrame([("c1",)], "conv_id string"), 0, lineage="del")
     state0 = json.loads(io.read_text(CDC_MARKER))
-    nodes0 = _nodes_dict(read_current_kg(io, "nodes"))
+    nodes0 = _nodes_dict(_current(io, "nodes"))
     assert set(nodes0) == _committed_titles(io)
 
     # replaying a COMMITTED epoch on either lineage is a no-op
     fold_insert_batch(io, _batch(spark, "c2", ["GAMMA"]), CFG, 1, lineage="ins")
     fold_delete_batch(io, spark.createDataFrame([("c1",)], "conv_id string"), 0, lineage="del")
     assert json.loads(io.read_text(CDC_MARKER)) == state0
-    assert _nodes_dict(read_current_kg(io, "nodes")) == nodes0
+    assert _nodes_dict(_current(io, "nodes")) == nodes0
 
     # a delete arriving before ANY insert just records its epoch — and
     # the marker's version=-1 must read as "no graph yet", not a crash
@@ -110,7 +114,7 @@ def test_kg_cdc_replay_idempotence(spark, tmp_path):
     st = json.loads(io2.read_text(CDC_MARKER))
     assert st["epochs"]["del"] == 0 and st["segments"] == []
     with pytest.raises(FileNotFoundError):
-        read_current_kg(io2, "nodes")
+        _current(io2, "nodes")
     # an insert folding AFTER that no-op delete starts cleanly at v0
     fold_insert_batch(io2, _batch(spark, "c9", ["OMEGA"]), CFG, 0, lineage="ins")
     assert "OMEGA" in _committed_titles(io2)
@@ -145,7 +149,7 @@ def test_kg_cdc_gcs_superseded_versions(spark, tmp_path):
 
 
 def _committed_titles(io):
-    return {r.title for r in read_current_kg(io, "nodes").collect()}
+    return {r.title for r in _current(io, "nodes").collect()}
 
 
 @pytest.mark.filterwarnings("ignore")
@@ -169,12 +173,12 @@ def test_kg_cdc_component_maintenance_matches_cold(spark, tmp_path):
         io, _batch(spark, "c3", ["DELTA", "EPSILON"]), CFG, 2, components=True
     )
     comp = {
-        r.title: r.component for r in read_current_kg(io, "components").collect()
+        r.title: r.component for r in _current(io, "components").collect()
     }
     cold = {
         r.title: r.component
         for r in connected_components(
-            read_current_kg(io, "nodes"), read_current_kg(io, "edges")
+            _current(io, "nodes"), _current(io, "edges")
         ).collect()
     }
     assert comp == cold
@@ -185,12 +189,12 @@ def test_kg_cdc_component_maintenance_matches_cold(spark, tmp_path):
         io, spark.createDataFrame([("c2",)], "conv_id string"), 0, components=True
     )
     comp2 = {
-        r.title: r.component for r in read_current_kg(io, "components").collect()
+        r.title: r.component for r in _current(io, "components").collect()
     }
     cold2 = {
         r.title: r.component
         for r in connected_components(
-            read_current_kg(io, "nodes"), read_current_kg(io, "edges")
+            _current(io, "nodes"), _current(io, "edges")
         ).collect()
     }
     assert comp2 == cold2
@@ -227,11 +231,11 @@ def test_kg_stream_job_cli_end_to_end_and_resume(spark, tmp_path):
     titles1 = _committed_titles(io)
     assert "BETA" not in titles1 and {"ALPHA", "GAMMA"} <= titles1
     # --components maintained the component table through insert + delete
-    comp = {r.title for r in read_current_kg(io, "components").collect()}
+    comp = {r.title for r in _current(io, "components").collect()}
     assert comp == titles1
     # the other maintained tables + the change feed rode the same folds
-    assert {r.title for r in read_current_kg(io, "communities").collect()} == titles1
-    sal = {r.title for r in read_current_kg(io, "salience").collect()}
+    assert {r.title for r in _current(io, "communities").collect()} == titles1
+    sal = {r.title for r in _current(io, "salience").collect()}
     assert sal  # salience covers edge endpoints only (isolated nodes absent)
     assert sal <= titles1
     state_v = json.loads(io.read_text(CDC_MARKER))["version"]
@@ -273,8 +277,8 @@ def test_kg_cdc_salience_maintenance_warm_tracks_converged(spark, tmp_path):
     fold_insert_batch(
         io, _batch(spark, "c2", ["ENT0", "XNEW"]), CFG, 1, salience=True
     )
-    sal = {r.title: r.rank_scaled for r in read_current_kg(io, "salience").collect()}
-    edges = read_current_kg(io, "edges").select("source", "target").persist()
+    sal = {r.title: r.rank_scaled for r in _current(io, "salience").collect()}
+    edges = _current(io, "edges").select("source", "target").persist()
     endpoints = {
         r.t
         for r in edges.selectExpr("source AS t")
@@ -302,8 +306,8 @@ def test_kg_cdc_salience_maintenance_warm_tracks_converged(spark, tmp_path):
     fold_delete_batch(
         io, spark.createDataFrame([("c2",)], "conv_id string"), 0, salience=True
     )
-    sal2 = {r.title: r.rank_scaled for r in read_current_kg(io, "salience").collect()}
-    e2 = read_current_kg(io, "edges").select("source", "target")
+    sal2 = {r.title: r.rank_scaled for r in _current(io, "salience").collect()}
+    e2 = _current(io, "edges").select("source", "target")
     endpoints2 = {
         r.t
         for r in e2.selectExpr("source AS t")
@@ -344,7 +348,7 @@ def test_kg_cdc_community_maintenance_replays_warm_chain(spark, tmp_path):
         io, _batch(spark, "c2", ["ALPHA", "XNEW"]), CFG, 1, communities=True
     )
     comm = {
-        r.title: r.community for r in read_current_kg(io, "communities").collect()
+        r.title: r.community for r in _current(io, "communities").collect()
     }
     prior = label_propagation(
         io.read("nodes__v0"),
@@ -380,9 +384,9 @@ def test_kg_cdc_stream_path_threads_maintenance_flags(spark, tmp_path):
         spark, ins, None, io, str(tmp_path / "ckpt"), CFG,
         salience=True, communities=True, claims=True,
     )
-    assert read_current_kg(io, "salience").count() > 0
-    assert read_current_kg(io, "communities").count() > 0
-    assert read_current_kg(io, "claims").count() > 0
+    assert _current(io, "salience").count() > 0
+    assert _current(io, "communities").count() > 0
+    assert _current(io, "claims").count() > 0
 
 
 @pytest.mark.filterwarnings("ignore")
@@ -469,16 +473,15 @@ def test_kg_cdc_claims_delete_equals_rebuild(spark, tmp_path):
     fold_insert_batch(io, b2, CFG, 1, lineage="ins", claims=True)
 
     # after both inserts: claims == batch chain over c1 ∪ c2
-    got = _claims_dict(read_current_kg(io, "claims"))
+    got = _claims_dict(_current(io, "claims"))
     want = _claims_dict(extract_claims(b1.unionByName(b2)))
     assert got == want and {"USER_1", "USER_2", "USER_3"} <= set(got)
 
     # delete c1 → claims rebased to the batch chain over c2 alone
     fold_delete_batch(
-        io, spark.createDataFrame([("c1",)], "conv_id string"), 0,
-        lineage="del", claims=True,
+        io, spark.createDataFrame([("c1",)], "conv_id string"), 0, lineage="del"
     )
-    got = _claims_dict(read_current_kg(io, "claims"))
+    got = _claims_dict(_current(io, "claims"))
     want = _claims_dict(extract_claims(b2))
     assert got == want
     assert "USER_2" not in got  # only c1 carried USER_2's claim
@@ -489,8 +492,7 @@ def test_kg_cdc_claims_delete_equals_rebuild(spark, tmp_path):
     assert len(state["claim_segments"]) == 1
     assert state["claim_segments"][0].endswith("c")
     fold_delete_batch(
-        io, spark.createDataFrame([("c1",)], "conv_id string"), 0,
-        lineage="del", claims=True,
+        io, spark.createDataFrame([("c1",)], "conv_id string"), 0, lineage="del"
     )
     assert json.loads(io.read_text(CDC_MARKER)) == state
 
@@ -505,11 +507,28 @@ def test_kg_cdc_claims_flag_off_writes_no_table(spark, tmp_path):
 
 
 @pytest.mark.filterwarnings("ignore")
+def test_kg_cdc_claims_table_survives_insert_fold_with_claims_off(spark, tmp_path):
+    """An insert fold with claims off after one with claims on: the flag
+    only gates extraction, so the committed version still has a claims
+    table, equal to the batch chain over the claim-extracted batch."""
+    from knowledge_graph_spark.operators.claims import extract_claims
+
+    io = TableIO(spark, base=str(tmp_path / "wh"))
+    b1 = _claim_batch(spark, "c1", [(1, "CLICK", 3)])
+    fold_insert_batch(io, b1, CFG, 0, lineage="ins", claims=True)
+    fold_insert_batch(io, _claim_batch(spark, "c2", [(2, "VIEW", 4)]), CFG, 1, lineage="ins")
+    state = json.loads(io.read_text(CDC_MARKER))
+    assert state["version"] == 1 and state["claim_segments"] == ["claims__s0"]
+    assert _claims_dict(_current(io, "claims")) == _claims_dict(extract_claims(b1))
+
+
+@pytest.mark.filterwarnings("ignore")
 def test_kg_cdc_claims_purged_on_delete_even_without_flag(spark, tmp_path):
     """Review finding: retraction must reach the persisted claim
-    segments even when the delete fold runs WITHOUT claims=True —
-    otherwise a later --claims run would re-fold the retracted
-    conversation's rows back into the claims table."""
+    segments even when the run that deletes has claims off (the delete
+    fold takes no claims flag) — otherwise a later --claims run would
+    re-fold the retracted conversation's rows back into the claims
+    table."""
     from knowledge_graph_spark.operators.claims import extract_claims
 
     io = TableIO(spark, base=str(tmp_path / "wh"))
@@ -525,11 +544,11 @@ def test_kg_cdc_claims_purged_on_delete_even_without_flag(spark, tmp_path):
     assert len(state["claim_segments"]) == 1
     assert state["claim_segments"][0].endswith("c")
     # the claims table at the committed version reflects the retraction
-    got = _claims_dict(read_current_kg(io, "claims"))
+    got = _claims_dict(_current(io, "claims"))
     assert got == _claims_dict(extract_claims(b2))
     assert "USER_1" not in got
     # and a later claims=True insert fold sees only retained + new rows
     b3 = _claim_batch(spark, "c3", [(3, "BUY", 5)])
     fold_insert_batch(io, b3, CFG, 2, lineage="ins", claims=True)
-    got = _claims_dict(read_current_kg(io, "claims"))
+    got = _claims_dict(_current(io, "claims"))
     assert got == _claims_dict(extract_claims(b2.unionByName(b3)))

@@ -8,9 +8,10 @@ from pyspark.sql import functions as F
 from knowledge_graph_spark.functions.textqc import normalized_text, ws_tokens_col
 from knowledge_graph_spark.io import TableIO
 from knowledge_graph_spark.operators import sketches as sk
+from knowledge_graph_spark.streaming import commit
 from knowledge_graph_spark.streaming.sketch_stream import (
+    SKETCH_MARKER,
     fold_sketch_batch,
-    read_current_sketch,
     run_sketch_stream,
 )
 
@@ -23,6 +24,10 @@ ROWS2 = [
     (2, "alpha eta theta"),
     (3, "iota kappa beta gamma gamma"),
 ]
+
+
+def _current(io, name):
+    return commit.read_current(io, SKETCH_MARKER, name)
 
 
 def _batch_tables(spark, rows):
@@ -60,14 +65,14 @@ def test_sketch_stream_two_waves_equals_batch(spark, tmp_path):
     want_regs, want_cells, want_hist = _batch_tables(spark, ROWS1 + ROWS2)
     got_regs = {
         r["register"]: r["max_rank"]
-        for r in read_current_sketch(io, "hll_regs").collect()
+        for r in _current(io, "hll_regs").collect()
     }
     got_cells = {
         (r["row"], r["bucket"]): r["total"]
-        for r in read_current_sketch(io, "cms_cells").collect()
+        for r in _current(io, "cms_cells").collect()
     }
     got_hist = {
-        r["bucket"]: r["n"] for r in read_current_sketch(io, "len_hist").collect()
+        r["bucket"]: r["n"] for r in _current(io, "len_hist").collect()
     }
     assert got_regs == want_regs
     assert got_cells == want_cells
@@ -75,7 +80,7 @@ def test_sketch_stream_two_waves_equals_batch(spark, tmp_path):
 
     # the estimate over the merged registers goes through the identical
     # arithmetic as a batch hll_distinct
-    est = sk.hll_estimate(read_current_sketch(io, "hll_regs")).collect()[0]
+    est = sk.hll_estimate(_current(io, "hll_regs")).collect()[0]
     full = spark.createDataFrame(ROWS1 + ROWS2, DDL)
     toks = full.select(
         F.explode(ws_tokens_col(normalized_text(F.col("text")))).alias("token")
@@ -90,19 +95,33 @@ def test_sketch_fold_replay_is_noop(spark, tmp_path):
     fold_sketch_batch(io, b1, epoch_id=0, lineage="ck")
     v1 = {
         (r["row"], r["bucket"]): r["total"]
-        for r in read_current_sketch(io, "cms_cells").collect()
+        for r in _current(io, "cms_cells").collect()
     }
     # crash-replay of the SAME epoch under the same lineage: skipped
     fold_sketch_batch(io, b1, epoch_id=0, lineage="ck")
     v2 = {
         (r["row"], r["bucket"]): r["total"]
-        for r in read_current_sketch(io, "cms_cells").collect()
+        for r in _current(io, "cms_cells").collect()
     }
     assert v1 == v2
     # a NEW epoch folds in (totals strictly grow for repeated tokens)
     fold_sketch_batch(io, b1, epoch_id=1, lineage="ck")
     v3 = {
         (r["row"], r["bucket"]): r["total"]
-        for r in read_current_sketch(io, "cms_cells").collect()
+        for r in _current(io, "cms_cells").collect()
     }
     assert sum(v3.values()) == 2 * sum(v1.values())
+
+
+def test_sketch_fold_replay_skipped_after_other_lineage_commits(spark, tmp_path):
+    """Two streams (lineages A and B) commit into one marker; a replay of
+    A's committed epoch 0 after B's commit is still skipped, so the
+    length histogram counts two folds, not three."""
+    io = TableIO(spark, base=str(tmp_path / "sk_wh3"))
+    b1 = spark.createDataFrame(ROWS1, DDL)
+    fold_sketch_batch(io, b1, epoch_id=0, lineage="A")
+    fold_sketch_batch(io, b1, epoch_id=0, lineage="B")
+    fold_sketch_batch(io, b1, epoch_id=0, lineage="A")  # replay
+    _, _, hist = _batch_tables(spark, ROWS1)
+    got = {r["bucket"]: r["n"] for r in _current(io, "len_hist").collect()}
+    assert got == {b: 2 * n for b, n in hist.items()}

@@ -3,20 +3,21 @@
 from __future__ import annotations
 
 import datetime
+import json
 
 import pytest
 from pyspark.sql import functions as F
 
 from knowledge_graph_spark.io import TableIO
 from knowledge_graph_spark.pipeline import PipelineConfig
-from knowledge_graph_spark.streaming.incremental import (
-    COMMIT_MARKER,
-    TRANSCRIPT_DDL,
-    fold_batch,
-    read_current,
-    run_incremental,
-    turn_counts,
+from knowledge_graph_spark.streaming import commit
+from knowledge_graph_spark.streaming.commit import TRANSCRIPT_DDL
+from knowledge_graph_spark.streaming.retract_stream import (
+    CDC_MARKER,
+    fold_insert_batch,
+    run_kg_cdc,
 )
+from knowledge_graph_spark.streaming.stateful import turn_counts
 
 TS = datetime.datetime(2024, 1, 1)
 
@@ -31,20 +32,24 @@ def _batch(spark, conv, mentions):
 
 @pytest.mark.filterwarnings("ignore")
 def test_incremental_fold_two_batches(spark, tmp_path):
+    """The CDC sink's insert stream folds arriving files as the G5 graph
+    union, exactly once per epoch."""
     inp = str(tmp_path / "in")
     io = TableIO(spark, base=str(tmp_path / "wh"))
     ckpt = str(tmp_path / "ckpt")
     cfg = PipelineConfig(chunk_size=64, chunk_overlap=8, tokenizer="ws")
 
+    def nodes():
+        return {r.title: r for r in commit.read_current(io, CDC_MARKER, "nodes").collect()}
+
     _batch(spark, "c1", ["ALPHA", "BETA"]).write.mode("append").parquet(inp)
-    run_incremental(spark, inp, io, ckpt, cfg)
-    nodes1 = {r.title for r in read_current(io, "nodes").collect()}
-    assert {"ALPHA", "BETA"} <= nodes1
+    run_kg_cdc(spark, inp, None, io, ckpt, cfg)
+    assert {"ALPHA", "BETA"} <= set(nodes())
 
     # second file: overlapping entity ALPHA + new GAMMA
     _batch(spark, "c2", ["ALPHA", "GAMMA"]).write.mode("append").parquet(inp)
-    run_incremental(spark, inp, io, ckpt, cfg)
-    nodes2 = {r.title: r for r in read_current(io, "nodes").collect()}
+    run_kg_cdc(spark, inp, None, io, ckpt, cfg)
+    nodes2 = nodes()
     assert {"ALPHA", "BETA", "GAMMA"} <= set(nodes2)
     # collided node carries the G5 framed description from the union
     assert "Old Information---" in nodes2["ALPHA"].description
@@ -53,23 +58,31 @@ def test_incremental_fold_two_batches(spark, tmp_path):
     assert "Old Information---" not in nodes2["GAMMA"].description
 
     # re-running with no new files is a no-op (offset log dedups inputs)
-    before = {r.title: r.description for r in read_current(io, "nodes").collect()}
-    run_incremental(spark, inp, io, ckpt, cfg)
-    after = {r.title: r.description for r in read_current(io, "nodes").collect()}
-    assert before == after
+    before = {t: r.description for t, r in nodes().items()}
+    state = json.loads(io.read_text(CDC_MARKER))
+    run_kg_cdc(spark, inp, None, io, ckpt, cfg)
+    assert {t: r.description for t, r in nodes().items()} == before
+    assert json.loads(io.read_text(CDC_MARKER)) == state
 
     # crash-replay idempotence: re-folding an already-committed epoch is
     # a no-op (offset committed, fold replayed — the marker's epoch check
     # catches it), and a replay of a PARTIALLY-committed fold redoes the
     # batch from the last committed version as a unit
-    committed_epoch = __import__("json").loads(io.read_text(COMMIT_MARKER))["epoch"]
-    fold_batch(io, _batch(spark, "c2", ["ALPHA", "GAMMA"]), cfg, committed_epoch, lineage=ckpt)
-    assert {r.title: r.description for r in read_current(io, "nodes").collect()} == before
+    lineage = f"{ckpt}/inserts"  # run_kg_cdc's insert-stream checkpoint
+    committed_epoch = state["epochs"][lineage]
+    fold_insert_batch(
+        io, _batch(spark, "c2", ["ALPHA", "GAMMA"]), cfg, committed_epoch, lineage=lineage
+    )
+    assert {t: r.description for t, r in nodes().items()} == before
+    assert json.loads(io.read_text(CDC_MARKER)) == state
     # uncommitted-epoch replay (as after a crash before the marker write):
     # applied once, exactly
-    fold_batch(io, _batch(spark, "c3", ["DELTA"]), cfg, committed_epoch + 1, lineage=ckpt)
-    fold_batch(io, _batch(spark, "c3", ["DELTA"]), cfg, committed_epoch + 1, lineage=ckpt)
-    nodes3 = {r.title: r for r in read_current(io, "nodes").collect()}
+    for _ in range(2):
+        fold_insert_batch(
+            io, _batch(spark, "c3", ["DELTA"]), cfg, committed_epoch + 1, lineage=lineage
+        )
+    assert json.loads(io.read_text(CDC_MARKER))["version"] == state["version"] + 1
+    nodes3 = nodes()
     assert "DELTA" in nodes3
     assert "Old Information---" not in nodes3["DELTA"].description  # folded once
 
@@ -174,7 +187,7 @@ def test_streaming_dedup_two_waves_equals_batch(spark, tmp_path):
     from knowledge_graph_spark.functions.textqc import normalized_text
     from knowledge_graph_spark.operators import dedup
     from knowledge_graph_spark.streaming.dedup_stream import (
-        read_current_dedup,
+        DEDUP_MARKER,
         run_dedup_stream,
     )
 
@@ -204,7 +217,7 @@ def test_streaming_dedup_two_waves_equals_batch(spark, tmp_path):
     got = {
         (r.id_a, r.id_b)
         for r in dedup.pairs_to_ids(
-            read_current_dedup(io, "mh_pairs"), named
+            commit.read_current(io, DEDUP_MARKER, "mh_pairs"), named
         ).collect()
     }
     batch = {

@@ -8,10 +8,10 @@ from pyspark.sql import functions as F
 
 from knowledge_graph_spark.io import TableIO
 from knowledge_graph_spark.operators.agent_trace import tool_transitions
+from knowledge_graph_spark.streaming import commit
 from knowledge_graph_spark.streaming.trace_stream import (
-    TRANSCRIPT_DDL,
+    TRACE_MARKER,
     fold_trace_batch,
-    read_current_trace,
     run_trace_stream,
 )
 
@@ -29,6 +29,10 @@ WAVE2 = [
     ("c2", 0, "tool", "r", "fetch", 6),
     ("c2", 1, "tool", "r", "search", 7),
 ]
+
+
+def _current(io, name="trace_trans"):
+    return commit.read_current(io, TRACE_MARKER, name)
 
 
 def _df(spark, rows):
@@ -55,7 +59,7 @@ def test_trace_stream_spanning_batches_equals_batch(spark, tmp_path):
     run_trace_stream(spark, inp, io, ckpt)
     mid = {
         (r.prev_tool, r.tool): r.n_transitions
-        for r in read_current_trace(io).collect()
+        for r in _current(io).collect()
     }
     assert mid == _batch_counts(spark, WAVE1)
 
@@ -63,7 +67,7 @@ def test_trace_stream_spanning_batches_equals_batch(spark, tmp_path):
     run_trace_stream(spark, inp, io, ckpt)
     got = {
         (r.prev_tool, r.tool): r.n_transitions
-        for r in read_current_trace(io).collect()
+        for r in _current(io).collect()
     }
     assert got == _batch_counts(spark, WAVE1 + WAVE2)
     # the boundary transition specifically
@@ -71,7 +75,7 @@ def test_trace_stream_spanning_batches_equals_batch(spark, tmp_path):
     assert got[("^START", "fetch")] == 1  # c2 genuinely new
     # per-conversation state carries the latest tail
     tails = {
-        r.conv_id: r.last_tool for r in read_current_trace(io, "trace_last").collect()
+        r.conv_id: r.last_tool for r in _current(io, "trace_last").collect()
     }
     assert tails == {"c1": "fetch", "c2": "search"}
 
@@ -82,13 +86,13 @@ def test_trace_fold_replay_is_noop(spark, tmp_path):
     before = _batch_counts(spark, WAVE1)
     got1 = {
         (r.prev_tool, r.tool): r.n_transitions
-        for r in read_current_trace(io).collect()
+        for r in _current(io).collect()
     }
     assert got1 == before
     # replaying the committed epoch must not double-count
     fold_trace_batch(io, _df(spark, WAVE1), epoch_id=0, lineage="L")
     got2 = {
         (r.prev_tool, r.tool): r.n_transitions
-        for r in read_current_trace(io).collect()
+        for r in _current(io).collect()
     }
     assert got2 == before

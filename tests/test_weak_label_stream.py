@@ -6,9 +6,10 @@ import pytest
 
 from knowledge_graph_spark.io import TableIO
 from knowledge_graph_spark.operators.corpus import weak_lf_counters, weak_lf_stats
+from knowledge_graph_spark.streaming import commit
 from knowledge_graph_spark.streaming.weak_label_stream import (
+    WL_MARKER,
     fold_weak_label_batch,
-    read_current_weak_counters,
     read_current_weak_stats,
     run_weak_label_stream,
 )
@@ -23,6 +24,10 @@ ROWS2 = [
     (3, "plain text nothing"),
     (4, "window stream batch join agg query"),
 ]
+
+
+def _counters(io):
+    return commit.read_current(io, WL_MARKER, "wl_counters")
 
 
 def _rows(df):
@@ -41,7 +46,7 @@ def test_weak_label_stream_two_waves_equals_batch(spark, tmp_path):
     run_weak_label_stream(spark, inp, io, ckpt)
 
     want = _rows(weak_lf_counters(spark.createDataFrame(ROWS1 + ROWS2, DDL)))
-    got = _rows(read_current_weak_counters(io))
+    got = _rows(_counters(io))
     assert got == want
     # the derived audit view agrees with the one-shot batch audit
     want_stats = _rows(weak_lf_stats(spark.createDataFrame(ROWS1 + ROWS2, DDL)))
@@ -55,9 +60,9 @@ def test_weak_label_fold_replay_is_noop(spark, tmp_path):
     b2 = spark.createDataFrame(ROWS2, DDL)
     fold_weak_label_batch(io, b1, 0, lineage="ck")
     fold_weak_label_batch(io, b2, 1, lineage="ck")
-    after = _rows(read_current_weak_counters(io))
+    after = _rows(_counters(io))
     # replaying committed epochs changes nothing
     fold_weak_label_batch(io, b1, 0, lineage="ck")
     fold_weak_label_batch(io, b2, 1, lineage="ck")
-    assert _rows(read_current_weak_counters(io)) == after
+    assert _rows(_counters(io)) == after
     assert after == _rows(weak_lf_counters(spark.createDataFrame(ROWS1 + ROWS2, DDL)))
