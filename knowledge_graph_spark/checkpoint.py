@@ -22,6 +22,12 @@ xxhash64) — stable across shuffle order, so downstream runs can verify an
 upstream table hasn't drifted without re-reading it.  Row count,
 per-partition counts and fingerprint come from one aggregation over the
 read-back table, keyed by partition id: one Spark action per stage.
+
+A stage with bucket columns is written as a bucketed table into
+``partitioning.shuffle_width`` buckets, the width every shuffle that
+meets it runs at; the manifest records ``bucket_by`` and that
+``n_buckets``.  A resume re-registers the table with the recorded count,
+so a table written at another width is read back as it was written.
 """
 
 from __future__ import annotations
@@ -36,9 +42,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .io import TableIO
+from .partitioning import shuffle_width
 
 MANIFESTS = "_manifests"
-N_BUCKETS = 64
 
 
 def _row_hash(df: DataFrame) -> Column:
@@ -122,8 +128,9 @@ class StageRunner:
                 return self.io.read_bucketed(name)
             return self.io.read(name)
         df = make()
+        n_buckets = shuffle_width(self.io.spark) if bucket_by else None
         if bucket_by:
-            self.io.write_bucketed(df, name, list(bucket_by), n_buckets=N_BUCKETS)
+            self.io.write_bucketed(df, name, list(bucket_by), n_buckets)
             out = self.io.read_bucketed(name)
         else:
             self.io.write(df, name)
@@ -140,7 +147,7 @@ class StageRunner:
             "schema": out.schema.simpleString(),
             "schema_json": out.schema.json(),
             "bucket_by": list(bucket_by) or None,
-            "n_buckets": N_BUCKETS if bucket_by else None,
+            "n_buckets": n_buckets,
             # stage metrics: compute+write+read-back wall clock and the
             # materialized footprint (skew + cost accounting per stage)
             "wall_s": round(time.time() - t0, 3),

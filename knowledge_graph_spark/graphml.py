@@ -121,6 +121,8 @@ def read_graphml(
 # unparseable by ANY XML reader, including read_graphml — stripped at
 # write time so the documented lossless round-trip holds over the
 # XML-1.0-representable subset (nx's writer has the same constraint).
+# Stripping may make two ids or two attribute names equal; the writer
+# raises then instead of merging them (``_unique_safe``).
 _XML_INVALID = re.compile(
     "[\x00-\x08\x0b\x0c\x0e-\x1f\ud800-\udfff\ufffe\uffff]"
 )
@@ -128,6 +130,20 @@ _XML_INVALID = re.compile(
 
 def _xml_safe(s: str) -> str:
     return _XML_INVALID.sub("", s)
+
+
+def _unique_safe(seen: dict[str, str], raw: str, what: str) -> str:
+    """``_xml_safe(raw)``, refusing two distinct originals that sanitise
+    to the same string: written, they would merge into one id or one
+    attribute name.  ``seen`` maps sanitised → original."""
+    safe = _xml_safe(raw)
+    first = seen.setdefault(safe, raw)
+    if first != raw:
+        raise ValueError(
+            f"GraphML {what}s {first!r} and {raw!r} are equal once the "
+            "characters XML 1.0 cannot hold are removed"
+        )
+    return safe
 
 
 _XML_TYPE = {
@@ -169,12 +185,14 @@ def write_graphml(
     ]
     key_ids: dict[tuple[str, str], str] = {}
     for domain, attrs in (("node", nattrs), ("edge", eattrs)):
+        names: dict[str, str] = {}
         for name, dtype in attrs:
             kid = f"d{len(key_ids)}"
             key_ids[(domain, name)] = kid
             xt = _XML_TYPE.get(dtype, "string")
+            safe = _unique_safe(names, name, f"{domain} attribute name")
             lines.append(
-                f'<key id="{kid}" for="{domain}" attr.name={quoteattr(_xml_safe(name))} '
+                f'<key id="{kid}" for="{domain}" attr.name={quoteattr(safe)} '
                 f'attr.type="{xt}"/>'
             )
     lines.append(f'<graph edgedefault="{edgedefault}">')
@@ -189,9 +207,12 @@ def write_graphml(
                 return f"{v:.1f}"  # nx float rendering: 8.0, not 8
         return str(v)
 
+    # node ids and edge endpoints share one namespace: an endpoint that
+    # sanitises onto another node's id would re-point the edge
+    ids: dict[str, str] = {}
     for r in nodes.collect():
         d = r.asDict()
-        lines.append(f"<node id={quoteattr(_xml_safe(str(d[node_id_col])))}>")
+        lines.append(f"<node id={quoteattr(_unique_safe(ids, str(d[node_id_col]), 'id'))}>")
         for name, _t in nattrs:
             if d[name] is not None:
                 kid = key_ids[("node", name)]
@@ -202,8 +223,8 @@ def write_graphml(
     for r in edges.collect():
         d = r.asDict()
         lines.append(
-            f"<edge source={quoteattr(_xml_safe(str(d['source'])))} "
-            f"target={quoteattr(_xml_safe(str(d['target'])))}>"
+            f"<edge source={quoteattr(_unique_safe(ids, str(d['source']), 'id'))} "
+            f"target={quoteattr(_unique_safe(ids, str(d['target']), 'id'))}>"
         )
         for name, _t in eattrs:
             if d[name] is not None:

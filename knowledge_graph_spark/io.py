@@ -93,7 +93,7 @@ class TableIO:
         df: DataFrame,
         name: str,
         bucket_cols: list[str],
-        n_buckets: int = 64,
+        n_buckets: int,
         sort_cols: list[str] | None = None,
     ) -> None:
         """Bucketed materialization for shuffle-free co-located joins.
@@ -101,8 +101,13 @@ class TableIO:
         The node/edge tables are repeatedly joined on entity name
         (degrees, rank, communities, canonicalization).  Bucketing both
         sides by the join key at write time lets every later equi-join
-        skip its Exchange entirely (asserted in
-        tests/test_physical_plans.py).  Iceberg path: bucket partition
+        skip its Exchange entirely (tests/test_checkpoint_resume.py).
+        ``n_buckets`` has no default: it sets the task count of every
+        bucketed scan of the table, and a join against a shuffled frame
+        adds no exchange only when the two widths agree (otherwise one
+        side is re-shuffled to the other's width), so ``StageRunner``
+        passes the session's shuffle width
+        (``partitioning.shuffle_width``).  Iceberg path: bucket partition
         transform (storage-partitioned joins); parquet path: Spark
         managed bucketed table (bucketBy requires saveAsTable)."""
         if self.catalog:

@@ -18,10 +18,13 @@ Reference analogues:
 
 from __future__ import annotations
 
+import re
 import time
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..partitioning import shuffle_width
 
 
 def node_degrees(edges: DataFrame) -> DataFrame:
@@ -1662,15 +1665,16 @@ def scc_fixed_rounds(
 
     def _bucketize(df: DataFrame, cols: list[str]) -> tuple[DataFrame, str]:
         """Write df as a table bucketed on `cols` (bucket count = the
-        session's shuffle partitions) and read it back — the read
-        reports HashPartitioning(cols) to Catalyst, so equi-joins on
-        `cols` skip the exchange on this side."""
+        session's shuffle width) and read it back — the read reports
+        HashPartitioning(cols) to Catalyst, so equi-joins on `cols` skip
+        the exchange on this side.  The scratch name carries the
+        application id: processes sharing a metastore never collide."""
         _bucket_seq[0] += 1
-        name = f"__scc_bucket_{id(_bucket_seq)}_{_bucket_seq[0]}"
-        p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        df.write.mode("overwrite").format("parquet").bucketBy(p, *cols).saveAsTable(
-            name
-        )
+        app = re.sub(r"\W", "_", spark.sparkContext.applicationId)
+        name = f"__scc_bucket_{app}_{id(_bucket_seq)}_{_bucket_seq[0]}"
+        df.write.mode("overwrite").format("parquet").bucketBy(
+            shuffle_width(spark), *cols
+        ).saveAsTable(name)
         return spark.table(name), name
 
     def _min_prop_fused(rem: DataFrame, er: DataFrame) -> tuple[DataFrame, int]:

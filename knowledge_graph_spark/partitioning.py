@@ -12,11 +12,26 @@ serializing the whole scan onto one core.
 Values are row-identical either way (round-robin repartition reorders
 rows only); callers must therefore be order-insensitive — true for every
 aggregate/join consumer in this repo.
+
+``shuffle_width`` is the one reading of the session's shuffle width.
+The transcripts placement, the bucket count of the checkpointed tables
+and the SCC scratch tables all take it, so their hash layouts agree.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+
+def shuffle_width(spark: SparkSession) -> int:
+    """The session's shuffle width: ``spark.sql.shuffle.partitions`` as
+    an integer.  Some platforms set the conf to a non-numeric value such
+    as ``auto``; the width is then the cluster's default parallelism."""
+    value = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        return int(value)
+    except ValueError:
+        return spark.sparkContext.defaultParallelism
 
 
 def widen(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

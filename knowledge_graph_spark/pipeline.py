@@ -23,14 +23,20 @@ checkpointed copy is bucketed on.  Two evaluators walk the list:
 the gates, the bench and the CDC folds, and ``jobs/run_pipeline.py``
 runs every stage through ``checkpoint.StageRunner``.
 
-Placement: ``source`` repartitions the transcripts by conv_id, at
-``spark.sql.shuffle.partitions`` width, and nothing else repartitions.
-That one exchange already satisfies the assembly groupBy, and AQE does
-not coalesce an explicit repartition, so the chunk and extraction UDFs
-run that many tasks although conversation text is small in bytes (AQE's
-byte-based coalescing once collapsed a 4M-turn run to ~3 tasks).  The
-claims and agent-trace stages key on conv_id too and read the same
-placement.
+Placement: one width, ``partitioning.shuffle_width`` (the session's
+``spark.sql.shuffle.partitions``), places both the transcripts and the
+checkpointed graph tables.  ``source`` repartitions the transcripts by
+conv_id at that width, and nothing else repartitions.  That one exchange
+already satisfies the assembly groupBy, and AQE does not coalesce an
+explicit repartition, so the chunk and extraction UDFs run that many
+tasks although conversation text is small in bytes (AQE's byte-based
+coalescing once collapsed a 4M-turn run to ~3 tasks).  The claims and
+agent-trace stages key on conv_id too and read the same placement.
+``StageRunner`` buckets ``nodes`` on title and ``edges`` on source into
+the same number of buckets, so a title-keyed join against a frame
+grouped by title sees ``hashpartitioning(title, n)`` on both sides and
+adds no exchange, and a bucketed scan of either table runs n tasks, not
+a fixed count.
 """
 
 from __future__ import annotations
@@ -51,6 +57,7 @@ from .operators.graphops import node_degrees, with_edge_ids, with_edge_rank, wit
 from .operators.parse import parse_and_merge
 from .operators.reports import community_hierarchy, leveled_reports
 from .operators.summarize import summarize_descriptions
+from .partitioning import shuffle_width
 
 SOURCE = "transcripts"
 
@@ -80,7 +87,7 @@ class Stage:
 def source(transcripts: DataFrame) -> dict[str, DataFrame]:
     """The tables an evaluation starts from: the transcripts, placed by
     conversation (see the module docstring)."""
-    n = int(transcripts.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n = shuffle_width(transcripts.sparkSession)
     return {SOURCE: transcripts.repartition(n, "conv_id")}
 
 

@@ -4,7 +4,10 @@ manifest contents, and the spark-submit job driver end-to-end."""
 from __future__ import annotations
 
 import json
+import re
+from functools import partial
 from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,7 +15,8 @@ from pyspark.sql import functions as F
 from knowledge_graph_spark.checkpoint import StageRunner, content_fingerprint
 from knowledge_graph_spark.io import TableIO
 from knowledge_graph_spark.operators.community import label_propagation
-from knowledge_graph_spark.pipeline import STAGES
+from knowledge_graph_spark.partitioning import shuffle_width
+from knowledge_graph_spark.pipeline import SOURCE, STAGES, PipelineConfig, source
 
 
 @pytest.fixture()
@@ -176,7 +180,8 @@ def test_job_driver_end_to_end_and_resume(spark, tmp_path):
     io2 = TableIO(spark, base=out)
     nodes_resumed = io2.read_bucketed("nodes")
     probe = nodes_resumed.select("title", "type")
-    io2.write_bucketed(probe, "probe_nodes", ["title"], n_buckets=64)
+    n_buckets = StageRunner(io2).manifest("nodes")["n_buckets"]
+    io2.write_bucketed(probe, "probe_nodes", ["title"], n_buckets)
     j = nodes_resumed.hint("merge").join(io2.read_bucketed("probe_nodes"), "title")
     plan = j._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" in plan and "Exchange hashpartitioning" not in plan
@@ -189,6 +194,60 @@ def test_job_driver_end_to_end_and_resume(spark, tmp_path):
     assert s3["computed"] == s1["computed"] and not s3["skipped"]
     assert s3["rows"] == s1["rows"]
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_bucketed_stages_take_the_shuffle_width(spark, io):
+    """The job's bucketed stages are written into as many buckets as the
+    session's shuffle width, so a scan of nodes runs that many tasks and
+    a merge join of nodes with a frame grouped by title shuffles once:
+    the grouping, not the nodes side, and not at a second width."""
+    cfg = PipelineConfig(chunk_size=128, chunk_overlap=16, tokenizer="ws")
+    turns = [
+        (f"c{i}", j, "user" if j % 2 == 0 else "assistant", f"ACME ships parts to GLOBEX in BERLIN {i}")
+        for i in range(6)
+        for j in range(3)
+    ]
+    t = source(spark.createDataFrame(turns, "conv_id string, turn_idx int, role string, text string"))
+    runner = StageRunner(io)
+    # the job's stage loop, up to the last bucketed stage
+    last = max(i for i, stage in enumerate(STAGES) if stage.bucket_by)
+    for stage in STAGES[: last + 1]:
+        t[stage.name] = runner.run(
+            stage.name,
+            partial(stage.make, t, cfg),
+            inputs=[i for i in stage.inputs if i != SOURCE],
+            bucket_by=stage.bucket_by,
+        )
+    width = shuffle_width(spark)
+    bucketed = [stage.name for stage in STAGES if stage.bucket_by]
+    assert bucketed == ["nodes", "edges"]
+    assert [runner.manifest(name)["n_buckets"] for name in bucketed] == [width, width]
+
+    nodes = io.read_bucketed("nodes")
+    grouped = io.read("nodes").groupBy("title").agg(F.count("*").alias("n"))
+    j = nodes.hint("merge").join(grouped, "title")
+    plan = j._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" in plan
+    assert f"SelectedBucketsCount: {width} out of {width}" in plan
+    exchanges = [ln for ln in plan.splitlines() if "Exchange " in ln]
+    assert len(exchanges) == 1, exchanges
+    assert re.search(rf"Exchange hashpartitioning\(title#\d+, {width}\)", exchanges[0])
+    assert j.rdd.getNumPartitions() == width
+    assert j.count() == runner.manifest("nodes")["rows"]
+
+
+def test_shuffle_width_falls_back_on_non_numeric_conf():
+    """``spark.sql.shuffle.partitions=auto`` (set by some platforms) is
+    not a number: the width is then the default parallelism."""
+
+    def session(value):
+        return SimpleNamespace(
+            conf=SimpleNamespace(get=lambda key: {"spark.sql.shuffle.partitions": value}[key]),
+            sparkContext=SimpleNamespace(defaultParallelism=6),
+        )
+
+    assert shuffle_width(session("auto")) == 6
+    assert shuffle_width(session("12")) == 12
 
 
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):

@@ -732,3 +732,35 @@ def test_scc_bucket_layout_output_identical(spark):
     assert not [
         t.name for t in spark.catalog.listTables() if t.name.startswith("__scc_bucket")
     ]
+
+
+def test_scc_bucket_scratch_tables_are_unique_per_application(spark, monkeypatch):
+    """The bucket layout's scratch tables live in the shared catalog:
+    their names carry the application id, so two processes on one
+    metastore never write each other's table, and their bucket count is
+    the session's shuffle width."""
+    import re
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from knowledge_graph_spark.operators.graphops import scc_fixed_rounds
+    from knowledge_graph_spark.partitioning import shuffle_width
+
+    buckets, names = [], []
+    save, bucket = DataFrameWriter.saveAsTable, DataFrameWriter.bucketBy
+
+    def bucket_by(self, n, *cols):
+        buckets.append(n)
+        return bucket(self, n, *cols)
+
+    def save_as_table(self, name, *args, **kwargs):
+        names.append(name)
+        return save(self, name, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "bucketBy", bucket_by)
+    monkeypatch.setattr(DataFrameWriter, "saveAsTable", save_as_table)
+    df = spark.createDataFrame([("a", "b"), ("b", "a"), ("b", "c")], "source string, target string")
+    scc_fixed_rounds(df, edge_layout="bucket").collect()
+    app = re.sub(r"\W", "_", spark.sparkContext.applicationId)
+    assert names and set(buckets) == {shuffle_width(spark)}
+    assert all(name.startswith(f"__scc_bucket_{app}_") for name in names)

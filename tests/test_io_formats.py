@@ -1,10 +1,13 @@
 """JSONL source/sink (io.read_jsonl / write_jsonl): schema-first reads,
-corrupt-line quarantine, and row-preserving roundtrips."""
+corrupt-line quarantine, and row-preserving roundtrips; the GraphML
+writer's refusal to merge ids."""
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
+from knowledge_graph_spark.graphml import read_graphml, write_graphml
 from knowledge_graph_spark.io import CORRUPT_COL, read_jsonl, write_jsonl
 
 DDL = "doc_id bigint, text string, lang string"
@@ -47,3 +50,25 @@ def test_jsonl_roundtrip(spark, tmp_path):
     }
     want = {(r["doc_id"], r["text"], r["lang"]) for r in src.collect()}
     assert got == want
+
+
+def test_graphml_refuses_ids_that_merge_once_sanitised(spark, tmp_path):
+    """'a' and 'a\\x00' are distinct ids that the writer's XML-1.0 stripping
+    makes equal: written, one node would vanish and its edges would move
+    to the other.  The writer names both and refuses; the same holds for
+    attribute names.  Distinct ids that stay distinct still round-trip."""
+    out = str(tmp_path / "g.graphml")
+    edges = spark.createDataFrame([("a", "a\x00")], "source string, target string")
+    nodes = spark.createDataFrame([("a", "x"), ("a\x00", "y")], "title string, kind string")
+    with pytest.raises(ValueError, match=r"'a' and 'a\\x00'"):
+        write_graphml(nodes, edges, out)
+
+    named = spark.createDataFrame([("a", "x", "y")], "title string, `k` string, `k\x01` string")
+    with pytest.raises(ValueError, match="node attribute names 'k' and 'k\\\\x01'"):
+        write_graphml(named, edges.limit(0), out)
+
+    nodes = spark.createDataFrame([("a", "x"), ("b\x00c", "y")], "title string, kind string")
+    write_graphml(nodes, spark.createDataFrame([("a", "b\x00c")], edges.schema), out)
+    n2, e2 = read_graphml(spark, out)
+    assert sorted(r.title for r in n2.collect()) == ["a", "bc"]
+    assert [(r.source, r.target) for r in e2.collect()] == [("a", "bc")]
