@@ -31,7 +31,7 @@ from knowledge_graph_spark.operators.community import (
     label_propagation,
 )
 from knowledge_graph_spark.operators.extract import MENTION_PATTERN, extract_mentions
-from knowledge_graph_spark.operators.graphops import node_degrees, with_edge_rank
+from knowledge_graph_spark.operators.graphops import with_edge_rank
 from knowledge_graph_spark.operators.linking import (
     canonical_map,
     jaccard_verify,
@@ -1114,19 +1114,6 @@ def q_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     return build_vocab(_docs(spark, sf_dir))
 
 
-COOC_MIN = 2
-
-
-def q_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity co-occurrence edges over text units with exact-integer
-    lift scoring (complements the extractor's explicit relationships)."""
-    from knowledge_graph_spark.operators.graphops import cooccurrence_edges
-
-    units = _stages(spark, sf_dir)["text_units"]
-    m = extract_mentions(units).select("text_unit_id", "mention")
-    return cooccurrence_edges(m, min_pair_count=COOC_MIN)
-
-
 def q_node_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyed snapshot diff: merged nodes vs canonicalized nodes
     (added/removed/changed/unchanged audit view for incremental runs)."""
@@ -1338,7 +1325,7 @@ def q_kg_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_type_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edge-level type mixing matrix: undirected edge counts per
-    unordered type pair — the 1-hop sibling of the metapath census."""
+    unordered type pair."""
     s = _stages(spark, sf_dir)
     t = s["nodes"].select("title", "type")
     e = s["edges"].select("source", "target")
@@ -1352,18 +1339,6 @@ def q_type_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("type_a", "type_b")
         .agg(F.count("*").cast("bigint").alias("n_edges"))
-    )
-
-
-def q_metapaths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Typed 2-hop metapath census: how many length-2 paths realize each
-    ordered (type_a, type_b, type_c) triple — the heterogeneous-KG
-    schema-connectivity audit."""
-    from knowledge_graph_spark.operators.graphops import metapath_counts
-
-    s = _stages(spark, sf_dir)
-    return metapath_counts(
-        s["nodes"].select("title", "type"), s["edges"].select("source", "target")
     )
 
 
@@ -1444,20 +1419,6 @@ def q_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return min_spanning_forest(e, rounds=MSF_ROUNDS)
 
 
-SL_CUTS = 3
-
-
-def q_single_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-linkage clustering of the KG: cut the 3 heaviest Borůvka
-    forest edges (global top-k via TakeOrderedAndProject) and label the
-    remaining trees — the conservative hierarchical grouping for
-    canonicalization review (MST↔single-linkage duality)."""
-    from knowledge_graph_spark.operators.graphops import single_linkage_clusters
-
-    e = _stages(spark, sf_dir)["edges"].select("source", "target", "weight")
-    return single_linkage_clusters(e, n_cuts=SL_CUTS, msf_rounds=MSF_ROUNDS)
-
-
 def q_densest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy densest-subgraph peeling (Charikar / Bahmani et al.
     2(1+ε)-approx, ε=0.1): peel nodes at ≤ (1+ε)·avg degree per round,
@@ -1478,21 +1439,6 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _stages(spark, sf_dir)["edges"].select("source", "target", "weight")
     return knn_graph(e, k=KNN_K)
-
-
-PA_PARTS = 32
-
-
-def q_partition_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edge-partitioning strategy audit over the KG: hash-by-source vs
-    random vertex-cut vs degree-based hashing (Xie et al. 2014) at 32
-    parts — mean vertex replication and load imbalance as exact-integer
-    micros.  The shard-the-edge-list decision every 100-TB kernel rides
-    on, measured instead of assumed."""
-    from knowledge_graph_spark.operators.graphops import edge_partition_audit
-
-    e = _stages(spark, sf_dir)["edges"].select("source", "target")
-    return edge_partition_audit(e, n_parts=PA_PARTS)
 
 
 LANGID_TOP = 64
@@ -1603,43 +1549,7 @@ def q_pagerank_w(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pagerank_int(e, iterations=PR_ITER, weight="weight")
 
 
-PPR_SEEDS = 3
-
-
-def q_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Personalized PageRank seeded on the top-degree entities
-    (query-biased salience for local search; unrolled-CTE oracle)."""
-    from knowledge_graph_spark.operators.graphops import node_degrees, ppr_int
-
-    e = _stages(spark, sf_dir)["edges"].select("source", "target")
-    seeds = (
-        node_degrees(e)
-        .orderBy(F.col("degree").desc(), "title")
-        .limit(PPR_SEEDS)
-        .select("title")
-    )
-    return ppr_int(e, seeds, iterations=PR_ITER)
-
-
-def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Newman-modularity decomposition of the LPA partition — the
-    clustering-quality audit for the K2 replacement (pure int64:
-    contrib_num = 4·m·e_c − d_c², Q = Σ contrib_num / 4m²)."""
-    from knowledge_graph_spark.operators.graphops import modularity_profile
-
-    s = _stages(spark, sf_dir)
-    comm = label_propagation(s["nodes"], s["edges"]).select("title", "community")
-    return modularity_profile(s["edges"].select("source", "target"), comm)
-
-
 NJ_TAU = 0.5
-
-
-def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node triangle count + local clustering coefficient."""
-    from knowledge_graph_spark.operators.graphops import triangle_profile
-
-    return triangle_profile(_stages(spark, sf_dir)["edges"].select("source", "target"))
 
 
 def q_node_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1833,8 +1743,6 @@ def q_emb_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 FUZZY_MAX_DIST = 1
-KCORE_K = 2
-KCORE_ROUNDS = 3
 SPLIT_VAL_FRAC = 0.05
 SPLIT_TEST_FRAC = 0.05
 
@@ -1849,19 +1757,6 @@ def q_fuzzy_aliases(spark: SparkSession, sf_dir: str) -> DataFrame:
     # name) — reuse the cached stage instead of re-running the extract UDF
     m = _stages(spark, sf_dir)["nodes"].select(F.col("title").alias("name"))
     return fuzzy_alias_pairs(m, name_col="name", max_dist=FUZZY_MAX_DIST)
-
-
-def q_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-round k-core peel over the embedding near-dup pair graph
-    (dense-cluster QC: which documents sit in mutually-similar blobs)."""
-    from knowledge_graph_spark.operators.graphops import k_core
-
-    pairs = similarity.cosine_neardup_pairs(_embs(spark, sf_dir), threshold=NEARDUP_TAU)
-    return k_core(
-        pairs.select(F.col("id_a").alias("source"), F.col("id_b").alias("target")),
-        k=KCORE_K,
-        rounds=KCORE_ROUNDS,
-    )
 
 
 TRUSS_K = 3
@@ -1881,8 +1776,6 @@ def q_k_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CP_CORE_K = 64
-CP_CORE_ROUNDS = 3
 CP_PR_ITER = 3
 
 
@@ -1912,16 +1805,6 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.l_partkey").cast("bigint").alias("target"),
         )
         .distinct()
-    )
-
-
-def q_copurchase_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-round k-core peel over the lineitem co-purchase graph — the
-    dense-cohort filter on a graph that actually scales with sf."""
-    from knowledge_graph_spark.operators.graphops import k_core
-
-    return k_core(
-        _copurchase_edges(spark, sf_dir), k=CP_CORE_K, rounds=CP_CORE_ROUNDS
     )
 
 
@@ -2257,16 +2140,6 @@ def q_eff_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_conductance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-community conductance over the LPA partition — the boundary
-    audit complementing modularity."""
-    from knowledge_graph_spark.operators.graphops import community_conductance
-
-    s = _stages(spark, sf_dir)
-    comm = label_propagation(s["nodes"], s["edges"])
-    return community_conductance(s["edges"], comm)
-
-
 NEIGHBOR_SAMPLE_K = 4
 
 
@@ -2383,14 +2256,6 @@ def q_widest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_link_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KG completion: Adamic-Adar common-neighbor scores for non-adjacent
-    entity pairs (integer bit-length weights — bit-exact cross-engine)."""
-    from knowledge_graph_spark.operators.graphops import adamic_adar_pairs
-
-    return adamic_adar_pairs(_stages(spark, sf_dir)["edges"])
-
-
 BPE_TOPK = 64
 
 
@@ -2447,16 +2312,6 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rel = parse_relationships(split_records(_stages(spark, sf_dir)["raw_records"]))
     return hits_int(rel.select("source", "target"), rounds=HITS_ROUNDS)
-
-
-def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree-assortativity decomposition of the KG (Newman 2002) — one
-    row of exact int64 moments; r = num/den (hub-to-hub vs hub-to-spoke
-    shape, the skew diagnostic behind join-strategy choices)."""
-    from knowledge_graph_spark.operators.graphops import assortativity_profile
-
-    s = _stages(spark, sf_dir)
-    return assortativity_profile(s["edges"], s["degrees"])
 
 
 # ---------------------------------------------------------------------------
@@ -2766,33 +2621,6 @@ scored AS (
 SELECT * FROM scored WHERE sim_micro >= {int(NEARDUP_TAU * similarity.SIM_SCALE)}
 """
 
-# k-core oracle: the near-dup pair graph materialized once, then the peel
-# unrolled round-by-round (same fixed-round design as the LPA/PageRank
-# oracles).  AS MATERIALIZED throughout — each e{r} is referenced three
-# times per round and DuckDB would otherwise inline the whole cosine fold
-# 3^rounds times (NOTES.md gotcha).
-def _kcore_sql(k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> str:
-    sql = f"""
-WITH {_UNIT_CTE},
-e0 AS MATERIALIZED (
-  SELECT a.vec_id AS a, b.vec_id AS b
-  FROM uemb a JOIN uemb b ON a.vec_id < b.vec_id
-  WHERE {_COS_MICRO} >= {int(NEARDUP_TAU * similarity.SIM_SCALE)}
-)"""
-    for r in range(rounds):
-        sql += f""",
-kd{r} AS MATERIALIZED (SELECT t, count(*) AS d FROM (
-    SELECT a AS t FROM e{r} UNION ALL SELECT b AS t FROM e{r}) GROUP BY t),
-kp{r} AS MATERIALIZED (SELECT t FROM kd{r} WHERE d >= {k}),
-e{r + 1} AS MATERIALIZED (
-  SELECT e.a, e.b FROM e{r} e
-  JOIN kp{r} ka ON e.a = ka.t JOIN kp{r} kb ON e.b = kb.t)"""
-    sql += f"""
-SELECT title, CAST(count(*) AS BIGINT) AS degree FROM (
-  SELECT a AS title FROM e{rounds} UNION ALL SELECT b AS title FROM e{rounds})
-GROUP BY title"""
-    return sql
-
 
 _CP_EDGES_SQL = """
 cp_edges AS MATERIALIZED (
@@ -2802,27 +2630,6 @@ cp_edges AS MATERIALIZED (
   JOIN lineitem b
     ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
 )"""
-
-
-def _cp_core_sql(k: int = CP_CORE_K, rounds: int = CP_CORE_ROUNDS) -> str:
-    """Unrolled k-core peel over the lineitem co-purchase graph —
-    standalone (no pipeline prelude needed; the graph derives straight
-    from the lineitem view), same round algebra as _kcore_sql."""
-    sql = f"""WITH {_CP_EDGES_SQL},
-cp_e0 AS MATERIALIZED (SELECT source AS a, target AS b FROM cp_edges)"""
-    for r in range(rounds):
-        sql += f""",
-cp_kd{r} AS MATERIALIZED (SELECT t, count(*) AS d FROM (
-    SELECT a AS t FROM cp_e{r} UNION ALL SELECT b AS t FROM cp_e{r}) GROUP BY t),
-cp_kp{r} AS MATERIALIZED (SELECT t FROM cp_kd{r} WHERE d >= {k}),
-cp_e{r + 1} AS MATERIALIZED (
-  SELECT e.a, e.b FROM cp_e{r} e
-  JOIN cp_kp{r} ka ON e.a = ka.t JOIN cp_kp{r} kb ON e.b = kb.t)"""
-    sql += f"""
-SELECT title, CAST(count(*) AS BIGINT) AS degree FROM (
-  SELECT a AS title FROM cp_e{rounds} UNION ALL SELECT b AS title FROM cp_e{rounds})
-GROUP BY title"""
-    return sql
 
 
 def _cp_rank_sql(rounds: int = CP_PR_ITER) -> str:
@@ -5181,57 +4988,6 @@ FROM co_e2 GROUP BY least(msn, mtn), greatest(msn, mtn)
     )
 
 
-_PA_POLY_A = _POLY.format(s="a")
-_PA_POLY_AB = _POLY.format(s="a || '|' || b")
-_PA_POLY_CUT = _POLY.format(
-    s="CASE WHEN da < db THEN a WHEN db < da THEN b ELSE least(a, b) END"
-)
-
-_PARTITION_AUDIT_BODY = f"""
-, pa_deg AS (
-  SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
-    SELECT source AS node FROM kg_edges
-    UNION ALL SELECT target FROM kg_edges
-  ) GROUP BY node
-),
-pa_e AS MATERIALIZED (
-  SELECT e.source AS a, e.target AS b, da.deg AS da, db.deg AS db
-  FROM kg_edges e
-  JOIN pa_deg da ON e.source = da.node
-  JOIN pa_deg db ON e.target = db.node
-),
-pa_parts AS MATERIALIZED (
-  SELECT 'src_hash' AS strategy, a, b, {_PA_POLY_A} % {PA_PARTS} AS part FROM pa_e
-  UNION ALL
-  SELECT 'edge_hash', a, b, {_PA_POLY_AB} % {PA_PARTS} FROM pa_e
-  UNION ALL
-  SELECT 'dbh', a, b, {_PA_POLY_CUT} % {PA_PARTS} FROM pa_e
-),
-pa_np AS (
-  SELECT DISTINCT strategy, part, node FROM (
-    SELECT strategy, part, a AS node FROM pa_parts
-    UNION ALL SELECT strategy, part, b FROM pa_parts
-  )
-),
-pa_repl AS (
-  SELECT strategy,
-         CAST((count(*) * 1000000) // count(DISTINCT node) AS BIGINT) AS repl_micro
-  FROM pa_np GROUP BY strategy
-),
-pa_load AS (
-  SELECT strategy, part, CAST(count(*) AS BIGINT) AS n
-  FROM pa_parts GROUP BY strategy, part
-),
-pa_m AS (
-  SELECT strategy, CAST(max(n) AS BIGINT) AS max_load, CAST(sum(n) AS BIGINT) AS n_e
-  FROM pa_load GROUP BY strategy
-)
-SELECT r.strategy, r.repl_micro, m.max_load,
-       CAST((m.max_load * {PA_PARTS} * 1000000) // m.n_e AS BIGINT) AS imb_micro
-FROM pa_repl r JOIN pa_m m USING (strategy)
-"""
-
-
 _LANGID_SQL = f"""
 WITH lg AS (
   SELECT doc_id, lang, g AS gram
@@ -5527,25 +5283,6 @@ transcripts AS (
     )
 
 
-_METAPATH_SQL = """
-, mp_sym AS MATERIALIZED (
-  SELECT DISTINCT a, b FROM (
-    SELECT source AS a, target AS b FROM kg_edges
-    UNION ALL
-    SELECT target AS a, source AS b FROM kg_edges
-  )
-)
-SELECT ta.type AS type_a, tb.type AS type_b, tc.type AS type_c,
-       CAST(count(*) AS BIGINT) AS n_paths
-FROM mp_sym e1
-JOIN mp_sym e2 ON e1.b = e2.a AND e1.a < e2.b
-JOIN kg_nodes ta ON ta.title = e1.a
-JOIN kg_nodes tb ON tb.title = e1.b
-JOIN kg_nodes tc ON tc.title = e2.b
-GROUP BY ta.type, tb.type, tc.type
-"""
-
-
 def _bw_body() -> str:
     """Unrolled sampled-Brandes betweenness — mirrors
     graphops.betweenness_sampled bit-for-bit: top-BW_SOURCES-degree
@@ -5729,40 +5466,6 @@ FROM degrees d LEFT JOIN c4_node n ON n.title = d.title
 """
 
 
-_AA_BODY = """
-, aa_sym AS MATERIALIZED (
-  SELECT DISTINCT a, b FROM (
-    SELECT source AS a, target AS b FROM kg_edges
-    UNION ALL
-    SELECT target AS a, source AS b FROM kg_edges
-  )
-),
-aa_w AS MATERIALIZED (
-  SELECT a AS z,
-         CAST(floor(1000000 / greatest(length(bin(CAST(count(*) AS BIGINT))) - 1, 1))
-              AS BIGINT) AS w_micro
-  FROM aa_sym GROUP BY a
-),
-aa_sc AS (
-  SELECT x.a AS title_a, y.a AS title_b,
-         CAST(count(*) AS BIGINT) AS n_common,
-         CAST(sum(w.w_micro) AS BIGINT) AS aa_micro
-  FROM aa_sym x
-  JOIN aa_sym y ON x.b = y.b AND x.a < y.a
-  JOIN aa_w w ON w.z = x.b
-  GROUP BY x.a, y.a
-),
-aa_ex AS (
-  SELECT DISTINCT least(source, target) AS title_a,
-                  greatest(source, target) AS title_b
-  FROM kg_edges
-)
-SELECT s.title_a, s.title_b, s.n_common, s.aa_micro
-FROM aa_sc s LEFT JOIN aa_ex e
-  ON s.title_a = e.title_a AND s.title_b = e.title_b
-WHERE e.title_a IS NULL
-"""
-
 def _hits_body(rounds: int = HITS_ROUNDS) -> str:
     """Unrolled fixed-round integer HITS over the directed rel_records —
     mirrors graphops.hits_int bit-for-bit (each round rescales by
@@ -5814,24 +5517,6 @@ LEFT JOIN hits_h{rounds} h ON h.title = n.title
     )
     return "".join(parts)
 
-
-_ASSORT_BODY = """
-, as_deg AS (SELECT title, CAST(degree AS BIGINT) AS d FROM degrees),
-as_ends AS (
-  SELECT da.d AS j, db.d AS k
-  FROM kg_edges e
-  JOIN as_deg da ON e.source = da.title
-  JOIN as_deg db ON e.target = db.title
-),
-as_sym AS (SELECT j, k FROM as_ends UNION ALL SELECT k AS j, j AS k FROM as_ends)
-SELECT CAST(count(*) AS BIGINT) AS m_dir,
-       CAST(sum(j * k) AS BIGINT) AS sum_jk,
-       CAST(sum(j) AS BIGINT) AS sum_j,
-       CAST(sum(j * j) AS BIGINT) AS sum_j2,
-       CAST(count(*) * sum(j * k) - sum(j) * sum(j) AS BIGINT) AS num,
-       CAST(count(*) * sum(j * j) - sum(j) * sum(j) AS BIGINT) AS den
-FROM as_sym
-"""
 
 _ANN_RECALL_SQL = f"""
 WITH ex AS ({{topk}}),
@@ -6052,104 +5737,6 @@ GROUP BY conv_id
 """
 
 
-def _ppr_body(rounds: int = PR_ITER, n_seeds: int = PPR_SEEDS) -> str:
-    """Unrolled fixed-round personalized PageRank — mirrors
-    graphops.ppr_int bit-for-bit.  Seeds = top-``n_seeds`` entities from
-    the prelude's ``degrees`` CTE (degree DESC, title ASC), the same
-    deterministic pick q_ppr makes Spark-side."""
-    from knowledge_graph_spark.operators.graphops import (
-        PR_DAMP_DEN,
-        PR_DAMP_NUM,
-        PR_SCALE,
-    )
-
-    parts = [
-        f"""
-, pp_sym AS MATERIALIZED (
-  SELECT source AS u, target AS v FROM kg_edges
-  UNION ALL
-  SELECT target AS u, source AS v FROM kg_edges
-),
-pp_seeds AS MATERIALIZED (
-  SELECT title FROM degrees ORDER BY degree DESC, title LIMIT {n_seeds}
-),
-pp_ns AS (SELECT CAST(count(*) AS BIGINT) AS s FROM pp_seeds),
-pp_nodes AS MATERIALIZED (
-  SELECT n.title, CASE WHEN se.title IS NOT NULL THEN 1 ELSE 0 END AS is_seed
-  FROM (SELECT DISTINCT u AS title FROM pp_sym) n
-  LEFT JOIN pp_seeds se ON n.title = se.title
-),
-pp_adj AS MATERIALIZED (
-  SELECT e.u, e.v, o.outdeg
-  FROM pp_sym e JOIN (SELECT u, CAST(count(*) AS BIGINT) AS outdeg
-                      FROM pp_sym GROUP BY u) o ON e.u = o.u
-),
-pp_r0 AS MATERIALIZED (
-  SELECT title, CAST(CASE WHEN is_seed = 1
-                          THEN (SELECT {PR_SCALE} // s FROM pp_ns)
-                          ELSE 0 END AS BIGINT) AS rank_scaled
-  FROM pp_nodes
-)"""
-    ]
-    base = (
-        f"(SELECT ({PR_SCALE} * {PR_DAMP_DEN - PR_DAMP_NUM}) "
-        f"// ({PR_DAMP_DEN} * s) FROM pp_ns)"
-    )
-    for k in range(1, rounds + 1):
-        parts.append(
-            f""",
-pp_c{k} AS MATERIALIZED (
-  SELECT a.v, CAST(sum((r.rank_scaled * {PR_DAMP_NUM}) // ({PR_DAMP_DEN} * a.outdeg))
-                   AS BIGINT) AS inflow
-  FROM pp_adj a JOIN pp_r{k - 1} r ON r.title = a.u GROUP BY a.v
-),
-pp_r{k} AS MATERIALIZED (
-  SELECT n.title,
-         CAST(CASE WHEN n.is_seed = 1 THEN {base} ELSE 0 END
-              + coalesce(c.inflow, 0) AS BIGINT) AS rank_scaled
-  FROM pp_nodes n LEFT JOIN pp_c{k} c ON c.v = n.title
-)"""
-        )
-    parts.append(f"\nSELECT title, rank_scaled FROM pp_r{rounds}\n")
-    return "".join(parts)
-
-
-def _mod_body() -> str:
-    """Modularity decomposition of the LPA partition — exact int64
-    arithmetic over the same unrolled-LPA community labels."""
-    return f"""
-, md_nodes AS MATERIALIZED (SELECT title AS node FROM kg_nodes),
-md_sym AS MATERIALIZED (
-  SELECT source AS a, target AS b, CAST(weight AS DOUBLE) AS w FROM kg_edges
-  UNION ALL
-  SELECT target AS a, source AS b, CAST(weight AS DOUBLE) AS w FROM kg_edges
-),
-{_lpa_rounds_sql('md_nodes', 'md_sym', 'md_')}
-, md_comm AS MATERIALIZED (
-  SELECT node AS title, label AS community FROM md_l{LPA_MAX_ITER}
-),
-md_m AS (SELECT CAST(count(*) AS BIGINT) AS m_edges FROM kg_edges),
-md_pn AS (
-  SELECT c.community, CAST(count(*) AS BIGINT) AS n_nodes,
-         CAST(sum(d.degree) AS BIGINT) AS deg_sum
-  FROM degrees d JOIN md_comm c USING (title) GROUP BY c.community
-),
-md_ein AS (
-  SELECT ca.community, CAST(count(*) AS BIGINT) AS e_in
-  FROM kg_edges e
-  JOIN md_comm ca ON e.source = ca.title
-  JOIN md_comm cb ON e.target = cb.title AND ca.community = cb.community
-  GROUP BY ca.community
-)
-SELECT p.community, p.n_nodes,
-       CAST(coalesce(i.e_in, 0) AS BIGINT) AS e_in, p.deg_sum,
-       CAST(4 * m.m_edges * coalesce(i.e_in, 0) - p.deg_sum * p.deg_sum
-            AS BIGINT) AS contrib_num,
-       m.m_edges
-FROM md_pn p LEFT JOIN md_ein i ON p.community = i.community CROSS JOIN md_m m
-"""
-
-
 def _lpa_body() -> str:
     return f"""
 , lpa_nodes AS MATERIALIZED (SELECT title AS node FROM kg_nodes),
@@ -6286,50 +5873,6 @@ def _cluster_drift_body() -> str:
 pa_a AS (SELECT node AS title, label AS la FROM lwo_l{LPA_MAX_ITER}),
 pa_b AS (SELECT node AS title, label AS lb FROM lww_l{LPA_WARM_ROUNDS}),
 {_pag_sql('pa_a', 'pa_b')}"""
-
-
-def _conductance_body() -> str:
-    """Per-community conductance over the LPA partition — composes the
-    unrolled LPA CTEs with the prelude's degrees table (mirrors
-    graphops.community_conductance: cut charges both sides, vol = member
-    degree sum, φ_micro = cut·10^6 // min(vol, 2m − vol), 0 on a zero
-    min side)."""
-    return f"""
-, lpa_nodes AS MATERIALIZED (SELECT title AS node FROM kg_nodes),
-lpa_sym AS MATERIALIZED (
-  SELECT source AS a, target AS b, CAST(weight AS DOUBLE) AS w FROM kg_edges
-  UNION ALL
-  SELECT target AS a, source AS b, CAST(weight AS DOUBLE) AS w FROM kg_edges
-),
-{_lpa_rounds_sql('lpa_nodes', 'lpa_sym', 'lpa_')},
-ccomm AS MATERIALIZED (SELECT node AS title, label AS community FROM lpa_l{LPA_MAX_ITER}),
-cvol AS (
-  SELECT community, CAST(sum(degree) AS BIGINT) AS vol
-  FROM ccomm JOIN degrees USING (title) GROUP BY community
-),
-cm2 AS (SELECT CAST(coalesce(sum(degree), 0) AS BIGINT) AS m2 FROM degrees),
-ccutp AS (
-  SELECT cs.community AS ca, ct.community AS cb
-  FROM kg_edges e
-  JOIN ccomm cs ON cs.title = e.source
-  JOIN ccomm ct ON ct.title = e.target
-  WHERE cs.community <> ct.community
-),
-ccut AS (
-  SELECT community, CAST(count(*) AS BIGINT) AS cut_edges FROM (
-    SELECT ca AS community FROM ccutp
-    UNION ALL SELECT cb AS community FROM ccutp
-  ) GROUP BY community
-)
-SELECT v.community,
-       CAST(coalesce(c.cut_edges, 0) AS BIGINT) AS cut_edges,
-       v.vol,
-       CAST(CASE WHEN least(v.vol, (SELECT m2 FROM cm2) - v.vol) <= 0 THEN 0
-            ELSE (coalesce(c.cut_edges, 0) * 1000000)
-                 // least(v.vol, (SELECT m2 FROM cm2) - v.vol) END AS BIGINT)
-         AS conductance_micro
-FROM cvol v LEFT JOIN ccut c USING (community)
-"""
 
 
 def _hierarchy_body(max_cluster_size: int = 5) -> str:
@@ -6990,15 +6533,6 @@ def q_lp_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lp_ranking_audit(s["nodes"].select("title"), s["edges"], k=LP_K)
 
 
-def q_lp_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-row MRR / hits@1 / hits@3 summary of the filtered ranking
-    protocol — exact integer micros (1000000 DIV rank)."""
-    from knowledge_graph_spark.operators.graphops import lp_mrr, lp_ranking_audit
-
-    s = _stages(spark, sf_dir)
-    return lp_mrr(lp_ranking_audit(s["nodes"].select("title"), s["edges"], k=LP_K))
-
-
 def q_jp_coloring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jones-Plassmann greedy coloring of the KG — the conflict-free
     batch schedule for per-node mutations (fixed-round unrolled oracle,
@@ -7312,29 +6846,15 @@ def q_ann_recall_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 15: directed reciprocity, double-sweep diameter bound, 1-WL color
-# refinement, event-time lateness audit, hourly KG churn, distinct-n
-# diversity, tf-idf cosine near-dup pairs.
+# Wave 15: double-sweep diameter bound, 1-WL color refinement, event-time
+# lateness audit, hourly KG churn, distinct-n diversity, tf-idf cosine
+# near-dup pairs.
 # ---------------------------------------------------------------------------
 
 DS_HOPS = 4
 WL_ROUNDS = 3
 TFIDF_N = 2
 TFIDF_TAU_MICRO = 500_000
-
-
-def q_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Directed-edge reciprocity over the raw relation records — mutual
-    assertion (A→B and B→A) as a per-node confidence/merge-audit signal
-    the undirected least/greatest merge folds away."""
-    from knowledge_graph_spark.operators.graphops import reciprocity_profile
-    from knowledge_graph_spark.operators.parse import (
-        parse_relationships,
-        split_records,
-    )
-
-    rel = parse_relationships(split_records(_stages(spark, sf_dir)["raw_records"]))
-    return reciprocity_profile(rel.select("source", "target"))
 
 
 def q_diameter_lb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7466,19 +6986,6 @@ SELECT title, CAST(c AS BIGINT) AS wl_color,
 FROM wl_c{rounds}"""
     return sql
 
-
-_RECIPROCITY_BODY = """
-, rp_d AS MATERIALIZED (
-  SELECT DISTINCT source AS a, target AS b FROM rel_records WHERE source <> target),
-rp_out AS (SELECT a, CAST(count(*) AS BIGINT) AS n_out FROM rp_d GROUP BY a),
-rp_rec AS (
-  SELECT x.a, CAST(count(*) AS BIGINT) AS n_recip
-  FROM rp_d x JOIN rp_d y ON y.a = x.b AND y.b = x.a GROUP BY x.a)
-SELECT o.a AS title, o.n_out,
-       CAST(coalesce(r.n_recip, 0) AS BIGINT) AS n_recip,
-       CAST(coalesce(r.n_recip, 0) * 1000000 // o.n_out AS BIGINT) AS recip_micro
-FROM rp_out o LEFT JOIN rp_rec r ON r.a = o.a
-"""
 
 _LATENESS_BODY = """
 , lt AS (
@@ -7929,14 +7436,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "top_terms": q_top_terms,
         "bm25_search": q_bm25_search,
         "vocab": q_vocab,
-        "cooccur": q_cooccur,
         "node_diff": q_node_diff,
         "hll_tokens": q_hll_tokens,
         "hyperball": q_hyperball,
         "neighborhood_fn": q_neighborhood_fn,
         "harmonic_centrality": q_harmonic,
         "eff_diameter": q_eff_diameter,
-        "conductance": q_conductance,
         "neighbor_sample": q_neighbor_sample,
         "cms_counts": q_cms_counts,
         "length_hist": q_length_hist,
@@ -7948,7 +7453,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pagerank": q_pagerank,
         "katz": q_katz,
         "betweenness": q_betweenness,
-        "metapaths": q_metapaths,
         "kg_asof": q_kg_asof,
         "kg_diff": q_kg_diff,
         "kg_retract": q_kg_retract,
@@ -7958,14 +7462,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "max_matching": q_max_matching,
         "coarsen": q_coarsen,
         "coarsen_l2": q_coarsen_l2,
-        "partition_audit": q_partition_audit,
         "sssp": q_sssp,
         "four_cycles": q_four_cycles,
         "lm_bits": q_lm_bits,
         "phrase_search": q_phrase_search,
         "emb_prefix_topk": q_emb_prefix_topk,
         "ann_recall_prefix": q_ann_recall_prefix,
-        "reciprocity": q_reciprocity,
         "diameter_lb": q_diameter_lb,
         "wl_colors": q_wl_colors,
         "lateness": q_lateness,
@@ -7973,11 +7475,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ngram_diversity": q_ngram_diversity,
         "tfidf_pairs": q_tfidf_pairs,
         "msf": q_msf,
-        "single_linkage": q_single_linkage,
         "densest": q_densest,
         "knn_graph": q_knn_graph,
         "lp_ranking": q_lp_ranking,
-        "lp_mrr": q_lp_mrr,
         "edge_decay": q_edge_decay,
         "temporal_salience": q_temporal_salience,
         "heaps_law": q_heaps,
@@ -7990,9 +7490,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "negative_samples": q_negative_samples,
         "jp_coloring": q_jp_coloring,
         "pagerank_w": q_pagerank_w,
-        "ppr_entities": q_ppr,
-        "modularity": q_modularity,
-        "triangles": q_triangles,
         "node_jaccard": q_node_jaccard,
         "exact_dedup": q_exact_dedup,
         "ngram_dedup": q_ngram_dedup,
@@ -8007,8 +7504,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "emb_neardup": q_emb_neardup,
         "emb_neardup_lsh": q_emb_neardup_lsh,
         "fuzzy_aliases": q_fuzzy_aliases,
-        "k_core": q_k_core,
-        "copurchase_core": q_copurchase_core,
         "copurchase_rank": q_copurchase_rank,
         "k_truss": q_k_truss,
         "hash_split": q_hash_split,
@@ -8043,8 +7538,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "emb_pq_topk": q_emb_pq_topk,
         "ann_recall_pq": q_ann_recall_pq,
         "emb_ivfpq_topk": q_emb_ivfpq_topk,
-        "assortativity": q_assortativity,
-        "link_pred": q_link_pred,
         "bpe_pairs": q_bpe_pairs,
         "bpe_merges": q_bpe_merges,
         "bpe_tokenize": q_bpe_tokenize,
@@ -8532,7 +8025,6 @@ FROM pos p JOIN neg n USING (anchor_id)
         "neighborhood_fn": _oracle(_hyperball_oracle(HYPERBALL_ROUNDS, nf=True)),
         "harmonic_centrality": _oracle(_hyperball_oracle(HYPERBALL_ROUNDS, hc=True)),
         "eff_diameter": _oracle(_hyperball_oracle(HYPERBALL_ROUNDS, ed=True)),
-        "conductance": _oracle(_conductance_body()),
         "neighbor_sample": _oracle(
             f"""
             , ns_sym AS (
@@ -8581,27 +8073,6 @@ GROUP BY lang, pct
         # the bloom-pruned plan must reproduce the PLAIN decontamination
         # answer bit-for-bit (no false negatives + exact verify)
         "decontam_bloom": _DECONTAM_SQL,
-        "cooccur": _oracle(
-            f"""
-            , cooc AS (SELECT DISTINCT text_unit_id AS unit, mention AS name FROM ment_occ),
-            cnu AS (SELECT CAST(count(DISTINCT unit) AS BIGINT) AS n_units FROM cooc),
-            cmarg AS (SELECT name, CAST(count(*) AS BIGINT) AS cnt FROM cooc GROUP BY name),
-            cpr AS (
-              SELECT a.name AS source, b.name AS target,
-                     CAST(count(*) AS BIGINT) AS pair_count
-              FROM cooc a JOIN cooc b ON a.unit = b.unit AND a.name < b.name
-              GROUP BY a.name, b.name HAVING count(*) >= {COOC_MIN}
-            )
-            SELECT p.source, p.target, p.pair_count,
-                   ma.cnt AS count_a, mb.cnt AS count_b,
-                   CAST(floor(1000000.0 * CAST(p.pair_count * g.n_units AS DOUBLE)
-                              / CAST(ma.cnt * mb.cnt AS DOUBLE)) AS BIGINT) AS lift_micro
-            FROM cpr p
-            JOIN cmarg ma ON p.source = ma.name
-            JOIN cmarg mb ON p.target = mb.name
-            CROSS JOIN cnu g
-            """
-        ),
         "node_diff": _oracle(_CANON_CTE + """
             , d_old AS (SELECT title, type, description FROM kg_nodes),
             d_new AS (
@@ -8628,7 +8099,6 @@ GROUP BY lang, pct
         "pagerank": _oracle(_pr_body()),
         "katz": _oracle(_katz_body()),
         "betweenness": _oracle(_bw_body()),
-        "metapaths": _oracle(_METAPATH_SQL),
         "kg_asof": _asof_oracle(),
         "kg_diff": _oracle(_kg_diff_body()),
         "kg_retract": _retract_oracle(),
@@ -8661,7 +8131,6 @@ GROUP BY least(ta.type, tb.type), greatest(ta.type, tb.type)
         "max_matching": _oracle(_mm_body()),
         "coarsen": _oracle(_coarsen_body()),
         "coarsen_l2": _oracle(_coarsen_hier_body()),
-        "partition_audit": _oracle(_PARTITION_AUDIT_BODY),
         "sssp": _oracle(_sssp_body()),
         "four_cycles": _oracle(_C4_BODY),
         "lm_bits": _LM_BITS_SQL_TMPL.format(
@@ -8678,7 +8147,6 @@ GROUP BY least(ta.type, tb.type), greatest(ta.type, tb.type)
         "ann_recall_prefix": _ANN_RECALL_SQL.format(
             topk=_EMB_TOPK_SQL, ivf=_EMB_PREFIX_TOPK_SQL
         ),
-        "reciprocity": _oracle(_RECIPROCITY_BODY),
         "diameter_lb": _oracle(_ds_body()),
         "wl_colors": _oracle(_wl_body()),
         "lateness": _oracle(_LATENESS_BODY),
@@ -8686,26 +8154,6 @@ GROUP BY least(ta.type, tb.type), greatest(ta.type, tb.type)
         "ngram_diversity": _NGRAM_DIVERSITY_SQL,
         "tfidf_pairs": _TFIDF_SQL,
         "msf": _oracle(_msf_body()),
-        "single_linkage": _oracle(
-            _msf_body(as_cte="msf_out")
-            + f""",
-sl_rk AS (
-  SELECT source, target, source || '|' || target AS estr,
-         row_number() OVER (
-           ORDER BY weight DESC, source || '|' || target) AS rn
-  FROM msf_out),
-sl_kept AS MATERIALIZED (
-  SELECT source, target FROM sl_rk WHERE rn > {SL_CUTS}),
-sl_reach(c, t) AS (
-  SELECT node, node FROM msf_c0
-  UNION
-  SELECT s.a, rr.t
-  FROM (SELECT source AS a, target AS b FROM sl_kept
-        UNION SELECT target, source FROM sl_kept) s
-  JOIN sl_reach rr ON s.b = rr.c)
-SELECT c AS node, min(t) AS cluster FROM sl_reach GROUP BY c
-"""
-        ),
         "lp_ranking": _oracle(_lp_body()),
         "edge_decay": _oracle(
             _edge_decay_ctes()
@@ -8757,16 +8205,6 @@ SELECT c AS node, min(t) AS cluster FROM sl_reach GROUP BY c
             FROM hp_base d LEFT JOIN hp_new n USING (doc_ord)
             """
         ),
-        "lp_mrr": _oracle(
-            _lp_body(as_cte="lp_rank")
-            + """
-            SELECT CAST(count(*) AS BIGINT) AS n_edges,
-                   CAST(sum(1000000 // rank) AS BIGINT) AS sum_rr_micro,
-                   CAST(count(CASE WHEN rank = 1 THEN 1 END) AS BIGINT) AS hits1,
-                   CAST(count(CASE WHEN rank <= 3 THEN 1 END) AS BIGINT) AS hits3
-            FROM lp_rank
-            """
-        ),
         "densest": _oracle(_densest_body()),
         "knn_graph": _oracle(
             f"""
@@ -8809,8 +8247,6 @@ SELECT c AS node, min(t) AS cluster FROM sl_reach GROUP BY c
         "emb_pq_topk": _pq_sql(),
         "ann_recall_pq": _ANN_RECALL_SQL.format(topk=_l2_sql(), ivf=_pq_sql()),
         "emb_ivfpq_topk": _pq_sql(ivf=True),
-        "assortativity": _oracle(_ASSORT_BODY),
-        "link_pred": _oracle(_AA_BODY),
         "tool_transitions": _oracle(_TOOL_TRANS_BODY),
         "tool_scc": _oracle(_scc_oracle_body(SCC_INNER, SCC_OUTER)),
         "turn_latency": _oracle(_TURN_LATENCY_BODY),
@@ -8836,31 +8272,6 @@ SELECT c AS node, min(t) AS cluster FROM sl_reach GROUP BY c
             FROM segd s JOIN documents d USING (doc_id)
             GROUP BY d.lang
             """,
-        "ppr_entities": _oracle(_ppr_body()),
-        "modularity": _oracle(_mod_body()),
-        "triangles": _oracle(f"""
-, tr_ab AS MATERIALIZED (SELECT source AS a, target AS b FROM kg_edges),
-tr AS (
-  SELECT ab.a, ab.b, bc.b AS c
-  FROM tr_ab ab
-  JOIN tr_ab bc ON ab.b = bc.a
-  JOIN tr_ab ac ON ac.a = ab.a AND ac.b = bc.b
-),
-tr_pern AS (
-  SELECT title, CAST(count(*) AS BIGINT) AS triangles FROM (
-    SELECT a AS title FROM tr
-    UNION ALL SELECT b AS title FROM tr
-    UNION ALL SELECT c AS title FROM tr
-  ) GROUP BY title
-)
-SELECT d.title, CAST(d.degree AS BIGINT) AS degree,
-       CAST(coalesce(p.triangles, 0) AS BIGINT) AS triangles,
-       CAST(CASE WHEN d.degree < 2 THEN 0
-                 ELSE floor(CAST(coalesce(p.triangles, 0) AS DOUBLE) * 2000000
-                            / CAST(d.degree * (d.degree - 1) AS DOUBLE)) END
-            AS BIGINT) AS clustering_micro
-FROM degrees d LEFT JOIN tr_pern p ON d.title = p.title
-"""),
         "node_jaccard": _oracle(f"""
 , nj_adj AS MATERIALIZED (
   SELECT DISTINCT a, b FROM (
@@ -8924,8 +8335,6 @@ SELECT * FROM nj WHERE jaccard_micro >= {int(NJ_TAU * 1_000_000)}
         "simhash_dedup": _SIMHASH_DEDUP_SQL,
         "emb_neardup_lsh": _EMB_NEARDUP_LSH_SQL,
         "fuzzy_aliases": _oracle(_FUZZY_ALIASES_BODY),
-        "k_core": _kcore_sql(),
-        "copurchase_core": _cp_core_sql(),
         "copurchase_rank": _cp_rank_sql(),
         "k_truss": _oracle(_ktruss_body()),
         "hash_split": _HASH_SPLIT_SQL,

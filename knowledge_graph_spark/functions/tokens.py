@@ -5,8 +5,8 @@ utils/__init__.py:18-25).  tiktoken is optional here: if importable it is
 used (loaded once per executor inside the Arrow batch iterator); otherwise a
 deterministic whitespace tokenizer — which is also expressible in ANSI SQL
 (``regexp_split``) so the chunker stage can be oracle-checked — is the
-fallback.  Token COUNTING is exposed both as a pandas UDF (tiktoken path)
-and as a native Column expression (whitespace path, codegen-friendly).
+fallback.  Token COUNTING is exposed as a native Column expression
+(whitespace path, codegen-friendly) and as a BPE-ish pandas UDF estimate.
 """
 
 from __future__ import annotations
@@ -61,12 +61,3 @@ def ws_token_count(col: Column) -> Column:
 def bpeish_token_count(s: pd.Series) -> pd.Series:
     """BPE-ish token-count estimate (letters / digits / punct runs)."""
     return s.map(lambda t: len(_BPEISH_RE.findall(t)) if t is not None else 0).astype("int32")
-
-
-@F.pandas_udf(T.IntegerType())
-def token_count_udf(s: pd.Series) -> pd.Series:
-    """Budget token count — tiktoken when available, else whitespace
-    (reference utils/__init__.py:18-25)."""
-    if _ENC is not None:
-        return s.map(lambda t: len(_ENC.encode(t)) if t is not None else 0).astype("int32")
-    return s.map(lambda t: len(ws_tokens(t)) if t is not None else 0).astype("int32")

@@ -199,28 +199,6 @@ def pairs_to_ids(name_pairs: DataFrame, named: DataFrame) -> DataFrame:
     )
 
 
-def minhash_band_index(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 64,
-    bands: int = 16,
-    shingle_k: int = 9,
-    seed: int = 42,
-) -> DataFrame:
-    """The persistable MinHash dedup index: (name, band, bh) over the
-    batch's distinct normalized texts.  At corpus scale this table is
-    written bucketed by (band, bh) so incremental probes are
-    exchange-free lookups."""
-    named = docs.select(normalized_text(F.col(text_col)).alias("title")).filter(
-        F.col("title") != ""
-    )
-    return banded_signatures(
-        named, name_col="title", num_perm=num_perm, bands=bands,
-        shingle_k=shingle_k, seed=seed,
-    )
-
-
 def minhash_incremental(
     new_docs: DataFrame,
     index: DataFrame | None,

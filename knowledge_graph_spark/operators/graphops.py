@@ -18,13 +18,10 @@ Reference analogues:
 
 from __future__ import annotations
 
-import re
 import time
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from ..partitioning import shuffle_width
 
 
 def node_degrees(edges: DataFrame) -> DataFrame:
@@ -158,17 +155,6 @@ def with_edge_ids(edges: DataFrame) -> DataFrame:
         edges.withColumn("id", F.sha2(F.concat_ws("->", "source", "target"), 256)),
         ["source", "target"],
     )
-
-
-def stabilize_nodes(nodes: DataFrame) -> DataFrame:
-    """Stable output ordering (reference utils/graph.py:33-44 sorts nodes by
-    name for deterministic serialization)."""
-    return nodes.orderBy("title")
-
-
-def stabilize_edges(edges: DataFrame) -> DataFrame:
-    """Canonical (min,max) endpoints then sort (reference utils/graph.py:45-56)."""
-    return edges.orderBy("source", "target")
 
 
 PR_SCALE = 10**12
@@ -645,95 +631,6 @@ def betweenness_sampled(
     return out
 
 
-def metapath_counts(
-    nodes: DataFrame,
-    edges: DataFrame,
-    src: str = "source",
-    dst: str = "target",
-    type_col: str = "type",
-) -> DataFrame:
-    """Typed 2-hop metapath census over the KG → (type_a, type_b,
-    type_c, n_paths): how many length-2 paths realize each ordered
-    type triple, counting each undirected path once (endpoint titles
-    ordered a < c; palindromic type triples still count once per path).
-
-    The heterogeneous-network schema audit (the statistic behind
-    metapath2vec-style typed walks, Dong et al. 2017): a KG whose
-    PERSON–EVENT–PERSON count collapses after a merge change lost its
-    co-participation structure, long before any per-node metric moves.
-    Reference anchor: entity types from
-    verbs/entities/extraction/entity_extract.py:23 — the reference
-    stores types but never audits their connectivity mix.
-
-    Scale shape: one self-join of the symmetrized edge list on the
-    middle node (the wedge enumeration — same O(Σ d²) envelope as
-    triangle_profile, mitigated by the a < c order filter), then three
-    hash joins against the (title, type) map and a map-side-combinable
-    count.  The type map is |V| rows but only 2 columns — far below the
-    edge self-join's row volume, and AQE broadcasts it when small.
-    """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    sym = e.unionByName(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).distinct()
-    e2 = sym.select(F.col("a").alias("m"), F.col("b").alias("c"))
-    paths = sym.join(e2, sym["b"] == e2["m"]).filter(F.col("a") < F.col("c"))
-    t = nodes.select(F.col("title"), F.col(type_col).alias("_ty"))
-    return (
-        paths.join(t.select(F.col("title").alias("a"), F.col("_ty").alias("type_a")), "a")
-        .join(t.select(F.col("title").alias("b"), F.col("_ty").alias("type_b")), "b")
-        .join(t.select(F.col("title").alias("c"), F.col("_ty").alias("type_c")), "c")
-        .groupBy("type_a", "type_b", "type_c")
-        .agg(F.count("*").cast("bigint").alias("n_paths"))
-    )
-
-
-def triangle_profile(
-    edges: DataFrame, src: str = "source", dst: str = "target"
-) -> DataFrame:
-    """Per-node triangle count + local clustering coefficient →
-    (title, degree, triangles, clustering_micro).
-
-    Input must be the canonical undirected edge list (src < dst, distinct
-    — what parse_and_merge emits).  Triangle enumeration is the standard
-    two-join ordered-wedge plan: (a<b) ⋈ (b<c) ⋈ (a<c) — each triangle
-    counted exactly once.  All equi-joins on node keys, integer outputs;
-    clustering_micro = floor(1e6 · 2T / (d·(d-1))), 0 when degree < 2.
-
-    Scale note: wedge enumeration is the O(Σ d²) step; the ordered join
-    (low-id endpoint first) is the classic mitigation — each wedge is
-    generated once, at its lowest vertex.  Hot vertices split across
-    shuffle partitions via AQE skew handling; the per-node aggregate is
-    map-side combinable.
-    """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    ab = e.select(F.col("a"), F.col("b"))
-    bc = e.select(F.col("a").alias("b"), F.col("b").alias("c"))
-    ac = e.select(F.col("a").alias("ta"), F.col("b").alias("tc"))
-    tri = (
-        ab.join(bc, "b")
-        .join(ac, (F.col("a") == F.col("ta")) & (F.col("c") == F.col("tc")))
-        .select("a", "b", "c")
-    )
-    per_node = (
-        tri.select(F.explode(F.array("a", "b", "c")).alias("title"))
-        .groupBy("title")
-        .agg(F.count("*").cast("bigint").alias("triangles"))
-    )
-    deg = node_degrees(edges.select(F.col(src).alias("source"), F.col(dst).alias("target")))
-    out = deg.join(per_node, "title", "left").select(
-        "title",
-        F.col("degree").cast("bigint").alias("degree"),
-        F.coalesce("triangles", F.lit(0)).cast("bigint").alias("triangles"),
-    )
-    cc = F.when(F.col("degree") < 2, F.lit(0.0)).otherwise(
-        F.col("triangles").cast("double")
-        * 2_000_000
-        / (F.col("degree") * (F.col("degree") - 1)).cast("double")
-    )
-    return out.withColumn("clustering_micro", F.floor(cc).cast("bigint"))
-
-
 def neighbor_jaccard_pairs(
     edges: DataFrame,
     src: str = "source",
@@ -782,59 +679,12 @@ def neighbor_jaccard_pairs(
     )
 
 
-def k_core(
-    edges: DataFrame,
-    k: int = 2,
-    rounds: int = 3,
-    src: str = "source",
-    dst: str = "target",
-) -> DataFrame:
-    """Fixed-round k-core peel → (title, degree) for surviving nodes.
-
-    Each round drops every node whose degree in the CURRENT subgraph is
-    < k, then restricts the edge list to surviving endpoints (the
-    classic peel; graph-QC / dense-subgraph signal complementing
-    triangle_profile).  A FIXED round count keeps the op deterministic
-    and oracle-unrollable (same design as pagerank_int / the LPA gates);
-    the peel is monotone, so extra rounds past the fixpoint are no-ops
-    and the unrolled oracle agrees with an early-stopping loop whenever
-    ``rounds`` reaches the fixpoint.  Output degree is recomputed over
-    the final edge set (it can sit below k if ``rounds`` stopped short —
-    callers wanting the true core raise ``rounds``; depth O(|V|) worst
-    case, O(log) typical).
-
-    Scale shape: per round one map-side-combinable degree aggregate and
-    two semi-joins on the (small) survivor set — broadcast-eligible as
-    soon as the survivor table fits, never a cross join.  The loop
-    localCheckpoints each round to cut lineage, same pattern as
-    pagerank_int.
-    """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    for _ in range(rounds):
-        deg = (
-            e.select(F.explode(F.array("a", "b")).alias("t"))
-            .groupBy("t")
-            .agg(F.count("*").alias("d"))
-        )
-        keep = deg.filter(F.col("d") >= k).select("t")
-        e = (
-            e.join(keep.select(F.col("t").alias("a")), "a", "left_semi")
-            .join(keep.select(F.col("t").alias("b")), "b", "left_semi")
-            .localCheckpoint(eager=False)
-        )
-    return (
-        e.select(F.explode(F.array("a", "b")).alias("title"))
-        .groupBy("title")
-        .agg(F.count("*").cast("bigint").alias("degree"))
-    )
-
-
 def _edge_support(e: DataFrame) -> DataFrame:
     """Per-edge triangle support over a canonical (a < b, distinct)
     undirected edge list → (x, y, sup).  Ordered-wedge enumeration (each
-    triangle a<b<c generated once, at its lowest vertex — the same plan
-    as triangle_profile) then one explode of the triangle's three edges +
-    a map-side-combinable groupBy.  Edges in no triangle have NO row."""
+    triangle a<b<c generated once, at its lowest vertex) then one
+    explode of the triangle's three edges + a map-side-combinable
+    groupBy.  Edges in no triangle have NO row."""
     ab = e
     bc = e.select(F.col("a").alias("b"), F.col("b").alias("c"))
     ac = e.select(F.col("a").alias("ta"), F.col("b").alias("tc"))
@@ -869,10 +719,10 @@ def k_truss(
     """Fixed-round k-truss peel → (source, target, support) for surviving
     edges, with ``support`` recomputed over the FINAL edge set.
 
-    The edge-peeling sibling of ``k_core``'s node peel (Cohen 2008,
-    "Trusses: cohesive subgraphs for social network analysis"): each
-    round drops every edge lying in fewer than k−2 triangles of the
-    CURRENT subgraph, then repeats on the survivors.  The k-truss is the
+    An edge peel (Cohen 2008, "Trusses: cohesive subgraphs for social
+    network analysis"): each round drops every edge lying in fewer than
+    k−2 triangles of the CURRENT subgraph, then repeats on the
+    survivors.  The k-truss is the
     stricter cohesion signal — a k-core can be a sparse hub star, a
     k-truss cannot (every surviving edge has k−2 common-neighbor
     witnesses), which is what makes it the standard dense-community
@@ -881,7 +731,7 @@ def k_truss(
     edge side.
 
     A FIXED round count keeps the op deterministic and oracle-unrollable
-    (same design as k_core / pagerank_int); the peel is monotone —
+    (same design as pagerank_int); the peel is monotone —
     dropping an edge only ever lowers other edges' support — so extra
     rounds past the fixpoint are no-ops and the unrolled oracle agrees
     with an early-stopping loop whenever ``rounds`` reaches the fixpoint.
@@ -977,147 +827,6 @@ def bfs_hops(
     return dist
 
 
-LIFT_SCALE = 10**6
-
-
-def cooccurrence_edges(
-    mentions: DataFrame,
-    unit_col: str = "text_unit_id",
-    name_col: str = "mention",
-    min_pair_count: int = 2,
-) -> DataFrame:
-    """Entity co-occurrence graph over text units → (source, target,
-    pair_count, count_a, count_b, lift_micro).
-
-    The reference's only edge source is the extractor's explicit
-    relationship records (graph/extractors/graph_extractor.py:248-290);
-    co-occurrence edges are the standard complementary signal (two
-    entities mentioned in the same chunk relate even when no explicit
-    relation line was emitted).  Association strength is LIFT —
-    n_units·c(a,b) / (c(a)·c(b)), the exponential of PMI — micro-floored
-    from one double division of exact int64 counts, so the SQL oracle
-    matches exactly without libm logs.
-
-    Scale shape: per-unit mention lists are deduped FIRST (groupBy unit —
-    shuffle key carries no hot-entity skew); the pair explode is bounded
-    per unit by the chunk-size cap on mentions-per-chunk, never global;
-    the two marginal tables join back on the canonical (source, target)
-    keys.  ``min_pair_count`` prunes the long singleton tail before the
-    marginals join (at 100 TB this is the df-cap analog of ngram_dedup).
-    """
-    occ = mentions.select(
-        F.col(unit_col).alias("unit"), F.col(name_col).alias("name")
-    ).distinct()
-    n_units = occ.agg(F.count_distinct("unit").cast("bigint").alias("n_units"))
-    marg = occ.groupBy("name").agg(F.count("*").cast("bigint").alias("cnt"))
-    a = occ.select("unit", F.col("name").alias("source"))
-    b = occ.select("unit", F.col("name").alias("target"))
-    pairs = (
-        a.join(b, "unit")
-        .filter(F.col("source") < F.col("target"))
-        .groupBy("source", "target")
-        .agg(F.count("*").cast("bigint").alias("pair_count"))
-        .filter(F.col("pair_count") >= min_pair_count)
-    )
-    return (
-        pairs.join(marg.select(F.col("name").alias("source"), F.col("cnt").alias("count_a")), "source")
-        .join(marg.select(F.col("name").alias("target"), F.col("cnt").alias("count_b")), "target")
-        .crossJoin(F.broadcast(n_units))
-        .select(
-            "source",
-            "target",
-            "pair_count",
-            "count_a",
-            "count_b",
-            F.floor(
-                F.lit(float(LIFT_SCALE))
-                * (F.col("pair_count") * F.col("n_units")).cast("double")
-                / (F.col("count_a") * F.col("count_b")).cast("double")
-            )
-            .cast("bigint")
-            .alias("lift_micro"),
-        )
-    )
-
-
-MOD_SCALE = 10**6
-
-
-def modularity_profile(edges: DataFrame, communities: DataFrame) -> DataFrame:
-    """Newman modularity decomposition of a node partition →
-    (community, n_nodes, e_in, deg_sum, contrib_num, m_edges).
-
-    Partition-quality metric for the LPA communities (the reference has
-    no clustering-quality stage; this is the standard audit for K2's
-    replacement).  Q = Σ_c [e_c/m − (d_c/2m)²]; with integer inputs the
-    per-community numerator over the common denominator 4m² is
-    ``contrib_num = 4·m·e_c − d_c²`` — pure int64 arithmetic, so the
-    DuckDB oracle matches bit-for-bit and Q = Σ contrib_num / (4m²) is
-    recoverable exactly.  Unweighted by design (edge weights are floats;
-    integer exactness wins — documented deviation from weighted Q).
-
-    int64 bound: d_c ≤ 2m ⇒ contrib_num ≤ 4m²; exact while m ≤ 1.5e9
-    edges.  Beyond that switch the two products to decimal(38,0) — same
-    expression shape on both engines.
-
-    Scale shape: one groupBy per side — degrees (explode endpoints,
-    map-side partial count), then two broadcast-able joins of the
-    |V|-sized community map onto edges/degrees and a |C|-keyed groupBy.
-    No shuffle carries more than |E| rows; the scalar m rides a
-    broadcast 1-row frame.
-    """
-    comm = communities.select(F.col("title"), F.col("community"))
-    deg = node_degrees(edges)  # (title, degree), undirected convention
-    m = edges.agg(F.count("*").cast("bigint").alias("m_edges"))
-    per_node = (
-        deg.join(comm, "title")
-        .groupBy("community")
-        .agg(
-            F.count("*").cast("bigint").alias("n_nodes"),
-            F.sum("degree").cast("bigint").alias("deg_sum"),
-        )
-    )
-    e_in = (
-        edges.select("source", "target")
-        .join(comm.select(F.col("title").alias("source"), F.col("community").alias("_cs")), "source")
-        .join(comm.select(F.col("title").alias("target"), F.col("community").alias("_ct")), "target")
-        .filter(F.col("_cs") == F.col("_ct"))
-        .groupBy(F.col("_cs").alias("community"))
-        .agg(F.count("*").cast("bigint").alias("e_in"))
-    )
-    return (
-        per_node.join(e_in, "community", "left")
-        .crossJoin(F.broadcast(m))
-        .select(
-            "community",
-            "n_nodes",
-            F.coalesce("e_in", F.lit(0)).cast("bigint").alias("e_in"),
-            "deg_sum",
-            (
-                F.lit(4) * F.col("m_edges") * F.coalesce("e_in", F.lit(0))
-                - F.col("deg_sum") * F.col("deg_sum")
-            )
-            .cast("bigint")
-            .alias("contrib_num"),
-            "m_edges",
-        )
-    )
-
-
-def modularity_score(edges: DataFrame, communities: DataFrame) -> DataFrame:
-    """Scalar modularity → one row (m_edges, n_communities, q_micro) with
-    q_micro = floor(1e6 · Σ contrib_num / (4m²)) — single integer floor
-    division at the very end, exact on both engines."""
-    prof = modularity_profile(edges, communities)
-    return prof.groupBy().agg(
-        F.max("m_edges").cast("bigint").alias("m_edges"),
-        F.count("*").cast("bigint").alias("n_communities"),
-        F.expr(f"CAST(({MOD_SCALE} * sum(contrib_num)) DIV (4 * max(m_edges) * max(m_edges)) AS BIGINT)").alias(
-            "q_micro"
-        ),
-    )
-
-
 def neighbor_sample(
     edges: DataFrame,
     k: int = 5,
@@ -1164,150 +873,6 @@ def _symmetric_pairs(edges: DataFrame, src: str, dst: str) -> DataFrame:
         .filter(F.col("node") != F.col("neighbor"))
         .distinct()
     )
-
-
-def community_conductance(
-    edges: DataFrame, communities: DataFrame, scale: int = 1_000_000
-) -> DataFrame:
-    """Per-community conductance → (community, cut_edges, vol,
-    conductance_micro): φ(c) = cut(c) / min(vol(c), 2m − vol(c)) in
-    integer micro-units — the complement audit to modularity (modularity
-    rewards dense insides; conductance exposes leaky boundaries).
-    cut(c) counts undirected edges with exactly one endpoint in c (each
-    such edge charges BOTH its communities); vol(c) sums member degrees.
-    min side 0 (a community covering the whole graph, or only isolated
-    nodes) → φ = 0 by convention.
-
-    Scale shape: two broadcast-able joins of the |V|-sized community map
-    onto the edge list, one |C|-keyed groupBy per quantity, scalar 2m
-    via a 1-row aggregate — no shuffle wider than |E|."""
-    comm = communities.select("title", "community")
-    deg = node_degrees(edges)
-    vol = (
-        comm.join(deg, "title")
-        .groupBy("community")
-        .agg(F.sum("degree").cast("bigint").alias("vol"))
-    )
-    m2 = deg.agg(F.sum("degree").cast("bigint")).first()[0] or 0
-    cut_pairs = (
-        edges.select("source", "target")
-        .join(
-            comm.select(F.col("title").alias("source"), F.col("community").alias("_cs")),
-            "source",
-        )
-        .join(
-            comm.select(F.col("title").alias("target"), F.col("community").alias("_ct")),
-            "target",
-        )
-        .filter(F.col("_cs") != F.col("_ct"))
-    )
-    cut = (
-        cut_pairs.select(F.col("_cs").alias("community"))
-        .unionByName(cut_pairs.select(F.col("_ct").alias("community")))
-        .groupBy("community")
-        .agg(F.count("*").cast("bigint").alias("cut_edges"))
-    )
-    return (
-        vol.join(cut, "community", "left")
-        .withColumn("cut_edges", F.coalesce("cut_edges", F.lit(0)).cast("bigint"))
-        .select(
-            "community",
-            "cut_edges",
-            "vol",
-            F.expr(
-                f"CAST(CASE WHEN least(vol, {m2} - vol) <= 0 THEN 0 "
-                f"ELSE (cut_edges * {scale}) DIV least(vol, {m2} - vol) "
-                f"END AS BIGINT)"
-            ).alias("conductance_micro"),
-        )
-    )
-
-
-def ppr_int(
-    edges: DataFrame,
-    seeds: DataFrame,
-    iterations: int = 10,
-    scale: int = PR_SCALE,
-    damping_num: int = PR_DAMP_NUM,
-    damping_den: int = PR_DAMP_DEN,
-    symmetric: bool = True,
-) -> DataFrame:
-    """Fixed-round personalized PageRank: teleport mass concentrated on
-    ``seeds`` (title column) instead of uniform → (title, rank_scaled).
-
-    Query-biased entity salience for local search (GraphRAG-style: seed
-    on the conversation's matched entities, rank the neighborhood) —
-    same exact-integer discipline as :func:`pagerank_int` so a
-    fixed-round unrolled SQL oracle reproduces every value bit-for-bit.
-
-    Per round: rank'(v) = [v ∈ S]·floor(scale·(1−d)/|S|) +
-    Σ_{u→v} (rank(u)·85) DIV (100·outdeg(u)); init = scale DIV |S| on
-    seeds, 0 elsewhere.  Dangling/quantized mass drops, as in
-    pagerank_int.
-
-    Scale shape identical to pagerank_int (the seed flag is one
-    broadcast join onto the node set, resolved once before the loop).
-    """
-    e = edges.select(F.col("source").alias("u"), F.col("target").alias("v"))
-    if symmetric:
-        e = e.unionByName(
-            edges.select(F.col("target").alias("u"), F.col("source").alias("v"))
-        )
-    e = e.persist()
-    nodes = (
-        e.select(F.col("u").alias("title"))
-        .unionByName(e.select(F.col("v").alias("title")))
-        .distinct()
-    )
-    seed_flag = F.broadcast(
-        seeds.select(F.col("title")).distinct().withColumn("_seed", F.lit(1))
-    )
-    nodes = nodes.join(seed_flag, "title", "left").select(
-        "title", F.coalesce("_seed", F.lit(0)).alias("is_seed")
-    ).persist()
-    s = nodes.filter(F.col("is_seed") == 1).count()
-    if s == 0:
-        raise ValueError("ppr_int: no seed overlaps the edge set")
-    outdeg = e.groupBy("u").agg(F.count("*").cast("bigint").alias("outdeg"))
-    adj = e.join(outdeg, "u").persist()
-    base = (scale * (damping_den - damping_num)) // (damping_den * s)
-    init = scale // s
-    ranks = nodes.select(
-        "title",
-        F.when(F.col("is_seed") == 1, F.lit(init))
-        .otherwise(F.lit(0))
-        .cast("bigint")
-        .alias("rank_scaled"),
-    ).localCheckpoint(eager=True)
-    for _ in range(iterations):
-        contrib = (
-            adj.join(ranks.select(F.col("title").alias("u"), "rank_scaled"), "u")
-            .select(
-                F.col("v"),
-                F.expr(
-                    f"(rank_scaled * {damping_num}) DIV ({damping_den} * outdeg)"
-                ).alias("c"),
-            )
-            .groupBy("v")
-            .agg(F.sum("c").cast("bigint").alias("inflow"))
-        )
-        ranks = (
-            nodes.join(contrib, nodes["title"] == contrib["v"], "left")
-            .select(
-                "title",
-                (
-                    F.when(F.col("is_seed") == 1, F.lit(base)).otherwise(F.lit(0))
-                    + F.coalesce(F.col("inflow"), F.lit(0))
-                )
-                .cast("bigint")
-                .alias("rank_scaled"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    e.unpersist()
-    adj.unpersist()
-    nodes.unpersist()
-    return ranks
 
 
 WIDEST_SEED_STRENGTH = 1 << 40
@@ -1375,70 +940,6 @@ def widest_paths(
 
 
 AA_SCALE = 10**6
-
-
-def adamic_adar_pairs(
-    edges: DataFrame,
-    src: str = "source",
-    dst: str = "target",
-    max_center_degree: int | None = None,
-) -> DataFrame:
-    """Link prediction over the KG: Adamic–Adar-style common-neighbor
-    scoring for NON-adjacent node pairs → (title_a, title_b, n_common,
-    aa_micro).
-
-    Adamic & Adar (2003) weight each common neighbor z by 1/log(deg z) —
-    shared rare neighbors are stronger evidence than shared hubs.  The
-    integer-exact convention of bm25_top_terms replaces the log:
-    each z contributes floor(1e6 / bitlen(deg z)) with
-    bitlen = length(bin(deg)) − 1 = floor(log2 deg); a common neighbor
-    has deg ≥ 2 so bitlen ≥ 1 — no zero division.  Scores are pure int64,
-    bit-identical in the DuckDB oracle.
-
-    Predicted links (the output) are wedges whose endpoints are NOT
-    already connected — the "suggest a missing relationship" view used
-    for KG completion and extractor-recall auditing.
-
-    Scale shape: the wedge join is the triangle_profile plan — pairs share
-    a blocking key (the common neighbor), never a cross join.  A hub of
-    degree d emits d(d−1)/2 wedges; ``max_center_degree`` excludes
-    super-hub centers from wedge generation (standard degree-capped
-    Adamic-Adar — a hub's 1/log weight is negligible anyway), bounding
-    the quadratic blowup at scale.  The final existing-edge check is a
-    left-anti equi-join on the canonical pair.
-    """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    adj = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    deg = adj.groupBy("a").agg(F.count("*").cast("bigint").alias("deg"))
-    # greatest(.,1): a COMMON neighbor always has deg >= 2 (bitlen >= 1),
-    # but the expression is evaluated for deg-1 nodes too before the join
-    # prunes them — guard the division rather than rely on plan order.
-    centers = deg.select(
-        F.col("a").alias("z"),
-        F.floor(
-            F.lit(AA_SCALE) / F.greatest(F.length(F.bin(F.col("deg"))) - 1, F.lit(1))
-        )
-        .cast("bigint")
-        .alias("w_micro"),
-        "deg",
-    )
-    if max_center_degree is not None:
-        centers = centers.filter(F.col("deg") <= max_center_degree)
-    wedges = (
-        adj.select(F.col("b").alias("z"), F.col("a").alias("title_a"))
-        .join(adj.select(F.col("b").alias("z"), F.col("a").alias("title_b")), "z")
-        .filter(F.col("title_a") < F.col("title_b"))
-        .join(centers.select("z", "w_micro"), "z")
-        .groupBy("title_a", "title_b")
-        .agg(
-            F.count("*").cast("bigint").alias("n_common"),
-            F.sum("w_micro").cast("bigint").alias("aa_micro"),
-        )
-    )
-    existing = e.select(
-        F.least("a", "b").alias("title_a"), F.greatest("a", "b").alias("title_b")
-    ).distinct()
-    return wedges.join(existing, ["title_a", "title_b"], "left_anti")
 
 
 HITS_NORM_SCALE = 10**6
@@ -1524,53 +1025,6 @@ def hits_int(
     return out
 
 
-def assortativity_profile(edges: DataFrame, degrees: DataFrame) -> DataFrame:
-    """Degree-assortativity decomposition (Newman 2002) → ONE row
-    (m_dir, sum_jk, sum_j, sum_j2, num, den); r = num/den.
-
-    The graph-health scalar that says whether hubs link to hubs (r > 0,
-    social-network shape) or hubs link to leaves (r < 0, hub-and-spoke —
-    the shape that makes skew-aware join planning matter).  Over the
-    symmetrized edge-end degree pairs (j, k):
-
-        num = M·Σjk − (Σj)²      den = M·Σj² − (Σj)²
-
-    exactly Pearson's r numerator/denominator multiplied through by M²
-    (Σk = Σj and Σk² = Σj² by symmetry) — pure int64, no float moments,
-    so the oracle matches bit-for-bit.  int64 bound: M·Σj² < 2^63, i.e.
-    fine through ~10^9 edges of max degree ~10^6-ish; past that, the
-    same expression in decimal(38,0).
-
-    Scale shape: two broadcast-or-shuffle equi-joins of edges against the
-    degree table, then ONE combinable global aggregate — no windows.
-    """
-    d = degrees.select("title", F.col("degree").cast("bigint").alias("d"))
-    da = d.select(F.col("title").alias("source"), F.col("d").alias("j"))
-    db = d.select(F.col("title").alias("target"), F.col("d").alias("k"))
-    ends = edges.select("source", "target").join(da, "source").join(db, "target")
-    sym = ends.select("j", "k").unionByName(
-        ends.select(F.col("k").alias("j"), F.col("j").alias("k"))
-    )
-    agg = sym.agg(
-        F.count("*").cast("bigint").alias("m_dir"),
-        F.sum(F.col("j") * F.col("k")).cast("bigint").alias("sum_jk"),
-        F.sum("j").cast("bigint").alias("sum_j"),
-        F.sum(F.col("j") * F.col("j")).cast("bigint").alias("sum_j2"),
-    )
-    return agg.select(
-        "m_dir",
-        "sum_jk",
-        "sum_j",
-        "sum_j2",
-        (F.col("m_dir") * F.col("sum_jk") - F.col("sum_j") * F.col("sum_j"))
-        .cast("bigint")
-        .alias("num"),
-        (F.col("m_dir") * F.col("sum_j2") - F.col("sum_j") * F.col("sum_j"))
-        .cast("bigint")
-        .alias("den"),
-    )
-
-
 def scc_fixed_rounds(
     edges: DataFrame,
     src: str = "source",
@@ -1579,7 +1033,6 @@ def scc_fixed_rounds(
     outer_rounds: int = 2,
     round_log: list | None = None,
     rounds_used: list | None = None,
-    edge_layout: str | None = None,
 ) -> DataFrame:
     """Strongly connected components of a DIRECTED graph via fixed-round
     forward-backward min-label peeling (the FW-BW-trim family, Fleischer
@@ -1628,27 +1081,7 @@ def scc_fixed_rounds(
       no-ops, so the gate's fixed-round oracle still matches bit-for-bit
       (`rounds_used` reports the budget actually consumed for the
       bench's rounds-vs-budget readout).
-
-    ``edge_layout`` (round-5, VERDICT r4 #2 — output byte-identical,
-    physical plan only): at 1.2M+ edges the kernel is shuffle-bound
-    because every inner round's frontier join re-exchanges the FULL
-    directed edge list (each early-exit probe is its own action, so
-    Catalyst's ReuseExchange never amortizes it).  ``"bucket"``
-    materializes each outer round's direction-tagged edges as a table
-    BUCKETED on the join key (frm, dir) — the durable form of
-    ``edge_partition_audit``'s src_hash strategy, the only layout a
-    DataFrame engine can make the join planner actually *see* (a bare
-    repartition() is invisible to Catalyst across actions) — so per
-    inner round only the O(delta) label frontier shuffles and the edge
-    side is scanned in place.  Write-once cost |E| per outer round vs
-    |E| shuffle per inner round; A/B walls + shuffle bytes in
-    BENCH_SCALING.md.  Default None keeps the exact round-4 plan (what
-    the gates run).
     """
-    if edge_layout not in (None, "bucket"):
-        # a typo'd layout must not silently run the default and get
-        # recorded as an A/B arm (review finding)
-        raise ValueError(f"unknown edge_layout {edge_layout!r}; use None or 'bucket'")
     e0 = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .distinct()
@@ -1659,23 +1092,6 @@ def scc_fixed_rounds(
         .unionByName(e0.select(F.col("b").alias("node")))
         .distinct()
     )
-
-    spark = edges.sparkSession
-    _bucket_seq = [0]
-
-    def _bucketize(df: DataFrame, cols: list[str]) -> tuple[DataFrame, str]:
-        """Write df as a table bucketed on `cols` (bucket count = the
-        session's shuffle width) and read it back — the read reports
-        HashPartitioning(cols) to Catalyst, so equi-joins on `cols` skip
-        the exchange on this side.  The scratch name carries the
-        application id: processes sharing a metastore never collide."""
-        _bucket_seq[0] += 1
-        app = re.sub(r"\W", "_", spark.sparkContext.applicationId)
-        name = f"__scc_bucket_{app}_{id(_bucket_seq)}_{_bucket_seq[0]}"
-        df.write.mode("overwrite").format("parquet").bucketBy(
-            shuffle_width(spark), *cols
-        ).saveAsTable(name)
-        return spark.table(name), name
 
     def _min_prop_fused(rem: DataFrame, er: DataFrame) -> tuple[DataFrame, int]:
         """Both propagation directions in one (node, dir)-keyed loop;
@@ -1690,25 +1106,7 @@ def scc_fixed_rounds(
                 F.col("a").alias("to"),
                 F.lit("b").alias("dir"),
             )
-        )
-        bucket_name = None
-        if edge_layout == "bucket":
-            ed, bucket_name = _bucketize(ed, ["frm", "dir"])
-        else:
-            ed = ed.localCheckpoint(eager=False)
-        try:
-            return _rounds(rem, ed, eager_out=bucket_name is not None)
-        finally:
-            if bucket_name is not None:
-                # drop the scratch table on EVERY exit path (an OOM or
-                # interrupt mid-loop must not leak an |E|-sized managed
-                # table per outer round); on success _rounds eagerly
-                # checkpointed the labels first, so the drop is safe
-                spark.sql(f"DROP TABLE IF EXISTS {bucket_name}")
-
-    def _rounds(
-        rem: DataFrame, ed: DataFrame, eager_out: bool
-    ) -> tuple[DataFrame, int]:
+        ).localCheckpoint(eager=False)
         lab = rem.select(
             "node",
             F.col("node").alias("lab"),
@@ -1750,10 +1148,6 @@ def scc_fixed_rounds(
                 delta = merged.filter("chg").select("node", "dir", "lab")
                 if delta.limit(1).count() == 0:
                     break  # fixpoint: remaining rounds are no-ops
-        if eager_out:
-            # materialize before the caller drops the bucketed table the
-            # lazy label lineage still reads from
-            lab = lab.localCheckpoint(eager=True)
         return lab, used
 
     remaining, er, out = nodes, e0, None
@@ -2329,106 +1723,6 @@ def coarsen_communities(
                 cur, matching, src="a", dst="b", weight_col="w", count_col="n_multi"
             ).localCheckpoint(eager=True)
     return out
-
-
-def edge_partition_audit(
-    edges: DataFrame,
-    n_parts: int = 32,
-    src: str = "source",
-    dst: str = "target",
-) -> DataFrame:
-    """Compare edge-partitioning strategies for a distributed graph →
-    one row per strategy: (strategy, repl_micro, max_load, imb_micro).
-
-    The decision this audits is THE 100-TB graph question: how to shard
-    the edge list so iterative kernels shuffle least.  Three standard
-    strategies, each placing every edge in one of ``n_parts`` buckets by
-    the shared fingerprint family:
-
-    - ``src_hash``   — part = h(source): the plain hash partitioner
-      every groupBy uses; a hub's whole fan-out lands in ONE part.
-    - ``edge_hash``  — part = h(source||target): random vertex-cut
-      (PowerGraph's baseline) — perfect load, worst replication.
-    - ``dbh``        — part = h(lower-degree endpoint) (degree-based
-      hashing, Xie et al. 2014): cuts the HIGH-degree vertex, so hubs
-      spread across parts while low-degree vertices stay whole.
-
-    Metrics (all exact integers; micro = floor(1e6·ratio)):
-    ``repl_micro`` = mean vertex replication factor — Σ_v |parts
-    touching v| / |V| — the PowerGraph communication-cost proxy;
-    ``max_load`` = edges in the fullest part; ``imb_micro`` =
-    max_load · n_parts / |E| (1e6 = perfectly balanced).
-
-    Scale shape: degrees are one symmetric groupBy; the two degree
-    lookups are node-keyed hash equi-joins (|V|-sized — broadcast only
-    when small); each strategy is then a row-local part assignment
-    followed by a (node, part) distinct + two tiny aggregates — nothing
-    driver-side.
-    """
-    from ..functions.textqc import rolling_fingerprint
-
-    deg = (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-    )
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .join(deg.select(F.col("node").alias("a"), F.col("deg").alias("da")), "a")
-        .join(deg.select(F.col("node").alias("b"), F.col("deg").alias("db")), "b")
-    )
-    p = F.lit(n_parts)
-    cut = (
-        F.when(F.col("da") < F.col("db"), F.col("a"))
-        .when(F.col("db") < F.col("da"), F.col("b"))
-        .otherwise(F.least("a", "b"))
-    )
-    # One frame holding every (strategy, part) assignment — each of the
-    # two metric aggregates below is then ONE pass covering all three
-    # strategies, instead of per-strategy branches each re-running the
-    # degree joins (an earlier version persisted per-strategy slices but
-    # unpersisted them before the lazy plan ever executed, so downstream
-    # consumers recomputed the joins ~6×).
-    stacked = e.select(
-        "a",
-        "b",
-        F.explode(
-            F.create_map(
-                F.lit("src_hash"),
-                F.pmod(rolling_fingerprint(F.col("a")), p),
-                F.lit("edge_hash"),
-                F.pmod(rolling_fingerprint(F.concat_ws("|", "a", "b")), p),
-                F.lit("dbh"),
-                F.pmod(rolling_fingerprint(cut), p),
-            )
-        ).alias("strategy", "part"),
-    )
-    repl = (
-        stacked.select("strategy", "part", F.explode(F.array("a", "b")).alias("node"))
-        .distinct()
-        .groupBy("strategy")
-        .agg(F.count("*").alias("pairs"), F.countDistinct("node").alias("n_v"))
-        .select(
-            "strategy",
-            # integer div: exact at any scale (float div drifts past 2^53)
-            F.expr("(pairs * 1000000) div n_v").cast("bigint").alias("repl_micro"),
-        )
-    )
-    load = (
-        stacked.groupBy("strategy", "part")
-        .agg(F.count("*").alias("n"))
-        .groupBy("strategy")
-        .agg(F.max("n").alias("max_load"), F.sum("n").alias("n_e"))
-    )
-    return repl.join(load, "strategy").select(
-        "strategy",
-        "repl_micro",
-        F.col("max_load").cast("bigint").alias("max_load"),
-        F.expr(f"(max_load * {n_parts} * 1000000) div n_e")
-        .cast("bigint")
-        .alias("imb_micro"),
-    )
 
 
 def edge_pmi(edges: DataFrame) -> DataFrame:
@@ -3065,10 +2359,9 @@ def lp_ranking_audit(
     TransE evaluation, scored structurally) → (source, target, rank,
     n_cand): for every true edge, rank the TRUE target against its
     ``negative_samples`` corruptions by Adamic-Adar common-neighbor
-    score (the same floor(1e6/bitlen(deg)) integer weights as
-    adamic_adar_pairs), ties broken candidate-name ASC.  rank = 1 means
-    the scorer put the real edge first; MRR/hits@k read off downstream
-    (lp_mrr).
+    score (integer weights floor(1e6/bitlen(deg)) per common
+    neighbor), ties broken candidate-name ASC.  rank = 1 means the
+    scorer put the real edge first; MRR/hits@k read off downstream.
 
     This is the KG-completion eval harness: it measures how well a
     scorer recovers held-out structure, the quality loop for extraction
@@ -3079,10 +2372,9 @@ def lp_ranking_audit(
     for "wrong" negatives that are actually right).
 
     Scale shape: candidates are k rows per edge (closed form); scoring
-    joins are blocked on the common neighbor exactly like
-    adamic_adar_pairs (per candidate pair the fan-out is deg(source),
-    never a cross join); the final rank is one groupBy over the
-    candidate set — no windows, no driver collects.  Duplicate sampled
+    joins are blocked on the common neighbor (per candidate pair the
+    fan-out is deg(source), never a cross join); the final rank is one
+    groupBy over the candidate set — no windows, no driver collects.  Duplicate sampled
     corruptions stay in the multiset (rank counts them twice), matching
     the closed-form row budget of negative_samples.
     """
@@ -3166,70 +2458,6 @@ def lp_ranking_audit(
     )
 
 
-def lp_mrr(ranking: DataFrame) -> DataFrame:
-    """One-row MRR/hits summary of lp_ranking_audit — exact integers:
-    sum_rr_micro = Σ 1000000 DIV rank (the reciprocal-rank sum in
-    micros), hits1/hits3 counts, n_edges.  DIV keeps both engines in
-    integer arithmetic; consumers divide by n_edges themselves."""
-    return ranking.agg(
-        F.count("*").cast("bigint").alias("n_edges"),
-        F.sum(F.expr("1000000 DIV rank")).cast("bigint").alias("sum_rr_micro"),
-        F.count(F.when(F.col("rank") == 1, True)).cast("bigint").alias("hits1"),
-        F.count(F.when(F.col("rank") <= 3, True)).cast("bigint").alias("hits3"),
-    )
-
-
-def single_linkage_clusters(
-    edges: DataFrame,
-    n_cuts: int = 3,
-    msf_rounds: int = 5,
-    src: str = "source",
-    dst: str = "target",
-    weight: str = "weight",
-) -> DataFrame:
-    """Single-linkage clustering via the Borůvka forest → (node,
-    cluster): cut the ``n_cuts`` HEAVIEST forest edges under the global
-    (weight DESC, pair ASC) order and label the remaining trees by their
-    lexicographic-min member — the classic MST↔single-linkage duality
-    (cutting the k heaviest MST edges yields exactly the k+1 clusters of
-    single-linkage agglomeration stopped k merges early).
-
-    KG use: distance-free hierarchical entity grouping — unlike LPA this
-    never merges two clusters across a heavy (weak-tie) edge, so it is
-    the conservative grouping for canonicalization review queues.
-
-    Scale shape: the forest is |V|−#CC rows; the global top-k is an
-    orderBy().limit(k) (TakeOrderedAndProject — per-partition heaps, no
-    global sort or single-partition window) anti-joined back; labeling
-    runs connected_components over FOREST edges only (≤|V| rows, the
-    cheap regime of the CC kernel).
-    """
-    from .community import connected_components
-
-    e0 = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-            F.col(weight).cast("double").alias("w"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.min("w").alias("w"))
-    )
-    forest = min_spanning_forest(e0, src="a", dst="b", weight="w", rounds=msf_rounds)
-    fe = forest.withColumn("estr", F.concat_ws("|", "source", "target"))
-    cut = fe.orderBy(F.desc("weight"), F.asc("estr")).limit(n_cuts).select("estr")
-    kept = fe.join(cut, "estr", "left_anti").select("source", "target")
-    nodes = (
-        e0.select(F.col("a").alias("title"))
-        .unionByName(e0.select(F.col("b").alias("title")))
-        .distinct()
-    )
-    return connected_components(nodes, kept).select(
-        F.col("title").alias("node"), F.col("component").alias("cluster")
-    )
-
-
 def sssp_int(
     edges: DataFrame,
     seeds: DataFrame,
@@ -3295,11 +2523,11 @@ def four_cycle_profile(
     """Per-node 4-cycle participation count → (title, degree,
     four_cycles).
 
-    The quadrilateral sibling of ``triangle_profile``: C4 motifs capture
-    bipartite-style redundancy (two entities sharing two distinct
-    intermediaries) that triangles miss entirely — the canonical signal
-    for co-reference candidates and templated-relation detection in a KG,
-    and the basis of the rectangle clustering coefficient.
+    C4 motifs capture bipartite-style redundancy (two entities sharing
+    two distinct intermediaries) that triangles miss entirely — the
+    canonical signal for co-reference candidates and templated-relation
+    detection in a KG, and the basis of the rectangle clustering
+    coefficient.
 
     Counting identity: for an unordered node pair {u,w} (u < w) with c
     common neighbours there are C(c,2) four-cycles whose diagonal is
@@ -3310,10 +2538,10 @@ def four_cycle_profile(
     not the induced-cycle variant.)  All integers; c·(c−1) is even so the
     DIV 2 is exact.
 
-    Scale shape: wedge enumeration grouped by ENDPOINT pair — the same
-    O(Σ d²) plan as triangle_profile with the common neighbour as the
-    blocking key, then one groupBy (map-side combinable) and an explode
-    of the surviving c ≥ 2 pairs (far fewer than wedges).  Hot hubs
+    Scale shape: wedge enumeration grouped by ENDPOINT pair — an
+    O(Σ d²) plan with the common neighbour as the blocking key, then one
+    groupBy (map-side combinable) and an explode of the surviving c ≥ 2
+    pairs (far fewer than wedges).  Hot hubs
     split via AQE skew handling."""
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
         F.col("a") != F.col("b")
@@ -3341,50 +2569,6 @@ def four_cycle_profile(
         "title",
         F.col("degree").cast("bigint").alias("degree"),
         F.coalesce("four_cycles", F.lit(0)).cast("bigint").alias("four_cycles"),
-    )
-
-
-def reciprocity_profile(
-    directed_edges: DataFrame, src: str = "source", dst: str = "target"
-) -> DataFrame:
-    """Per-node directed-edge reciprocity → (title, n_out, n_recip,
-    recip_micro).
-
-    Over the raw DIRECTED relation records (the extraction stream before
-    the undirected least/greatest merge — reference
-    graph/extractors/graph_extractor.py:267-290 discards direction; this
-    audits what that merge folds away): for each node, how many of its
-    distinct out-neighbours also assert the reverse edge.
-    recip_micro = floor(1e6 · n_recip / n_out) — Garlaschelli & Loffredo's
-    node-level reciprocity in exact integer micros.  The KG reading:
-    mutually-asserted relations (A→B and B→A) are higher-confidence
-    merge candidates than one-directional mentions; corpus-level
-    reciprocity also calibrates whether the undirected merge is lossy.
-
-    Scale shape: one distinct on the directed pairs (combinable), a
-    self-equi-join on the reversed key — shuffle on the pair, uniform —
-    and two map-side-combinable counts.  No windows, no driver state.
-    """
-    d = (
-        directed_edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    rev = d.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    recip = d.intersect(rev).groupBy("a").agg(
-        F.count("*").cast("bigint").alias("n_recip")
-    )
-    out = d.groupBy("a").agg(F.count("*").cast("bigint").alias("n_out"))
-    return (
-        out.join(recip, "a", "left")
-        .select(
-            F.col("a").alias("title"),
-            "n_out",
-            F.coalesce("n_recip", F.lit(0)).cast("bigint").alias("n_recip"),
-            F.expr("coalesce(n_recip, 0) * 1000000 DIV n_out")
-            .cast("bigint")
-            .alias("recip_micro"),
-        )
     )
 
 

@@ -40,15 +40,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import clean_str_col, strip_outer_parens
+from ..functions.text import clean_name, clean_str_col, parse_weight, strip_outer_parens
 from .extract import COMPLETION, RECORD_DELIM
 
 _TUPLE_SPLIT = r"<\|>"  # regex-escaped TUPLE_DELIM
 N_SALTS = 16
-
-
-def _clean_upper(col: Column) -> Column:
-    return F.upper(clean_str_col(col))
 
 
 def split_records(raw_records: DataFrame) -> DataFrame:
@@ -78,8 +74,8 @@ def parse_entities(records: DataFrame) -> DataFrame:
         "conv_id",
         "text_unit_id",
         "rec_idx",
-        _clean_upper(F.element_at("fields", 2)).alias("name"),
-        _clean_upper(F.element_at("fields", 3)).alias("type"),
+        clean_name(F.element_at("fields", 2)).alias("name"),
+        clean_name(F.element_at("fields", 3)).alias("type"),
         clean_str_col(F.element_at("fields", 4)).alias("description"),
     )
 
@@ -95,12 +91,10 @@ def parse_relationships(records: DataFrame) -> DataFrame:
         "conv_id",
         "text_unit_id",
         "rec_idx",
-        _clean_upper(F.element_at("fields", 2)).alias("source"),
-        _clean_upper(F.element_at("fields", 3)).alias("target"),
+        clean_name(F.element_at("fields", 2)).alias("source"),
+        clean_name(F.element_at("fields", 3)).alias("target"),
         clean_str_col(F.element_at("fields", 4)).alias("description"),
-        F.coalesce(F.trim(F.element_at("fields", -1)).try_cast("double"), F.lit(1.0)).alias(
-            "weight"
-        ),
+        parse_weight(F.element_at("fields", -1)).alias("weight"),
     )
 
 

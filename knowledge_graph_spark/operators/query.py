@@ -164,14 +164,6 @@ def community_weight(
     )
 
 
-def text_unit_entity_pairs(nodes: DataFrame) -> DataFrame:
-    """(text_unit_id, title) membership pairs by inverting node
-    provenance — the input ``rank_text_units`` consumes."""
-    return nodes.select(
-        "title", F.explode("source_id").alias("text_unit_id")
-    )
-
-
 def text_unit_backlinks(
     text_units: DataFrame,
     nodes: DataFrame,

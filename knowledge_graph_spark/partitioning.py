@@ -14,8 +14,8 @@ rows only); callers must therefore be order-insensitive — true for every
 aggregate/join consumer in this repo.
 
 ``shuffle_width`` is the one reading of the session's shuffle width.
-The transcripts placement, the bucket count of the checkpointed tables
-and the SCC scratch tables all take it, so their hash layouts agree.
+The transcripts placement and the bucket count of the checkpointed
+tables both take it, so their hash layouts agree.
 """
 
 from __future__ import annotations

@@ -1,11 +1,10 @@
 """Agent-trace analytics (agent_trace.py) + the session-5 graph/corpus
-operators (widest_paths, adamic_adar_pairs, merge_pair_counts).
+operators (widest_paths, merge_pair_counts).
 
 Each operator is replayed in pure Python over the same small input and
 compared exactly — the unit-level analogue of the DuckDB gate oracles.
 """
 
-import math
 from collections import Counter, defaultdict
 
 import pytest
@@ -17,9 +16,7 @@ from knowledge_graph_spark.operators.agent_trace import (
 )
 from knowledge_graph_spark.operators.corpus import merge_pair_counts
 from knowledge_graph_spark.operators.graphops import (
-    AA_SCALE,
     WIDEST_SEED_STRENGTH,
-    adamic_adar_pairs,
     widest_paths,
 )
 
@@ -110,36 +107,6 @@ def test_widest_paths_matches_local_fixpoint(spark):
     assert got["e"] == 1 and got["c"] == 3 and got["b"] == 5
 
 
-def test_adamic_adar_matches_local(spark):
-    edges = spark.createDataFrame(WEDGES, "source string, target string, weight double")
-    adj = defaultdict(set)
-    for u, v, _ in WEDGES:
-        adj[u].add(v)
-        adj[v].add(u)
-    expect = {}
-    nodes = sorted(adj)
-    for i, a in enumerate(nodes):
-        for b in nodes[i + 1 :]:
-            if b in adj[a]:
-                continue
-            common = adj[a] & adj[b]
-            if not common:
-                continue
-            score = sum(
-                AA_SCALE // max(int(math.log2(len(adj[z]))), 1) for z in common
-            )
-            expect[(a, b)] = (len(common), score)
-    got = {
-        (r.title_a, r.title_b): (r.n_common, r.aa_micro)
-        for r in adamic_adar_pairs(edges).collect()
-    }
-    assert got == expect
-    # degree cap: centers above the cap contribute no wedges
-    capped = adamic_adar_pairs(edges, max_center_degree=2).collect()
-    assert all(r.n_common >= 1 for r in capped)
-    assert len(capped) <= len(got)
-
-
 def test_merge_pair_counts(spark):
     docs = spark.createDataFrame(
         [(1, "the cat sat"), (2, "the cat ran"), (3, "one"), (4, "")],
@@ -192,24 +159,6 @@ def test_hits_int_matches_replay(spark):
     got = {r.title: (r.authority, r.hub) for r in hits_int(edges, rounds=3).collect()}
     assert got["a"][1] == max(v[1] for v in got.values())
     assert got["a"][0] == min(v[0] for v in got.values())
-
-
-def test_assortativity_matches_networkx(spark):
-    import networkx as nx
-    from fractions import Fraction
-
-    from knowledge_graph_spark.operators.graphops import assortativity_profile
-    from knowledge_graph_spark.operators.graphops import node_degrees
-
-    edges = spark.createDataFrame(
-        [(u, v) for u, v, _ in WEDGES], "source string, target string"
-    )
-    row = assortativity_profile(edges, node_degrees(edges)).collect()[0]
-    r = Fraction(row.num, row.den)
-    g = nx.Graph([(u, v) for u, v, _ in WEDGES])
-    expected = nx.degree_assortativity_coefficient(g)
-    assert abs(float(r) - expected) < 1e-12
-    assert row.m_dir == 2 * len(WEDGES)
 
 
 def test_tool_latency(spark, transcripts):

@@ -153,25 +153,6 @@ def test_distributed_lpa_matches_local_fixpoint(spark):
     assert len(set(local.values())) == 3
 
 
-def test_k_core_peels_to_fixpoint(spark):
-    from knowledge_graph_spark.operators.graphops import k_core
-
-    # triangle A-B-C plus a tail C-D-E: 2-core = the triangle only,
-    # and the tail needs TWO rounds to peel (E first, then D).
-    edges = spark.createDataFrame(
-        [("A", "B"), ("B", "C"), ("A", "C"), ("C", "D"), ("D", "E")],
-        "source string, target string",
-    )
-    core = {r.title: r.degree for r in k_core(edges, k=2, rounds=3).collect()}
-    assert core == {"A": 2, "B": 2, "C": 2}
-    # k above the max degree empties the graph
-    assert k_core(edges, k=4, rounds=2).count() == 0
-    # rounds stopping short keeps the not-yet-peeled tail (fixed-round
-    # semantics the oracle unrolls): after 1 round E is gone, D remains
-    one = {r.title for r in k_core(edges, k=2, rounds=1).collect()}
-    assert one == {"A", "B", "C", "D"}
-
-
 def test_bfs_hops_min_distance_and_ball_cutoff(spark):
     from knowledge_graph_spark.operators.graphops import bfs_hops
 

@@ -174,31 +174,6 @@ def test_pagerank_int_vs_local(spark):
     assert got["c"] > got["e"]
 
 
-def test_triangle_profile_vs_local(spark):
-    from itertools import combinations
-
-    from knowledge_graph_spark.operators.graphops import triangle_profile
-
-    # K4 on a-d plus a pendant e: known triangle counts
-    nodes = ["a", "b", "c", "d"]
-    edges = [(x, y) for x, y in combinations(nodes, 2)] + [("d", "e")]
-    df = spark.createDataFrame(edges, "source string, target string")
-    out = {r.title: r for r in triangle_profile(df).collect()}
-    adj = {}
-    for x, y in edges:
-        adj.setdefault(x, set()).add(y)
-        adj.setdefault(y, set()).add(x)
-    for v, nb in adj.items():
-        tri = sum(1 for x, y in combinations(sorted(nb), 2) if y in adj[x])
-        d = len(nb)
-        r = out[v]
-        assert r.degree == d and r.triangles == tri
-        exp = (2_000_000 * tri) // (d * (d - 1)) if d >= 2 else 0
-        assert r.clustering_micro == exp
-    assert out["a"].triangles == 3 and out["e"].triangles == 0
-    assert out["a"].clustering_micro == 1_000_000  # K4 member: fully clustered
-
-
 def test_neighbor_jaccard_vs_local(spark):
     from knowledge_graph_spark.operators.graphops import neighbor_jaccard_pairs
 

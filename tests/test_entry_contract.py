@@ -38,7 +38,6 @@ CHECK = [
     "cluster_drift",
     "partition_agreement",
     "kg_diff",
-    "copurchase_core",
     "copurchase_rank",
     "entity_lifecycle",
     "temporal_salience",
@@ -61,7 +60,6 @@ CHECK = [
     "emb_topk",
     "emb_neardup_lsh",
     "fuzzy_aliases",
-    "k_core",
     "hash_split",
     "dsir_select",
     "filter_audit",
@@ -73,7 +71,6 @@ CHECK = [
     "neighborhood_fn",
     "harmonic_centrality",
     "eff_diameter",
-    "conductance",
     "neighbor_sample",
     "pagerank_w",
     "contrastive_pairs",
@@ -85,7 +82,6 @@ CHECK = [
     "kmeans_cells",
     "top_terms",
     "vocab",
-    "cooccur",
     "node_diff",
     "hll_tokens",
     "cms_counts",
@@ -105,10 +101,8 @@ CHECK = [
     "conv_shapes",
     "tool_ngrams",
     "widest_paths",
-    "link_pred",
     "bpe_pairs",
     "hits",
-    "assortativity",
     "ann_recall_mp",
     "emb_pq_topk",
     "emb_ivfpq_topk",
@@ -119,7 +113,6 @@ CHECK = [
     "winnow_dedup",
     "katz",
     "betweenness",
-    "metapaths",
     "kg_asof",
     "kg_growth",
     "type_mixing",
@@ -139,14 +132,11 @@ CHECK = [
     "langid",
     "coarsen",
     "coarsen_l2",
-    "partition_audit",
     # wave 12/13: Borůvka MSF family, peeling, ranking eval, telemetry
     "msf",
-    "single_linkage",
     "densest",
     "knn_graph",
     "lp_ranking",
-    "lp_mrr",
     "edge_decay",
     "heaps_law",
     "bpe_fertility",
@@ -157,9 +147,8 @@ CHECK = [
     "lm_bits",
     "phrase_search",
     "ann_recall_prefix",
-    # wave 15: reciprocity, double-sweep diameter, 1-WL colors, lateness
-    # audit, hourly KG churn, distinct-n diversity, tf-idf cosine pairs
-    "reciprocity",
+    # wave 15: double-sweep diameter, 1-WL colors, lateness audit, hourly
+    # KG churn, distinct-n diversity, tf-idf cosine pairs
     "diameter_lb",
     "wl_colors",
     "lateness",

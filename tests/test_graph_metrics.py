@@ -1,110 +1,13 @@
-"""Modularity decomposition + personalized PageRank (graphops.py).
+"""Iterative graph kernels (graphops.py): SCC, MIS, k-truss, Katz,
+betweenness, PageRank warm start and early exit, partition agreement.
 
-Modularity is verified against networkx's reference implementation (the
-integer decomposition must reproduce the float value exactly up to the
-final division); PPR is verified against a pure-Python replay of the
-same integer recurrence, plus seed-bias sanity.
+Each kernel is checked against networkx or a pure-Python replay of the
+same integer recurrence over a small hand-built graph.
 """
 
 from collections import defaultdict
-from fractions import Fraction
 
 import networkx as nx
-import pytest
-
-from knowledge_graph_spark.operators.graphops import (
-    MOD_SCALE,
-    PR_DAMP_DEN,
-    PR_DAMP_NUM,
-    PR_SCALE,
-    modularity_profile,
-    modularity_score,
-    ppr_int,
-)
-
-EDGES = [
-    ("a", "b"),
-    ("b", "c"),
-    ("a", "c"),
-    ("c", "d"),
-    ("d", "e"),
-    ("e", "f"),
-    ("d", "f"),
-]
-PART = {"a": "x", "b": "x", "c": "x", "d": "y", "e": "y", "f": "y"}
-
-
-@pytest.fixture(scope="module")
-def graph(spark):
-    edges = spark.createDataFrame(EDGES, "source string, target string")
-    comm = spark.createDataFrame(list(PART.items()), "title string, community string")
-    return edges, comm
-
-
-def test_modularity_matches_networkx(spark, graph):
-    edges, comm = graph
-    rows = modularity_profile(edges, comm).collect()
-    m = rows[0].m_edges
-    q = Fraction(sum(r.contrib_num for r in rows), 4 * m * m)
-    g = nx.Graph(EDGES)
-    expected = nx.algorithms.community.modularity(
-        g, [{n for n, c in PART.items() if c == v} for v in ("x", "y")]
-    )
-    assert abs(float(q) - expected) < 1e-12
-    by_c = {r.community: r for r in rows}
-    # community x: 3 internal edges; degrees a=2 b=2 c=3
-    assert by_c["x"].e_in == 3 and by_c["x"].deg_sum == 7 and by_c["x"].n_nodes == 3
-
-
-def test_modularity_score_micro(spark, graph):
-    edges, comm = graph
-    row = modularity_score(edges, comm).collect()[0]
-    rows = modularity_profile(edges, comm).collect()
-    m = row.m_edges
-    q = Fraction(sum(r.contrib_num for r in rows), 4 * m * m)
-    assert row.q_micro == (MOD_SCALE * q.numerator) // q.denominator
-    assert row.n_communities == 2
-
-
-def _ppr_local(edges, seeds, iterations):
-    """Pure-Python replay of ppr_int's integer recurrence."""
-    sym = edges + [(t, s) for s, t in edges]
-    nodes = sorted({n for e in sym for n in e})
-    outdeg = {}
-    for u, _ in sym:
-        outdeg[u] = outdeg.get(u, 0) + 1
-    s = len(seeds)
-    base = (PR_SCALE * (PR_DAMP_DEN - PR_DAMP_NUM)) // (PR_DAMP_DEN * s)
-    rank = {n: (PR_SCALE // s if n in seeds else 0) for n in nodes}
-    for _ in range(iterations):
-        inflow = {n: 0 for n in nodes}
-        for u, v in sym:
-            inflow[v] += (rank[u] * PR_DAMP_NUM) // (PR_DAMP_DEN * outdeg[u])
-        rank = {n: (base if n in seeds else 0) + inflow[n] for n in nodes}
-    return rank
-
-
-def test_ppr_matches_local_replay(spark, graph):
-    edges, _ = graph
-    seeds = spark.createDataFrame([("a",)], "title string")
-    got = {r.title: r.rank_scaled for r in ppr_int(edges, seeds, iterations=4).collect()}
-    assert got == _ppr_local(EDGES, {"a"}, 4)
-
-
-def test_ppr_seed_bias(spark, graph):
-    edges, _ = graph
-    seeds = spark.createDataFrame([("a",)], "title string")
-    got = {r.title: r.rank_scaled for r in ppr_int(edges, seeds, iterations=8).collect()}
-    # mass concentrates near the seed: a outranks the far side of the chain
-    assert got["a"] > got["f"] and got["a"] > got["e"]
-
-
-def test_ppr_requires_seed_overlap(spark, graph):
-    edges, _ = graph
-    seeds = spark.createDataFrame([("zz",)], "title string")
-    with pytest.raises(ValueError):
-        ppr_int(edges, seeds, iterations=1)
-
 
 def test_scc_exact_on_layered_cycles(spark):
     """Three SCCs chained by DAG bridges with labels arranged so each
@@ -225,39 +128,6 @@ def test_luby_mis_properties(spark):
     ch = {r.node: r.status for r in luby_mis(chain_nodes, chain_edges, rounds=4).collect()}
     assert sum(s == "in_mis" for s in ch.values()) == 2
     assert ch[1] == "dominated" or (ch[0] == "dominated" and ch[2] == "dominated")
-
-
-def test_community_conductance_exact(spark):
-    """Two triangles joined by one bridge, partitioned by triangle: each
-    side has vol = 7 (three degree-2 members, bridge endpoint +1),
-    cut = 1, 2m = 14 → φ = 1·10^6 // min(7, 7) = 142857."""
-    from knowledge_graph_spark.operators.graphops import community_conductance
-
-    edges = spark.createDataFrame(
-        [
-            ("a1", "a2"), ("a2", "a3"), ("a3", "a1"),
-            ("b1", "b2"), ("b2", "b3"), ("b3", "b1"),
-            ("a1", "b1"),
-        ],
-        "source string, target string",
-    )
-    comm = spark.createDataFrame(
-        [(n, "A") for n in ("a1", "a2", "a3")]
-        + [(n, "B") for n in ("b1", "b2", "b3")],
-        "title string, community string",
-    )
-    got = {
-        r.community: (r.cut_edges, r.vol, r.conductance_micro)
-        for r in community_conductance(edges, comm).collect()
-    }
-    assert got == {"A": (1, 7, 142857), "B": (1, 7, 142857)}
-    # whole graph in one community: min side 0 → φ = 0 by convention
-    one = spark.createDataFrame(
-        [(n, "ALL") for n in ("a1", "a2", "a3", "b1", "b2", "b3")],
-        "title string, community string",
-    )
-    row = community_conductance(edges, one).collect()[0]
-    assert (row.cut_edges, row.conductance_micro) == (0, 0)
 
 
 def test_k_truss_matches_networkx(spark):
@@ -469,35 +339,6 @@ def test_betweenness_truncation_monotone(spark):
     for n in by_rounds[2]:
         assert by_rounds[2][n] <= by_rounds[4][n] <= by_rounds[6][n]
     assert by_rounds[6]["n3"] == max(by_rounds[6].values())
-
-
-def test_metapath_counts_hand_graph(spark):
-    """Typed 2-hop census on a hand-countable graph: star P-E with two
-    person leaves and one org leaf, plus a geo pendant on the org."""
-    from knowledge_graph_spark.operators.graphops import metapath_counts
-
-    nodes = spark.createDataFrame(
-        [("p1", "PERSON"), ("p2", "PERSON"), ("e", "EVENT"),
-         ("o", "ORG"), ("g", "GEO")],
-        "title string, type string",
-    )
-    edges = spark.createDataFrame(
-        [("p1", "e"), ("p2", "e"), ("e", "o"), ("o", "g")],
-        "source string, target string",
-    )
-    got = {
-        (r.type_a, r.type_b, r.type_c): r.n_paths
-        for r in metapath_counts(nodes, edges).collect()
-    }
-    # paths through e (a<c on titles): p1-e-p2, o-e-p1, o-e-p2;
-    # through o: e-o-g
-    assert got == {
-        ("PERSON", "EVENT", "PERSON"): 1,
-        ("ORG", "EVENT", "PERSON"): 2,
-        ("EVENT", "ORG", "GEO"): 1,
-    }
-    # every undirected 2-hop path counted exactly once
-    assert sum(got.values()) == 4
 
 
 def _rank_map(df):
@@ -712,55 +553,3 @@ def test_pagerank_early_exit_sees_null_titled_nodes(spark):
             key=key,
         )
         assert fixed == adaptive, iters
-
-
-def test_scc_bucket_layout_output_identical(spark):
-    """edge_layout="bucket" (VERDICT r4 #2) changes only the physical
-    plan: on a random digraph the resolved partition, ids, and rounds
-    are byte-identical to the default layout, and the bucketed scratch
-    tables are dropped afterwards."""
-    import random
-
-    from knowledge_graph_spark.operators.graphops import scc_fixed_rounds
-
-    random.seed(11)
-    rows = [(f"n{random.randrange(40)}", f"n{random.randrange(40)}") for _ in range(160)]
-    df = spark.createDataFrame(rows, "source string, target string")
-    a = sorted(map(tuple, scc_fixed_rounds(df).collect()))
-    b = sorted(map(tuple, scc_fixed_rounds(df, edge_layout="bucket").collect()))
-    assert a == b
-    assert not [
-        t.name for t in spark.catalog.listTables() if t.name.startswith("__scc_bucket")
-    ]
-
-
-def test_scc_bucket_scratch_tables_are_unique_per_application(spark, monkeypatch):
-    """The bucket layout's scratch tables live in the shared catalog:
-    their names carry the application id, so two processes on one
-    metastore never write each other's table, and their bucket count is
-    the session's shuffle width."""
-    import re
-
-    from pyspark.sql.readwriter import DataFrameWriter
-
-    from knowledge_graph_spark.operators.graphops import scc_fixed_rounds
-    from knowledge_graph_spark.partitioning import shuffle_width
-
-    buckets, names = [], []
-    save, bucket = DataFrameWriter.saveAsTable, DataFrameWriter.bucketBy
-
-    def bucket_by(self, n, *cols):
-        buckets.append(n)
-        return bucket(self, n, *cols)
-
-    def save_as_table(self, name, *args, **kwargs):
-        names.append(name)
-        return save(self, name, *args, **kwargs)
-
-    monkeypatch.setattr(DataFrameWriter, "bucketBy", bucket_by)
-    monkeypatch.setattr(DataFrameWriter, "saveAsTable", save_as_table)
-    df = spark.createDataFrame([("a", "b"), ("b", "a"), ("b", "c")], "source string, target string")
-    scc_fixed_rounds(df, edge_layout="bucket").collect()
-    app = re.sub(r"\W", "_", spark.sparkContext.applicationId)
-    assert names and set(buckets) == {shuffle_width(spark)}
-    assert all(name.startswith(f"__scc_bucket_{app}_") for name in names)

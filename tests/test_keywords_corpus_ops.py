@@ -1,11 +1,10 @@
-"""BM25 top-terms, co-occurrence lift, vocab build, snapshot diff."""
+"""BM25 top-terms, vocab build, snapshot diff."""
 
 import math
 
 import pytest
 
 from knowledge_graph_spark.operators.corpus import build_vocab, snapshot_diff
-from knowledge_graph_spark.operators.graphops import cooccurrence_edges
 from knowledge_graph_spark.operators.keywords import (
     BM25_B,
     BM25_K1,
@@ -58,25 +57,6 @@ def test_bm25_matches_hand_computation(spark, docs):
         assert [r["rk"] for r in rows] == list(range(1, len(rows) + 1))
         keys = [(-r["score_micro"], r["term"]) for r in rows]
         assert keys == sorted(keys)
-
-
-def test_cooccurrence_lift(spark):
-    rows = [
-        ("u1", "A"), ("u1", "B"), ("u1", "C"),
-        ("u2", "A"), ("u2", "B"),
-        ("u3", "A"), ("u3", "C"),
-        ("u3", "A"),  # duplicate mention inside a unit: counted once
-        ("u4", "D"),
-    ]
-    m = spark.createDataFrame(rows, "text_unit_id: string, mention: string")
-    out = {(r["source"], r["target"]): r for r in cooccurrence_edges(m).collect()}
-    # pairs with count >= 2: (A,B) in u1,u2; (A,C) in u1,u3
-    assert set(out) == {("A", "B"), ("A", "C")}
-    ab = out[("A", "B")]
-    assert (ab["pair_count"], ab["count_a"], ab["count_b"]) == (2, 3, 2)
-    # lift = n_units * c_ab / (c_a * c_b) = 4*2/(3*2)
-    assert ab["lift_micro"] == math.floor(1_000_000.0 * (2 * 4) / (3 * 2))
-    assert out[("A", "C")]["lift_micro"] == math.floor(1_000_000.0 * (2 * 4) / (3 * 2))
 
 
 def test_build_vocab_ids_are_frequency_ranked(spark, docs):

@@ -308,22 +308,6 @@ def test_bm25_broadcasts_scalars_no_python(spark, docs):
     assert "PythonUDF" not in p and "ArrowEval" not in p
 
 
-def test_cooccurrence_no_python_no_single_partition_pairs(spark):
-    """Pair generation is a unit-keyed self equi-join; marginal and
-    n_units joins must not funnel the pair table through one task."""
-    from knowledge_graph_spark.operators.graphops import cooccurrence_edges
-
-    m = spark.createDataFrame(
-        [(f"u{i % 7}", f"E{i % 5}") for i in range(50)],
-        "text_unit_id: string, mention: string",
-    )
-    p = plan(cooccurrence_edges(m))
-    assert "PythonUDF" not in p
-    # the only tolerated single-partition subtree is the 1-row n_units agg
-    singles = [ln for ln in p.splitlines() if "SinglePartition" in ln]
-    assert len(singles) <= 1
-
-
 def test_stratum_cap_uses_window_group_limit(spark):
     """The rank-limit pushdown must pre-prune each map partition to its
     local top-k per stratum BEFORE the shuffle (WindowGroupLimit node) —
@@ -365,20 +349,6 @@ def test_agent_trace_no_python_no_global_window(spark):
         p = plan(q)
         assert "EvalPython" not in p and "InPandas" not in p
         assert "SinglePartition" not in p
-
-
-def test_link_pred_blocks_on_common_neighbor(spark):
-    """Adamic-Adar must never plan a cartesian product — pairs are blocked
-    by the shared-neighbor equi-join, and the existing-edge check is an
-    anti equi-join."""
-    from knowledge_graph_spark.operators.graphops import adamic_adar_pairs
-
-    e = spark.createDataFrame([("a", "b"), ("b", "c")], "source string, target string")
-    p = plan(adamic_adar_pairs(e))
-    assert "Cartesian" not in p and "NestedLoop" not in p.replace(
-        "BroadcastNestedLoop", ""
-    )
-    assert "LeftAnti" in p
 
 
 def test_dsir_broadcasts_bucket_model_and_heaps_topk(spark, docs):

@@ -160,30 +160,3 @@ def test_coarsen_empty_matching_is_canonicalization(spark):
     m = spark.createDataFrame([], "source string, target string")
     got = {(r.a, r.b): (r.w, r.n_multi) for r in coarsen_by_matching(e, m).collect()}
     assert got == {("A", "B"): (3.0, 2), ("C", "C"): (4.0, 1)}
-
-
-def test_partition_audit_star_graph(spark):
-    """On a star, hash-by-source funnels the hub's whole fan-out into
-    ONE part (max_load = d, no replication) while degree-based hashing
-    cuts the hub: load spreads across parts and only the hub replicates.
-    """
-    from knowledge_graph_spark.operators.graphops import edge_partition_audit
-
-    d, parts = 200, 8
-    e = spark.createDataFrame(
-        [("HUB", f"leaf{i:03d}") for i in range(d)], "source string, target string"
-    )
-    got = {r.strategy: r for r in edge_partition_audit(e, n_parts=parts).collect()}
-    assert set(got) == {"src_hash", "edge_hash", "dbh"}
-    # src_hash: every edge lands in part(h(HUB))
-    assert got["src_hash"].max_load == d
-    assert got["src_hash"].imb_micro == parts * 1_000_000
-    assert got["src_hash"].repl_micro == 1_000_000  # no vertex split
-    # dbh cuts the hub: load spreads, only HUB replicates
-    assert got["dbh"].max_load < d
-    assert got["dbh"].imb_micro < parts * 1_000_000
-    # 201 vertices; HUB in <= parts parts -> repl in (1, 1 + parts/201]
-    assert 1_000_000 < got["dbh"].repl_micro <= 1_000_000 * (201 + parts - 1) // 201
-    # random vertex-cut: best load of the three, replication >= dbh's
-    assert got["edge_hash"].max_load <= got["dbh"].max_load
-    assert got["edge_hash"].repl_micro >= got["dbh"].repl_micro

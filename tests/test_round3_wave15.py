@@ -1,6 +1,6 @@
-"""Round-3 wave-15 operators: directed reciprocity, double-sweep diameter
-lower bound, 1-WL color refinement, event-time lateness audit, KG
-hour-over-hour churn, distinct-n diversity, tf-idf cosine near-dup pairs.
+"""Round-3 wave-15 operators: double-sweep diameter lower bound, 1-WL
+color refinement, event-time lateness audit, KG hour-over-hour churn,
+distinct-n diversity, tf-idf cosine near-dup pairs.
 
 WL colors are checked value-for-value against a pure-python mirror of the
 shared polynomial hash (the strongest cross-engine exactness proof short
@@ -17,7 +17,6 @@ from knowledge_graph_spark.operators.corpus import ngram_diversity
 from knowledge_graph_spark.operators.dedup import tfidf_cosine_pairs
 from knowledge_graph_spark.operators.graphops import (
     double_sweep_diameter,
-    reciprocity_profile,
     wl_refinement,
 )
 from knowledge_graph_spark.operators.temporal import kg_churn, lateness_profile
@@ -25,26 +24,6 @@ from knowledge_graph_spark.operators.temporal import kg_churn, lateness_profile
 
 def _edges(spark, rows):
     return spark.createDataFrame(rows, "source string, target string")
-
-
-# --- reciprocity -----------------------------------------------------------
-
-
-def test_reciprocity_counts(spark):
-    d = _edges(spark, [("a", "b"), ("b", "a"), ("a", "c"), ("a", "b")])
-    got = {r["title"]: r for r in reciprocity_profile(d).collect()}
-    assert got["a"].n_out == 2 and got["a"].n_recip == 1
-    assert got["a"].recip_micro == 500_000
-    assert got["b"].n_out == 1 and got["b"].n_recip == 1
-    assert got["b"].recip_micro == 1_000_000
-    # c has no out-edges: absent by definition (out-degree domain)
-    assert "c" not in got
-
-
-def test_reciprocity_self_loops_ignored(spark):
-    d = _edges(spark, [("a", "a"), ("a", "b")])
-    got = {r["title"]: r for r in reciprocity_profile(d).collect()}
-    assert got["a"].n_out == 1 and got["a"].n_recip == 0
 
 
 # --- double sweep ----------------------------------------------------------

@@ -227,159 +227,3 @@ def test_streaming_dedup_two_waves_equals_batch(spark, tmp_path):
     assert got == batch
     # the cross-wave near-dup was found by the index probe, not a rescan
     assert any(3 in p for p in got)
-
-
-@pytest.mark.filterwarnings("ignore")
-def test_conversation_sessions_transform_with_state(spark, tmp_path):
-    """transformWithStateInPandas twin: same two-micro-batch scenario as
-    the applyInPandasWithState test — state carries across batches, the
-    session emits exactly once on the quiet timer, and the fold
-    fingerprint proves arrival-order integrity.  Runs on the RocksDB
-    state store provider the new API requires (restored afterwards)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState's Python runner needs protobuf "
-        "(absent in this sandbox; see stateful_tws.py docstring)",
-    )
-    import time
-
-    from knowledge_graph_spark.streaming.stateful import _fold_fp
-    from knowledge_graph_spark.streaming.stateful_tws import (
-        conversation_sessions_tws,
-    )
-
-    inp = str(tmp_path / "tws_in")
-    b1 = _batch(spark, "c1", ["ALPHA", "BETA"])
-    b1.coalesce(1).write.mode("append").parquet(inp)
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_DDL)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(inp)
-    )
-    time.sleep(1.1)  # distinct mtimes → deterministic file (= fold) order
-    rows = [
-        ("c1", 2, "user", "GAMMA arrived late", "", TS + datetime.timedelta(minutes=2))
-    ]
-    spark.createDataFrame(rows, TRANSCRIPT_DDL).coalesce(1).write.mode(
-        "append"
-    ).parquet(inp)
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    q = None
-    try:
-        q = (
-            conversation_sessions_tws(stream, gap_ms=6000)
-            .writeStream.format("memory")
-            .queryName("sess_tws")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-            .trigger(processingTime="500 milliseconds")
-            .start()
-        )
-        got = []
-        for _ in range(120):  # ≤60s: drain both files, then gap, then emit
-            got = spark.sql("select * from sess_tws").collect()
-            if got:
-                break
-            time.sleep(0.5)
-    finally:
-        if q is not None:
-            q.stop()
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-    assert len(got) == 1
-    r = got[0]
-    assert r.conv_id == "c1" and r.n_turns == 3
-    texts = [t.text for t in b1.orderBy("turn_idx").collect()] + ["GAMMA arrived late"]
-    assert r.text_fp == _fold_fp(0, texts)
-    assert r.first_ts < r.last_ts
-
-
-def test_session_processor_fold_contract(spark):
-    """Drive SessionProcessor directly (no streaming runner, so no
-    protobuf needed): two handleInputRows calls fold into one state, the
-    quiet timer is re-armed each batch (old timer deleted), and
-    handleExpiredTimer emits exactly once then clears state."""
-    import pandas as pd
-
-    from knowledge_graph_spark.streaming.stateful import _fold_fp
-    from knowledge_graph_spark.streaming.stateful_tws import SessionProcessor
-
-    class FakeState:
-        def __init__(self):
-            self.v = None
-
-        def exists(self):
-            return self.v is not None
-
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-        def clear(self):
-            self.v = None
-
-    class FakeHandle:
-        def __init__(self):
-            self.state = FakeState()
-            self.timers = []
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.state
-
-        def listTimers(self):
-            return list(self.timers)
-
-        def deleteTimer(self, t):
-            self.timers.remove(t)
-
-        def registerTimer(self, t):
-            self.timers.append(t)
-
-    class FakeTimerValues:
-        def __init__(self, now_ms):
-            self.now = now_ms
-
-        def getCurrentProcessingTimeInMs(self):
-            return self.now
-
-    def batch(texts, start_idx, start_min):
-        return pd.DataFrame(
-            {
-                "turn_idx": range(start_idx, start_idx + len(texts)),
-                "text": texts,
-                "ts": [
-                    pd.Timestamp(2024, 1, 1) + pd.Timedelta(minutes=start_min + i)
-                    for i in range(len(texts))
-                ],
-            }
-        )
-
-    p = SessionProcessor(gap_ms=6000)
-    h = FakeHandle()
-    p.init(h)
-    out1 = list(p.handleInputRows(("c1",), iter([batch(["ALPHA", "BETA"], 0, 0)]),
-                                  FakeTimerValues(1000)))
-    assert out1 == [] and h.timers == [7000]
-    out2 = list(p.handleInputRows(("c1",), iter([batch(["GAMMA"], 2, 2)]),
-                                  FakeTimerValues(2000)))
-    # re-armed: the stale 7000 timer was deleted, only 8000 remains
-    assert out2 == [] and h.timers == [8000]
-    n, first_us, last_us, fp = h.state.get()
-    assert n == 3 and first_us < last_us
-    assert fp == _fold_fp(0, ["ALPHA", "BETA", "GAMMA"])
-    emitted = list(p.handleExpiredTimer(("c1",), FakeTimerValues(9000), None))
-    assert len(emitted) == 1 and emitted[0]["n_turns"].iloc[0] == 3
-    assert emitted[0]["text_fp"].iloc[0] == fp
-    assert not h.state.exists()
-    # a second expiry is a no-op (exactly-once emission)
-    assert list(p.handleExpiredTimer(("c1",), FakeTimerValues(9999), None)) == []

@@ -245,15 +245,7 @@ def main() -> None:
             ).count(),
         )
     if "scc" in OPS:
-        # GRAPH_SCC_LAYOUT=bucket A/Bs the bucketed edge layout
-        # (VERDICT r4 #2) against the default in-memory layout
-        layout = os.environ.get("GRAPH_SCC_LAYOUT") or None
-        timed(
-            f"scc{'_' + layout if layout else ''}",
-            lambda rl: scc_fixed_rounds(
-                edges, round_log=rl, edge_layout=layout
-            ).count(),
-        )
+        timed("scc", lambda rl: scc_fixed_rounds(edges, round_log=rl).count())
     if "bw" in OPS:
         from knowledge_graph_spark.operators.graphops import betweenness_sampled
 

@@ -53,7 +53,6 @@ AUDIT = [
     ("length_hist", "mergeable log2 length histogram"),
     ("tool_transitions", "agent-trace Markov transitions (conv-keyed window)"),
     ("widest_paths", "fixed-round bottleneck-path Pregel joins"),
-    ("link_pred", "Adamic-Adar wedge join + anti-join"),
     ("bpe_pairs", "BPE pair counts, TakeOrderedAndProject top-k"),
     ("emb_pq_topk", "PQ-ADC: codebook train + broadcast lookup join"),
     ("emb_ivfpq_topk", "IVF-PQ: cell prune + ADC rank"),
@@ -67,13 +66,11 @@ AUDIT = [
     ("conv_context", "recency-biased token-budget prefix (two conv windows)"),
     ("pagerank_w", "weighted PageRank rounds (weight-share contributions)"),
     ("global_search", "map score + distributed two-phase budget prefix sum"),
-    ("conductance", "community boundary audit (broadcast map joins)"),
     ("neighbor_sample", "fixed-fanout sampling (WindowGroupLimit per node)"),
     ("winnow_fp", "winnowing sketch (row-local array algebra, no shuffle)"),
     ("winnow_dedup", "winnow-sketch candidate join (df-pruned postings)"),
     ("katz", "fixed-round integer Katz centrality joins"),
     ("betweenness", "sampled Brandes: frontier joins + level-filtered backward joins"),
-    ("metapaths", "typed wedge census (middle-node self-join + type map joins)"),
     ("kg_asof", "midpoint-filtered full pipeline rebuild (broadcast 1-row cutoff)"),
     ("kg_growth", "first-seen hour rollup over the edge lineage join"),
     ("type_mixing", "two type-map joins + pair-canonical groupBy"),
@@ -88,9 +85,7 @@ AUDIT = [
     ("kg_retract", "conv anti-join on persisted records + re-merge (no re-extract)"),
     ("coarsen_l2", "two-level matching contraction (map joins + provenance sums)"),
     ("langid", "trigram profile train (WindowGroupLimit) + broadcast apply"),
-    ("partition_audit", "edge-partition strategies (src-hash/vertex-cut/DBH) scored in one pass"),
     ("msf", "Borůvka rounds: comp-label joins + top-1 window + star pointer doubling"),
-    ("single_linkage", "forest top-k cut (TakeOrderedAndProject) + CC labeling"),
     ("densest", "peel rounds: combinable degree agg + scalar-bound anti-joins"),
     ("knn_graph", "per-node top-k edges (WindowGroupLimit) + kept_by groupBy"),
     ("lp_ranking", "corruption candidates + blocked common-neighbor scoring + rank groupBy"),
