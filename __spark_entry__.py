@@ -48,7 +48,6 @@ from knowledge_graph_spark.functions.hashing import (
 )
 from knowledge_graph_spark.operators import claims as claims_ops
 from knowledge_graph_spark.operators.corpus import (
-    LM_BACKOFF_BITS,
     SALT_CAP,
     SALT_SPLIT,
     salt_ab,
@@ -688,8 +687,6 @@ NEARDUP_TAU = 0.35  # driver embeddings are near-orthogonal; P99.9 cosine ≈ 0.
 TOPK_K = 5
 TOPK_QUERY_LIMIT = 50
 IVF_BITS = 8
-IVF_NPROBE = 3
-QUANT_OVERSAMPLE = 4
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -881,15 +878,6 @@ def q_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document repeated-substring (boilerplate) detection via
     strided fingerprinted token windows."""
     return dedup.repeated_span_profile(
-        _docs(spark, sf_dir), window=SPAN_WINDOW, stride=SPAN_STRIDE
-    )
-
-
-def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Substring-dedup ACTION (Lee et al. 2022): strip every token
-    covered by a cross-document repeated span; emits the cleaned
-    normalized text plus kept/total token counts."""
-    return dedup.strip_repeated_spans(
         _docs(spark, sf_dir), window=SPAN_WINDOW, stride=SPAN_STRIDE
     )
 
@@ -1089,24 +1077,6 @@ def q_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_top_terms(_docs(spark, sf_dir), k_top=TT_K)
 
 
-BM25_QUERIES = [
-    (1, ["merge", "join", "spark"]),
-    (2, ["stream", "window", "batch"]),
-    (3, ["dup", "slow"]),
-]
-BM25_SEARCH_K = 10
-
-
-def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 ranked retrieval over the document corpus for a fixed query
-    set (odds-ratio IDF — exact integer ratio in one double chain)."""
-    from knowledge_graph_spark.operators.keywords import bm25_search
-
-    terms = [(qid, t) for qid, ts in BM25_QUERIES for t in ts]
-    q = spark.createDataFrame(terms, "query_id int, term string")
-    return bm25_search(_docs(spark, sf_dir), q, k_top=BM25_SEARCH_K)
-
-
 def q_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequency-ranked vocabulary with two-phase dense token ids."""
     from knowledge_graph_spark.operators.corpus import build_vocab
@@ -1262,8 +1232,8 @@ def q_kg_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edge-level diff between the as-of-midpoint KG snapshot and the
     current graph (temporal.kg_version_diff): which relationships
     appeared, vanished, or changed weight as the second half of the
-    corpus arrived — the row-level CDC/version audit under kg_churn's
-    hourly Jaccard summary.  One full-outer join on the edge key."""
+    corpus arrived — the row-level CDC/version audit.  One full-outer
+    join on the edge key."""
     from knowledge_graph_spark.operators.temporal import kg_version_diff
 
     t = transcripts_from_events(spark, sf_dir)
@@ -1441,41 +1411,6 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn_graph(e, k=KNN_K)
 
 
-LANGID_TOP = 64
-LANGID_HOLDOUT_MOD = 5
-
-
-def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trained Cavnar-Trenkle character-trigram language ID: profiles
-    from the 4/5 training split (doc_id % 5 != 0), rank-weighted-overlap
-    classification of the held-out 1/5 — prediction, score, and a
-    ``correct`` bit per held-out document (the supervised twin of the
-    stopword ``lang_id`` heuristic used by text_profile)."""
-    from knowledge_graph_spark.operators.langid import (
-        langid_predict,
-        train_language_profiles,
-    )
-
-    d = _docs(spark, sf_dir)
-    train = d.filter(F.pmod(F.col("doc_id"), F.lit(LANGID_HOLDOUT_MOD)) != 0)
-    test = d.filter(F.pmod(F.col("doc_id"), F.lit(LANGID_HOLDOUT_MOD)) == 0)
-    return langid_predict(test, train_language_profiles(train, top_p=LANGID_TOP))
-
-
-def q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Confusion matrix of the trained language-ID on the held-out
-    split: gold lang × predicted lang counts — the per-class error
-    profile behind q_langid's ``correct`` bit, read before trusting
-    langid-based curation filters (synthetic text is independent of the
-    lang label, so off-diagonal mass here is EXPECTED — the matrix is
-    the evidence).  One tiny-key groupBy over the held-out fifth."""
-    return (
-        q_langid(spark, sf_dir)
-        .groupBy("lang", "pred_lang")
-        .agg(F.count("*").cast("bigint").alias("n_docs"))
-    )
-
-
 BLOCK_TAU = 0.5
 
 
@@ -1549,18 +1484,6 @@ def q_pagerank_w(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pagerank_int(e, iterations=PR_ITER, weight="weight")
 
 
-NJ_TAU = 0.5
-
-
-def q_node_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structural node similarity: neighbor-set Jaccard ≥ NJ_TAU."""
-    from knowledge_graph_spark.operators.graphops import neighbor_jaccard_pairs
-
-    return neighbor_jaccard_pairs(
-        _stages(spark, sf_dir)["edges"].select("source", "target"), threshold=NJ_TAU
-    )
-
-
 def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.exact_duplicates(_docs(spark, sf_dir)).select(
         "content_hash", "canonical_id", "dup_count"
@@ -1627,111 +1550,6 @@ def q_emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN index QA: per-query recall@k of the IVF index against the
-    exact scan — the audit run before trusting an index at scale."""
-    return similarity.topk_recall(
-        q_emb_topk(spark, sf_dir), q_emb_ivf_topk(spark, sf_dir)
-    )
-
-
-def q_ann_recall_mp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same recall audit over the multi-probe IVF variant — quantifies
-    how much the extra probes buy (vs q_ann_recall's single probe)."""
-    return similarity.topk_recall(
-        q_emb_topk(spark, sf_dir), q_emb_ivf_mp(spark, sf_dir)
-    )
-
-
-def q_ann_recall_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall audit of the int8 two-pass ANN — measures what the 4×
-    oversampled integer candidate pass loses against the exact scan."""
-    return similarity.topk_recall(
-        q_emb_topk(spark, sf_dir), q_emb_quant_topk(spark, sf_dir)
-    )
-
-
-EMB_DIM = 64
-PQ_M = 4
-PQ_K = 8
-PQ_ITERS = 2
-
-
-def q_emb_l2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact squared-L2 top-k on the integer grid — the ground-truth
-    baseline for the PQ recall audit (broadcast query batch, one scan)."""
-    from knowledge_graph_spark.operators.pq import l2_topk
-
-    embs = _embs(spark, sf_dir)
-    return l2_topk(embs, embs.filter(F.col("vec_id") < TOPK_QUERY_LIMIT), k_top=TOPK_K)
-
-
-def q_emb_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN: per-subspace integer Lloyd codebooks,
-    m-code encoding, asymmetric-distance top-k (unrolled m×kmeans
-    oracle) — the billion-vector memory-budget index design."""
-    from knowledge_graph_spark.operators.pq import pq_topk
-
-    embs = _embs(spark, sf_dir)
-    return pq_topk(
-        embs,
-        embs.filter(F.col("vec_id") < TOPK_QUERY_LIMIT),
-        dim=EMB_DIM,
-        m=PQ_M,
-        k_codes=PQ_K,
-        iterations=PQ_ITERS,
-        k_top=TOPK_K,
-    )
-
-
-def q_ann_recall_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@k of PQ-ADC against the exact-L2 scan — same metric, same
-    grid, so the audit isolates pure codebook loss."""
-    return similarity.topk_recall(
-        q_emb_l2_topk(spark, sf_dir), q_emb_pq_topk(spark, sf_dir)
-    )
-
-
-def q_emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ: coarse-cell candidate pruning + PQ-ADC ranking — the
-    FAISS-IndexIVFPQ composition, built from the two gated primitives."""
-    from knowledge_graph_spark.operators.pq import ivfpq_topk
-
-    embs = _embs(spark, sf_dir)
-    return ivfpq_topk(
-        embs,
-        embs.filter(F.col("vec_id") < TOPK_QUERY_LIMIT),
-        dim=EMB_DIM,
-        m=PQ_M,
-        k_codes=PQ_K,
-        iterations=PQ_ITERS,
-        bits=IVF_BITS,
-        k_top=TOPK_K,
-    )
-
-
-def q_emb_ivf_mp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe IVF: each query probes its home cell plus the cells
-    one least-confident sign-bit flip away (deterministic perturbation
-    order → SQL-enumerable probe set)."""
-    embs = _embs(spark, sf_dir)
-    queries_df = embs.filter(F.col("vec_id") < TOPK_QUERY_LIMIT)
-    return similarity.ivf_topk_multiprobe(
-        embs, queries_df, k=TOPK_K, bits=IVF_BITS, nprobe=IVF_NPROBE
-    ).select("query_id", "neighbor_id", "cell", "sim_micro", "rk")
-
-
-def q_emb_quant_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-pass quantized ANN: int8 dot candidate pass (4× oversample) +
-    exact rerank.  The int pass is integer-only, so candidate sets are
-    bit-identical across engines; rerank reuses the exact fold."""
-    embs = _embs(spark, sf_dir)
-    queries_df = embs.filter(F.col("vec_id") < TOPK_QUERY_LIMIT)
-    return similarity.quantized_topk(
-        embs, queries_df, k=TOPK_K, oversample=QUANT_OVERSAMPLE
-    ).select("query_id", "neighbor_id", "sim_micro", "rk")
-
-
 def q_emb_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.cosine_neardup_pairs(_embs(spark, sf_dir), threshold=NEARDUP_TAU).select(
         "id_a", "id_b", "sim_micro"
@@ -1742,21 +1560,8 @@ def q_emb_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.lsh_neardup_pairs(_embs(spark, sf_dir), threshold=NEARDUP_TAU)
 
 
-FUZZY_MAX_DIST = 1
 SPLIT_VAL_FRAC = 0.05
 SPLIT_TEST_FRAC = 0.05
-
-
-def q_fuzzy_aliases(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Typo-class alias candidates over the distinct mention vocabulary:
-    SymSpell deletion-neighborhood blocking (exact at distance 1) + native
-    levenshtein verify — the recall stage of fuzzy entity linking."""
-    from knowledge_graph_spark.operators.linking import fuzzy_alias_pairs
-
-    # node titles ARE the distinct mention surface forms (nodes groupBy
-    # name) — reuse the cached stage instead of re-running the extract UDF
-    m = _stages(spark, sf_dir)["nodes"].select(F.col("title").alias("name"))
-    return fuzzy_alias_pairs(m, name_col="name", max_dist=FUZZY_MAX_DIST)
 
 
 TRUSS_K = 3
@@ -1901,24 +1706,6 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bfs_hops(s["edges"].select("source", "target"), seed, hops=BFS_HOPS)
 
 
-LINK_WEIGHTS = (4, 3, 3)
-
-
-def q_link_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite entity-link scoring: shingle-Jaccard + edit-similarity +
-    structural neighbor-Jaccard fused per candidate pair (integer micro
-    arithmetic; union of three equi-join-blocked candidate sets)."""
-    from knowledge_graph_spark.operators.linking import link_scores
-
-    s = _stages(spark, sf_dir)
-    return link_scores(
-        s["nodes"],
-        s["edges"].select("source", "target"),
-        max_dist=FUZZY_MAX_DIST,
-        weights=LINK_WEIGHTS,
-    )
-
-
 def q_edge_times(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporal edge lineage: first/last conversation timestamp asserting
     each extracted edge (AS-OF subgraphs and staleness audits)."""
@@ -1944,20 +1731,6 @@ def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = multimodal.attach_payload(_docs(spark, sf_dir))
     return multimodal.frame_sample_plan(multimodal.extract_media_meta(media))
-
-
-def q_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aspect-preserving resize planning (integer DIV scaling) — gates
-    the expensive pixel work behind needs_resize."""
-    media = multimodal.attach_payload(_docs(spark, sf_dir))
-    return multimodal.resize_plan(multimodal.extract_media_meta(media))
-
-
-def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-batched feature-extraction seam (mapInPandas, long-form
-    16-dim vectors; deterministic stand-in content)."""
-    media = multimodal.attach_payload(_docs(spark, sf_dir))
-    return multimodal.extract_features(media)
 
 
 def q_events_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2007,53 +1780,6 @@ def q_sessions_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_rollup(spark.table("events"), "30 minutes").select(
         "user_id", "start_us", "end_us", "n_events", "total_value"
     )
-
-
-ATTR_WINDOW_DAYS = 7
-
-
-def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Purchase→signup attribution: the SAME join plan the watermarked
-    stream-stream job runs (streaming/join_stream.py), executed batch
-    over the events table — signups within 7 days before each purchase."""
-    from knowledge_graph_spark.streaming.join_stream import attribution_join
-
-    load_views(spark, sf_dir)
-    ev = spark.table("events")
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    s = ev.filter(F.col("event_type") == "signup").select(
-        F.col("event_id").alias("signup_id"), "user_id", "ts"
-    )
-    return attribution_join(p, s, window_days=ATTR_WINDOW_DAYS)
-
-
-def q_session_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval overlap join over gap sessions: per session, how many
-    OTHER users' sessions overlap it in time (bucket-explode equi-join
-    Spark-side vs DuckDB's native IEJoin range join in the oracle)."""
-    from knowledge_graph_spark.operators.sessions import session_stats
-    from knowledge_graph_spark.operators.temporal import interval_overlaps
-
-    load_views(spark, sf_dir)
-    s = session_stats(spark.table("events")).select(
-        "user_id", "session_id", "start_us", "end_us"
-    )
-    return interval_overlaps(s)
-
-
-EA_SIGMA = 3
-
-
-def q_event_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingest-volume spike detection: integer 3-sigma test over the
-    hourly per-type counts ((n·x − Σx)² > 9·(n·Σx² − (Σx)²) — no sqrt,
-    no float variance, exact both engines)."""
-    from knowledge_graph_spark.operators.temporal import hourly_anomalies
-
-    load_views(spark, sf_dir)
-    return hourly_anomalies(spark.table("events"), sigma=EA_SIGMA)
 
 
 def q_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2540,77 +2266,6 @@ SELECT query_id, neighbor_id, cell, sim_micro,
 FROM scored QUALIFY rk <= {TOPK_K}
 """
 
-# Multi-probe IVF: probes = home cell + flips of the (nprobe-1) smallest
-# |e[i]| dims among the first IVF_BITS (ties by dim index) — mirrors
-# similarity.ivf_probe_cells bit for bit (abs order on the raw doubles is
-# norm-invariant, so raw-vs-unit vector choice cannot diverge).
-_EMB_IVF_MP_SQL = f"""
-WITH {_UNIT_CTE},
-cells AS (SELECT vec_id, CAST({_IVF_CELL} AS BIGINT) AS cell FROM emb),
-flips AS (
-  SELECT vec_id, CAST(i AS INT) AS i,
-         row_number() OVER (PARTITION BY vec_id
-                            ORDER BY abs(e[CAST(i AS INT) + 1]), i) AS flip_rk
-  FROM emb, LATERAL unnest(range(0, {IVF_BITS})) AS d(i)
-  WHERE vec_id < {TOPK_QUERY_LIMIT}
-),
-qprobes AS (
-  SELECT vec_id, cell AS probe FROM cells WHERE vec_id < {TOPK_QUERY_LIMIT}
-  UNION ALL
-  SELECT f.vec_id, xor(c.cell, CAST(1 << f.i AS BIGINT)) AS probe
-  FROM flips f JOIN cells c USING (vec_id)
-  WHERE f.flip_rk <= {IVF_NPROBE - 1}
-),
-celled AS (SELECT u.vec_id, u.e, c.cell FROM uemb u JOIN cells c USING (vec_id)),
-qpe AS (SELECT p.vec_id, p.probe, u.e FROM qprobes p JOIN uemb u USING (vec_id)),
-scored AS (
-  SELECT b.vec_id AS query_id, a.vec_id AS neighbor_id, a.cell AS cell,
-         {_COS_MICRO} AS sim_micro
-  FROM celled a JOIN qpe b ON a.cell = b.probe AND a.vec_id <> b.vec_id
-)
-SELECT query_id, neighbor_id, cell, sim_micro,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY sim_micro DESC, neighbor_id) AS INT) AS rk
-FROM scored QUALIFY rk <= {TOPK_K}
-"""
-
-# int8 quantize → int-dot candidates → exact rerank.  The quantize and
-# candidate stages are integer-exact on both engines; the rerank reuses
-# the sequential-fold cosine, so sim_micro hash-matches.
-_MAXABS = (
-    "greatest(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-    "list_transform(e, x -> abs(x))), (x, y) -> greatest(x, y)), 1e-12)"
-)
-_INT_DOT = (
-    "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    "list_transform(range(1, len(a.q) + 1), i -> a.q[CAST(i AS INT)] * b.q[CAST(i AS INT)])), "
-    "(x, y) -> x + y)"
-)
-_EMB_QUANT_SQL = f"""
-WITH {_UNIT_CTE},
-qv AS (
-  SELECT vec_id,
-         list_transform(e, x -> CAST(floor(x * {similarity.QUANT_LEVELS} / s) AS BIGINT)) AS q
-  FROM (SELECT vec_id, e, {_MAXABS} AS s FROM emb)
-),
-cand AS (
-  SELECT b.vec_id AS query_id, a.vec_id AS neighbor_id,
-         row_number() OVER (PARTITION BY b.vec_id
-                            ORDER BY {_INT_DOT} DESC, a.vec_id) AS crk
-  FROM qv a JOIN qv b ON b.vec_id < {TOPK_QUERY_LIMIT} AND a.vec_id <> b.vec_id
-  QUALIFY crk <= {TOPK_K * QUANT_OVERSAMPLE}
-),
-rer AS (
-  SELECT c.query_id, c.neighbor_id, {_COS_MICRO} AS sim_micro
-  FROM cand c
-  JOIN uemb a ON a.vec_id = c.neighbor_id
-  JOIN uemb b ON b.vec_id = c.query_id
-)
-SELECT query_id, neighbor_id, sim_micro,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY sim_micro DESC, neighbor_id) AS INT) AS rk
-FROM rer QUALIFY rk <= {TOPK_K}
-"""
 
 _EMB_NEARDUP_SQL = f"""
 WITH {_UNIT_CTE},
@@ -2741,24 +2396,6 @@ LEFT JOIN kt_s{rounds} s ON e.a = s.x AND e.b = s.y"""
     return sql
 
 
-# Fuzzy alias oracle: same deletion-neighborhood expansion via
-# list_transform/range, same levenshtein verify (both engines implement
-# the standard case-sensitive Levenshtein distance).
-_FUZZY_ALIASES_BODY = f"""
-, fz_names AS MATERIALIZED (SELECT title AS nm FROM kg_nodes),
-fz_vars AS MATERIALIZED (
-  SELECT DISTINCT nm, var FROM (
-    SELECT nm, unnest(list_prepend(nm,
-      list_transform(range(1, length(nm) + 1),
-        i -> substr(nm, 1, CAST(i AS INT) - 1)
-             || substr(nm, CAST(i AS INT) + 1, length(nm))))) AS var
-    FROM fz_names))
-SELECT DISTINCT x.nm AS name_a, y.nm AS name_b,
-       CAST(levenshtein(x.nm, y.nm) AS INT) AS dist
-FROM fz_vars x JOIN fz_vars y ON x.var = y.var AND x.nm < y.nm
-WHERE levenshtein(x.nm, y.nm) <= {FUZZY_MAX_DIST}
-"""
-
 # BFS oracle: unrolled min-hop rounds from the top-degree seed (prelude
 # provides kg_edges/degrees); AS MATERIALIZED — each d{r} is referenced
 # twice per round.
@@ -2796,73 +2433,6 @@ SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
 FROM r GROUP BY lang
 """
 
-# Composite link-score oracle: three candidate CTE families (shingle
-# Jaccard, deletion-blocked edit similarity, neighbor Jaccard) joined on
-# the union of their pair keys — mirrors linking.link_scores.
-_LINK_SCORES_BODY = f"""
-, ls_n AS (SELECT DISTINCT title AS t,
-             regexp_replace(upper(trim(title)), '\\s+', ' ', 'g') AS s
-           FROM kg_nodes),
-ls_g AS MATERIALIZED (
-  SELECT DISTINCT t, CASE WHEN length(s) <= 3 THEN s
-                          ELSE substr(s, CAST(ci AS INT), 3) END AS g
-  FROM (SELECT t, s FROM ls_n WHERE s <> ''),
-       LATERAL unnest(range(1, CASE WHEN length(s) <= 3 THEN 2
-                                    ELSE length(s) - 1 END)) AS u(ci)),
-ls_sz AS (SELECT t, CAST(count(*) AS BIGINT) AS n FROM ls_g GROUP BY t),
-ls_df AS (SELECT g FROM ls_g GROUP BY g HAVING count(*) <= 1000),
-ls_p AS MATERIALIZED (SELECT ls_g.* FROM ls_g JOIN ls_df USING (g)),
-ls_i AS (SELECT a.t AS name_a, b.t AS name_b, CAST(count(*) AS BIGINT) AS inter
-         FROM ls_p a JOIN ls_p b ON a.g = b.g AND a.t < b.t GROUP BY a.t, b.t),
-ls_nm AS MATERIALIZED (
-  SELECT name_a, name_b,
-         CAST(floor(CAST(inter AS DOUBLE) * 1000000
-                    / CAST(za.n + zb.n - inter AS DOUBLE)) AS BIGINT) AS name_micro
-  FROM ls_i JOIN ls_sz za ON ls_i.name_a = za.t JOIN ls_sz zb ON ls_i.name_b = zb.t),
-ls_fv AS MATERIALIZED (
-  SELECT DISTINCT nm, var FROM (
-    SELECT nm, unnest(list_prepend(nm,
-      list_transform(range(1, length(nm) + 1),
-        i -> substr(nm, 1, CAST(i AS INT) - 1)
-             || substr(nm, CAST(i AS INT) + 1, length(nm))))) AS var
-    FROM (SELECT title AS nm FROM kg_nodes))),
-ls_ed AS MATERIALIZED (
-  SELECT DISTINCT x.nm AS name_a, y.nm AS name_b,
-         CAST((({FUZZY_MAX_DIST + 1} - levenshtein(x.nm, y.nm)) * 1000000)
-              // {FUZZY_MAX_DIST + 1} AS BIGINT) AS edit_micro
-  FROM ls_fv x JOIN ls_fv y ON x.var = y.var AND x.nm < y.nm
-  WHERE levenshtein(x.nm, y.nm) <= {FUZZY_MAX_DIST}),
-ls_adj AS MATERIALIZED (
-  SELECT DISTINCT a, b FROM (
-    SELECT source AS a, target AS b FROM kg_edges
-    UNION ALL SELECT target AS a, source AS b FROM kg_edges)),
-ls_deg AS (SELECT a, CAST(count(*) AS BIGINT) AS deg FROM ls_adj GROUP BY a),
-ls_si AS (SELECT x.a AS name_a, y.a AS name_b, CAST(count(*) AS BIGINT) AS inter
-          FROM ls_adj x JOIN ls_adj y ON x.b = y.b AND x.a < y.a GROUP BY x.a, y.a),
-ls_st AS MATERIALIZED (
-  SELECT i.name_a, i.name_b,
-         CAST(floor(CAST(i.inter AS DOUBLE) * 1000000
-                    / CAST(sa.deg + sb.deg - i.inter AS DOUBLE)) AS BIGINT)
-           AS struct_micro
-  FROM ls_si i JOIN ls_deg sa ON sa.a = i.name_a JOIN ls_deg sb ON sb.a = i.name_b),
-ls_keys AS (
-  SELECT DISTINCT name_a, name_b FROM (
-    SELECT name_a, name_b FROM ls_nm
-    UNION ALL SELECT name_a, name_b FROM ls_ed
-    UNION ALL SELECT name_a, name_b FROM ls_st))
-SELECT k.name_a, k.name_b,
-  coalesce(nm.name_micro, 0) AS name_micro,
-  coalesce(ed.edit_micro, 0) AS edit_micro,
-  coalesce(st.struct_micro, 0) AS struct_micro,
-  ({LINK_WEIGHTS[0]} * coalesce(nm.name_micro, 0)
-   + {LINK_WEIGHTS[1]} * coalesce(st.struct_micro, 0)
-   + {LINK_WEIGHTS[2]} * coalesce(ed.edit_micro, 0))
-  // {sum(LINK_WEIGHTS)} AS score_micro
-FROM ls_keys k
-LEFT JOIN ls_nm nm USING (name_a, name_b)
-LEFT JOIN ls_ed ed USING (name_a, name_b)
-LEFT JOIN ls_st st USING (name_a, name_b)
-"""
 
 # hash_split draws the salted key family at SALT_SPLIT (decorrelated from
 # the cap priority and the mix keep key — see corpus.salt_ab)
@@ -2897,89 +2467,6 @@ dtoks AS (
 )
 """
 
-# Trained bigram-LM scoring (corpus.lm_bits): fit on the TRAIN hash-split,
-# score all docs with stupid-backoff integer bit-length costs.  The split
-# subquery is _HASH_SPLIT_SQL's key rule inlined (same salt family).
-_LM_BITS_SQL_TMPL = """
-WITH {dtoks},
-lm_train AS (
-  SELECT doc_id FROM (
-    SELECT doc_id,
-           CAST(({split_a} * (doc_id % {fp_mod}) + {split_b}) % {m31} AS DOUBLE)
-             / {m31} AS key
-    FROM documents
-  ) WHERE key >= {cut}
-),
-lm_tr AS (SELECT d.doc_id, d.t FROM dtoks d JOIN lm_train USING (doc_id)),
-lm_uni AS (
-  SELECT w, CAST(count(*) AS BIGINT) AS cnt
-  FROM (SELECT unnest(t) AS w FROM lm_tr) GROUP BY w
-),
-lm_bi AS (
-  SELECT t[CAST(i AS INT)] AS w1, t[CAST(i AS INT) + 1] AS w2,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM lm_tr, LATERAL unnest(range(1, len(t))) AS r(i)
-  GROUP BY 1, 2
-),
-lm_tot AS (SELECT CAST(coalesce(sum(cnt), 0) AS BIGINT) AS n_total FROM lm_uni),
-lm_prs AS (
-  SELECT doc_id, t[CAST(i AS INT)] AS w1, t[CAST(i AS INT) + 1] AS w2
-  FROM dtoks, LATERAL unnest(range(1, len(t))) AS r(i)
-),
-lm_sc AS (
-  SELECT p.doc_id,
-    CASE WHEN b.cnt IS NOT NULL
-           THEN (length(bin(u1.cnt)) - 1) - (length(bin(b.cnt)) - 1)
-         WHEN u2.cnt IS NOT NULL
-           THEN {penalty} + (length(bin(t.n_total)) - 1) - (length(bin(u2.cnt)) - 1)
-         ELSE {penalty} + (length(bin(t.n_total)) - 1) END AS cost,
-    CASE WHEN b.cnt IS NULL THEN 1 ELSE 0 END AS backoff,
-    CASE WHEN b.cnt IS NULL AND u2.cnt IS NULL THEN 1 ELSE 0 END AS oov
-  FROM lm_prs p
-  LEFT JOIN lm_bi b ON b.w1 = p.w1 AND b.w2 = p.w2
-  LEFT JOIN lm_uni u1 ON u1.w = p.w1
-  LEFT JOIN lm_uni u2 ON u2.w = p.w2
-  CROSS JOIN lm_tot t
-),
-lm_doc AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_scored,
-         CAST(sum(cost) AS BIGINT) AS total_bits,
-         CAST(sum(backoff) AS BIGINT) AS n_backoff,
-         CAST(sum(oov) AS BIGINT) AS n_oov
-  FROM lm_sc GROUP BY doc_id
-)
-SELECT d.doc_id,
-       CAST(coalesce(s.n_scored, 0) AS BIGINT) AS n_scored,
-       CAST(coalesce(s.total_bits, 0) AS BIGINT) AS total_bits,
-       CAST(coalesce(s.total_bits, 0) * 1000000
-              // greatest(coalesce(s.n_scored, 0), 1) AS BIGINT)
-         AS bits_per_token_micro,
-       CAST(coalesce(s.n_backoff, 0) AS BIGINT) AS n_backoff,
-       CAST(coalesce(s.n_oov, 0) AS BIGINT) AS n_oov
-FROM dtoks d LEFT JOIN lm_doc s USING (doc_id)
-"""
-
-# Positional phrase search (keywords.phrase_search): the corpus's own top
-# bigram matched adjacent-in-order over 1-based positional postings.
-_PHRASE_SQL_TMPL = """
-WITH {dtoks},
-ph_post AS (
-  SELECT doc_id, CAST(i AS INT) AS pos, t[CAST(i AS INT)] AS term
-  FROM dtoks, LATERAL unnest(range(1, len(t) + 1)) AS r(i)
-),
-ph_bg AS (
-  SELECT a.term AS w1, b.term AS w2, CAST(count(*) AS BIGINT) AS cnt
-  FROM ph_post a JOIN ph_post b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-  GROUP BY a.term, b.term
-),
-ph_top AS (SELECT w1, w2 FROM ph_bg ORDER BY cnt DESC, w1, w2 LIMIT 1)
-SELECT a.doc_id, CAST(count(*) AS BIGINT) AS n_hits,
-       CAST(min(a.pos) AS INT) AS first_pos
-FROM ph_post a
-JOIN ph_post b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-JOIN ph_top t ON a.term = t.w1 AND b.term = t.w2
-GROUP BY a.doc_id
-"""
 
 _EVAL_CTE = f"""
 ev AS (
@@ -3095,43 +2582,6 @@ SELECT d.doc_id,
 FROM documents d LEFT JOIN cnt c ON d.doc_id = c.doc_id
 """
 
-# Substring-dedup action oracle: same strided fingerprinted windows as
-# _REPEATED_SPANS_SQL, plus start offsets; a token survives iff no
-# repeated window covers its position (correlated NOT EXISTS — fine at
-# gate scale; the Spark side carries a per-doc start array instead).
-_SPAN_DEDUP_SQL = f"""
-WITH {_DTOKS_CTE},
-sd_wins AS MATERIALIZED (
-  SELECT doc_id, wi * {SPAN_STRIDE} AS start, {_SPAN_FP} AS fp
-  FROM (
-    SELECT doc_id, wi,
-           array_to_string(t[wi*{SPAN_STRIDE}+1 : wi*{SPAN_STRIDE}+{SPAN_WINDOW}], ' ') AS span
-    FROM dtoks, LATERAL unnest(range(0, CASE WHEN len(t) < {SPAN_WINDOW} THEN 0
-                                             ELSE (len(t) - {SPAN_WINDOW}) // {SPAN_STRIDE} + 1 END)) u(wi)
-  )
-),
-sd_rep AS (SELECT fp FROM sd_wins GROUP BY fp HAVING count(DISTINCT doc_id) >= 2),
-sd_starts AS MATERIALIZED (
-  SELECT DISTINCT w.doc_id, w.start FROM sd_wins w JOIN sd_rep r ON w.fp = r.fp),
-sd_toks AS (
-  SELECT doc_id, ci AS pos, t[ci+1] AS tok
-  FROM dtoks, LATERAL unnest(range(0, len(t))) u(ci)),
-sd_kept AS (
-  SELECT tk.doc_id, tk.pos, tk.tok FROM sd_toks tk
-  WHERE NOT EXISTS (
-    SELECT 1 FROM sd_starts s
-    WHERE s.doc_id = tk.doc_id
-      AND tk.pos >= s.start AND tk.pos < s.start + {SPAN_WINDOW})),
-sd_agg AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-         string_agg(tok, ' ' ORDER BY pos) AS clean_text
-  FROM sd_kept GROUP BY doc_id)
-SELECT d.doc_id,
-       CAST(len(d.t) AS BIGINT) AS n_tokens,
-       CAST(coalesce(a.n_kept, 0) AS BIGINT) AS n_kept,
-       coalesce(a.clean_text, '') AS clean_text
-FROM dtoks d LEFT JOIN sd_agg a ON d.doc_id = a.doc_id
-"""
 
 # Winnowing oracle: same k-gram Rabin-Karp fingerprints; each gram joins
 # the window starts that contain it (j in [max(0, gi-w+1), min(gi,
@@ -3384,12 +2834,12 @@ _KM_D2 = (
 )
 
 
-def _km_assign_cte(name: str, cent: str, pts: str = "qpts") -> str:
+def _km_assign_cte(name: str, cent: str) -> str:
     return f"""{name} AS MATERIALIZED (
   SELECT vec_id, q, cid, d2 FROM (
     SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rk
     FROM (SELECT p.vec_id, p.q, c.cid, {_KM_D2} AS d2
-          FROM {pts} p CROSS JOIN {cent} c))
+          FROM qpts p CROSS JOIN {cent} c))
   WHERE rk = 1
 )"""
 
@@ -3431,141 +2881,6 @@ def _kmeans_ctes(k: int, iterations: int) -> tuple[str, str]:
     final = f"ka{iterations + 1}"
     parts.append(_km_assign_cte(final, f"c{iterations}"))
     return ",\n".join(parts), final
-
-
-def _pq_sql(ivf: bool = False) -> str:
-    """PQ-ADC oracle: m independent unrolled sub-space Lloyd blocks
-    (slice → quantize → fixed-round kmeans → final codes), per-subspace
-    query distance tables, lookup-join contributions summed, per-query
-    top-k.  Mirrors operators/pq.pq_topk bit-for-bit.  With ``ivf``
-    the contributions are restricted to same-coarse-cell candidates —
-    operators/pq.ivfpq_topk (FAISS IndexIVFPQ composition)."""
-    from knowledge_graph_spark.operators.kmeans import Q_SCALE
-
-    sub = EMB_DIM // PQ_M
-    parts: list[str] = []
-    branches: list[str] = []
-    if ivf:
-        parts.append(
-            "ipq_e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)"
-        )
-        parts.append(
-            f"""ipq_cells AS MATERIALIZED (
-  SELECT vec_id, CAST({_IVF_CELL} AS BIGINT) AS cell
-  FROM (SELECT vec_id, e FROM ipq_e)
-)"""
-        )
-        parts.append(
-            f"""ipq_cand AS MATERIALIZED (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, c.cell
-  FROM ipq_cells c JOIN ipq_cells q
-    ON c.cell = q.cell AND q.vec_id < {TOPK_QUERY_LIMIT}
-   AND c.vec_id <> q.vec_id
-)"""
-        )
-    for s in range(PQ_M):
-        p = f"pq{s}"
-        lo, hi = s * sub + 1, (s + 1) * sub
-        parts.append(
-            f"""{p}_pts AS MATERIALIZED (
-  SELECT vec_id,
-         list_transform((CAST(embedding AS DOUBLE[]))[{lo}:{hi}],
-                        x -> CAST(floor(x * {Q_SCALE}.0) AS BIGINT)) AS q
-  FROM embeddings
-)"""
-        )
-        parts.append(
-            f"""{p}_c0 AS MATERIALIZED (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cid, q AS c
-  FROM (SELECT vec_id, q FROM {p}_pts ORDER BY vec_id LIMIT {PQ_K})
-)"""
-        )
-        for r in range(1, PQ_ITERS + 1):
-            parts.append(_km_assign_cte(f"{p}_ka{r}", f"{p}_c{r - 1}", pts=f"{p}_pts"))
-            parts.append(_km_update_cte(f"{p}_c{r}", f"{p}_ka{r}", f"{p}_c{r - 1}"))
-        final = f"{p}_ka{PQ_ITERS + 1}"
-        parts.append(_km_assign_cte(final, f"{p}_c{PQ_ITERS}", pts=f"{p}_pts"))
-        parts.append(
-            f"""{p}_dt AS MATERIALIZED (
-  SELECT p.vec_id AS query_id, c.cid, {_KM_D2} AS qd2
-  FROM (SELECT vec_id, q FROM {p}_pts WHERE vec_id < {TOPK_QUERY_LIMIT}) p
-  CROSS JOIN {p}_c{PQ_ITERS} c
-)"""
-        )
-        if ivf:
-            parts.append(
-                f"""{p}_contrib AS (
-  SELECT cd.query_id, cd.neighbor_id, cd.cell, t.qd2
-  FROM ipq_cand cd
-  JOIN {final} a ON a.vec_id = cd.neighbor_id
-  JOIN {p}_dt t ON t.cid = a.cid AND t.query_id = cd.query_id
-)"""
-            )
-            branches.append(
-                f"SELECT query_id, neighbor_id, cell, qd2 FROM {p}_contrib"
-            )
-        else:
-            parts.append(
-                f"""{p}_contrib AS (
-  SELECT t.query_id, a.vec_id AS neighbor_id, t.qd2
-  FROM {final} a JOIN {p}_dt t USING (cid)
-)"""
-            )
-            branches.append(f"SELECT query_id, neighbor_id, qd2 FROM {p}_contrib")
-    block = ",\n".join(parts)
-    union = " UNION ALL ".join(branches)
-    if ivf:
-        return f"""
-WITH {block},
-pq_tot AS (
-  SELECT query_id, neighbor_id, cell, CAST(sum(qd2) AS BIGINT) AS adc_d2
-  FROM ({union}) GROUP BY query_id, neighbor_id, cell
-)
-SELECT query_id, neighbor_id, cell, adc_d2,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY adc_d2, neighbor_id) AS INT) AS rk
-FROM pq_tot QUALIFY rk <= {TOPK_K}
-"""
-    return f"""
-WITH {block},
-pq_tot AS (
-  SELECT query_id, neighbor_id, CAST(sum(qd2) AS BIGINT) AS adc_d2
-  FROM ({union}) WHERE query_id <> neighbor_id
-  GROUP BY query_id, neighbor_id
-)
-SELECT query_id, neighbor_id, adc_d2,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY adc_d2, neighbor_id) AS INT) AS rk
-FROM pq_tot QUALIFY rk <= {TOPK_K}
-"""
-
-
-def _l2_sql() -> str:
-    from knowledge_graph_spark.operators.kmeans import Q_SCALE
-
-    d2 = (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        "list_transform(range(1, len(a.q) + 1), "
-        "i -> (a.q[CAST(i AS INT)] - b.q[CAST(i AS INT)]) "
-        "* (a.q[CAST(i AS INT)] - b.q[CAST(i AS INT)]))), (x, y) -> x + y)"
-    )
-    return f"""
-WITH lpts AS (
-  SELECT vec_id,
-         list_transform(CAST(embedding AS DOUBLE[]),
-                        x -> CAST(floor(x * {Q_SCALE}.0) AS BIGINT)) AS q
-  FROM embeddings
-),
-lsc AS (
-  SELECT b.vec_id AS query_id, a.vec_id AS neighbor_id, {d2} AS d2
-  FROM lpts a JOIN lpts b
-    ON b.vec_id < {TOPK_QUERY_LIMIT} AND a.vec_id <> b.vec_id
-)
-SELECT query_id, neighbor_id, CAST(d2 AS BIGINT) AS d2,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY d2, neighbor_id) AS INT) AS rk
-FROM lsc QUALIFY rk <= {TOPK_K}
-"""
 
 
 _KM_BLOCK, _KM_FINAL = _kmeans_ctes(KM_K, KM_ITERS)
@@ -3625,42 +2940,6 @@ FROM scored WHERE idf_bits > 0
 QUALIFY rk <= {TT_K}
 """
 
-_BM25_VALUES = ", ".join(
-    f"({qid}, '{t}')" for qid, ts in BM25_QUERIES for t in ts
-)
-
-_BM25_SEARCH_SQL = f"""
-WITH {_DTOKS_CTE},
-tok AS (SELECT doc_id, unnest(t) AS term FROM dtoks),
-tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY doc_id, term),
-dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY doc_id),
-dfreq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
-g AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(dl) AS BIGINT) AS total_len FROM dl),
-qterms(query_id, term) AS (VALUES {_BM25_VALUES}),
-matched AS (
-  SELECT q.query_id, tf.doc_id,
-         CAST(floor(({SCORE_SCALE}.0
-               * (CAST(2 * g.n_docs - 2 * dfreq.df + 1 AS DOUBLE)
-                  / CAST(2 * dfreq.df + 1 AS DOUBLE)))
-              * ((CAST(tf.tf AS DOUBLE) * {BM25_K1 + 1.0!r})
-                 / (CAST(tf.tf AS DOUBLE)
-                    + {BM25_K1!r} * ({1.0 - BM25_B!r}
-                                     + {BM25_B!r} * CAST(dl.dl * g.n_docs AS DOUBLE)
-                                       / CAST(g.total_len AS DOUBLE)))))
-              AS BIGINT) AS c
-  FROM tf JOIN qterms q USING (term) JOIN dl USING (doc_id)
-  JOIN dfreq USING (term) CROSS JOIN g
-),
-bm_agg AS (
-  SELECT query_id, doc_id, CAST(count(*) AS BIGINT) AS n_hit_terms,
-         CAST(sum(c) AS BIGINT) AS score_micro
-  FROM matched GROUP BY query_id, doc_id
-)
-SELECT CAST(query_id AS INT) AS query_id, doc_id, n_hit_terms, score_micro,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY score_micro DESC, doc_id) AS INT) AS rk
-FROM bm_agg QUALIFY rk <= {BM25_SEARCH_K}
-"""
 
 _VOCAB_SQL = f"""
 WITH {_DTOKS_CTE},
@@ -4035,7 +3314,6 @@ GROUP BY p.key, p.true_cnt
 """
 
 
-
 # --- bloom filter (operators/bloom.py) --------------------------------------
 
 from knowledge_graph_spark.operators import bloom as _bl
@@ -4265,30 +3543,6 @@ SELECT doc_id, media_type, n_bytes,
 FROM m
 """
 
-RESIZE_MAX_EDGE = 512
-
-_RESIZE_PLAN_SQL = f"""
-WITH meta AS ({_MEDIA_META_SQL})
-SELECT doc_id, media_type, width, height,
-       CAST(CASE WHEN greatest(width, height) > {RESIZE_MAX_EDGE}
-                 THEN (width * {RESIZE_MAX_EDGE}) // greatest(width, height)
-                 ELSE width END AS INT) AS target_w,
-       CAST(CASE WHEN greatest(width, height) > {RESIZE_MAX_EDGE}
-                 THEN (height * {RESIZE_MAX_EDGE}) // greatest(width, height)
-                 ELSE height END AS INT) AS target_h,
-       greatest(width, height) > {RESIZE_MAX_EDGE} AS needs_resize
-FROM meta WHERE media_type IN ('image', 'video')
-"""
-
-_MEDIA_FEATURES_SQL = f"""
-WITH meta AS ({_MEDIA_META_SQL})
-SELECT doc_id, media_type, CAST(d AS INT) AS dim,
-       CAST(length(fingerprint)
-            - length(replace(fingerprint, substr('0123456789abcdef',
-                                                 CAST(d + 1 AS INT), 1), ''))
-            AS BIGINT) AS value
-FROM meta, LATERAL unnest(range(0, 16)) u(d)
-"""
 
 _FRAME_PLAN_SQL = f"""
 WITH meta AS ({_MEDIA_META_SQL})
@@ -4988,55 +4242,6 @@ FROM co_e2 GROUP BY least(msn, mtn), greatest(msn, mtn)
     )
 
 
-_LANGID_SQL = f"""
-WITH lg AS (
-  SELECT doc_id, lang, g AS gram
-  FROM documents,
-  LATERAL unnest(list_transform(range(1, length(lower(text)) - 1),
-                 i -> substr(lower(text), CAST(i AS INT), 3))) AS u(g)
-),
-prof AS (
-  SELECT lang, gram, CAST(count(*) AS BIGINT) AS cnt
-  FROM lg WHERE doc_id % {LANGID_HOLDOUT_MOD} != 0 GROUP BY lang, gram
-),
-ranked AS (
-  SELECT lang AS cand_lang, gram, CAST({LANGID_TOP} + 1 - rk AS BIGINT) AS w
-  FROM (
-    SELECT lang, gram,
-           row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, gram) AS rk
-    FROM prof)
-  WHERE rk <= {LANGID_TOP}
-),
-test_g AS (
-  SELECT DISTINCT doc_id, lang, gram FROM lg
-  WHERE doc_id % {LANGID_HOLDOUT_MOD} = 0
-),
-sc AS (
-  SELECT t.doc_id, r.cand_lang,
-         CAST(sum(r.w) AS BIGINT) AS score, CAST(count(*) AS BIGINT) AS n_hits
-  FROM test_g t JOIN ranked r USING (gram)
-  GROUP BY t.doc_id, r.cand_lang
-),
-best AS (
-  SELECT doc_id, cand_lang AS pred_lang, score, n_hits
-  FROM (
-    SELECT sc.*,
-           row_number() OVER (PARTITION BY doc_id
-                              ORDER BY score DESC, cand_lang) AS rn
-    FROM sc)
-  WHERE rn = 1
-)
-SELECT d.doc_id, d.lang,
-       coalesce(b.pred_lang, '') AS pred_lang,
-       CAST(coalesce(b.score, 0) AS BIGINT) AS score,
-       CAST(coalesce(b.n_hits, 0) AS BIGINT) AS n_hits,
-       CAST(CASE WHEN coalesce(b.pred_lang, '') = d.lang
-                 THEN 1 ELSE 0 END AS INT) AS correct
-FROM documents d LEFT JOIN best b USING (doc_id)
-WHERE d.doc_id % {LANGID_HOLDOUT_MOD} = 0
-"""
-
-
 _BLOCKING_AUDIT_SQL = f"""
 WITH dn AS (
   SELECT doc_id, regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS title
@@ -5516,26 +4721,6 @@ LEFT JOIN hits_h{rounds} h ON h.title = n.title
 """
     )
     return "".join(parts)
-
-
-_ANN_RECALL_SQL = f"""
-WITH ex AS ({{topk}}),
-ap AS ({{ivf}}),
-ar_hit AS (
-  SELECT e.query_id, CAST(count(*) AS BIGINT) AS n_hit
-  FROM ex e JOIN ap a
-    ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-  GROUP BY e.query_id
-),
-ar_tot AS (
-  SELECT query_id, CAST(count(*) AS BIGINT) AS n_exact FROM ex GROUP BY query_id
-)
-SELECT t.query_id, t.n_exact,
-       CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
-       CAST(floor(coalesce(h.n_hit, 0) * 1000000 / t.n_exact) AS BIGINT)
-         AS recall_micro
-FROM ar_tot t LEFT JOIN ar_hit h ON h.query_id = t.query_id
-"""
 
 
 _TOOL_LATENCY_BODY = """
@@ -6763,8 +5948,7 @@ FROM jp_act{rounds + 1})
 
 
 # ---------------------------------------------------------------------------
-# Wave 14: weighted SSSP, 4-cycle census, trained bigram-LM scoring,
-# positional phrase search, Matryoshka prefix-dim ANN recall.
+# Wave 14: weighted SSSP, 4-cycle census, Matryoshka prefix-dim ANN.
 # ---------------------------------------------------------------------------
 
 def q_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6792,37 +5976,6 @@ def q_four_cycles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return four_cycle_profile(_stages(spark, sf_dir)["edges"])
 
 
-def q_lm_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet/KenLM-style quality filter with split discipline: bigram LM
-    fitted on the TRAIN hash-split only, every document scored with
-    stupid-backoff bits-per-token (integer bit-length logs)."""
-    from knowledge_graph_spark.operators.corpus import (
-        hash_split,
-        lm_bits,
-        lm_train_counts,
-    )
-
-    docs = _docs(spark, sf_dir)
-    split = hash_split(
-        docs.select("doc_id"), val_frac=SPLIT_VAL_FRAC, test_frac=SPLIT_TEST_FRAC
-    )
-    train = docs.join(
-        split.filter(F.col("split") == "train").select("doc_id"), "doc_id"
-    )
-    uni, bi, total = lm_train_counts(train)
-    return lm_bits(docs, uni, bi, total)
-
-
-def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-phrase retrieval over the positional index: the corpus's own
-    top bigram (data-derived, deterministic) matched ADJACENT-in-order —
-    the phrase predicate bm25_search's bag-of-words ranking lacks."""
-    from knowledge_graph_spark.operators.keywords import phrase_search, top_bigram
-
-    docs = _docs(spark, sf_dir)
-    return phrase_search(docs, top_bigram(docs))
-
-
 def q_emb_prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka-style prefix-dimension ANN: cosine top-k computed on
     only the first PREFIX_DIM dims — the memory/bandwidth trade of
@@ -6836,19 +5989,9 @@ def q_emb_prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_ann_recall_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@k of the half-dimension prefix search against the full-dim
-    exact scan — the audit that prices a Matryoshka truncation level
-    before committing the index to it."""
-    return similarity.topk_recall(
-        q_emb_topk(spark, sf_dir), q_emb_prefix_topk(spark, sf_dir)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Wave 15: double-sweep diameter bound, 1-WL color refinement, event-time
-# lateness audit, hourly KG churn, distinct-n diversity, tf-idf cosine
-# near-dup pairs.
+# lateness audit, distinct-n diversity, tf-idf cosine near-dup pairs.
 # ---------------------------------------------------------------------------
 
 DS_HOPS = 4
@@ -6886,17 +6029,6 @@ def q_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
     from knowledge_graph_spark.operators.temporal import lateness_profile
 
     return lateness_profile(transcripts_from_events(spark, sf_dir))
-
-
-def q_kg_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hour-over-hour KG edge-set churn: exact intersection / Jaccard of
-    consecutive active-hour edge sets — the temporal-stability twin of
-    kg_growth's first-seen curve (extraction regressions show up as a
-    Jaccard cliff)."""
-    from knowledge_graph_spark.operators.temporal import kg_churn
-
-    s = _stages(spark, sf_dir)
-    return kg_churn(s["raw_records"], transcripts_from_events(spark, sf_dir))
 
 
 def q_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7006,37 +6138,6 @@ SELECT conv_id, CAST(count(*) AS BIGINT) AS n_turns,
 FROM lt2 GROUP BY conv_id
 """
 
-_KG_CHURN_BODY = """
-, kc_pairs AS (
-  SELECT DISTINCT least(source, target) AS s, greatest(source, target) AS t, conv_id
-  FROM rel_records),
-kc_conv AS (
-  SELECT conv_id, CAST(floor(epoch(min(ts))) AS BIGINT) AS cf
-  FROM transcripts GROUP BY conv_id),
-kc_occ AS MATERIALIZED (
-  SELECT DISTINCT s, t, (cf // 3600) * 3600 AS h
-  FROM kc_pairs JOIN kc_conv USING (conv_id)),
-kc_cnt AS MATERIALIZED (
-  SELECT h, CAST(count(*) AS BIGINT) AS n_curr FROM kc_occ GROUP BY h),
-kc_int AS (
-  SELECT cur.h, CAST(count(*) AS BIGINT) AS n_inter
-  FROM kc_occ cur JOIN kc_occ prv
-    ON prv.s = cur.s AND prv.t = cur.t AND prv.h + 3600 = cur.h
-  GROUP BY cur.h)
-SELECT c.h AS hour_epoch,
-       CAST(coalesce(p.n_curr, 0) AS BIGINT) AS n_prev,
-       c.n_curr,
-       CAST(coalesce(i.n_inter, 0) AS BIGINT) AS n_inter,
-       CAST(c.n_curr - coalesce(i.n_inter, 0) AS BIGINT) AS n_added,
-       CAST(coalesce(p.n_curr, 0) - coalesce(i.n_inter, 0) AS BIGINT) AS n_removed,
-       CAST(coalesce(i.n_inter, 0) * 1000000 // greatest(
-         CAST(1 AS BIGINT),
-         coalesce(p.n_curr, 0) + c.n_curr - coalesce(i.n_inter, 0)) AS BIGINT)
-         AS jaccard_micro
-FROM kc_cnt c
-LEFT JOIN kc_cnt p ON p.h + 3600 = c.h
-LEFT JOIN kc_int i ON i.h = c.h
-"""
 
 _NGRAM_DIVERSITY_SQL = """
 WITH dtoks AS (
@@ -7421,7 +6522,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "decontam_pairs": q_decontam_pairs,
         "familiarity": q_familiarity,
         "repeated_spans": q_repeated_spans,
-        "span_dedup": q_span_dedup,
         "winnow_fp": q_winnow_fp,
         "winnow_dedup": q_winnow_dedup,
         "dsir_select": q_dsir_select,
@@ -7434,7 +6534,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kmeans_cells": q_kmeans,
         "semantic_dedup_km": q_semantic_dedup_km,
         "top_terms": q_top_terms,
-        "bm25_search": q_bm25_search,
         "vocab": q_vocab,
         "node_diff": q_node_diff,
         "hll_tokens": q_hll_tokens,
@@ -7464,14 +6563,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "coarsen_l2": q_coarsen_l2,
         "sssp": q_sssp,
         "four_cycles": q_four_cycles,
-        "lm_bits": q_lm_bits,
-        "phrase_search": q_phrase_search,
         "emb_prefix_topk": q_emb_prefix_topk,
-        "ann_recall_prefix": q_ann_recall_prefix,
         "diameter_lb": q_diameter_lb,
         "wl_colors": q_wl_colors,
         "lateness": q_lateness,
-        "kg_churn": q_kg_churn,
         "ngram_diversity": q_ngram_diversity,
         "tfidf_pairs": q_tfidf_pairs,
         "msf": q_msf,
@@ -7481,7 +6576,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "edge_decay": q_edge_decay,
         "temporal_salience": q_temporal_salience,
         "heaps_law": q_heaps,
-        "langid": q_langid,
         "blocking_audit": q_blocking_audit,
         "comention_bursts": q_comention_bursts,
         "entity_lifecycle": q_entity_lifecycle,
@@ -7490,7 +6584,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "negative_samples": q_negative_samples,
         "jp_coloring": q_jp_coloring,
         "pagerank_w": q_pagerank_w,
-        "node_jaccard": q_node_jaccard,
         "exact_dedup": q_exact_dedup,
         "ngram_dedup": q_ngram_dedup,
         "dedup_clusters": q_dedup_clusters,
@@ -7499,23 +6592,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "simhash_dedup": q_simhash_dedup,
         "emb_topk": q_emb_topk,
         "emb_ivf_topk": q_emb_ivf_topk,
-        "emb_ivf_mp": q_emb_ivf_mp,
-        "emb_quant_topk": q_emb_quant_topk,
         "emb_neardup": q_emb_neardup,
         "emb_neardup_lsh": q_emb_neardup_lsh,
-        "fuzzy_aliases": q_fuzzy_aliases,
         "copurchase_rank": q_copurchase_rank,
         "k_truss": q_k_truss,
         "hash_split": q_hash_split,
         "leakfree_split": q_leakfree_split,
         "length_stats": q_length_stats,
         "bfs_hops": q_bfs_hops,
-        "link_scores": q_link_scores,
         "edge_times": q_edge_times,
         "media_meta": q_media_meta,
         "frame_plan": q_frame_plan,
-        "resize_plan": q_resize_plan,
-        "media_features": q_media_features,
         "sessions": q_sessions,
         "tool_transitions": q_tool_transitions,
         "tool_scc": q_tool_scc,
@@ -7523,34 +6610,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tool_latency": q_tool_latency,
         "event_sliding": q_event_sliding,
         "sessions_native": q_sessions_native,
-        "session_overlaps": q_session_overlaps,
-        "attribution": q_attribution,
         "conv_shapes": q_conv_shapes,
         "tool_ngrams": q_tool_ngrams,
         "role_profile": q_role_profile,
         "tool_latency_q": q_tool_latency_quantiles,
         "widest_paths": q_widest_paths,
         "hits": q_hits,
-        "ann_recall": q_ann_recall,
-        "ann_recall_mp": q_ann_recall_mp,
-        "ann_recall_quant": q_ann_recall_quant,
-        "emb_l2_topk": q_emb_l2_topk,
-        "emb_pq_topk": q_emb_pq_topk,
-        "ann_recall_pq": q_ann_recall_pq,
-        "emb_ivfpq_topk": q_emb_ivfpq_topk,
         "bpe_pairs": q_bpe_pairs,
         "bpe_merges": q_bpe_merges,
         "bpe_tokenize": q_bpe_tokenize,
         "bpe_fertility": q_bpe_fertility,
         "events_asof": q_events_asof,
         "event_hourly": q_event_hourly,
-        "event_anomaly": q_event_anomaly,
         "textrank": q_textrank,
         "weak_votes": q_weak_votes,
         "weak_lf_stats": q_weak_lf_stats,
         "source_profile": q_source_profile,
         "best_of_cluster": q_best_of_cluster,
-        "langid_confusion": q_langid_confusion,
     }
 
 
@@ -7963,7 +7039,6 @@ FROM c
         "decontam_pairs": _DECONTAM_PAIRS_SQL,
         "familiarity": _FAMILIARITY_SQL,
         "repeated_spans": _REPEATED_SPANS_SQL,
-        "span_dedup": _SPAN_DEDUP_SQL,
         "winnow_fp": _WINNOW_SQL,
         "winnow_dedup": _WINNOW_DEDUP_SQL,
         "dsir_select": _DSIR_SQL,
@@ -8018,7 +7093,6 @@ FROM pos p JOIN neg n USING (anchor_id)
         "kmeans_cells": _KMEANS_SQL,
         "semantic_dedup_km": _SEMANTIC_DEDUP_KM_SQL,
         "top_terms": _TOP_TERMS_SQL,
-        "bm25_search": _BM25_SEARCH_SQL,
         "vocab": _VOCAB_SQL,
         "hll_tokens": _HLL_SQL,
         "hyperball": _oracle(_hyperball_oracle(HYPERBALL_ROUNDS)),
@@ -8133,24 +7207,10 @@ GROUP BY least(ta.type, tb.type), greatest(ta.type, tb.type)
         "coarsen_l2": _oracle(_coarsen_hier_body()),
         "sssp": _oracle(_sssp_body()),
         "four_cycles": _oracle(_C4_BODY),
-        "lm_bits": _LM_BITS_SQL_TMPL.format(
-            dtoks=_DTOKS_CTE.strip(),
-            split_a=_SPLIT_A,
-            split_b=_SPLIT_B,
-            fp_mod=textqc.FP_MOD,
-            m31=HASH_M31,
-            cut=SPLIT_TEST_FRAC + SPLIT_VAL_FRAC,
-            penalty=LM_BACKOFF_BITS,
-        ),
-        "phrase_search": _PHRASE_SQL_TMPL.format(dtoks=_DTOKS_CTE.strip()),
         "emb_prefix_topk": _EMB_PREFIX_TOPK_SQL,
-        "ann_recall_prefix": _ANN_RECALL_SQL.format(
-            topk=_EMB_TOPK_SQL, ivf=_EMB_PREFIX_TOPK_SQL
-        ),
         "diameter_lb": _oracle(_ds_body()),
         "wl_colors": _oracle(_wl_body()),
         "lateness": _oracle(_LATENESS_BODY),
-        "kg_churn": _oracle(_KG_CHURN_BODY),
         "ngram_diversity": _NGRAM_DIVERSITY_SQL,
         "tfidf_pairs": _TFIDF_SQL,
         "msf": _oracle(_msf_body()),
@@ -8225,7 +7285,6 @@ GROUP BY least(ta.type, tb.type), greatest(ta.type, tb.type)
             GROUP BY a, b, w
             """
         ),
-        "langid": _LANGID_SQL,
         "blocking_audit": _BLOCKING_AUDIT_SQL,
         "comention_bursts": _oracle(_CB_BODY),
         "entity_lifecycle": _oracle(_EL_BODY),
@@ -8236,17 +7295,6 @@ GROUP BY least(ta.type, tb.type), greatest(ta.type, tb.type)
         "pagerank_w": _oracle(_pr_body(weighted=True)),
         "widest_paths": _oracle(_wp_body()),
         "hits": _oracle(_hits_body()),
-        "ann_recall": _ANN_RECALL_SQL.format(topk=_EMB_TOPK_SQL, ivf=_EMB_IVF_SQL),
-        "ann_recall_mp": _ANN_RECALL_SQL.format(
-            topk=_EMB_TOPK_SQL, ivf=_EMB_IVF_MP_SQL
-        ),
-        "ann_recall_quant": _ANN_RECALL_SQL.format(
-            topk=_EMB_TOPK_SQL, ivf=_EMB_QUANT_SQL
-        ),
-        "emb_l2_topk": _l2_sql(),
-        "emb_pq_topk": _pq_sql(),
-        "ann_recall_pq": _ANN_RECALL_SQL.format(topk=_l2_sql(), ivf=_pq_sql()),
-        "emb_ivfpq_topk": _pq_sql(ivf=True),
         "tool_transitions": _oracle(_TOOL_TRANS_BODY),
         "tool_scc": _oracle(_scc_oracle_body(SCC_INNER, SCC_OUTER)),
         "turn_latency": _oracle(_TURN_LATENCY_BODY),
@@ -8272,31 +7320,6 @@ GROUP BY least(ta.type, tb.type), greatest(ta.type, tb.type)
             FROM segd s JOIN documents d USING (doc_id)
             GROUP BY d.lang
             """,
-        "node_jaccard": _oracle(f"""
-, nj_adj AS MATERIALIZED (
-  SELECT DISTINCT a, b FROM (
-    SELECT source AS a, target AS b FROM kg_edges
-    UNION ALL SELECT target AS a, source AS b FROM kg_edges
-  )
-),
-nj_sizes AS (SELECT a, CAST(count(*) AS BIGINT) AS deg FROM nj_adj GROUP BY a),
-nj_inter AS (
-  SELECT x.a AS title_a, y.a AS title_b, CAST(count(*) AS BIGINT) AS inter
-  FROM nj_adj x JOIN nj_adj y ON x.b = y.b AND x.a < y.a
-  GROUP BY x.a, y.a
-),
-nj AS (
-  SELECT i.title_a, i.title_b, i.inter,
-         CAST(sa.deg + sb.deg - i.inter AS BIGINT) AS union_n,
-         CAST(floor(CAST(i.inter AS DOUBLE) * 1000000
-                    / CAST(sa.deg + sb.deg - i.inter AS DOUBLE)) AS BIGINT)
-           AS jaccard_micro
-  FROM nj_inter i
-  JOIN nj_sizes sa ON sa.a = i.title_a
-  JOIN nj_sizes sb ON sb.a = i.title_b
-)
-SELECT * FROM nj WHERE jaccard_micro >= {int(NJ_TAU * 1_000_000)}
-"""),
         "exact_dedup": _EXACT_DEDUP_SQL,
         "ngram_dedup": _NGRAM_DEDUP_SQL,
         "dedup_clusters": _DEDUP_CLUSTERS_SQL,
@@ -8334,7 +7357,6 @@ SELECT * FROM nj WHERE jaccard_micro >= {int(NJ_TAU * 1_000_000)}
         "minhash_incr": _MINHASH_DEDUP_SQL,
         "simhash_dedup": _SIMHASH_DEDUP_SQL,
         "emb_neardup_lsh": _EMB_NEARDUP_LSH_SQL,
-        "fuzzy_aliases": _oracle(_FUZZY_ALIASES_BODY),
         "copurchase_rank": _cp_rank_sql(),
         "k_truss": _oracle(_ktruss_body()),
         "hash_split": _HASH_SPLIT_SQL,
@@ -8352,7 +7374,6 @@ FROM (SELECT doc_id, canonical_id,
 """,
         "length_stats": _LENGTH_STATS_SQL.format(profile=_TEXT_PROFILE_SQL),
         "bfs_hops": _oracle(_bfs_body()),
-        "link_scores": _oracle(_LINK_SCORES_BODY),
         "edge_times": _oracle("""
 , et_pairs AS (
   SELECT DISTINCT least(source, target) AS source,
@@ -8369,13 +7390,9 @@ GROUP BY source, target
 """),
         "emb_topk": _EMB_TOPK_SQL,
         "emb_ivf_topk": _EMB_IVF_SQL,
-        "emb_ivf_mp": _EMB_IVF_MP_SQL,
-        "emb_quant_topk": _EMB_QUANT_SQL,
         "emb_neardup": _EMB_NEARDUP_SQL,
         "media_meta": _MEDIA_META_SQL,
         "frame_plan": _FRAME_PLAN_SQL,
-        "resize_plan": _RESIZE_PLAN_SQL,
-        "media_features": _MEDIA_FEATURES_SQL,
         # Batch sessionization (gap 30 min): exact int64 micro timestamps
         # and DECIMAL(18,2) value sums keep both engines bit-identical
         # (double summation would be fold-order-dependent).
@@ -8436,76 +7453,6 @@ GROUP BY source, target
                    ar.value_r AS value_r, ar.ts_us AS ts_r
             FROM al ASOF LEFT JOIN ar
               ON al.user_id = ar.user_id AND al.ts_us >= ar.ts_us
-            """
-        ),
-        # Attribution range join: DuckDB evaluates the raw predicate
-        # (IEJoin) — independent of the Spark plan the streaming job runs.
-        "attribution": _oracle(
-            f"""
-            , at_p AS (
-              SELECT event_id, user_id, ts, value FROM events
-              WHERE event_type = 'purchase'
-            ),
-            at_s AS (
-              SELECT event_id AS signup_id, user_id, ts FROM events
-              WHERE event_type = 'signup'
-            )
-            SELECT p.event_id, p.user_id, s.signup_id,
-                   epoch_us(p.ts) AS purchase_us,
-                   epoch_us(s.ts) AS signup_us,
-                   p.value
-            FROM at_p p JOIN at_s s
-              ON p.user_id = s.user_id
-             AND p.ts >= s.ts
-             AND p.ts <= s.ts + INTERVAL {ATTR_WINDOW_DAYS} DAYS
-            """
-        ),
-        # Interval overlap: DuckDB's native quadratic range join (IEJoin)
-        # vs Spark's bucket-explode equi-join — independent implementations
-        # of the same overlap semantics (endpoints inclusive).
-        "session_overlaps": _oracle(
-            """
-            , ov_e AS (
-              SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events
-            ),
-            ov_l AS (
-              SELECT *, lag(ts_us) OVER (
-                PARTITION BY user_id ORDER BY ts_us, event_id) AS prev_us
-              FROM ov_e
-            ),
-            ov_f AS (
-              SELECT *, CASE WHEN prev_us IS NULL
-                              OR ts_us - prev_us > 1800000000
-                         THEN 1 ELSE 0 END AS is_new
-              FROM ov_l
-            ),
-            ov_i AS (
-              SELECT *, sum(is_new) OVER (
-                PARTITION BY user_id ORDER BY ts_us, event_id
-                ROWS UNBOUNDED PRECEDING) AS session_idx
-              FROM ov_f
-            ),
-            ov_s AS MATERIALIZED (
-              SELECT user_id,
-                     CAST(user_id AS VARCHAR) || '-' ||
-                       CAST(session_idx AS VARCHAR) AS session_id,
-                     min(ts_us) AS start_us, max(ts_us) AS end_us
-              FROM ov_i GROUP BY user_id, session_idx
-            ),
-            ov_p AS (
-              SELECT a.session_id AS ia, b.session_id AS ib
-              FROM ov_s a JOIN ov_s b
-                ON a.user_id <> b.user_id AND a.session_id < b.session_id
-               AND a.start_us <= b.end_us AND b.start_us <= a.end_us
-            ),
-            ov_c AS (
-              SELECT sid, CAST(count(*) AS BIGINT) AS n_concurrent
-              FROM (SELECT ia AS sid FROM ov_p UNION ALL SELECT ib AS sid FROM ov_p)
-              GROUP BY sid
-            )
-            SELECT s.user_id, s.session_id, s.start_us, s.end_us,
-                   CAST(coalesce(c.n_concurrent, 0) AS BIGINT) AS n_concurrent
-            FROM ov_s s LEFT JOIN ov_c c ON c.sid = s.session_id
             """
         ),
         # Sliding windows: start = slide_bucket(t) − k·slide for every
@@ -8570,31 +7517,6 @@ GROUP BY source, target
             FROM events GROUP BY 1, 2
             """
         ),
-        "event_anomaly": _oracle(
-            f"""
-            , ea_counts AS (
-              SELECT epoch_us(time_bucket(INTERVAL '1 hour', ts)) AS window_start_us,
-                     event_type, CAST(count(*) AS BIGINT) AS n_events
-              FROM events GROUP BY 1, 2
-            ),
-            ea_moments AS (
-              SELECT event_type, CAST(count(*) AS BIGINT) AS n_w,
-                     CAST(sum(n_events) AS BIGINT) AS sum_x,
-                     CAST(sum(n_events * n_events) AS BIGINT) AS sum_x2
-              FROM ea_counts GROUP BY event_type
-            )
-            SELECT c.window_start_us, c.event_type, c.n_events,
-                   CAST((m.n_w * c.n_events - m.sum_x)
-                        * (m.n_w * c.n_events - m.sum_x) AS BIGINT) AS dev_num,
-                   CAST({EA_SIGMA * EA_SIGMA}
-                        * (m.n_w * m.sum_x2 - m.sum_x * m.sum_x) AS BIGINT) AS bound_num,
-                   (m.n_w * c.n_events - m.sum_x)
-                     * (m.n_w * c.n_events - m.sum_x)
-                     > {EA_SIGMA * EA_SIGMA} * (m.n_w * m.sum_x2 - m.sum_x * m.sum_x)
-                     AS is_anomaly
-            FROM ea_counts c JOIN ea_moments m USING (event_type)
-            """
-        ),
         "textrank": _oracle(_textrank_body()),
         "weak_votes": f"WITH {_wl_matrix_ctes()} SELECT * FROM wl_v",
         "weak_lf_stats": _wl_stats_sql(),
@@ -8602,9 +7524,4 @@ GROUP BY source, target
         "best_of_cluster": _BEST_OF_CLUSTER_SQL.format(
             clusters=_DEDUP_CLUSTERS_SQL, profile=_TEXT_PROFILE_SQL
         ),
-        "langid_confusion": f"""
-WITH li AS ({_LANGID_SQL})
-SELECT lang, pred_lang, CAST(count(*) AS BIGINT) AS n_docs
-FROM li GROUP BY lang, pred_lang
-""",
     }

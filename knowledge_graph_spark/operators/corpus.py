@@ -415,32 +415,6 @@ def merge_pair_counts(
     )
 
 
-def dsir_bucket_counts(
-    docs: DataFrame,
-    target: F.Column,
-    text_col: str = "text",
-    n_buckets: int = 4096,
-) -> DataFrame:
-    """The DSIR bucket models as a bare count table (b, cr, ct): raw and
-    target hashed-bigram occurrence counts per bucket.  Split out because
-    the counts are SUM-mergeable — shards and streaming micro-batches
-    fold exactly (streaming/dsir_stream.py), unlike the derived
-    log-ratio weights."""
-    from ..functions.textqc import rolling_fingerprint
-    from .dedup import token_windows
-
-    grams = widen(docs).select(
-        target.alias("is_target"),
-        F.explode(token_windows(F.col(text_col), 2, 1)).alias("span"),
-    ).withColumn(
-        "b", F.pmod(rolling_fingerprint(F.col("span")), F.lit(n_buckets))
-    )
-    return grams.groupBy("b").agg(
-        F.count("*").cast("bigint").alias("cr"),
-        F.sum(F.when(F.col("is_target"), 1).otherwise(0)).cast("bigint").alias("ct"),
-    )
-
-
 def dsir_scores(
     docs: DataFrame,
     target: F.Column,
@@ -484,10 +458,9 @@ def dsir_scores(
     every input document (docless-of-bigrams rows score 0).
 
     ``bucket_counts``: optionally score against EXTERNAL models — a
-    (b, cr, ct) table from ``dsir_bucket_counts`` or the streaming fold
-    (streaming/dsir_stream.py).  It must cover the scored docs' buckets
-    (true whenever the model corpus is a superset, e.g. the stream has
-    ingested them); by default the models are fit on ``docs`` itself.
+    (b, cr, ct) table of per-bucket raw/target bigram counts.  It must
+    cover the scored docs' buckets (true whenever the model corpus is a
+    superset); by default the models are fit on ``docs`` itself.
     """
     from ..functions.textqc import rolling_fingerprint
     from .dedup import token_windows
@@ -905,158 +878,6 @@ def bpe_fertility(
     )
 
 
-# ---------------------------------------------------------------------------
-# Trained bigram language-model scoring (the CCNet / KenLM quality filter
-# shape): fit n-gram counts on the TRAIN split only, score every document
-# with stupid-backoff bits-per-token.  Distinct from familiarity_profile
-# (corpus unigram, no split discipline, no backoff): this is the
-# held-out-model path — the score of a train document never depends on
-# val/test text, so the filter itself cannot leak the evaluation set.
-# ---------------------------------------------------------------------------
-
-LM_BACKOFF_BITS = 4  # stupid-backoff penalty per backed-off token (≈ α=1/16)
-
-
-def _doc_tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(doc_id, t: array<string>) — the shared ws tokenization."""
-    from ..functions.textqc import normalized_text, ws_tokens_col
-
-    return widen(docs).select(
-        F.col(id_col).alias("doc_id"),
-        ws_tokens_col(normalized_text(F.col(text_col))).alias("t"),
-    )
-
-
-def _token_pairs(toks: DataFrame) -> DataFrame:
-    """(doc_id, w1, w2) — adjacent token pairs from ``_doc_tokens``
-    output.  ONE definition so LM training and scoring extract pairs
-    identically (the counts and the cost joins must agree bit-for-bit)."""
-    return toks.select(
-        "doc_id",
-        F.explode(
-            F.arrays_zip(
-                F.slice(F.col("t"), 1, F.greatest(F.size("t") - 1, F.lit(0))).alias("w1"),
-                F.slice(F.col("t"), 2, F.greatest(F.size("t") - 1, F.lit(0))).alias("w2"),
-            )
-        ).alias("p"),
-    ).select("doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-
-
-def lm_train_counts(
-    train_docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Bigram LM tables from the training split: (unigrams(w, cnt),
-    bigrams(w1, w2, cnt), total — a 1-row (n_total) frame).
-
-    One tokenization scan feeds both count tables; partial aggregation
-    collapses the Zipf head map-side so each shuffle carries ~|vocab|
-    rows per input partition.  The scalar total rides a broadcast 1-row
-    frame (no driver collect)."""
-    toks = _doc_tokens(train_docs, id_col, text_col)
-    uni = (
-        toks.select(F.explode("t").alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-    )
-    bi = (
-        _token_pairs(toks)
-        .select("w1", "w2")
-        .groupBy("w1", "w2")
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-    )
-    # coalesce so an EMPTY training split yields n_total = 0 (bitlen 0),
-    # matching the oracle's coalesce(sum(cnt), 0) instead of a NULL that
-    # would NULL every downstream cost
-    total = uni.agg(F.coalesce(F.sum("cnt"), F.lit(0)).cast("bigint").alias("n_total"))
-    return uni, bi, total
-
-
-def lm_bits(
-    docs: DataFrame,
-    unigrams: DataFrame,
-    bigrams: DataFrame,
-    total: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Score every document against the trained bigram LM → (doc_id,
-    n_scored, total_bits, bits_per_token_micro, n_backoff, n_oov).
-
-    Per adjacent token pair (w1, w2) the cost in bits, all integer
-    bit-length logs (bitlen(x) = floor(log2 x), the repo-wide convention):
-
-      - bigram seen:    bitlen(U(w1)) − bitlen(B(w1,w2))      (≈ −log2 p)
-      - unigram backoff: LM_BACKOFF_BITS + bitlen(N) − bitlen(U(w2))
-      - OOV:             LM_BACKOFF_BITS + bitlen(N)
-
-    B ≤ U(w1) and U(w2) ≤ N guarantee non-negative costs with no clamps.
-    This is stupid backoff (Brants et al. 2007) with a power-of-two
-    penalty, integer-exact on both engines.  Documents with < 2 tokens
-    score n_scored = 0 / bits 0 (still emitted — the filter must decide
-    on every doc).
-
-    Scale shape: one tokenization scan explodes to (doc, w1, w2) pairs;
-    the model joins are plain equi-joins on token keys (broadcast when
-    the vocab fits, shuffle-on-token otherwise — never on doc), and the
-    per-doc fold is one map-side-combinable groupBy.  Model tables are
-    |vocab|-bounded (Zipf), so at 100 TB the score pass is ~one shuffle
-    of the bigram occurrence stream."""
-    toks = _doc_tokens(docs, id_col, text_col)
-    pairs = _token_pairs(toks).select("doc_id", "w1", "w2")
-    bits = lambda c: (F.length(F.bin(c)) - 1).cast("bigint")  # noqa: E731
-    scored = (
-        pairs.join(
-            bigrams.select("w1", "w2", F.col("cnt").alias("b_cnt")), ["w1", "w2"], "left"
-        )
-        .join(
-            unigrams.select(F.col("w").alias("w1"), F.col("cnt").alias("u1_cnt")),
-            "w1",
-            "left",
-        )
-        .join(
-            unigrams.select(F.col("w").alias("w2"), F.col("cnt").alias("u2_cnt")),
-            "w2",
-            "left",
-        )
-        .join(F.broadcast(total))
-        .select(
-            "doc_id",
-            F.when(F.col("b_cnt").isNotNull(), bits(F.col("u1_cnt")) - bits(F.col("b_cnt")))
-            .when(
-                F.col("u2_cnt").isNotNull(),
-                F.lit(LM_BACKOFF_BITS) + bits(F.col("n_total")) - bits(F.col("u2_cnt")),
-            )
-            .otherwise(F.lit(LM_BACKOFF_BITS) + bits(F.col("n_total")))
-            .cast("bigint")
-            .alias("cost"),
-            F.when(F.col("b_cnt").isNotNull(), 0).otherwise(1).alias("backoff"),
-            F.when(
-                F.col("b_cnt").isNull() & F.col("u2_cnt").isNull(), 1
-            ).otherwise(0).alias("oov"),
-        )
-    )
-    per_doc = scored.groupBy("doc_id").agg(
-        F.count("*").cast("bigint").alias("n_scored"),
-        F.sum("cost").cast("bigint").alias("total_bits"),
-        F.sum("backoff").cast("bigint").alias("n_backoff"),
-        F.sum("oov").cast("bigint").alias("n_oov"),
-    )
-    return (
-        toks.select("doc_id")
-        .join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_scored", F.lit(0)).cast("bigint").alias("n_scored"),
-            F.coalesce("total_bits", F.lit(0)).cast("bigint").alias("total_bits"),
-            F.expr(
-                "CAST(coalesce(total_bits, 0) * 1000000 DIV greatest(coalesce(n_scored, 0), 1) AS BIGINT)"
-            ).alias("bits_per_token_micro"),
-            F.coalesce("n_backoff", F.lit(0)).cast("bigint").alias("n_backoff"),
-            F.coalesce("n_oov", F.lit(0)).cast("bigint").alias("n_oov"),
-        )
-    )
-
-
 def ngram_diversity(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -1183,8 +1004,7 @@ def weak_lf_counters(
     """Raw per-LF counter table → one row per LF: (lf, label, n_docs,
     n_fired, n_overlap, n_conflict, n_agree_vote).  Every column is a
     SUM of per-document indicators, so two counter tables over disjoint
-    corpora merge by summing — the streaming fold in
-    streaming/weak_label_stream.py relies on exactly this.
+    corpora merge by summing.
 
     Scale shape: one pass — the per-doc indicator columns are row-local,
     folded by a single global aggregate (constant width: 4 counters per

@@ -437,85 +437,6 @@ def repeated_span_profile(
     )
 
 
-def strip_repeated_spans(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 30,
-    stride: int = 15,
-) -> DataFrame:
-    """Substring dedup ACTION: remove every token covered by a
-    cross-document repeated span → (doc_id, n_tokens, n_kept,
-    clean_text).
-
-    ``repeated_span_profile`` is the detector; this is the removal step
-    from Lee et al. 2022 (arXiv:2107.06499 — "deduplicating training
-    data makes language models better" cuts the duplicated SUBSTRINGS,
-    not whole documents).  A token survives iff no repeated window
-    (exact token span present in ≥ 2 distinct documents, strided starts
-    0, stride, 2·stride, …) covers its position; clean_text is the
-    surviving tokens of the NORMALIZED text, space-joined in original
-    order.  Documents with no repeated span pass through with
-    n_kept == n_tokens.
-
-    Scale shape: the detector's fingerprint shuffle (int64 per window)
-    plus ONE extra groupBy collecting each doc's repeated-window start
-    offsets — an array bounded by n_tokens/stride — joined back to the
-    doc row; the per-token coverage test then runs as a native
-    higher-order filter (no per-token shuffle, no UDF).  Every stage is
-    map-side combinable or row-local; the only growth is the start-array
-    width on pathological all-boilerplate docs, bounded by doc length.
-    """
-    toks = ws_tokens_col(normalized_text(F.col(text_col)))
-    base = widen(docs).select(
-        F.col(id_col).alias("doc_id"), toks.alias("toks")
-    ).persist()
-    spans = base.select(
-        "doc_id",
-        F.posexplode(
-            F.when(F.size("toks") < window, F.array()).otherwise(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("toks") - window, F.lit(stride)),
-                    lambda i: F.concat_ws(" ", F.slice(F.col("toks"), i + 1, window)),
-                )
-            )
-        ).alias("wi", "span"),
-    ).select("doc_id", (F.col("wi") * stride).alias("start"),
-             rolling_fingerprint(F.col("span")).alias("fp"))
-    spans = spans.persist()
-    rep = (
-        spans.groupBy("fp")
-        .agg(F.count_distinct("doc_id").alias("ddf"))
-        .filter(F.col("ddf") >= 2)
-        .select("fp")
-    )
-    starts = (
-        spans.join(rep, "fp", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.sort_array(F.collect_set("start")).alias("starts"))
-    )
-    joined = base.join(starts, "doc_id", "left").withColumn(
-        "starts", F.coalesce(F.col("starts"), F.array().cast("array<bigint>"))
-    )
-    pos = F.when(F.size("toks") == 0, F.array().cast("array<int>")).otherwise(
-        F.sequence(F.lit(0), F.size("toks") - 1)
-    )
-    kept = F.filter(
-        pos,
-        lambda i: ~F.exists(
-            F.col("starts"), lambda s: (i >= s) & (i < s + window)
-        ),
-    )
-    return joined.select(
-        "doc_id",
-        F.size("toks").cast("bigint").alias("n_tokens"),
-        F.size(kept).cast("bigint").alias("n_kept"),
-        F.concat_ws(
-            " ", F.transform(kept, lambda i: F.element_at(F.col("toks"), i + 1))
-        ).alias("clean_text"),
-    )
-
-
 def winnow_fingerprints(
     docs: DataFrame,
     id_col: str = "doc_id",

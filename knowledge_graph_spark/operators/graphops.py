@@ -631,54 +631,6 @@ def betweenness_sampled(
     return out
 
 
-def neighbor_jaccard_pairs(
-    edges: DataFrame,
-    src: str = "source",
-    dst: str = "target",
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Structural node similarity: (title_a, title_b, inter, union_n,
-    jaccard_micro) for node pairs whose neighbor-set Jaccard ≥ threshold.
-
-    The structural-equivalence signal for entity resolution: two mentions
-    of the same real-world entity connect to the same neighbors even when
-    their surface forms share no text.  Same inverted-index blocking as
-    n-gram dedup — only pairs sharing ≥ 1 neighbor are scored (never a
-    cross join), the common-neighbor count arrives via one equi-join on
-    the shared neighbor + groupBy, and jaccard is exact small-int
-    division floored at micro precision.
-    """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    adj = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    sizes = adj.groupBy("a").agg(F.count("*").cast("bigint").alias("deg"))
-    inter = (
-        adj.select(F.col("a").alias("title_a"), F.col("b").alias("n"))
-        .join(adj.select(F.col("a").alias("title_b"), F.col("b").alias("n")), "n")
-        .filter(F.col("title_a") < F.col("title_b"))
-        .groupBy("title_a", "title_b")
-        .agg(F.count("*").cast("bigint").alias("inter"))
-    )
-    sa = sizes.select(F.col("a").alias("title_a"), F.col("deg").alias("da"))
-    sb = sizes.select(F.col("a").alias("title_b"), F.col("deg").alias("db"))
-    jm = F.floor(
-        F.col("inter").cast("double")
-        * 1_000_000
-        / (F.col("da") + F.col("db") - F.col("inter")).cast("double")
-    ).cast("bigint")
-    return (
-        inter.join(sa, "title_a")
-        .join(sb, "title_b")
-        .select(
-            "title_a",
-            "title_b",
-            "inter",
-            (F.col("da") + F.col("db") - F.col("inter")).cast("bigint").alias("union_n"),
-            jm.alias("jaccard_micro"),
-        )
-        .filter(F.col("jaccard_micro") >= int(threshold * 1_000_000))
-    )
-
-
 def _edge_support(e: DataFrame) -> DataFrame:
     """Per-edge triangle support over a canonical (a < b, distinct)
     undirected edge list → (x, y, sup).  Ordered-wedge enumeration (each

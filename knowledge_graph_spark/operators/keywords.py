@@ -115,144 +115,3 @@ def bm25_top_terms(
         .filter(F.col("rk") <= k_top)
     )
     return out
-
-
-def bm25_search(
-    docs: DataFrame,
-    query_terms: DataFrame,
-    k_top: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """BM25 ranked retrieval: top-``k_top`` documents per query →
-    (query_id, doc_id, n_hit_terms, score_micro, rk).
-
-    ``query_terms`` is the tokenized query table (query_id, term) —
-    distinct terms per query.  Score = Σ over matched terms of a
-    micro-floored per-term contribution; each term's contribution is
-    floored to int64 BEFORE the sum, so the document score is an
-    order-independent integer sum and the DuckDB oracle matches
-    bit-for-bit.  Ties rank by doc_id ascending.
-
-    IDF here is Robertson's odds ratio WITHOUT the log:
-    (n − df + ½)/(df + ½) = (2n − 2df + 1)/(2df + 1), an exact integer
-    ratio evaluated in one double division.  Per-term ranking is
-    monotone-identical to log-idf; the log is omitted because libm
-    rounding differs across engines while this stays bit-exact — and the
-    bit-length idf ``bm25_top_terms`` uses has zero resolution on a
-    corpus whose vocabulary is uniformly common (documented deviation
-    from Okapi; rare terms weigh linearly rather than logarithmically).
-
-    Scale shape: the query table is tiny and broadcast; joining it onto
-    tf FIRST prunes the per-document term table to |queries|·|docs hit|
-    rows before dl/df/g attach (df and dl still aggregate the full
-    corpus — two groupBys with map-side partials).  The final top-k is a
-    per-query window — parallel across queries, and bounded work because
-    only matching docs survive the semi-join.
-    """
-    tf = doc_term_freq(docs, id_col, text_col).persist()
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl"))
-    dfreq = tf.groupBy("term").agg(F.count("*").cast("bigint").alias("df"))
-    g = dl.agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.sum("dl").cast("bigint").alias("total_len"),
-    )
-    q = F.broadcast(query_terms.select("query_id", "term").distinct())
-    idf_odds = (
-        (F.lit(2) * F.col("n_docs") - F.lit(2) * F.col("df") + F.lit(1)).cast("double")
-        / (F.lit(2) * F.col("df") + F.lit(1)).cast("double")
-    )
-    matched = (
-        tf.join(q, "term")
-        .join(dl, "doc_id")
-        .join(dfreq, "term")
-        .crossJoin(F.broadcast(g))
-        .select(
-            "query_id",
-            "doc_id",
-            F.floor(F.lit(float(SCORE_SCALE)) * idf_odds * _satur_col())
-            .cast("bigint")
-            .alias("c"),
-        )
-    )
-    agg = matched.groupBy("query_id", "doc_id").agg(
-        F.count("*").cast("bigint").alias("n_hit_terms"),
-        F.sum("c").cast("bigint").alias("score_micro"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_micro").desc(), F.col("doc_id")
-    )
-    return (
-        agg.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= k_top)
-    )
-
-
-def phrase_postings(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Positional postings (doc_id, pos, term) over normalized whitespace
-    tokens — the index layout behind phrase and proximity queries (pos is
-    1-based to match SQL generate_subscripts)."""
-    return widen(docs).select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(ws_tokens_col(normalized_text(F.col(text_col)))).alias(
-            "pos0", "term"
-        ),
-    ).select("doc_id", (F.col("pos0") + 1).cast("int").alias("pos"), "term")
-
-
-def top_bigram(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """The corpus's most frequent adjacent token pair → 1 row (w1, w2,
-    cnt), ties broken lexicographically.  Deterministic data-derived
-    query seed for the phrase-search gate (no corpus knowledge embedded
-    in code).  TakeOrderedAndProject top-1 — per-partition heaps, no
-    global sort."""
-    p = phrase_postings(docs, id_col, text_col)
-    nxt = p.select(
-        "doc_id", (F.col("pos") - 1).alias("pos"), F.col("term").alias("w2")
-    )
-    return (
-        p.join(nxt, ["doc_id", "pos"])
-        .groupBy(F.col("term").alias("w1"), "w2")
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-        .orderBy(F.desc("cnt"), F.asc("w1"), F.asc("w2"))
-        .limit(1)
-    )
-
-
-def phrase_search(
-    docs: DataFrame,
-    phrase: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Exact-phrase match over the positional index → (doc_id, n_hits,
-    first_pos) for every document containing the 2-token phrase.
-
-    ``phrase`` is a 1-row (w1, w2) frame (e.g. ``top_bigram``'s output);
-    it is broadcast, so the probe is two narrow semi-join-style filters
-    fused into the postings scan followed by ONE self equi-join on
-    (doc_id, pos+1) — the standard positional-intersection plan.  BM25
-    (``bm25_search``) ranks bags of words; this is the missing phrase
-    predicate ("match these tokens ADJACENT, in order") used for quote
-    detection, boilerplate queries, and contamination forensics.
-
-    Scale shape: each side of the position join is pre-filtered to one
-    term's postings (|postings(term)| rows, not |corpus|), the join key
-    (doc_id, pos) is unique per side, and the per-doc fold is map-side
-    combinable."""
-    p = phrase_postings(docs, id_col, text_col)
-    ph = F.broadcast(phrase.select("w1", "w2"))
-    left = p.join(ph, p["term"] == F.col("w1")).select("doc_id", "pos")
-    right = p.join(ph, p["term"] == F.col("w2")).select(
-        "doc_id", (F.col("pos") - 1).alias("pos")
-    )
-    return (
-        left.join(right, ["doc_id", "pos"])
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("bigint").alias("n_hits"),
-            F.min("pos").cast("int").alias("first_pos"),
-        )
-    )

@@ -304,175 +304,3 @@ def apply_canonicalization(
         )
     )
     return cn, ce
-
-
-def fuzzy_alias_pairs(
-    names: DataFrame,
-    name_col: str = "name",
-    max_dist: int = 1,
-) -> DataFrame:
-    """Edit-distance candidate alias pairs → (name_a, name_b, dist).
-
-    Complements the MinHash/Jaccard blocking above with a typo-class
-    signal: surface forms within Levenshtein distance ``max_dist`` (the
-    classic spelling-variant recall stage of entity resolution; verify/
-    score downstream, e.g. via link_aliases or jaccard_verify).
-
-    Blocking is the SymSpell deletion-neighborhood: every string is
-    expanded to itself plus all single-character deletions, candidates
-    are pairs sharing a variant (for max_dist=1 this blocking is EXACT —
-    lev(a,b)<=1 iff their deletion neighborhoods intersect), and the
-    final native ``levenshtein`` filter removes collisions such as
-    transposed pairs at distance 2.  Everything is Column algebra: the
-    variant expansion is a transform/sequence lambda (no Python UDF),
-    the candidate step is an equi-join on the variant string — never a
-    cross join — and the variant table is ~(1+len) rows per name, the
-    standard space/recall trade of delete-only indexes.
-
-    ``max_dist`` > 1 falls back to the same blocking with a wider
-    verify, which loses the exactness guarantee (distance-2 pairs that
-    share no deletion variant are missed) — documented recall stage.
-    """
-    variants = F.concat(
-        F.array(F.col("nm")),
-        F.expr(
-            "transform(sequence(1, length(nm)), i -> "
-            "concat(substr(nm, 1, i - 1), substr(nm, i + 1, length(nm))))"
-        ),
-    )
-    v = (
-        names.select(F.col(name_col).alias("nm"))
-        .distinct()
-        .select("nm", F.explode(variants).alias("var"))
-        .distinct()
-    )
-    pairs = (
-        v.alias("x")
-        .join(v.alias("y"), "var")
-        .filter(F.col("x.nm") < F.col("y.nm"))
-        .select(F.col("x.nm").alias("name_a"), F.col("y.nm").alias("name_b"))
-        .distinct()
-    )
-    return (
-        pairs.withColumn(
-            "dist", F.levenshtein("name_a", "name_b").cast("int")
-        )
-        .filter(F.col("dist") <= max_dist)
-    )
-
-
-def name_shingle_pairs(
-    nodes: DataFrame,
-    name_col: str = "title",
-    k: int = 3,
-    max_shingle_df: int = 1000,
-) -> DataFrame:
-    """Exact character-shingle name Jaccard → (name_a, name_b, name_micro)
-    for candidate pairs sharing ≥ 1 k-gram shingle.
-
-    The native-Column twin of the MinHash path above (same normalization
-    and shingle set as _shingles/make_minhash_udf, reference clean_str
-    semantics): inverted-index blocking on the shingle (equi-join, never
-    a cross join) with a document-frequency cap on stop-shingles — the
-    same skew bomb n-gram dedup defuses — and the Jaccard reported as an
-    exact floored micro fraction of small-int counts.
-    """
-    norm = F.regexp_replace(F.upper(F.trim(F.col(name_col))), r"\s+", " ")
-    t = (
-        nodes.select(F.col(name_col).alias("t"), norm.alias("s"))
-        .filter(F.col("s") != "")
-        .distinct()
-    )
-    grams = F.when(F.length("s") <= k, F.array(F.col("s"))).otherwise(
-        F.expr(f"transform(sequence(1, length(s) - {k - 1}), i -> substr(s, i, {k}))")
-    )
-    g = t.select("t", F.explode(grams).alias("g")).distinct()
-    sizes = g.groupBy("t").agg(F.count("*").cast("bigint").alias("n"))
-    rare = (
-        g.groupBy("g").agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= max_shingle_df)
-        .select("g")
-    )
-    p = g.join(rare, "g")
-    inter = (
-        p.select(F.col("t").alias("name_a"), "g")
-        .join(p.select(F.col("t").alias("name_b"), "g"), "g")
-        .filter(F.col("name_a") < F.col("name_b"))
-        .groupBy("name_a", "name_b")
-        .agg(F.count("*").cast("bigint").alias("inter"))
-    )
-    sa = sizes.select(F.col("t").alias("name_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("t").alias("name_b"), F.col("n").alias("nb"))
-    nm = F.floor(
-        F.col("inter").cast("double")
-        * 1_000_000
-        / (F.col("na") + F.col("nb") - F.col("inter")).cast("double")
-    ).cast("bigint")
-    return (
-        inter.join(sa, "name_a")
-        .join(sb, "name_b")
-        .select("name_a", "name_b", nm.alias("name_micro"))
-    )
-
-
-def link_scores(
-    nodes: DataFrame,
-    edges: DataFrame,
-    name_col: str = "title",
-    max_dist: int = 1,
-    k: int = 3,
-    weights: tuple = (4, 3, 3),
-    max_shingle_df: int = 1000,
-) -> DataFrame:
-    """Composite entity-link candidate scores — the north-star "entity-link
-    scoring" generalized to three fused signals per candidate pair:
-
-    - ``name_micro``: exact shingle Jaccard of normalized surface forms,
-    - ``edit_micro``: Levenshtein similarity ((max_dist+1-d)/(max_dist+1)),
-      deletion-neighborhood blocked,
-    - ``struct_micro``: neighbor-set Jaccard over the co-occurrence graph
-      (two mentions of one entity share neighbors even with disjoint text),
-
-    combined as an integer weighted mean ``score_micro``.  A pair appears
-    when ANY signal fires (union of the three blocked candidate sets —
-    each blocking is an equi-join; no cross join anywhere).  Downstream:
-    feed ``score_micro >= τ`` pairs to canonical_map as the similarity
-    graph.  All arithmetic is exact micro-integers, so the full score
-    table is oracle-checkable bit-for-bit.
-    """
-    from .graphops import neighbor_jaccard_pairs
-
-    w_name, w_struct, w_edit = weights
-    nm = name_shingle_pairs(nodes, name_col, k, max_shingle_df)
-    ed = fuzzy_alias_pairs(
-        nodes.select(F.col(name_col).alias("name")), "name", max_dist
-    ).select(
-        "name_a",
-        "name_b",
-        F.expr(f"(({max_dist + 1} - dist) * 1000000) div {max_dist + 1}")
-        .cast("bigint")
-        .alias("edit_micro"),
-    )
-    st = neighbor_jaccard_pairs(edges, threshold=0.0).select(
-        F.col("title_a").alias("name_a"),
-        F.col("title_b").alias("name_b"),
-        F.col("jaccard_micro").alias("struct_micro"),
-    )
-    full = (
-        nm.join(ed, ["name_a", "name_b"], "full_outer")
-        .join(st, ["name_a", "name_b"], "full_outer")
-        .fillna(0, subset=["name_micro", "edit_micro", "struct_micro"])
-    )
-    denom = w_name + w_struct + w_edit
-    score = F.expr(
-        f"({w_name} * name_micro + {w_struct} * struct_micro"
-        f" + {w_edit} * edit_micro) div {denom}"
-    )
-    return full.select(
-        "name_a",
-        "name_b",
-        "name_micro",
-        "edit_micro",
-        "struct_micro",
-        score.cast("bigint").alias("score_micro"),
-    )

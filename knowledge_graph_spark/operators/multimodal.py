@@ -110,74 +110,3 @@ def frame_sample_plan(meta: DataFrame, every_ms: int = 1000) -> DataFrame:
             F.sequence(F.lit(0), F.greatest(F.col("duration_ms") - 1, F.lit(0)), F.lit(every_ms))
         ).alias("frame_ts_ms"),
     )
-
-
-def resize_plan(meta: DataFrame, max_edge: int = 512) -> DataFrame:
-    """Aspect-preserving resize plan per visual asset → (doc_id,
-    media_type, width, height, target_w, target_h, needs_resize).
-
-    The planning half of a resize stage: pure integer arithmetic
-    (floor scaling via DIV — deterministic, oracle-exact), so the
-    expensive pixel work (the stubbed decode seam) only runs on rows
-    with ``needs_resize``.  Native Column algebra, no Python.
-    """
-    v = meta.filter(F.col("media_type").isin("image", "video"))
-    long_edge = F.greatest("width", "height")
-    needs = long_edge > max_edge
-    tw = F.when(needs, F.expr(f"CAST(width * {max_edge} AS BIGINT) DIV greatest(width, height)")).otherwise(
-        F.col("width").cast("bigint")
-    )
-    th = F.when(needs, F.expr(f"CAST(height * {max_edge} AS BIGINT) DIV greatest(width, height)")).otherwise(
-        F.col("height").cast("bigint")
-    )
-    return v.select(
-        "doc_id",
-        "media_type",
-        "width",
-        "height",
-        tw.cast("int").alias("target_w"),
-        th.cast("int").alias("target_h"),
-        needs.alias("needs_resize"),
-    )
-
-
-FEATURE_NIBBLES = "0123456789abcdef"
-
-
-def extract_features(media: DataFrame, feature_stub: bool = True) -> DataFrame:
-    """Arrow-batched per-asset feature extraction over ``mapInPandas`` →
-    long-form feature vector (doc_id, media_type, dim, value).
-
-    The model seam for CLIP/CLAP-style embedding extraction: the
-    batching, schema, and partitioning are the real 100 TB plumbing
-    (constant memory per task — one output frame per Arrow batch); the
-    feature CONTENT is a deterministic stand-in (nibble histogram of the
-    payload's md5 — 16 dims), since no vision/audio model ships in this
-    container.  ``feature_stub=False`` raises at the exact line a real
-    encoder plugs in.  Long form (one row per dim) keeps the gate
-    value-hash exact without array-formatting drift between engines.
-    """
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("media_type", T.StringType()),
-            T.StructField("dim", T.IntegerType()),
-            T.StructField("value", T.LongType()),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not feature_stub:
-                raise NotImplementedError(
-                    "real feature extraction requires a vision/audio model; "
-                    "run with feature_stub=True in this environment"
-                )
-            out = []
-            for r in pdf.itertuples():
-                h = hashlib.md5(bytes(r.payload)).hexdigest()
-                for d, nib in enumerate(FEATURE_NIBBLES):
-                    out.append((r.doc_id, r.media_type, d, h.count(nib)))
-            yield pd.DataFrame(out, columns=["doc_id", "media_type", "dim", "value"])
-
-    return media.mapInPandas(gen, schema=schema)

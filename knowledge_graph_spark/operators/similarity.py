@@ -145,79 +145,6 @@ def ivf_topk(
     return scored.withColumn("rk", F.row_number().over(w).cast("int")).filter(F.col("rk") <= k)
 
 
-def ivf_probe_cells(vec: F.Column, bits: int = 8, nprobe: int = 1) -> F.Column:
-    """Multi-probe cell list for a query vector: the home cell plus the
-    cells reached by flipping the ``nprobe - 1`` LEAST-CONFIDENT sign
-    bits — the dimensions with the smallest |value| among the first
-    ``bits``, ties broken by dimension index.  This is the standard
-    multi-probe LSH recall lever (probe the buckets the vector almost
-    landed in) with a deterministic, closed-form perturbation order, so
-    a SQL oracle can enumerate the identical probe set.  All probes are
-    distinct by construction (each flips a different bit)."""
-    cell = ivf_cell(vec, bits)
-    if nprobe <= 1:
-        return F.array(cell)
-    pow2 = F.array(*[F.lit(1 << i).cast("bigint") for i in range(bits)])
-    flip_dims = F.transform(
-        F.slice(
-            F.array_sort(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(bits - 1)),
-                    lambda i: F.struct(
-                        F.abs(F.element_at(vec, i + 1).cast("double")).alias("a"),
-                        i.cast("int").alias("i"),
-                    ),
-                )
-            ),
-            1,
-            nprobe - 1,
-        ),
-        lambda s: s["i"],
-    )
-    return F.concat(
-        F.array(cell),
-        F.transform(flip_dims, lambda i: cell.bitwiseXOR(F.element_at(pow2, i + 1))),
-    )
-
-
-def ivf_topk_multiprobe(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    bits: int = 8,
-    nprobe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF ANN probing ``nprobe`` cells per query (home cell + least-
-    confident bit flips).  Same output shape as ivf_topk; recall rises
-    toward exact as nprobe grows while the scan stays an equi-join on
-    cell id — probe cost is nprobe/2^bits of the corpus per query, vs
-    the full corpus for cosine_topk.  nprobe=1 is exactly ivf_topk."""
-    c = _with_unit(_as_double(corpus, vec_col), vec_col, "u").select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("u").alias("cvec"),
-        ivf_cell(F.col(vec_col), bits).alias("cell"),
-    )
-    q = _with_unit(_as_double(queries, vec_col), vec_col, "u").select(
-        F.col(id_col).alias("query_id"),
-        F.col("u").alias("qvec"),
-        F.explode(ivf_probe_cells(F.col(vec_col), bits, nprobe)).alias("cell"),
-    )
-    scored = c.join(F.broadcast(q), "cell").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        "neighbor_id",
-        "cell",
-        F.floor(_dot(F.col("qvec"), F.col("cvec")) * SIM_SCALE)
-        .cast("bigint")
-        .alias("sim_micro"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim_micro"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w).cast("int")).filter(F.col("rk") <= k)
-
-
 def cosine_neardup_pairs(
     corpus: DataFrame,
     threshold: float = 0.9,
@@ -354,158 +281,6 @@ def neardup_pairs_fast(
         .cogroup(right.groupBy("bi", "bj"))
         .applyInPandas(cell, schema="id_a bigint, id_b bigint, sim_micro bigint")
     )
-
-
-def cosine_topk_fast(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rows_per_block: int = 4096,
-) -> DataFrame:
-    """Top-k via distributed block-matmul: queries hashed to QB blocks,
-    corpus rows exploded across the QB query blocks, one sgemm per
-    (query-block × corpus-partition-batch) group emitting a per-group
-    top-k (≤ k rows per query per corpus block), then the same global
-    (sim desc, id asc) window as the exact variant.  No driver collect;
-    per-task memory bounded by one query block + one corpus block."""
-    QB = _num_blocks(queries, rows_per_block)
-    CB = _num_blocks(corpus, rows_per_block, fill_cluster=True)
-    q = queries.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")
-    ).withColumn("qb", F.pmod(F.xxhash64(F.col("vid")), F.lit(QB)).cast("int"))
-    qx = q.select(
-        "qb",
-        F.explode(F.sequence(F.lit(0), F.lit(CB - 1))).alias("cb"),
-        "vid",
-        "vec",
-    )
-    # distinct corpus-side names: same attribute-dedup hazard as in
-    # neardup_pairs_fast when queries and corpus share a lineage
-    c = corpus.select(
-        F.col(id_col).alias("vid_c"), F.col(vec_col).alias("vec_c")
-    ).withColumn("cb", F.pmod(F.xxhash64(F.col("vid_c")), F.lit(CB)).cast("int"))
-    cx = c.select(
-        F.explode(F.sequence(F.lit(0), F.lit(QB - 1))).alias("qb"), "cb", "vid_c", "vec_c"
-    )
-
-    def cell(key, qpdf, cpdf):
-        empty = pd.DataFrame({"query_id": [], "neighbor_id": [], "sim_micro": []}).astype(
-            {"query_id": "int64", "neighbor_id": "int64", "sim_micro": "int64"}
-        )
-        if len(qpdf) == 0 or len(cpdf) == 0:
-            return empty
-        qm, cm = _to_matrix(qpdf, "vec"), _to_matrix(cpdf, "vec_c")
-        qid, cid = qpdf["vid"].to_numpy(), cpdf["vid_c"].to_numpy()
-        sims = qm @ cm.T
-        sims_mi = np.floor(sims * SIM_SCALE).astype("int64")
-        frames = []
-        for i in range(len(qid)):
-            row = sims_mi[i]
-            mask = cid != qid[i]
-            nbr, sv = cid[mask], row[mask]
-            if len(nbr) == 0:
-                continue
-            # local top-k (sim desc, id asc) — shrinks shuffle to ≤k/query/cell
-            order = np.lexsort((nbr, -sv))[:k]
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "query_id": np.full(len(order), qid[i], dtype="int64"),
-                        "neighbor_id": nbr[order].astype("int64"),
-                        "sim_micro": sv[order],
-                    }
-                )
-            )
-        return pd.concat(frames) if frames else empty
-
-    scored = (
-        qx.groupBy("qb", "cb")
-        .cogroup(cx.groupBy("qb", "cb"))
-        .applyInPandas(cell, schema="query_id bigint, neighbor_id bigint, sim_micro bigint")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim_micro"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w).cast("int")).filter(F.col("rk") <= k)
-
-
-QUANT_LEVELS = 127  # int8 symmetric quantization
-
-
-def with_int8(df: DataFrame, vec_col: str = "embedding", out_col: str = "q") -> DataFrame:
-    """Adds a per-vector symmetrically quantized int copy of the vector:
-    ``q_i = floor(v_i * 127 / max_j |v_j|)``.  At corpus scale the int8
-    codes are what sits in memory/storage for the first ANN pass — a 4×
-    cut vs fp32 (8× vs fp64) — while the float vectors are only touched
-    for the candidate rerank.  floor (not round-half-even) keeps the code
-    closed-form and bit-identical on every engine; the ≤½-level bias is
-    irrelevant to a candidate-generation pass."""
-    mx = F.aggregate(
-        F.col(vec_col), F.lit(0.0), lambda acc, v: F.greatest(acc, F.abs(v))
-    )
-    return (
-        df.withColumn("__mx", F.greatest(mx, F.lit(1e-12)))
-        .withColumn(
-            out_col,
-            F.transform(
-                F.col(vec_col),
-                lambda v: F.floor(v * QUANT_LEVELS / F.col("__mx")).cast("long"),
-            ),
-        )
-        .drop("__mx")
-    )
-
-
-def _int_dot(a: F.Column, b: F.Column) -> F.Column:
-    # exact int64 arithmetic: |q| <= 127, so d <= 16129·dim « 2^62
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
-def quantized_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    oversample: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Two-pass ANN: int8 dot product selects ``k * oversample``
-    candidates per query, exact unit-vector cosine reranks to the final
-    top-k.  Same output shape as cosine_topk; recall < 1 only where the
-    quantized ordering flips a pair that the oversample margin misses.
-    The approx pass is integer-only (SIMD-friendly, bit-stable across
-    engines); the rerank uses the same sequential fold as the exact
-    operator, so the emitted sim_micro values hash-match the oracle."""
-    c = with_int8(_with_unit(_as_double(corpus, vec_col), vec_col, "u"), vec_col, "q").select(
-        F.col(id_col).alias("neighbor_id"), F.col("u").alias("cvec"), F.col("q").alias("cq")
-    )
-    q = with_int8(_with_unit(_as_double(queries, vec_col), vec_col, "u"), vec_col, "q").select(
-        F.col(id_col).alias("query_id"), F.col("u").alias("qvec"), F.col("q").alias("qq")
-    )
-    scored = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).select(
-        "query_id",
-        "neighbor_id",
-        "cvec",
-        "qvec",
-        _int_dot(F.col("qq"), F.col("cq")).alias("qdot"),
-    )
-    w1 = Window.partitionBy("query_id").orderBy(F.desc("qdot"), F.asc("neighbor_id"))
-    cand = scored.withColumn("crk", F.row_number().over(w1)).filter(
-        F.col("crk") <= k * oversample
-    )
-    rer = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.floor(_dot(F.col("qvec"), F.col("cvec")) * SIM_SCALE)
-        .cast("bigint")
-        .alias("sim_micro"),
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("sim_micro"), F.asc("neighbor_id"))
-    return rer.withColumn("rk", F.row_number().over(w2).cast("int")).filter(F.col("rk") <= k)
 
 
 def hyperplane_sig_bit(vec: F.Column, dim: int, n_planes: int, j: int) -> F.Column:
@@ -704,46 +479,6 @@ def semantic_dedup_kmeans(
             F.coalesce("dup_of", "vec_id").alias("canonical_id"),
             F.col("dup_of").isNotNull().alias("is_pruned"),
         )
-    )
-
-
-def topk_recall(
-    exact: DataFrame,
-    approx: DataFrame,
-    query_col: str = "query_id",
-    id_col: str = "neighbor_id",
-) -> DataFrame:
-    """ANN index quality audit: per-query recall@k of an approximate
-    top-k result against the exact scan → (query_id, n_exact, n_hit,
-    recall_micro).
-
-    The measurement you run before trusting an IVF/LSH index at corpus
-    scale (recall@k is THE standard ANN quality metric).  recall_micro =
-    floor(1e6 · |approx ∩ exact| / |exact|) — one double division of
-    exact small ints, bit-stable cross-engine.
-
-    Scale shape: one equi-join on (query, neighbor) + two combinable
-    groupBys on query_id — all shuffles keyed by query, no skew pivot
-    (every query contributes exactly k rows).  Works on any pair of
-    result tables sharing the (query, id) shape, so the same audit
-    covers IVF, multi-probe, quantized, and LSH variants.
-    """
-    e = exact.select(query_col, id_col)
-    a = approx.select(query_col, id_col)
-    hits = (
-        e.join(a, [query_col, id_col])
-        .groupBy(query_col)
-        .agg(F.count("*").cast("bigint").alias("n_hit"))
-    )
-    tot = e.groupBy(query_col).agg(F.count("*").cast("bigint").alias("n_exact"))
-    n_hit = F.coalesce("n_hit", F.lit(0)).cast("bigint")
-    return tot.join(hits, query_col, "left").select(
-        query_col,
-        "n_exact",
-        n_hit.alias("n_hit"),
-        F.floor(n_hit * F.lit(1_000_000) / F.col("n_exact"))
-        .cast("bigint")
-        .alias("recall_micro"),
     )
 
 

@@ -36,7 +36,6 @@ from ..functions.textqc import FP_BASE, FP_MOD
 
 HLL_P = 8  # 2^8 = 256 registers
 HLL_SCALE = 1 << 30  # fixed-point base for sum(2^-rank): SCALE >> rank
-EST_SCALE = 10**6
 
 
 def poly_hash_col(c) -> F.Column:

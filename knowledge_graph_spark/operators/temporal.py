@@ -20,7 +20,7 @@ Scale notes:
 - The window is ROWS UNBOUNDED PRECEDING over a single sort — no
   per-row join amplification, memory bounded by the run length of one
   key within a partition (streamed by Spark's window operator).
-- ``window_rollup`` is a plain groupBy on (bucket, dims): map-side
+- ``window_rollup`` is a plain groupBy on (bucket, event_type): map-side
   partial aggregation applies; one shuffle.
 """
 
@@ -101,26 +101,23 @@ def asof_join(
 def window_rollup(
     events: DataFrame,
     width: str = "1 hour",
-    ts_col: str = "ts",
-    dims: list[str] | None = None,
     value_col: str = "value",
 ) -> DataFrame:
-    """Tumbling-window aggregate: (window_start_us, *dims, n_events,
+    """Tumbling-window aggregate: (window_start_us, event_type, n_events,
     total_value).  Buckets align to the epoch origin (UTC), matching
     DuckDB's time_bucket; value sums are DECIMAL-exact then cast back to
     double for a stable schema.  The same expression works under
     Structured Streaming (F.window is the streaming group key)."""
-    dims = dims if dims is not None else ["event_type"]
     return (
         events.withColumn("_val", F.col(value_col).cast("decimal(18,2)"))
-        .groupBy(F.window(F.col(ts_col).cast("timestamp"), width).alias("__w"), *dims)
+        .groupBy(F.window(F.col("ts").cast("timestamp"), width).alias("__w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.sum("_val").cast("double").alias("total_value"),
         )
         .select(
             F.unix_micros(F.col("__w.start")).alias("window_start_us"),
-            *dims,
+            "event_type",
             "n_events",
             "total_value",
         )
@@ -162,65 +159,6 @@ def edge_time_ranges(raw_records: DataFrame, transcripts: DataFrame) -> DataFram
             F.min("c_first").alias("first_seen"),
             F.max("c_last").alias("last_seen"),
             F.countDistinct("conv_id").cast("bigint").alias("n_convs"),
-        )
-    )
-
-
-def hourly_anomalies(
-    events: DataFrame,
-    width: str = "1 hour",
-    ts_col: str = "ts",
-    dims: list[str] | None = None,
-    sigma: int = 3,
-) -> DataFrame:
-    """Volume-spike detection over the tumbling-window counts →
-    (window_start_us, *dims, n_events, dev_num, bound_num, is_anomaly).
-
-    The standard ingest-quality monitor (a crawler stall or a runaway
-    producer shows up as an hourly-count outlier) in exact integer
-    arithmetic: for each dim group with per-window counts x_1..x_n the
-    z-test |x − mean| > sigma·std is equivalent — after multiplying
-    through by n² — to
-
-        (n·x − Σx)²  >  sigma² · (n·Σx² − (Σx)²)
-
-    which is pure int64, so the DuckDB oracle matches bit-for-bit (no
-    sqrt, no float variance).  ``dev_num`` and ``bound_num`` are the two
-    sides of that inequality.
-
-    int64 bound: n·Σx² must stay < 2^63 — holds while
-    n_windows·max_count² ≤ 9.2e18 (e.g. 10k windows of ≤ 30M events);
-    beyond that, pre-aggregate to coarser windows or go decimal(38,0) —
-    same expression shape on both engines.
-
-    Scale shape: one groupBy for the rollup (map-side partial), then the
-    per-dim moment aggregation is |windows|-sized — tiny — and rejoins
-    the rollup on the dim key (broadcast).  No per-row window functions.
-    """
-    dims = dims if dims is not None else ["event_type"]
-    counts = window_rollup(events, width, ts_col=ts_col, dims=dims).select(
-        "window_start_us", *dims, "n_events"
-    )
-    moments = counts.groupBy(*dims).agg(
-        F.count("*").cast("bigint").alias("n_w"),
-        F.sum("n_events").cast("bigint").alias("sum_x"),
-        F.sum(F.col("n_events") * F.col("n_events")).cast("bigint").alias("sum_x2"),
-    )
-    dev = F.col("n_w") * F.col("n_events") - F.col("sum_x")
-    dev_num = (dev * dev).cast("bigint")
-    bound_num = (
-        F.lit(sigma * sigma)
-        * (F.col("n_w") * F.col("sum_x2") - F.col("sum_x") * F.col("sum_x"))
-    ).cast("bigint")
-    return (
-        counts.join(F.broadcast(moments), dims)
-        .select(
-            "window_start_us",
-            *dims,
-            F.col("n_events").cast("bigint").alias("n_events"),
-            dev_num.alias("dev_num"),
-            bound_num.alias("bound_num"),
-            (dev_num > bound_num).alias("is_anomaly"),
         )
     )
 
@@ -300,84 +238,6 @@ def session_rollup(
             "n_events",
             "total_value",
         )
-    )
-
-
-def interval_overlaps(
-    intervals: DataFrame,
-    key_col: str = "user_id",
-    id_col: str = "session_id",
-    start_col: str = "start_us",
-    end_col: str = "end_us",
-    bucket_us: int = 3_600_000_000,
-) -> DataFrame:
-    """Interval overlap join (self): for every interval, how many
-    intervals of OTHER keys overlap it in time → (key, id, start, end,
-    n_concurrent).  Concurrency analytics: simultaneous sessions,
-    capacity planning, incident blast-radius.
-
-    Spark has no native range/interval join — a raw ``a.start <= b.end
-    AND b.start <= a.end`` predicate plans a nested-loop join (O(n·m),
-    the classic Spark range-join trap).  The scale-correct shape used
-    here: explode each interval over the fixed-width time buckets it
-    covers, EQUI-join on bucket (hash shuffle, AQE-skew-splittable),
-    dedup pairs, then verify the exact overlap predicate.  Work is
-    O(overlapping pairs + intervals·buckets_spanned); pick ``bucket_us``
-    near the typical interval length so both terms stay linear-ish.
-    The gate's DuckDB oracle runs the NATIVE quadratic range join
-    (IEJoin) — an independent implementation, not a mirror.
-    """
-    b = intervals.select(
-        key_col,
-        id_col,
-        start_col,
-        end_col,
-        F.explode(
-            F.sequence(
-                F.expr(f"{start_col} DIV {bucket_us}"),
-                F.expr(f"{end_col} DIV {bucket_us}"),
-            )
-        ).alias("__bucket"),
-    )
-    a = b.select(
-        F.col("__bucket"),
-        F.col(key_col).alias("__ka"),
-        F.col(id_col).alias("__ia"),
-        F.col(start_col).alias("__sa"),
-        F.col(end_col).alias("__ea"),
-    )
-    c = b.select(
-        F.col("__bucket"),
-        F.col(key_col).alias("__kb"),
-        F.col(id_col).alias("__ib"),
-        F.col(start_col).alias("__sb"),
-        F.col(end_col).alias("__eb"),
-    )
-    pairs = (
-        a.join(c, "__bucket")
-        .filter(
-            (F.col("__ka") != F.col("__kb"))
-            & (F.col("__ia") < F.col("__ib"))
-            & (F.col("__sa") <= F.col("__eb"))
-            & (F.col("__sb") <= F.col("__ea"))
-        )
-        .select("__ia", "__ib")
-        .distinct()
-    )
-    cnt = (
-        pairs.select(F.col("__ia").alias("__id"))
-        .unionByName(pairs.select(F.col("__ib").alias("__id")))
-        .groupBy("__id")
-        .agg(F.count("*").cast("bigint").alias("n_concurrent"))
-    )
-    return intervals.join(
-        cnt, intervals[id_col] == cnt["__id"], "left"
-    ).select(
-        key_col,
-        id_col,
-        start_col,
-        end_col,
-        F.coalesce("n_concurrent", F.lit(0)).cast("bigint").alias("n_concurrent"),
     )
 
 
@@ -568,81 +428,6 @@ def lateness_profile(transcripts: DataFrame) -> DataFrame:
     )
 
 
-def kg_churn(raw_records: DataFrame, transcripts: DataFrame) -> DataFrame:
-    """Hour-over-hour KG edge-set churn → (hour_epoch, n_prev, n_curr,
-    n_inter, n_added, n_removed, jaccard_micro).
-
-    The temporal-stability twin of `q_kg_growth`'s first-seen curve: an
-    edge is ACTIVE in hour h when some conversation asserting it starts
-    in h (conversation first-timestamp granularity, the same convention
-    as edge_time_ranges); consecutive active-hour edge sets are compared
-    by exact intersection / Jaccard.  A healthy ingest shows high
-    hour-over-hour overlap on a stable entity core; a schema change,
-    crawler swap, or extraction regression shows up as a Jaccard cliff
-    long before it distorts the merged KG.  Hours with no active edges
-    produce no row (the definition is over observed hours; both engines
-    share it).
-
-    Scale shape: the (pair, hour) frame is distinct-reduced first; the
-    previous-hour comparison is one self-equi-join on (pair, h−3600) and
-    one on the hour key — shuffles keyed on pair/hour, no windows, no
-    driver state.  All arithmetic int64 (jaccard in exact micros,
-    DIV-guarded)."""
-    from .parse import parse_relationships, split_records
-
-    rel = parse_relationships(split_records(raw_records))
-    conv_ts = transcripts.groupBy("conv_id").agg(F.min("ts").alias("c_first"))
-    occ = (
-        rel.select(
-            F.least("source", "target").alias("source"),
-            F.greatest("source", "target").alias("target"),
-            "conv_id",
-        )
-        .join(conv_ts, "conv_id")
-        .select(
-            "source",
-            "target",
-            F.expr("unix_timestamp(c_first) DIV 3600 * 3600").alias("h"),
-        )
-        .distinct()
-    )
-    counts = occ.groupBy("h").agg(F.count("*").cast("bigint").alias("n_curr"))
-    prev_counts = counts.select(
-        (F.col("h") + 3600).alias("h"), F.col("n_curr").alias("n_prev")
-    )
-    inter = (
-        occ.alias("cur")
-        .join(
-            occ.select("source", "target", (F.col("h") + 3600).alias("h")).alias("prv"),
-            ["source", "target", "h"],
-        )
-        .groupBy("h")
-        .agg(F.count("*").cast("bigint").alias("n_inter"))
-    )
-    return (
-        counts.join(prev_counts, "h", "left")
-        .join(inter, "h", "left")
-        .select(
-            F.col("h").cast("bigint").alias("hour_epoch"),
-            F.coalesce("n_prev", F.lit(0)).cast("bigint").alias("n_prev"),
-            "n_curr",
-            F.coalesce("n_inter", F.lit(0)).cast("bigint").alias("n_inter"),
-            (F.col("n_curr") - F.coalesce("n_inter", F.lit(0)))
-            .cast("bigint")
-            .alias("n_added"),
-            (F.coalesce("n_prev", F.lit(0)) - F.coalesce("n_inter", F.lit(0)))
-            .cast("bigint")
-            .alias("n_removed"),
-            F.expr(
-                "coalesce(n_inter, 0) * 1000000 DIV greatest(1, "
-                "coalesce(n_prev, 0) + n_curr - coalesce(n_inter, 0))"
-            )
-            .cast("bigint")
-            .alias("jaccard_micro"),
-        )
-    )
-
-
 def kg_version_diff(
     old: DataFrame,
     new: DataFrame,
@@ -656,10 +441,9 @@ def kg_version_diff(
     The CDC-companion audit: given two committed edge tables (two
     ``edges__v{k}`` versions, an as-of snapshot vs the current graph, a
     pre- vs post-retraction state), report exactly which relationships
-    appeared, vanished, or changed co-occurrence weight.  ``kg_churn``
-    summarizes drift per hour as one Jaccard number; this is the
-    row-level account a takedown review or extraction-regression triage
-    actually reads.
+    appeared, vanished, or changed co-occurrence weight: the row-level
+    account a takedown review or extraction-regression triage actually
+    reads.
 
     Scale shape: ONE full-outer shuffle join on the edge key — both
     sides hash-partition on (source, target), so the join co-locates;

@@ -28,8 +28,7 @@ presentation-layer provenance, not merge state.
 
 Assumption (documented contract): conversations arrive atomically — all
 turns of a conv_id land in one micro-batch.  Cross-batch conversation
-stitching would need a session-window + watermark aggregation
-(``stateful.turn_counts`` shows the watermark pattern).
+stitching would need a session-window + watermark aggregation.
 
 Commit protocol: ``streaming/commit.py``.  Every fold writes fresh
 ``__v{k+1}`` / segment tables, then publishes them with ONE marker write

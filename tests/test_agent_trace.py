@@ -239,36 +239,3 @@ def test_null_robustness(spark):
     assert tool_latency(t).count() == 2
     shapes = {r.conv_id: r.n_tool_calls for r in conversation_shapes(t).collect()}
     assert shapes == {"c1": 0, "c2": 0, "c3": 2}  # NULL tool != '' is false
-
-
-def test_multimodal_resize_and_features(spark):
-    from knowledge_graph_spark.operators import multimodal
-
-    docs = spark.createDataFrame(
-        [(0, "an image doc"), (1, "an audio doc"), (2, "a video doc")],
-        "doc_id long, text string",
-    )
-    media = multimodal.attach_payload(docs)
-    meta = multimodal.extract_media_meta(media)
-    rp = {r.doc_id: r for r in multimodal.resize_plan(meta, max_edge=512).collect()}
-    assert set(rp) == {0, 2}  # image + video only
-    for r in rp.values():
-        long_edge = max(r.width, r.height)
-        if long_edge > 512:
-            assert r.needs_resize
-            assert r.target_w == r.width * 512 // long_edge
-            assert r.target_h == r.height * 512 // long_edge
-            assert max(r.target_w, r.target_h) == 512
-        else:
-            assert (r.target_w, r.target_h) == (r.width, r.height)
-    feats = multimodal.extract_features(media).collect()
-    assert len(feats) == 3 * 16
-    by_doc = {}
-    for r in feats:
-        by_doc.setdefault(r.doc_id, 0)
-        by_doc[r.doc_id] += r.value
-    assert all(v == 32 for v in by_doc.values())  # md5 hex has 32 nibbles
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="NotImplementedError|feature extraction"):
-        multimodal.extract_features(media, feature_stub=False).collect()

@@ -174,73 +174,6 @@ def test_pagerank_int_vs_local(spark):
     assert got["c"] > got["e"]
 
 
-def test_neighbor_jaccard_vs_local(spark):
-    from knowledge_graph_spark.operators.graphops import neighbor_jaccard_pairs
-
-    # a and b share neighbors {x, y}; a also -> z
-    edges = [("a", "x"), ("a", "y"), ("a", "z"), ("b", "x"), ("b", "y")]
-    df = spark.createDataFrame(edges, "source string, target string")
-    out = {
-        (r.title_a, r.title_b): r
-        for r in neighbor_jaccard_pairs(df, threshold=0.0).collect()
-    }
-    r = out[("a", "b")]
-    assert r.inter == 2 and r.union_n == 3  # {x,y} / {x,y,z}
-    assert r.jaccard_micro == 666_666
-    # x and y both neighbor {a, b}: jaccard 1.0
-    assert out[("x", "y")].jaccard_micro == 1_000_000
-    # thresholding drops the weak pairs
-    strict = {
-        (r.title_a, r.title_b)
-        for r in neighbor_jaccard_pairs(df, threshold=0.9).collect()
-    }
-    assert ("x", "y") in strict and ("a", "b") not in strict
-
-
-def test_strip_repeated_spans_vs_local(spark):
-    """Substring-dedup action: token-level local replay of the coverage
-    mask (repeated strided window => its [start, start+window) tokens are
-    removed), plus passthrough for unshared and sub-window docs."""
-    from knowledge_graph_spark.operators.dedup import strip_repeated_spans
-
-    boiler = " ".join(f"b{i}" for i in range(6))
-    rows = [
-        (1, boiler + " " + " ".join(f"x{i}" for i in range(6))),
-        (2, boiler + " " + " ".join(f"y{i}" for i in range(6))),
-        (3, " ".join(f"z{i}" for i in range(12))),
-        (4, "tiny"),  # shorter than the window -> zero windows, kept as-is
-    ]
-    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    out = {
-        r.doc_id: r
-        for r in strip_repeated_spans(docs, window=6, stride=3).collect()
-    }
-    # local oracle
-    span_docs = defaultdict(set)
-    starts = {}
-    for doc_id, t in rows:
-        toks = t.split()
-        st = list(range(0, len(toks) - 6 + 1, 3)) if len(toks) >= 6 else []
-        starts[doc_id] = st
-        for s in st:
-            span_docs[" ".join(toks[s : s + 6])].add(doc_id)
-    for doc_id, t in rows:
-        toks = t.split()
-        covered = set()
-        for s in starts[doc_id]:
-            if len(span_docs[" ".join(toks[s : s + 6])]) >= 2:
-                covered.update(range(s, s + 6))
-        kept = [tok for i, tok in enumerate(toks) if i not in covered]
-        r = out[doc_id]
-        assert r.n_tokens == len(toks)
-        assert r.n_kept == len(kept)
-        assert r.clean_text == " ".join(kept)
-    # doc 1/2 lose the boilerplate prefix, doc 3/4 pass through untouched
-    assert out[1].n_kept < out[1].n_tokens
-    assert out[3].clean_text == rows[2][1]
-    assert out[4].clean_text == "tiny"
-
-
 def _winnow_local(text, k, w):
     """Pure-Python winnowing replay: k-gram Rabin-Karp fingerprints,
     window of w fingerprints, rightmost minimum per window, dedup."""

@@ -156,61 +156,6 @@ def test_ivf_topk_is_subset_of_cell(vectors):
         assert cells[r.neighbor_id] == cells[r.query_id] == r.cell
 
 
-def test_ivf_multiprobe_nprobe1_equals_single(vectors):
-    df, _ = vectors
-    q = df.filter(F.col("vec_id") < 5)
-    single = {tuple(r) for r in similarity.ivf_topk(df, q, k=3, bits=4).collect()}
-    mp1 = {tuple(r) for r in similarity.ivf_topk_multiprobe(df, q, k=3, bits=4, nprobe=1).collect()}
-    assert mp1 == single
-
-
-def test_ivf_multiprobe_improves_recall(vectors):
-    """Probing extra cells can only widen the candidate set: multi-probe
-    recall vs exact top-k is >= single-probe recall, and every probe is
-    the home cell or one bit-flip away."""
-    df, m = vectors
-    q = df.filter(F.col("vec_id") < 5)
-    m64 = m.astype("float64")
-    exact = {qi: set(_np_topk(m64, qi, 3)) for qi in range(5)}
-
-    def recall(rows):
-        by_q: dict[int, set[int]] = {}
-        for r in rows:
-            by_q.setdefault(r.query_id, set()).add(r.neighbor_id)
-        return sum(len(by_q.get(qi, set()) & exact[qi]) for qi in exact)
-
-    single = recall(similarity.ivf_topk(df, q, k=3, bits=4).collect())
-    multi_rows = similarity.ivf_topk_multiprobe(df, q, k=3, bits=4, nprobe=3).collect()
-    assert recall(multi_rows) >= single
-    cells = {
-        r.vec_id: r.cell
-        for r in df.select(
-            "vec_id", similarity.ivf_cell(F.col("embedding"), 4).alias("cell")
-        ).collect()
-    }
-    for r in multi_rows:
-        hamming = bin(cells[r.query_id] ^ r.cell).count("1")
-        assert hamming <= 1 and cells[r.neighbor_id] == r.cell
-
-
-def test_quantized_topk_rerank_is_exact(vectors):
-    """The int8 candidate pass may trade recall, but every returned
-    (pair, sim_micro) must carry the EXACT cosine, and recall vs exact
-    top-k stays high at 4x oversample on this corpus."""
-    df, m = vectors
-    q = df.filter(F.col("vec_id") < 5)
-    got = similarity.quantized_topk(df, q, k=3, oversample=4).collect()
-    m64 = m.astype("float64")
-    u = m64 / np.linalg.norm(m64, axis=1, keepdims=True)
-    hits = 0
-    for r in got:
-        exact_sim = int(np.floor(np.dot(u[r.query_id], u[r.neighbor_id]) * 1e6))
-        assert abs(r.sim_micro - exact_sim) <= 1  # fold-order last-ulp only
-        if r.neighbor_id in _np_topk(m64, r.query_id, 3):
-            hits += 1
-    assert hits >= 12  # >= 80% of the 15 exact top-3 slots
-
-
 def test_lsh_neardup_finds_planted_pair(vectors):
     df, _ = vectors
     got = {(r.id_a, r.id_b) for r in similarity.lsh_neardup_pairs(df, threshold=0.9, dim=16).collect()}
@@ -250,20 +195,6 @@ def test_neardup_pairs_fast_matches_exact(vectors):
             assert abs(fast[pair] - exact[pair]) <= 1
 
 
-def test_cosine_topk_fast_matches_exact(vectors):
-    df, _ = vectors
-    q = df.filter(F.col("vec_id") < 5)
-    exact = {
-        (r.query_id, r.rk): r.neighbor_id
-        for r in similarity.cosine_topk(df, q, k=3).collect()
-    }
-    fast = {
-        (r.query_id, r.rk): r.neighbor_id
-        for r in similarity.cosine_topk_fast(df, q, k=3, rows_per_block=16).collect()
-    }
-    assert fast == exact
-
-
 def test_media_meta_stub_and_frame_plan(spark, docs):
     media = multimodal.attach_payload(docs.filter(F.col("text") != ""))
     meta = multimodal.extract_media_meta(media)
@@ -295,23 +226,3 @@ def test_dedup_clusters_resolution(spark, docs):
     assert got[2].canonical_id == 0 and got[2].is_duplicate
     for i in (3, 4, 5):
         assert got[i].canonical_id == i and not got[i].is_duplicate
-
-
-def test_topk_recall_exact_and_partial(spark):
-    from knowledge_graph_spark.operators.similarity import topk_recall
-
-    exact = spark.createDataFrame(
-        [(1, 10), (1, 11), (2, 10), (2, 12)], "query_id int, neighbor_id int"
-    )
-    # q1 got both right; q2 found one of two; q3-style missing query absent
-    approx = spark.createDataFrame(
-        [(1, 10), (1, 11), (2, 10), (2, 99)], "query_id int, neighbor_id int"
-    )
-    got = {
-        r.query_id: (r.n_exact, r.n_hit, r.recall_micro)
-        for r in topk_recall(exact, approx).collect()
-    }
-    assert got == {1: (2, 2, 1_000_000), 2: (2, 1, 500_000)}
-    # identical inputs → perfect recall
-    perfect = topk_recall(exact, exact).collect()
-    assert all(r.recall_micro == 1_000_000 for r in perfect)

@@ -59,7 +59,6 @@ CHECK = [
     "minhash_dedup",
     "emb_topk",
     "emb_neardup_lsh",
-    "fuzzy_aliases",
     "hash_split",
     "dsir_select",
     "filter_audit",
@@ -103,9 +102,6 @@ CHECK = [
     "widest_paths",
     "bpe_pairs",
     "hits",
-    "ann_recall_mp",
-    "emb_pq_topk",
-    "emb_ivfpq_topk",
     "event_sliding",
     "sessions_native",
     # round-3 additions
@@ -117,7 +113,6 @@ CHECK = [
     "kg_growth",
     "type_mixing",
     # late round-3 waves: every remaining gate family
-    "span_dedup",
     "k_truss",
     "typed_lpa",
     "max_matching",
@@ -129,7 +124,6 @@ CHECK = [
     "jp_coloring",
     "kg_retract",
     # wave 11: language-ID model + multilevel coarsening
-    "langid",
     "coarsen",
     "coarsen_l2",
     # wave 12/13: Borůvka MSF family, peeling, ranking eval, telemetry
@@ -144,15 +138,11 @@ CHECK = [
     # Matryoshka prefix recall
     "sssp",
     "four_cycles",
-    "lm_bits",
-    "phrase_search",
-    "ann_recall_prefix",
     # wave 15: double-sweep diameter, 1-WL colors, lateness audit, hourly
     # KG churn, distinct-n diversity, tf-idf cosine pairs
     "diameter_lb",
     "wl_colors",
     "lateness",
-    "kg_churn",
     "ngram_diversity",
     "tfidf_pairs",
     # wave 16: TextRank turn salience, weak supervision, source rollup
@@ -161,7 +151,6 @@ CHECK = [
     "weak_lf_stats",
     "source_profile",
     "best_of_cluster",
-    "langid_confusion",
 ]
 
 

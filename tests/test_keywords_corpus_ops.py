@@ -88,51 +88,3 @@ def test_snapshot_diff_statuses(spark):
     old2 = old.filter("title = 'c'")
     new2 = old2
     assert snapshot_diff(old2, new2, ["title"], ["type", "description"]).collect()[0]["status"] == "unchanged"
-
-
-def test_bm25_search_matches_hand_computation(spark, docs):
-    from knowledge_graph_spark.operators.keywords import bm25_search
-
-    q = spark.createDataFrame(
-        [(1, "apple"), (1, "cherry"), (2, "banana"), (2, "grape")],
-        "query_id int, term string",
-    )
-    out = bm25_search(docs, q, k_top=10).collect()
-    n_docs, total_len = 4, 15
-    tfs = {
-        0: {"apple": 2, "banana": 1, "cherry": 1},
-        1: {"banana": 1, "cherry": 2, "durian": 1},
-        2: {"apple": 3, "banana": 1},
-        3: {"elderberry": 1, "fig": 1, "grape": 1},
-    }
-    dfs = {"apple": 2, "banana": 3, "cherry": 2, "durian": 1,
-           "elderberry": 1, "fig": 1, "grape": 1}
-
-    def contrib(doc, term):
-        tf, df = tfs[doc][term], dfs[term]
-        dl = sum(tfs[doc].values())
-        idf = (2 * n_docs - 2 * df + 1) / (2 * df + 1)
-        satur = (tf * (BM25_K1 + 1.0)) / (
-            tf + BM25_K1 * ((1.0 - BM25_B) + BM25_B * (dl * n_docs) / total_len)
-        )
-        return math.floor((SCORE_SCALE * idf) * satur)
-
-    expected = {}
-    for qid, terms in ((1, ["apple", "cherry"]), (2, ["banana", "grape"])):
-        for doc, tf in tfs.items():
-            hit = [t for t in terms if t in tf]
-            if hit:
-                expected[(qid, doc)] = (
-                    len(hit), sum(contrib(doc, t) for t in hit)
-                )
-    got = {(r.query_id, r.doc_id): (r.n_hit_terms, r.score_micro) for r in out}
-    assert got == expected
-    # per-query ranks are dense and ordered (score desc, doc_id asc)
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r.query_id, []).append(r)
-    for rows in by_q.values():
-        rows.sort(key=lambda r: r.rk)
-        assert [r.rk for r in rows] == list(range(1, len(rows) + 1))
-        keys = [(-r.score_micro, r.doc_id) for r in rows]
-        assert keys == sorted(keys)

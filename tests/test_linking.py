@@ -104,75 +104,6 @@ def test_canonical_map_merges_through_dictionary_canonical(spark):
     assert got["OTHER"] == "OTHER"
 
 
-def test_fuzzy_alias_pairs_exact_at_distance_one(spark):
-    from itertools import combinations
-
-    from knowledge_graph_spark.operators.linking import fuzzy_alias_pairs
-
-    def lev(a: str, b: str) -> int:
-        # classic DP, the ground truth for the blocking guarantee
-        prev = list(range(len(b) + 1))
-        for i, ca in enumerate(a, 1):
-            cur = [i]
-            for j, cb in enumerate(b, 1):
-                cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
-            prev = cur
-        return prev[-1]
-
-    names = [
-        "ACME", "ACME_CORP", "ACM", "AXME",      # del / sub variants
-        "GLOBEX", "GLOBEX1", "GLOBE",            # ins / del
-        "NORTH", "NROTH",                        # transposition = distance 2
-        "X", "Y", "XY",                          # short strings, incl. 1-char subs
-    ]
-    df = spark.createDataFrame([(n,) for n in names], "name string")
-    got = {
-        (r.name_a, r.name_b, r.dist)
-        for r in fuzzy_alias_pairs(df, name_col="name", max_dist=1).collect()
-    }
-    want = {
-        (min(a, b), max(a, b), lev(a, b))
-        for a, b in combinations(names, 2)
-        if lev(a, b) <= 1
-    }
-    # SymSpell deletion blocking is EXACT at distance 1: no pair missed,
-    # and the levenshtein verify kills every blocked distance-2 collision
-    # (NROTH/NORTH share deletion variants but sit at distance 2).
-    assert got == want
-    assert ("NORTH", "NROTH", 2) not in got
-    assert ("X", "Y", 1) in want and ("X", "Y", 1) in got  # substitution on 1-char names
-
-
-def test_link_scores_fuses_three_signals(spark):
-    from knowledge_graph_spark.operators.linking import link_scores
-
-    nodes = spark.createDataFrame(
-        [("ACME",), ("ACME CORP",), ("ACMX",), ("ZETA",)], "title string"
-    )
-    # ACME and ACME CORP co-occur with the same neighbor; ZETA is textually
-    # unrelated but structurally tied to ACMX
-    edges = spark.createDataFrame(
-        [("ACME", "HUB"), ("ACME CORP", "HUB"), ("ACMX", "Q"), ("ZETA", "Q")],
-        "source string, target string",
-    )
-    got = {
-        (r.name_a, r.name_b): r
-        for r in link_scores(nodes, edges, max_dist=1).collect()
-    }
-    pair = got[("ACME", "ACME CORP")]
-    # shingle overlap + shared neighbor, but edit distance > 1
-    assert pair.name_micro > 0 and pair.struct_micro == 1_000_000 and pair.edit_micro == 0
-    # substitution variant: full edit signal, shingle overlap, no shared neighbor
-    sub = got[("ACME", "ACMX")]
-    assert sub.edit_micro == 500_000 and sub.name_micro > 0 and sub.struct_micro == 0
-    # structure-only pair: zero text signals, full neighbor overlap
-    so = got[("ACMX", "ZETA")]
-    assert so.name_micro == 0 and so.edit_micro == 0 and so.struct_micro == 1_000_000
-    # weighted mean is the exact integer formula
-    for r in got.values():
-        assert r.score_micro == (4 * r.name_micro + 3 * r.struct_micro + 3 * r.edit_micro) // 10
-
-
 def test_canonical_type_last_nonempty_wins(spark):
     """Type of the canonical node follows the extraction merge's
     "last non-empty wins": the member whose provenance extends latest in

@@ -1,65 +1,12 @@
-"""Round-3 wave-11 operators: langid (operators/langid.py) and
-coarsen_by_matching (graphops.py).
+"""Round-3 wave-11 operator: coarsen_by_matching (graphops.py).
 
-langid is checked on two synthetic 'languages' with disjoint character
-alphabets (perfect recovery expected) plus the rank-weight and
-short-text contracts; coarsening against its conservation invariants
+Coarsening is checked against its conservation invariants
 (total weight preserved, matched nodes absent from the coarse vertex
 set, self-loops exactly the contracted pairs' internal weight) and a
 hand-computed two-pair fixture.
 """
 
 from pyspark.sql import functions as F
-
-
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string, lang string")
-
-
-def test_langid_recovers_disjoint_alphabets(spark):
-    from knowledge_graph_spark.operators.langid import (
-        langid_predict,
-        train_language_profiles,
-    )
-
-    rows = [
-        (i, "aaabbbcccabcabc" * 3, "aa") for i in range(10)
-    ] + [
-        (i + 100, "xxyyzzxyzxyzzyx" * 3, "zz") for i in range(10)
-    ]
-    d = _docs(spark, rows)
-    prof = train_language_profiles(d.filter(F.col("doc_id") % 5 != 0))
-    out = langid_predict(d.filter(F.col("doc_id") % 5 == 0), prof)
-    got = {r.doc_id: r for r in out.collect()}
-    assert len(got) == 4  # 0,5 and 100,105
-    for r in got.values():
-        assert r.pred_lang == r.lang and r.correct == 1 and r.score > 0
-
-
-def test_langid_profile_rank_weights(spark):
-    from knowledge_graph_spark.operators.langid import train_language_profiles
-
-    d = _docs(spark, [(1, "ababab", "aa")])  # grams: aba x2, bab x2? -> aba,bab,aba,bab
-    prof = {r.gram: r for r in train_language_profiles(d, top_p=8).collect()}
-    # 'ababab' -> aba bab aba bab: counts 2/2, rank ties broken gram ASC
-    assert prof["aba"].rk == 1 and prof["aba"].w == 8
-    assert prof["bab"].rk == 2 and prof["bab"].w == 7
-
-
-def test_langid_short_text_and_no_overlap(spark):
-    from knowledge_graph_spark.operators.langid import (
-        langid_predict,
-        train_language_profiles,
-    )
-
-    train = _docs(spark, [(1, "qqqqqq", "qq")])
-    test = _docs(spark, [(2, "ab", "qq"), (3, "zzzzzz", "qq")])
-    out = {r.doc_id: r for r in
-           langid_predict(test, train_language_profiles(train)).collect()}
-    # doc 2: shorter than a trigram -> no grams -> unclassified
-    assert out[2].pred_lang == "" and out[2].score == 0 and out[2].correct == 0
-    # doc 3: grams exist but none in profile -> unclassified
-    assert out[3].pred_lang == "" and out[3].n_hits == 0
 
 
 def _edges(spark, rows):

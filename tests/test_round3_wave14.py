@@ -1,23 +1,14 @@
-"""Round-3 wave-14 operators: weighted SSSP (Bellman-Ford rounds),
-4-cycle census, trained bigram-LM scoring, positional phrase search.
+"""Round-3 wave-14 operators: weighted SSSP (Bellman-Ford rounds) and
+the 4-cycle census.
 
 SSSP is checked against networkx's dijkstra on random graphs (round
 budget ≥ diameter) plus the no-op-past-convergence invariant; the C4
-census against hand fixtures and a networkx cycle enumeration; lm_bits
-against a hand-computed stupid-backoff fixture; phrase_search against a
-pure-python positional scan.
+census against hand fixtures and a networkx cycle enumeration.
 """
 
 import networkx as nx
-from pyspark.sql import functions as F
 
-from knowledge_graph_spark.operators.corpus import (
-    LM_BACKOFF_BITS,
-    lm_bits,
-    lm_train_counts,
-)
 from knowledge_graph_spark.operators.graphops import four_cycle_profile, sssp_int
-from knowledge_graph_spark.operators.keywords import phrase_search, top_bigram
 
 
 def _edges(spark, rows):
@@ -120,73 +111,3 @@ def test_four_cycles_triangle_free(spark):
     path = [("a", "b", 1.0), ("b", "c", 1.0), ("c", "d", 1.0)]
     got = {r["title"]: r["four_cycles"] for r in four_cycle_profile(_edges(spark, path)).collect()}
     assert got == {"a": 0, "b": 0, "c": 0, "d": 0}
-
-
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_lm_bits_hand_fixture(spark):
-    train = _docs(spark, [(1, "a b a b"), (2, "a b c")])
-    # U: a=3 b=3 c=1, N=7; B: (a,b)=3 (b,a)=1 (b,c)=1
-    score = _docs(spark, [(10, "a b x"), (11, "z"), (12, "")])
-    uni, bi, total = lm_train_counts(train)
-    got = {r["doc_id"]: r.asDict() for r in lm_bits(score, uni, bi, total).collect()}
-    # doc 10: (a,b) seen: bits(U(a))-bits(B(a,b)) = 1-1 = 0
-    #         (b,x) oov:   4 + bits(7) = 4 + 2 = 6
-    assert got[10]["n_scored"] == 2
-    assert got[10]["total_bits"] == 0 + (LM_BACKOFF_BITS + 2)
-    assert got[10]["n_backoff"] == 1 and got[10]["n_oov"] == 1
-    assert got[10]["bits_per_token_micro"] == (LM_BACKOFF_BITS + 2) * 1_000_000 // 2
-    # short docs still emitted with zeros
-    assert got[11]["n_scored"] == 0 and got[11]["total_bits"] == 0
-    assert got[12]["n_scored"] == 0 and got[12]["bits_per_token_micro"] == 0
-
-
-def test_lm_bits_empty_training_split(spark):
-    """An empty training split must score like the oracle: n_total
-    coalesces to 0 (bitlen 0), every pair is OOV at LM_BACKOFF_BITS —
-    never NULL-poisoned costs."""
-    train = _docs(spark, [(1, "")])  # tokenizes to nothing: empty LM
-    score = _docs(spark, [(10, "a b c")])
-    uni, bi, total = lm_train_counts(train)
-    row = lm_bits(score, uni, bi, total).collect()[0]
-    assert row["n_scored"] == 2 and row["n_oov"] == 2
-    assert row["total_bits"] == 2 * LM_BACKOFF_BITS
-    assert row["bits_per_token_micro"] == LM_BACKOFF_BITS * 1_000_000
-
-
-def test_lm_bits_backoff_path(spark):
-    train = _docs(spark, [(1, "a b c d")])
-    # U: a,b,c,d = 1 each, N=4; B: ab, bc, cd
-    score = _docs(spark, [(10, "b d")])  # bigram (b,d) unseen, d in vocab
-    uni, bi, total = lm_train_counts(train)
-    row = lm_bits(score, uni, bi, total).collect()[0]
-    # backoff: 4 + bits(4) - bits(1) = 4 + 2 - 0 = 6
-    assert row["total_bits"] == LM_BACKOFF_BITS + 2
-    assert row["n_backoff"] == 1 and row["n_oov"] == 0
-
-
-def test_phrase_search_positional(spark):
-    docs = _docs(
-        spark,
-        [
-            (1, "the cat sat on the cat mat"),
-            (2, "the cat the cat the cat"),
-            (3, "cat the"),
-            (4, "the dog"),
-        ],
-    )
-    tb = top_bigram(docs).collect()[0]
-    assert (tb["w1"], tb["w2"]) == ("the", "cat") and tb["cnt"] == 5
-    got = {r["doc_id"]: (r["n_hits"], r["first_pos"]) for r in
-           phrase_search(docs, top_bigram(docs)).collect()}
-    assert got == {1: (2, 1), 2: (3, 1)}
-
-
-def test_phrase_search_overlapping_same_token(spark):
-    docs = _docs(spark, [(1, "x x x x"), (2, "y x x")])
-    ph = spark.createDataFrame([("x", "x")], "w1 string, w2 string")
-    got = {r["doc_id"]: (r["n_hits"], r["first_pos"]) for r in
-           phrase_search(docs, ph).collect()}
-    assert got == {1: (3, 1), 2: (1, 2)}

@@ -19,7 +19,7 @@ from knowledge_graph_spark.operators.graphops import (
     double_sweep_diameter,
     wl_refinement,
 )
-from knowledge_graph_spark.operators.temporal import kg_churn, lateness_profile
+from knowledge_graph_spark.operators.temporal import lateness_profile
 
 
 def _edges(spark, rows):
@@ -119,40 +119,6 @@ def test_lateness_profile_out_of_order_turn(spark):
     assert got["c1"].max_late_us == 120_000_000
     assert got["c1"].total_late_us == 120_000_000
     assert got["c2"].n_late == 0 and got["c2"].max_late_us == 0
-
-
-# --- kg churn ---------------------------------------------------------------
-
-
-def test_kg_churn_hourly_jaccard(spark):
-    from knowledge_graph_spark.operators.assemble import assemble_conversations
-    from knowledge_graph_spark.operators.chunk import split_text_units
-    from knowledge_graph_spark.operators.extract import emit_records
-
-    rows = [
-        ("c1", 0, "user", "USER_1 saw EVT_X", "", "2024-01-01 10:00:00"),
-        ("c2", 0, "user", "USER_1 saw EVT_X", "", "2024-01-01 11:00:00"),
-        ("c3", 0, "user", "USER_1 visited CITY_2", "", "2024-01-01 11:30:00"),
-        ("c4", 0, "user", "USER_1 visited CITY_2", "", "2024-01-01 12:00:00"),
-    ]
-    t = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts_s string"
-    ).withColumn("ts", F.to_timestamp("ts_s")).drop("ts_s")
-    units = split_text_units(assemble_conversations(t), size=120, overlap=20, tokenizer="ws")
-    got = {r["hour_epoch"]: r for r in kg_churn(emit_records(units), t).collect()}
-    hours = sorted(got)
-    assert len(hours) == 3 and hours[1] - hours[0] == 3600
-    h0, h1, h2 = hours
-    # hour 0: {E-U}; no previous hour
-    assert got[h0].n_prev == 0 and got[h0].n_curr == 1 and got[h0].jaccard_micro == 0
-    # hour 1: {E-U, C-U}; shared E-U -> jaccard 1/2
-    assert (got[h1].n_prev, got[h1].n_curr, got[h1].n_inter) == (1, 2, 1)
-    assert got[h1].n_added == 1 and got[h1].n_removed == 0
-    assert got[h1].jaccard_micro == 500_000
-    # hour 2: {C-U} only; E-U dropped
-    assert (got[h2].n_prev, got[h2].n_curr, got[h2].n_inter) == (2, 1, 1)
-    assert got[h2].n_added == 0 and got[h2].n_removed == 1
-    assert got[h2].jaccard_micro == 500_000
 
 
 # --- distinct-n diversity ---------------------------------------------------

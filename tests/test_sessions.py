@@ -94,27 +94,3 @@ def test_session_window_boundary_and_sliding(spark):
     # sliding 1h/30m: every event appears in exactly two windows
     slid = sliding_rollup(ev, "1 hour", "30 minutes", dims=["user_id"]).collect()
     assert sum(r.n_events for r in slid) == 2 * len(rows)
-
-
-def test_interval_overlaps_exact_and_no_nested_loop(spark):
-    """Bucket-explode overlap join: hand-computed counts (including an
-    endpoint-touching pair — inclusive) and the plan must contain NO
-    nested-loop/cartesian join (the trap a raw range predicate plans)."""
-    from knowledge_graph_spark.operators.temporal import interval_overlaps
-
-    M = 1_000_000
-    rows = [  # (user, session, start_s, end_s)
-        ("u1", "u1-1", 0, 100),
-        ("u2", "u2-1", 50, 150),     # overlaps u1-1, u3-1
-        ("u3", "u3-1", 150, 200),    # touches u2-1 endpoint (inclusive)
-        ("u1", "u1-2", 400, 500),    # overlaps nothing
-        ("u2", "u2-2", 90, 95),      # inside u1-1
-    ]
-    iv = spark.createDataFrame(
-        [(u, s, a * M, b * M) for u, s, a, b in rows],
-        "user_id string, session_id string, start_us long, end_us long",
-    )
-    got = {r.session_id: r.n_concurrent for r in interval_overlaps(iv).collect()}
-    assert got == {"u1-1": 2, "u2-1": 2, "u3-1": 1, "u1-2": 0, "u2-2": 1}
-    p = interval_overlaps(iv)._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in p and "BroadcastNestedLoop" not in p

@@ -17,7 +17,6 @@ from knowledge_graph_spark.streaming.retract_stream import (
     fold_insert_batch,
     run_kg_cdc,
 )
-from knowledge_graph_spark.streaming.stateful import turn_counts
 
 TS = datetime.datetime(2024, 1, 1)
 
@@ -85,99 +84,6 @@ def test_incremental_fold_two_batches(spark, tmp_path):
     nodes3 = nodes()
     assert "DELTA" in nodes3
     assert "Old Information---" not in nodes3["DELTA"].description  # folded once
-
-
-def test_turn_counts_watermarked_aggregate(spark, tmp_path):
-    inp = str(tmp_path / "stream_in")
-    _batch(spark, "c1", ["A1X", "B2Y", "C3Z"]).write.parquet(inp)
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_DDL).parquet(inp)
-    )
-    agg = turn_counts(stream, window="1 hour", watermark="2 hours")
-    assert agg.isStreaming
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("tc")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "tc_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # append mode only emits windows the watermark has closed; with a
-    # bounded historical file everything is late → assert the aggregation
-    # plan ran and the watermark column is wired (complete-mode check)
-    q2 = (
-        turn_counts(stream).writeStream.format("memory")
-        .queryName("tc2")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "tc2_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination()
-    rows = spark.sql("select * from tc2").collect()
-    assert len(rows) == 1 and rows[0].n_turns == 3 and rows[0].n_tool_turns == 0
-
-
-@pytest.mark.filterwarnings("ignore")
-def test_conversation_sessions_stateful(spark, tmp_path):
-    """applyInPandasWithState sessionization: turns for one conversation
-    arrive across TWO micro-batches; per-key state accumulates counts +
-    rolling fingerprint, and the session row is emitted exactly once
-    after the processing-time gap."""
-    import time
-
-    from knowledge_graph_spark.streaming.stateful import (
-        _fold_fp,
-        conversation_sessions,
-    )
-
-    inp = str(tmp_path / "sess_in")
-    b1 = _batch(spark, "c1", ["ALPHA", "BETA"])
-    # one file per logical batch: the fold fingerprint is arrival-order
-    # sensitive, and each file becomes its own micro-batch here
-    b1.coalesce(1).write.mode("append").parquet(inp)
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_DDL)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(inp)
-    )
-    # late turns for the SAME conversation, in a SECOND file — state must
-    # carry over (maxFilesPerTrigger=1 forces separate micro-batches, so
-    # no sleep is needed to split them; the generous gap means the
-    # timeout cannot fire between the two batches even under load)
-    time.sleep(1.1)  # distinct mtimes → deterministic file (= fold) order
-    rows = [
-        ("c1", 2, "user", "GAMMA arrived late", "", TS + datetime.timedelta(minutes=2))
-    ]
-    spark.createDataFrame(rows, TRANSCRIPT_DDL).coalesce(1).write.mode(
-        "append"
-    ).parquet(inp)
-    q = (
-        conversation_sessions(stream, gap_ms=6000)
-        .writeStream.format("memory")
-        .queryName("sess")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "sess_ckpt"))
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-    try:
-        got = []
-        for _ in range(120):  # ≤60s: drain both files, then gap, then emit
-            got = spark.sql("select * from sess").collect()
-            if got:
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    assert len(got) == 1
-    r = got[0]
-    assert r.conv_id == "c1" and r.n_turns == 3
-    texts = [t.text for t in b1.orderBy("turn_idx").collect()] + ["GAMMA arrived late"]
-    assert r.text_fp == _fold_fp(0, texts)
-    assert r.first_ts < r.last_ts
 
 
 @pytest.mark.filterwarnings("ignore")

@@ -145,32 +145,6 @@ def test_edge_time_ranges_span_and_asof(spark):
     assert both.n_convs == 2
 
 
-def test_hourly_anomalies_detects_injected_spike(spark):
-    from knowledge_graph_spark.operators.temporal import hourly_anomalies
-
-    rows = []
-    # 20 quiet hours of 10 events + one 300-event spike hour
-    for h in range(20):
-        for i in range(10):
-            rows.append((f"2024-01-01 {h:02d}:00:{i % 60:02d}", "click"))
-    for i in range(300):
-        rows.append((f"2024-01-01 23:{i % 60:02d}:{i // 60:02d}", "click"))
-    ev = spark.createDataFrame(rows, "ts_s string, event_type string").withColumn(
-        "ts", F.to_timestamp("ts_s")
-    ).withColumn("value", F.lit(1.0))
-    out = hourly_anomalies(ev, sigma=3).collect()
-    flagged = [r for r in out if r.is_anomaly]
-    assert len(flagged) == 1 and flagged[0].n_events == 300
-    # exact moment arithmetic: replay locally
-    xs = [r.n_events for r in out]
-    n, sx, sx2 = len(xs), sum(xs), sum(x * x for x in xs)
-    for r in out:
-        dev = n * r.n_events - sx
-        assert r.dev_num == dev * dev
-        assert r.bound_num == 9 * (n * sx2 - sx * sx)
-        assert r.is_anomaly == (r.dev_num > r.bound_num)
-
-
 def test_kg_version_diff_statuses(spark):
     """added/removed/changed/same classification and signed delta on a
     hand diff (temporal.kg_version_diff)."""
