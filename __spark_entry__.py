@@ -882,28 +882,6 @@ def q_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-WINNOW_K = 5
-WINNOW_W = 4
-
-
-def q_winnow_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing document sketch (Schleimer et al. 2003 / MOSS): each
-    w-window of k-gram fingerprints contributes its rightmost minimum —
-    the locality-guaranteed ~1/w-rate fingerprint sample."""
-    return dedup.winnow_fingerprints(
-        _docs(spark, sf_dir), k=WINNOW_K, w=WINNOW_W
-    )
-
-
-def q_winnow_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup candidate pairs from the winnowing sketch — the MOSS
-    matching stage: df-pruned fp postings, self-join, sketch-set
-    Jaccard ≥ threshold."""
-    return dedup.winnow_dedup_pairs(
-        _docs(spark, sf_dir), k=WINNOW_K, w=WINNOW_W, threshold=NGRAM_THRESHOLD
-    ).select("id_a", "id_b", "jaccard")
-
-
 DSIR_MOD = 13  # doc_id % DSIR_MOD == DSIR_RES defines the target domain
 DSIR_RES = 4
 DSIR_BUCKETS = 4096
@@ -1212,8 +1190,7 @@ def q_katz(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_kg_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporal KG reconstruction: rebuild the graph from only the turns
-    at or before the corpus temporal midpoint — the as-of snapshot audit
-    (pairs with edge_times, which reads lineage off the CURRENT graph).
+    at or before the corpus temporal midpoint — the as-of snapshot audit.
     The cutoff is the integer midpoint of [min, max] turn epoch, computed
     distributively (1-row bounds frame broadcast-joined, no collect)."""
     t = transcripts_from_events(spark, sf_dir)
@@ -1271,25 +1248,6 @@ def q_kg_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, edges = retract_conversations(s["raw_records"], deleted)
     return edges.select(
         "source", "target", F.col("weight").cast("double").alias("weight")
-    )
-
-
-def q_kg_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KG growth curve: NEW edges by first-seen hour bucket — the
-    construction-telemetry view over edge_times' temporal lineage
-    (pairs with kg_asof: the cumulative sum of this curve at the
-    midpoint is the as-of snapshot's edge count upper bound)."""
-    from knowledge_graph_spark.operators.temporal import edge_time_ranges
-
-    s = _stages(spark, sf_dir)
-    t = transcripts_from_events(spark, sf_dir)
-    et = edge_time_ranges(s["raw_records"], t)
-    return (
-        et.select(
-            F.expr("unix_timestamp(first_seen) DIV 3600 * 3600").alias("hour_epoch")
-        )
-        .groupBy("hour_epoch")
-        .agg(F.count("*").cast("bigint").alias("n_new_edges"))
     )
 
 
@@ -1409,59 +1367,6 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _stages(spark, sf_dir)["edges"].select("source", "target", "weight")
     return knn_graph(e, k=KNN_K)
-
-
-BLOCK_TAU = 0.5
-
-
-BLOCK_SAMPLE_MOD = 2  # deterministic 1/2 name subuniverse (estimator path)
-
-
-def q_blocking_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ER blocking-quality audit of the production MinHash-LSH blocker on
-    the documents corpus: exact shingle-Jaccard ground truth vs the
-    pre-verification candidate pairs → reduction ratio / pairs
-    completeness / pairs quality (Christen's three blocking metrics).
-
-    Runs on the ``sample_mod`` deterministic subuniverse (VERDICT r4
-    #3): the truth pass is the deliberately unpruned quadratic baseline
-    and dominated the sf0.1 sweep at exact scope (651 s); the metrics
-    are ratio estimates, stable under uniform name sampling, and the
-    EXACT path stays pinned by
-    tests/test_round3_wave9.py::test_blocking_quality_exact_matches_brute_force."""
-    from knowledge_graph_spark.operators.dedup import blocking_quality
-
-    return blocking_quality(
-        _docs(spark, sf_dir), threshold=BLOCK_TAU, sample_mod=BLOCK_SAMPLE_MOD
-    )
-
-
-CB_TRAIL = 3
-CB_MIN = 2
-
-
-def q_entity_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-entity temporal lifecycle over the raw turns (first/last seen,
-    mention-turn count, conversation spread, distinct active hours) —
-    the node-level staleness/coverage readout
-    (temporal.entity_lifecycle)."""
-    from knowledge_graph_spark.operators.temporal import entity_lifecycle
-
-    return entity_lifecycle(transcripts_from_events(spark, sf_dir))
-
-
-def q_comention_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Turn-level co-mention burst detection: hourly (pair, bucket)
-    counts vs the trailing 3-hour sum, flagged in exact integer
-    arithmetic — KG temporal health telemetry finer than the
-    conversation-granular edge_times/kg_asof lineage."""
-    from knowledge_graph_spark.operators.temporal import comention_burst_profile
-
-    return comention_burst_profile(
-        transcripts_from_events(spark, sf_dir),
-        trail_buckets=CB_TRAIL,
-        min_count=CB_MIN,
-    )
 
 
 def q_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1706,23 +1611,6 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bfs_hops(s["edges"].select("source", "target"), seed, hops=BFS_HOPS)
 
 
-def q_edge_times(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temporal edge lineage: first/last conversation timestamp asserting
-    each extracted edge (AS-OF subgraphs and staleness audits)."""
-    from knowledge_graph_spark.operators.temporal import edge_time_ranges
-
-    s = _stages(spark, sf_dir)
-    t = transcripts_from_events(spark, sf_dir)
-    out = edge_time_ranges(s["raw_records"], t)
-    return out.select(
-        "source",
-        "target",
-        F.unix_timestamp("first_seen").cast("bigint").alias("first_seen_epoch"),
-        F.unix_timestamp("last_seen").cast("bigint").alias("last_seen_epoch"),
-        "n_convs",
-    )
-
-
 def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = multimodal.attach_payload(_docs(spark, sf_dir))
     return multimodal.extract_media_meta(media)
@@ -1733,52 +1621,12 @@ def q_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.frame_sample_plan(multimodal.extract_media_meta(media))
 
 
-def q_events_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Backward as-of join: each purchase event picks up the most recent
-    signup (<= its timestamp) for the same user.  The oracle uses DuckDB's
-    NATIVE ASOF LEFT JOIN — an independent implementation of the
-    semantics, not a mirror of the Spark union+window construction."""
-    from knowledge_graph_spark.operators.temporal import asof_join
-
-    load_views(spark, sf_dir)
-    ev = spark.table("events")
-    l = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    r = ev.filter(F.col("event_type") == "signup").select("user_id", "ts", "value")
-    return asof_join(l, r, on="ts", by="user_id", right_cols=["value"]).select(
-        "event_id", "user_id", "value", "value_r", "ts_r"
-    )
-
-
 def q_event_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from knowledge_graph_spark.operators.temporal import window_rollup
 
     load_views(spark, sf_dir)
     return window_rollup(spark.table("events"), "1 hour").select(
         "window_start_us", "event_type", "n_events", "total_value"
-    )
-
-
-def q_event_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window rollup (1 h width / 30 min hop): each event lands
-    in two epoch-aligned windows — the trailing-rate monitoring view."""
-    from knowledge_graph_spark.operators.temporal import sliding_rollup
-
-    load_views(spark, sf_dir)
-    return sliding_rollup(spark.table("events"), "1 hour", "30 minutes").select(
-        "window_start_us", "event_type", "n_events", "total_value"
-    )
-
-
-def q_sessions_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F.session_window gap sessions — cross-checked against the oracle's
-    INDEPENDENT lag/flag/running-sum construction (same 30 min gap)."""
-    from knowledge_graph_spark.operators.temporal import session_rollup
-
-    load_views(spark, sf_dir)
-    return session_rollup(spark.table("events"), "30 minutes").select(
-        "user_id", "start_us", "end_us", "n_events", "total_value"
     )
 
 
@@ -1864,17 +1712,6 @@ def q_eff_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return effective_diameter(
         _stages(spark, sf_dir)["edges"], rounds=HYPERBALL_ROUNDS
     )
-
-
-NEIGHBOR_SAMPLE_K = 4
-
-
-def q_neighbor_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic fixed-fanout neighbor sampling (the GraphSAGE
-    training-pipeline primitive) over the KG."""
-    from knowledge_graph_spark.operators.graphops import neighbor_sample
-
-    return neighbor_sample(_stages(spark, sf_dir)["edges"], k=NEIGHBOR_SAMPLE_K)
 
 
 def q_turn_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2582,70 +2419,6 @@ SELECT d.doc_id,
 FROM documents d LEFT JOIN cnt c ON d.doc_id = c.doc_id
 """
 
-
-# Winnowing oracle: same k-gram Rabin-Karp fingerprints; each gram joins
-# the window starts that contain it (j in [max(0, gi-w+1), min(gi,
-# max(m-w, 0))]), then per (doc, j) the rightmost minimum wins (QUALIFY
-# on (fp ASC, gi DESC)).  DISTINCT mirrors the Spark side's dedup of
-# repeat selections.  Shared CTE chain — both the sketch gate and the
-# winnow-dedup gate read wn_sel.
-_WINNOW_SEL_CTES = f"""
-wn_grams AS MATERIALIZED (
-  SELECT doc_id, ci AS gi, {_SPAN_FP} AS fp
-  FROM (
-    SELECT doc_id, ci,
-           array_to_string(t[ci+1 : ci+{WINNOW_K}], ' ') AS span
-    FROM dtoks, LATERAL unnest(range(0, CASE WHEN len(t) < {WINNOW_K} THEN 0
-                                             ELSE len(t) - {WINNOW_K} + 1 END)) u(ci)
-  )
-),
-wn_m AS (SELECT doc_id, count(*) AS m FROM wn_grams GROUP BY doc_id),
-wn_j AS (
-  SELECT g.doc_id, g.gi, g.fp, j
-  FROM wn_grams g JOIN wn_m m ON g.doc_id = m.doc_id,
-  LATERAL unnest(range(greatest(g.gi - {WINNOW_W} + 1, 0),
-                       least(g.gi, greatest(m.m - {WINNOW_W}, 0)) + 1)) u(j)
-),
-wn_sel AS MATERIALIZED (
-  SELECT DISTINCT doc_id, CAST(gi AS BIGINT) AS pos, CAST(fp AS BIGINT) AS fp
-  FROM wn_j
-  QUALIFY row_number() OVER (PARTITION BY doc_id, j ORDER BY fp ASC, gi DESC) = 1
-)"""
-
-_WINNOW_SQL = f"""
-WITH {_DTOKS_CTE},
-{_WINNOW_SEL_CTES}
-SELECT doc_id, pos, fp FROM wn_sel
-"""
-
-# Winnow-dedup oracle: sketch-set resemblance over wn_sel's fp values —
-# distinct fps per doc, df-prune hot fps, self-join on fp, Jaccard from
-# exact intersection counts (double division mirrored both engines).
-WINNOW_MAX_DF = 1000
-
-_WINNOW_DEDUP_SQL = f"""
-WITH {_DTOKS_CTE},
-{_WINNOW_SEL_CTES},
-wd_sk AS MATERIALIZED (SELECT DISTINCT doc_id, fp FROM wn_sel),
-wd_sz AS (SELECT doc_id, count(*) AS n_fps FROM wd_sk GROUP BY doc_id),
-wd_rare AS (SELECT fp FROM wd_sk GROUP BY fp HAVING count(*) <= {WINNOW_MAX_DF}),
-wd_post AS MATERIALIZED (
-  SELECT s.doc_id, s.fp FROM wd_sk s JOIN wd_rare r USING (fp)
-),
-wd_int AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
-  FROM wd_post a JOIN wd_post b ON a.fp = b.fp AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT id_a, id_b,
-       CAST(inter AS DOUBLE) / CAST(sa.n_fps + sb.n_fps - inter AS DOUBLE)
-         AS jaccard
-FROM wd_int
-JOIN wd_sz sa ON sa.doc_id = id_a
-JOIN wd_sz sb ON sb.doc_id = id_b
-WHERE CAST(inter AS DOUBLE) / CAST(sa.n_fps + sb.n_fps - inter AS DOUBLE)
-      >= {NGRAM_THRESHOLD}
-"""
 
 # DSIR oracle: hashed-bigram bucket models (target vs raw, add-one
 # smoothing, bit-length log2), per-doc mean log-likelihood ratio in
@@ -4242,131 +4015,6 @@ FROM co_e2 GROUP BY least(msn, mtn), greatest(msn, mtn)
     )
 
 
-_BLOCKING_AUDIT_SQL = f"""
-WITH dn AS (
-  SELECT doc_id, regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS title
-  FROM documents
-),
-names0 AS (SELECT DISTINCT title FROM dn WHERE title <> ''),
-names AS (
-  -- the gate's sample_mod subuniverse: shared rolling-hash family,
-  -- identical filter to dedup.blocking_quality(sample_mod=2)
-  SELECT title FROM names0 WHERE {{poly_title}} % {{block_mod}} = 0
-),
-nn AS (SELECT title, regexp_replace(upper(trim(title)), '\\s+', ' ', 'g') AS s FROM names),
-sh AS MATERIALIZED (
-  SELECT DISTINCT title,
-         CASE WHEN length(s) <= 9 THEN s ELSE substr(s, CAST(ci AS INT), 9) END AS g
-  FROM nn, LATERAL unnest(range(1, CASE WHEN length(s) <= 9 THEN 2
-                                       ELSE length(s) - 9 + 2 END)) AS u(ci)
-),
-shx AS (SELECT title, g, {{poly_g}} AS x FROM sh),
-perms AS (
-  SELECT title, pi, min({{perm_x_pi}}) AS mh
-  FROM shx, LATERAL unnest(range(0, 64)) AS p(pi)
-  GROUP BY title, pi
-),
-bkeys AS (
-  SELECT title, CAST(pi // 4 AS INT) AS band,
-         string_agg(CAST(mh AS VARCHAR), ',' ORDER BY pi) AS bh
-  FROM perms GROUP BY title, CAST(pi // 4 AS INT)
-),
-bsizes AS (SELECT band, bh, count(*) AS n FROM bkeys GROUP BY band, bh),
-cap AS (
-  SELECT k.* FROM bkeys k JOIN bsizes z USING (band, bh) WHERE z.n <= 50
-),
-cand AS MATERIALIZED (
-  SELECT DISTINCT a.title AS name_a, b.title AS name_b
-  FROM cap a JOIN cap b ON a.band = b.band AND a.bh = b.bh AND a.title < b.title
-),
-ssz AS (SELECT title, count(*) AS n_sh FROM sh GROUP BY title),
-tin AS (
-  SELECT a.title AS name_a, b.title AS name_b, count(*) AS inter
-  FROM sh a JOIN sh b ON a.g = b.g AND a.title < b.title
-  GROUP BY a.title, b.title
-),
-truth AS MATERIALIZED (
-  SELECT i.name_a, i.name_b
-  FROM tin i JOIN ssz za ON i.name_a = za.title JOIN ssz zb ON i.name_b = zb.title
-  WHERE CAST(i.inter AS DOUBLE) / CAST(za.n_sh + zb.n_sh - i.inter AS DOUBLE)
-        >= {BLOCK_TAU}
-),
-hit AS (SELECT t.* FROM truth t JOIN cand c USING (name_a, name_b)),
-cnts AS (
-  SELECT (SELECT CAST(count(*) AS BIGINT) FROM names) AS n_names,
-         (SELECT CAST(count(*) AS BIGINT) FROM cand) AS n_cand,
-         (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-         (SELECT CAST(count(*) AS BIGINT) FROM hit) AS n_hit
-)
-SELECT n_names,
-       CAST(n_names * (n_names - 1) // 2 AS BIGINT) AS n_total_pairs,
-       n_cand, n_truth, n_hit,
-       1.0 - CAST(n_cand AS DOUBLE)
-             / nullif(CAST(n_names AS DOUBLE) * CAST(n_names - 1 AS DOUBLE) / 2.0,
-                      0.0) AS reduction_ratio,
-       CAST(n_hit AS DOUBLE) / nullif(CAST(n_truth AS DOUBLE), 0.0)
-         AS pairs_completeness,
-       CAST(n_hit AS DOUBLE) / nullif(CAST(n_cand AS DOUBLE), 0.0)
-         AS pairs_quality
-FROM cnts
-"""
-# the shared hash family + the gate's sample filter are spliced in
-# post-f-string (the only remaining braces are these FOUR placeholders:
-# poly_g, perm_x_pi, poly_title, block_mod)
-_BLOCKING_AUDIT_SQL = _BLOCKING_AUDIT_SQL.format(
-    poly_g=_POLY.format(s="g"),
-    perm_x_pi=_perm("x", "pi"),
-    poly_title=_POLY.format(s="title"),
-    block_mod=BLOCK_SAMPLE_MOD,
-)
-
-
-_EL_BODY = f"""
-, el_m AS (
-  SELECT conv_id, ep, m.x AS title
-  FROM (SELECT conv_id, CAST(floor(epoch(ts)) AS BIGINT) AS ep,
-               list_distinct(regexp_extract_all(text, '{MENTION_PATTERN}')) AS ms
-        FROM transcripts),
-       LATERAL unnest(ms) AS m(x))
-SELECT title,
-       CAST(min(ep) AS BIGINT) AS first_seen,
-       CAST(max(ep) AS BIGINT) AS last_seen,
-       CAST(max(ep) - min(ep) AS BIGINT) AS span_s,
-       CAST(count(*) AS BIGINT) AS n_turns,
-       CAST(count(DISTINCT conv_id) AS BIGINT) AS n_convs,
-       CAST(count(DISTINCT ep - ((ep % 3600 + 3600) % 3600)) AS BIGINT)
-         AS n_active_buckets
-FROM el_m GROUP BY title
-"""
-
-
-_CB_BODY = f"""
-, cb_p AS (
-  SELECT CAST(floor(epoch(ts)) AS BIGINT) AS ep,
-         list_distinct(regexp_extract_all(text, '{MENTION_PATTERN}')) AS ms
-  FROM transcripts),
-cb_x AS (
-  SELECT ep, ma.m AS ma, mb.m AS mb
-  FROM cb_p, LATERAL unnest(ms) AS ma(m), LATERAL unnest(ms) AS mb(m)
-  WHERE ma.m < mb.m),
-cb_c AS (
-  SELECT ma AS source, mb AS target,
-         CAST(ep - ((ep % 3600 + 3600) % 3600) AS BIGINT) AS hour_epoch,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM cb_x GROUP BY 1, 2, 3),
-cb_w AS (
-  SELECT source, target, hour_epoch, cnt,
-         CAST(coalesce(sum(cnt) OVER (
-                PARTITION BY source, target ORDER BY hour_epoch
-                RANGE BETWEEN {CB_TRAIL * 3600} PRECEDING
-                      AND 3600 PRECEDING), 0) AS BIGINT) AS trail_sum
-  FROM cb_c)
-SELECT source, target, hour_epoch, cnt, trail_sum,
-       (cnt >= {CB_MIN} AND {CB_TRAIL} * cnt > 2 * trail_sum) AS is_burst
-FROM cb_w
-"""
-
-
 def _asof_oracle() -> str:
     """kg_asof oracle: the FULL pipeline prelude re-run over transcripts
     filtered to the integer midpoint of [min, max] turn epoch — built by
@@ -5558,8 +5206,7 @@ FROM rrend
 """
 
 
-# --- wave 10: topic segmentation, PMI re-weighting, negative sampling,
-# --- JP coloring ------------------------------------------------------------
+# --- wave 10: topic segmentation, negative sampling, JP coloring ------------
 
 TSEG_NUM, TSEG_DEN = 1, 4
 NEGS_K = 3
@@ -5577,15 +5224,6 @@ def q_topic_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_edge_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-bits PMI re-weighting of the merged KG edges (Church &
-    Hanks 1990) — hub-normalized edge salience before embedding or
-    clustering the co-occurrence graph."""
-    from knowledge_graph_spark.operators.graphops import edge_pmi
-
-    return edge_pmi(_stages(spark, sf_dir)["edges"])
-
-
 def q_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic filtered negative sampling over the merged KG
     (TransE-style corruption, hash-derived — resumable, no RNG state)."""
@@ -5593,107 +5231,6 @@ def q_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s = _stages(spark, sf_dir)
     return negative_samples(s["nodes"].select("title"), s["edges"], k=NEGS_K)
-
-
-DECAY_BUCKET_SEC = 86400
-
-
-def q_edge_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exponential recency decay over the KG's temporal edge lineage —
-    decay_micro = 1000000 DIV 2^age_days from the corpus's own max
-    last_seen; the freshness re-ranker for KG reads (exact integers)."""
-    from knowledge_graph_spark.operators.temporal import (
-        edge_recency_weights,
-        edge_time_ranges,
-    )
-
-    s = _stages(spark, sf_dir)
-    t = transcripts_from_events(spark, sf_dir)
-    et = edge_time_ranges(s["raw_records"], t).select(
-        "source",
-        "target",
-        F.unix_timestamp("last_seen").cast("bigint").alias("last_seen_epoch"),
-        "n_convs",
-    )
-    return edge_recency_weights(et, bucket_sec=DECAY_BUCKET_SEC)
-
-
-def q_temporal_salience(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temporal entity salience: weighted PageRank whose edge weight is
-    the DECAYED assertion support (edge_recency_weights'
-    support_decayed_micro floored to whole conv-units, min 1) — "who
-    matters lately" instead of "who ever mattered".  An edge asserted
-    daily last week outranks one asserted once years ago at the same raw
-    weight; fully-decayed edges keep a 1-unit floor so the node set (and
-    the teleport denominator) never changes with the clock.  Composes
-    two existing exact-integer operators (temporal.edge_recency_weights
-    → graphops.pagerank_int weight=), so the oracle is the decay CTEs
-    feeding the weighted-PR unroll.  Weight bound for the int64 contract:
-    floored support ≤ n_convs per edge (the pagerank_w exposure class).
-    Reference anchor: the reference ranks by degree only and keeps no
-    temporal metadata (compute_edge_degree.py, index/operate.py)."""
-    from knowledge_graph_spark.operators.graphops import pagerank_int
-    from knowledge_graph_spark.operators.temporal import (
-        edge_recency_weights,
-        edge_time_ranges,
-    )
-
-    s = _stages(spark, sf_dir)
-    t = transcripts_from_events(spark, sf_dir)
-    et = edge_time_ranges(s["raw_records"], t).select(
-        "source",
-        "target",
-        F.unix_timestamp("last_seen").cast("bigint").alias("last_seen_epoch"),
-        "n_convs",
-    )
-    dec = edge_recency_weights(et, bucket_sec=DECAY_BUCKET_SEC)
-    e = dec.select(
-        "source",
-        "target",
-        F.greatest(
-            F.expr("support_decayed_micro DIV 1000000"), F.lit(1)
-        )
-        .cast("bigint")
-        .alias("weight"),
-    )
-    return pagerank_int(e, iterations=PR_ITER, weight="weight")
-
-
-def _edge_decay_ctes() -> str:
-    """CTE chain ending in ``ed_decay`` — the edge-recency-decay oracle
-    body (mirrors temporal.edge_recency_weights over the KG's temporal
-    edge lineage), shared by the ``edge_decay`` gate and the
-    ``temporal_salience`` composition."""
-    decay_case = f"""CASE WHEN (t_max - last_seen_epoch)
-                                  // {DECAY_BUCKET_SEC} >= 20 THEN 0
-                             ELSE 1000000 // (CAST(1 AS BIGINT) <<
-                                  ((t_max - last_seen_epoch)
-                                   // {DECAY_BUCKET_SEC}))
-                        END"""
-    return f"""
-            , et_pairs AS (
-              SELECT DISTINCT least(source, target) AS source,
-                              greatest(source, target) AS target, conv_id
-              FROM rel_records),
-            et_conv AS (SELECT conv_id, max(ts) AS c_last
-                        FROM transcripts GROUP BY conv_id),
-            ed_et AS MATERIALIZED (
-              SELECT source, target,
-                     CAST(floor(epoch(max(c_last))) AS BIGINT)
-                       AS last_seen_epoch,
-                     CAST(count(DISTINCT conv_id) AS BIGINT) AS n_convs
-              FROM et_pairs JOIN et_conv USING (conv_id)
-              GROUP BY source, target),
-            ed_tm AS (SELECT max(last_seen_epoch) AS t_max FROM ed_et),
-            ed_decay AS MATERIALIZED (
-              SELECT source, target, last_seen_epoch,
-                     CAST((t_max - last_seen_epoch) // {DECAY_BUCKET_SEC}
-                          AS BIGINT) AS age_buckets,
-                     CAST({decay_case} AS BIGINT) AS decay_micro,
-                     CAST(n_convs * ({decay_case}) AS BIGINT)
-                       AS support_decayed_micro
-              FROM ed_et CROSS JOIN ed_tm)
-            """
 
 
 def q_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5753,22 +5290,6 @@ SELECT conv_id, turn_idx, is_boundary,
 FROM tsg_b
 """
 
-_PMI_BODY = """
-, pmi_e AS MATERIALIZED (
-  SELECT source, target, CAST(floor(weight) AS BIGINT) AS c_ab FROM kg_edges),
-pmi_m AS MATERIALIZED (
-  SELECT title, sum(c_ab) AS c_m FROM (
-    SELECT source AS title, c_ab FROM pmi_e
-    UNION ALL SELECT target AS title, c_ab FROM pmi_e) GROUP BY title),
-pmi_t AS (SELECT sum(c_ab) AS n_tot FROM pmi_e)
-SELECT source, target, c_ab,
-       CAST(length(bin(c_ab * n_tot)) - 1 AS BIGINT)
-       - CAST(length(bin(ca.c_m * cb.c_m)) - 1 AS BIGINT) AS pmi_bits
-FROM pmi_e
-JOIN pmi_m ca ON pmi_e.source = ca.title
-JOIN pmi_m cb ON pmi_e.target = cb.title
-CROSS JOIN pmi_t
-"""
 
 def _negs_body(as_cte: str | None = None, k: int = NEGS_K) -> str:
     """Deterministic filtered negative sampling over kg_edges — mirrors
@@ -5990,14 +5511,12 @@ def q_emb_prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 15: double-sweep diameter bound, 1-WL color refinement, event-time
-# lateness audit, distinct-n diversity, tf-idf cosine near-dup pairs.
+# Wave 15: double-sweep diameter bound, 1-WL color refinement, distinct-n
+# diversity.
 # ---------------------------------------------------------------------------
 
 DS_HOPS = 4
 WL_ROUNDS = 3
-TFIDF_N = 2
-TFIDF_TAU_MICRO = 500_000
 
 
 def q_diameter_lb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6022,15 +5541,6 @@ def q_wl_colors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time lateness audit per conversation (arrival order =
-    (conv_id, turn_idx)) — the watermark-sizing telemetry for the
-    streaming sessionizers; exact int64 epoch-us deficits."""
-    from knowledge_graph_spark.operators.temporal import lateness_profile
-
-    return lateness_profile(transcripts_from_events(spark, sf_dir))
-
-
 def q_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-n diversity profile (Li et al. 2016) per document — the
     in-document repetition filter (decoding loops, boilerplate) in exact
@@ -6038,18 +5548,6 @@ def q_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from knowledge_graph_spark.operators.corpus import ngram_diversity
 
     return ngram_diversity(_docs(spark, sf_dir))
-
-
-def q_tfidf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sparse tf-idf cosine near-dup pairs on bigram terms — the WEIGHTED
-    (Salton) complement of the unweighted n-gram Jaccard dedup; integer
-    bit-length idf, df-pruned inverted-index self-join, one identical
-    IEEE-double normalization both engines."""
-    from knowledge_graph_spark.operators.dedup import tfidf_cosine_pairs
-
-    return tfidf_cosine_pairs(
-        _docs(spark, sf_dir), threshold_micro=TFIDF_TAU_MICRO, n=TFIDF_N
-    )
 
 
 def _ds_body(hops: int = DS_HOPS) -> str:
@@ -6119,26 +5617,6 @@ FROM wl_c{rounds}"""
     return sql
 
 
-_LATENESS_BODY = """
-, lt AS (
-  SELECT conv_id,
-         epoch_us(ts) AS ts_us,
-         max(epoch_us(ts)) OVER (
-           PARTITION BY conv_id ORDER BY turn_idx
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_max
-  FROM transcripts),
-lt2 AS (
-  SELECT conv_id,
-         greatest(CAST(0 AS BIGINT), coalesce(prev_max - ts_us, 0)) AS late_us
-  FROM lt)
-SELECT conv_id, CAST(count(*) AS BIGINT) AS n_turns,
-       CAST(count(*) FILTER (WHERE late_us > 0) AS BIGINT) AS n_late,
-       CAST(max(late_us) AS BIGINT) AS max_late_us,
-       CAST(sum(late_us) AS BIGINT) AS total_late_us
-FROM lt2 GROUP BY conv_id
-"""
-
-
 _NGRAM_DIVERSITY_SQL = """
 WITH dtoks AS (
   SELECT doc_id,
@@ -6167,44 +5645,6 @@ SELECT doc_id,
        CAST(len(list_distinct(g3)) * 1000000
             // greatest(CAST(1 AS BIGINT), len(t) - 2) AS BIGINT) AS ratio_micro_3
 FROM g
-"""
-
-_TFIDF_SQL = f"""
-WITH dtoks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'),
-                     '\\s+'), x -> x <> '') AS t
-  FROM documents
-),
-tp_g AS (
-  SELECT doc_id, t[CAST(i AS INT)] || ' ' || t[CAST(i AS INT) + 1] AS term
-  FROM dtoks,
-       LATERAL unnest(range(1, CASE WHEN len(t) < 2 THEN 1 ELSE len(t) END)) AS u(i)
-),
-tp_tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM tp_g GROUP BY doc_id, term),
-tp_nd AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n FROM tp_tf),
-tp_df AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tp_tf GROUP BY term),
-tp_w AS MATERIALIZED (
-  SELECT tp_tf.doc_id, tp_tf.term,
-         tp_tf.tf * (length(bin((SELECT n FROM tp_nd) // tp_df.df)) - 1) AS w
-  FROM tp_tf JOIN tp_df USING (term)
-  WHERE tp_df.df <= 1000
-    AND (length(bin((SELECT n FROM tp_nd) // tp_df.df)) - 1) > 0),
-tp_norm AS (SELECT doc_id, CAST(sum(w * w) AS BIGINT) AS n2 FROM tp_w GROUP BY doc_id),
-tp_dot AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(sum(a.w * b.w) AS BIGINT) AS dot
-  FROM tp_w a JOIN tp_w b ON a.term = b.term AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id)
-SELECT id_a, id_b, dot,
-       CAST(floor(1000000.0 * CAST(dot AS DOUBLE)
-                  / sqrt(CAST(na.n2 AS DOUBLE) * CAST(nb.n2 AS DOUBLE))) AS BIGINT)
-         AS sim_micro
-FROM tp_dot
-JOIN tp_norm na ON na.doc_id = id_a
-JOIN tp_norm nb ON nb.doc_id = id_b
-WHERE CAST(floor(1000000.0 * CAST(dot AS DOUBLE)
-                 / sqrt(CAST(na.n2 AS DOUBLE) * CAST(nb.n2 AS DOUBLE))) AS BIGINT)
-      >= {TFIDF_TAU_MICRO}
 """
 
 
@@ -6409,35 +5849,6 @@ def q_source_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_best_of_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-aware near-dup survivor selection: the n-gram Jaccard
-    clusters re-resolved to keep each cluster's HIGHEST-quality member
-    (dedup.quality_survivors) instead of the min-id convention — the
-    keep/drop table a training-data mixer actually wants."""
-    docs = _docs(spark, sf_dir)
-    pairs = dedup.ngram_jaccard_pairs(docs, n=NGRAM_N, threshold=NGRAM_THRESHOLD)
-    clusters = dedup.dedup_clusters(docs, pairs).select("doc_id", "canonical_id")
-    scores = q_text_profile(spark, sf_dir).select(
-        "doc_id",
-        F.floor(F.col("quality") * 1000000).cast("bigint").alias("quality_micro"),
-    )
-    return dedup.quality_survivors(clusters, scores)
-
-
-_BEST_OF_CLUSTER_SQL = """
-WITH dupc AS ({clusters}),
-prof AS ({profile}),
-boc AS (
-  SELECT c.doc_id, c.canonical_id,
-         CAST(floor(p.quality * 1000000) AS BIGINT) AS quality_micro
-  FROM dupc c JOIN prof p USING (doc_id))
-SELECT doc_id, canonical_id, quality_micro,
-       row_number() OVER (PARTITION BY canonical_id
-                          ORDER BY quality_micro DESC, doc_id) = 1 AS keep
-FROM boc
-"""
-
-
 _SOURCE_PROFILE_SQL = """
 WITH prof AS ({profile})
 SELECT d.source,
@@ -6522,8 +5933,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "decontam_pairs": q_decontam_pairs,
         "familiarity": q_familiarity,
         "repeated_spans": q_repeated_spans,
-        "winnow_fp": q_winnow_fp,
-        "winnow_dedup": q_winnow_dedup,
         "dsir_select": q_dsir_select,
         "ccnet_buckets": q_ccnet_buckets,
         "kmv_overlap": q_kmv_overlap,
@@ -6541,7 +5950,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "neighborhood_fn": q_neighborhood_fn,
         "harmonic_centrality": q_harmonic,
         "eff_diameter": q_eff_diameter,
-        "neighbor_sample": q_neighbor_sample,
         "cms_counts": q_cms_counts,
         "length_hist": q_length_hist,
         "length_quantiles": q_length_quantiles,
@@ -6555,7 +5963,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_asof": q_kg_asof,
         "kg_diff": q_kg_diff,
         "kg_retract": q_kg_retract,
-        "kg_growth": q_kg_growth,
         "type_mixing": q_type_mixing,
         "typed_lpa": q_typed_lpa,
         "max_matching": q_max_matching,
@@ -6566,21 +5973,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "emb_prefix_topk": q_emb_prefix_topk,
         "diameter_lb": q_diameter_lb,
         "wl_colors": q_wl_colors,
-        "lateness": q_lateness,
         "ngram_diversity": q_ngram_diversity,
-        "tfidf_pairs": q_tfidf_pairs,
         "msf": q_msf,
         "densest": q_densest,
         "knn_graph": q_knn_graph,
         "lp_ranking": q_lp_ranking,
-        "edge_decay": q_edge_decay,
-        "temporal_salience": q_temporal_salience,
         "heaps_law": q_heaps,
-        "blocking_audit": q_blocking_audit,
-        "comention_bursts": q_comention_bursts,
-        "entity_lifecycle": q_entity_lifecycle,
         "topic_segments": q_topic_segments,
-        "edge_pmi": q_edge_pmi,
         "negative_samples": q_negative_samples,
         "jp_coloring": q_jp_coloring,
         "pagerank_w": q_pagerank_w,
@@ -6600,7 +5999,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "leakfree_split": q_leakfree_split,
         "length_stats": q_length_stats,
         "bfs_hops": q_bfs_hops,
-        "edge_times": q_edge_times,
         "media_meta": q_media_meta,
         "frame_plan": q_frame_plan,
         "sessions": q_sessions,
@@ -6608,8 +6006,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tool_scc": q_tool_scc,
         "turn_latency": q_turn_latency,
         "tool_latency": q_tool_latency,
-        "event_sliding": q_event_sliding,
-        "sessions_native": q_sessions_native,
         "conv_shapes": q_conv_shapes,
         "tool_ngrams": q_tool_ngrams,
         "role_profile": q_role_profile,
@@ -6620,13 +6016,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bpe_merges": q_bpe_merges,
         "bpe_tokenize": q_bpe_tokenize,
         "bpe_fertility": q_bpe_fertility,
-        "events_asof": q_events_asof,
         "event_hourly": q_event_hourly,
         "textrank": q_textrank,
         "weak_votes": q_weak_votes,
         "weak_lf_stats": q_weak_lf_stats,
         "source_profile": q_source_profile,
-        "best_of_cluster": q_best_of_cluster,
     }
 
 
@@ -7039,8 +6433,6 @@ FROM c
         "decontam_pairs": _DECONTAM_PAIRS_SQL,
         "familiarity": _FAMILIARITY_SQL,
         "repeated_spans": _REPEATED_SPANS_SQL,
-        "winnow_fp": _WINNOW_SQL,
-        "winnow_dedup": _WINNOW_DEDUP_SQL,
         "dsir_select": _DSIR_SQL,
         "kmv_overlap": _KMV_SQL.format(M=KMV_MOD, K=KMV_K),
         "diverse_keep": _mis_oracle(MIS_ROUNDS),
@@ -7099,26 +6491,6 @@ FROM pos p JOIN neg n USING (anchor_id)
         "neighborhood_fn": _oracle(_hyperball_oracle(HYPERBALL_ROUNDS, nf=True)),
         "harmonic_centrality": _oracle(_hyperball_oracle(HYPERBALL_ROUNDS, hc=True)),
         "eff_diameter": _oracle(_hyperball_oracle(HYPERBALL_ROUNDS, ed=True)),
-        "neighbor_sample": _oracle(
-            f"""
-            , ns_sym AS (
-              SELECT source AS node, target AS neighbor FROM kg_edges
-              UNION
-              SELECT target AS node, source AS neighbor FROM kg_edges
-            ),
-            ns_h AS (
-              SELECT node, neighbor,
-                     {_perm(_POLY.format(s="(node || '#' || neighbor)"), "31")} AS h
-              FROM ns_sym WHERE node <> neighbor
-            )
-            SELECT node, neighbor, rk FROM (
-              SELECT node, neighbor,
-                     CAST(row_number() OVER (PARTITION BY node
-                          ORDER BY h, neighbor) AS INT) AS rk
-              FROM ns_h
-            ) WHERE rk <= {NEIGHBOR_SAMPLE_K}
-            """
-        ),
         "cms_counts": _CMS_SQL,
         "length_hist": _LENGTH_HIST_SQL,
         "hll_lang": _HLL_LANG_SQL,
@@ -7176,22 +6548,6 @@ GROUP BY lang, pct
         "kg_asof": _asof_oracle(),
         "kg_diff": _oracle(_kg_diff_body()),
         "kg_retract": _retract_oracle(),
-        "kg_growth": _oracle("""
-, et_pairs AS (
-  SELECT DISTINCT least(source, target) AS source,
-                  greatest(source, target) AS target, conv_id
-  FROM rel_records),
-et_conv AS (SELECT conv_id, min(ts) AS c_first FROM transcripts GROUP BY conv_id),
-et_first AS (
-  SELECT source, target,
-         CAST(floor(epoch(min(c_first))) AS BIGINT) AS fs
-  FROM et_pairs JOIN et_conv USING (conv_id)
-  GROUP BY source, target
-)
-SELECT (fs // 3600) * 3600 AS hour_epoch,
-       CAST(count(*) AS BIGINT) AS n_new_edges
-FROM et_first GROUP BY (fs // 3600) * 3600
-"""),
         "type_mixing": _oracle("""
 SELECT least(ta.type, tb.type) AS type_a,
        greatest(ta.type, tb.type) AS type_b,
@@ -7210,33 +6566,9 @@ GROUP BY least(ta.type, tb.type), greatest(ta.type, tb.type)
         "emb_prefix_topk": _EMB_PREFIX_TOPK_SQL,
         "diameter_lb": _oracle(_ds_body()),
         "wl_colors": _oracle(_wl_body()),
-        "lateness": _oracle(_LATENESS_BODY),
         "ngram_diversity": _NGRAM_DIVERSITY_SQL,
-        "tfidf_pairs": _TFIDF_SQL,
         "msf": _oracle(_msf_body()),
         "lp_ranking": _oracle(_lp_body()),
-        "edge_decay": _oracle(
-            _edge_decay_ctes()
-            + """
-            SELECT source, target, last_seen_epoch, age_buckets,
-                   decay_micro, support_decayed_micro
-            FROM ed_decay
-            """
-        ),
-        # temporal salience = decayed-support weighted PageRank: the
-        # decay CTEs feed the SAME weighted-PR unroll the pagerank_w
-        # gate uses, over a derived edge table
-        "temporal_salience": _oracle(
-            _edge_decay_ctes()
-            + """,
-            tsal_edges AS MATERIALIZED (
-              SELECT source, target,
-                     CAST(greatest(support_decayed_micro // 1000000, 1)
-                          AS BIGINT) AS weight
-              FROM ed_decay)
-            """
-            + _pr_body(weighted=True, edges_cte="tsal_edges")
-        ),
         "heaps_law": _oracle(
             r"""
             , hp_base AS MATERIALIZED (
@@ -7285,11 +6617,7 @@ GROUP BY least(ta.type, tb.type), greatest(ta.type, tb.type)
             GROUP BY a, b, w
             """
         ),
-        "blocking_audit": _BLOCKING_AUDIT_SQL,
-        "comention_bursts": _oracle(_CB_BODY),
-        "entity_lifecycle": _oracle(_EL_BODY),
         "topic_segments": _oracle(_TSEG_BODY),
-        "edge_pmi": _oracle(_PMI_BODY),
         "negative_samples": _oracle(_NEGS_BODY),
         "jp_coloring": _oracle(_jp_body()),
         "pagerank_w": _oracle(_pr_body(weighted=True)),
@@ -7374,20 +6702,6 @@ FROM (SELECT doc_id, canonical_id,
 """,
         "length_stats": _LENGTH_STATS_SQL.format(profile=_TEXT_PROFILE_SQL),
         "bfs_hops": _oracle(_bfs_body()),
-        "edge_times": _oracle("""
-, et_pairs AS (
-  SELECT DISTINCT least(source, target) AS source,
-                  greatest(source, target) AS target, conv_id
-  FROM rel_records),
-et_conv AS (SELECT conv_id, min(ts) AS c_first, max(ts) AS c_last
-            FROM transcripts GROUP BY conv_id)
-SELECT source, target,
-  CAST(floor(epoch(min(c_first))) AS BIGINT) AS first_seen_epoch,
-  CAST(floor(epoch(max(c_last))) AS BIGINT) AS last_seen_epoch,
-  CAST(count(DISTINCT conv_id) AS BIGINT) AS n_convs
-FROM et_pairs JOIN et_conv USING (conv_id)
-GROUP BY source, target
-"""),
         "emb_topk": _EMB_TOPK_SQL,
         "emb_ivf_topk": _EMB_IVF_SQL,
         "emb_neardup": _EMB_NEARDUP_SQL,
@@ -7431,83 +6745,6 @@ GROUP BY source, target
             FROM sidx GROUP BY user_id, session_idx
             """
         ),
-        # Independent-implementation oracle: DuckDB's native ASOF LEFT
-        # JOIN vs the Spark union+window composition.  Right side deduped
-        # to one row per (user, ts) — max value — on both engines so the
-        # match is deterministic.
-        "events_asof": _oracle(
-            """
-            , al AS (
-              SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
-              FROM events WHERE event_type = 'purchase'
-            ),
-            ar0 AS (
-              SELECT user_id, epoch_us(ts) AS ts_us, value AS value_r,
-                     row_number() OVER (
-                       PARTITION BY user_id, epoch_us(ts)
-                       ORDER BY value DESC) AS rn
-              FROM events WHERE event_type = 'signup'
-            ),
-            ar AS (SELECT user_id, ts_us, value_r FROM ar0 WHERE rn = 1)
-            SELECT al.event_id, al.user_id, al.value,
-                   ar.value_r AS value_r, ar.ts_us AS ts_r
-            FROM al ASOF LEFT JOIN ar
-              ON al.user_id = ar.user_id AND al.ts_us >= ar.ts_us
-            """
-        ),
-        # Sliding windows: start = slide_bucket(t) − k·slide for every
-        # k < width/slide — all epoch-aligned, all within width of t by
-        # construction (t − slide_bucket(t) < slide ≤ width − k·slide).
-        "event_sliding": _oracle(
-            """
-            , sw AS (
-              SELECT epoch_us(time_bucket(INTERVAL '30 minutes', ts)) AS sb,
-                     event_type, CAST(value AS DECIMAL(18,2)) AS val
-              FROM events
-            )
-            SELECT sb - k * 1800000000 AS window_start_us, event_type,
-                   count(*) AS n_events, CAST(sum(val) AS DOUBLE) AS total_value
-            FROM sw, unnest(range(0, 2)) u(k)
-            GROUP BY 1, 2
-            """
-        ),
-        # Native session windows cross-checked by the INDEPENDENT lag
-        # construction.  Boundary semantics verified by unit test: an
-        # event at EXACTLY gap after the previous one still merges
-        # (Spark treats the window end inclusively when extending), so
-        # is_new uses the same > as session_stats.
-        "sessions_native": _oracle(
-            """
-            , snev AS (
-              SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-                     CAST(value AS DECIMAL(18,2)) AS val
-              FROM events
-            ),
-            snlag AS (
-              SELECT *, lag(ts_us) OVER (
-                PARTITION BY user_id ORDER BY ts_us, event_id) AS prev_us
-              FROM snev
-            ),
-            snflag AS (
-              SELECT *, CASE WHEN prev_us IS NULL
-                              OR ts_us - prev_us > 1800000000
-                         THEN 1 ELSE 0 END AS is_new
-              FROM snlag
-            ),
-            snidx AS (
-              SELECT *, sum(is_new) OVER (
-                PARTITION BY user_id ORDER BY ts_us, event_id
-                ROWS UNBOUNDED PRECEDING) AS session_idx
-              FROM snflag
-            )
-            SELECT user_id,
-                   min(ts_us) AS start_us,
-                   max(ts_us) + 1800000000 AS end_us,
-                   count(*) AS n_events,
-                   CAST(sum(val) AS DOUBLE) AS total_value
-            FROM snidx GROUP BY user_id, session_idx
-            """
-        ),
         "event_hourly": _oracle(
             """
             SELECT epoch_us(time_bucket(INTERVAL '1 hour', ts)) AS window_start_us,
@@ -7521,7 +6758,4 @@ GROUP BY source, target
         "weak_votes": f"WITH {_wl_matrix_ctes()} SELECT * FROM wl_v",
         "weak_lf_stats": _wl_stats_sql(),
         "source_profile": _SOURCE_PROFILE_SQL.format(profile=_TEXT_PROFILE_SQL),
-        "best_of_cluster": _BEST_OF_CLUSTER_SQL.format(
-            clusters=_DEDUP_CLUSTERS_SQL, profile=_TEXT_PROFILE_SQL
-        ),
     }

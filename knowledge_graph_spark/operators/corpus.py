@@ -422,7 +422,6 @@ def dsir_scores(
     text_col: str = "text",
     n_buckets: int = 4096,
     keep_k: int = 100,
-    bucket_counts: DataFrame | None = None,
 ) -> DataFrame:
     """Data Selection with Importance Resampling (DSIR, Xie et al. 2023,
     arXiv:2302.03169): score every raw document by how much its hashed
@@ -456,11 +455,6 @@ def dsir_scores(
 
     Returns (doc_id, n_grams, dsir_bits, mean_lr_micro, selected) for
     every input document (docless-of-bigrams rows score 0).
-
-    ``bucket_counts``: optionally score against EXTERNAL models — a
-    (b, cr, ct) table of per-bucket raw/target bigram counts.  It must
-    cover the scored docs' buckets (true whenever the model corpus is a
-    superset); by default the models are fit on ``docs`` itself.
     """
     from ..functions.textqc import rolling_fingerprint
     from .dedup import token_windows
@@ -479,23 +473,12 @@ def dsir_scores(
         F.first("is_target").alias("is_target"),
     ).persist()
     bits = lambda c: (F.length(F.bin(c + F.lit(1))) - 1).cast("bigint")  # noqa: E731
-    if bucket_counts is None:
-        bucket_counts = occ.groupBy("b").agg(
-            F.sum("c").alias("cr"),
-            F.sum(F.when(F.col("is_target"), F.col("c")).otherwise(0)).alias("ct"),
-        )
-    buckets = bucket_counts.select(
-        "b", (bits(F.col("ct")) - bits(F.col("cr"))).alias("wt")
-    )
-    # LEFT join: an external model that doesn't cover a bucket must not
-    # silently drop its occurrences from n_grams (biasing the mean) — an
-    # unmodeled bucket scores the add-one-smoothed unseen value,
-    # bits(0+1) - bits(0+1) = 0, exactly what fitting with ct=cr=0 gives.
-    # The internal fit (bucket_counts from occ itself) always matches, so
-    # this is a no-op on the default path.
+    buckets = occ.groupBy("b").agg(
+        F.sum("c").alias("cr"),
+        F.sum(F.when(F.col("is_target"), F.col("c")).otherwise(0)).alias("ct"),
+    ).select("b", (bits(F.col("ct")) - bits(F.col("cr"))).alias("wt"))
     prof = (
-        occ.join(F.broadcast(buckets), "b", "left")
-        .withColumn("wt", F.coalesce("wt", F.lit(0).cast("bigint")))
+        occ.join(F.broadcast(buckets), "b")
         .groupBy("doc_id")
         .agg(
             F.sum("c").cast("bigint").alias("n_grams"),

@@ -29,12 +29,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.textqc import (
-    FP_MOD,
     content_hash,
     normalized_text,
     rolling_fingerprint,
@@ -434,425 +433,4 @@ def repeated_span_profile(
         "n_windows",
         "n_repeated",
         F.floor(frac).cast("bigint").alias("rep_micro"),
-    )
-
-
-def winnow_fingerprints(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    w: int = 4,
-) -> DataFrame:
-    """Winnowing document sketch (Schleimer, Wilkerson, Aiken 2003 — the
-    MOSS local fingerprinting scheme) → (doc_id, pos, fp): the selected
-    k-gram fingerprints with their token positions.
-
-    Per document: fingerprint every token k-gram with the shared
-    Rabin-Karp fold, then slide a window of ``w`` consecutive
-    fingerprints and select each window's MINIMUM (rightmost on ties —
-    the paper's rule), deduplicating repeat selections.  Guarantee: any
-    shared token run of length ≥ w + k − 1 contributes at least one
-    common selected fingerprint, so the sketch is a locality-preserving
-    ~1/w-rate sample of the gram stream — the standard index for
-    plagiarism / near-dup candidate generation at a fraction of the
-    full-gram index cost.  Documents with fewer than ``w`` k-grams get
-    one window covering what exists; documents shorter than ``k`` tokens
-    emit nothing.
-
-    Scale shape: selection is entirely ROW-LOCAL native Column algebra
-    (transform + aggregate over per-doc arrays — no shuffle, stays in
-    codegen); the output is the sketch table itself, ~n_grams/w rows per
-    doc, which downstream candidate joins treat exactly like the n-gram
-    inverted index but w× smaller.
-    """
-    toks = ws_tokens_col(normalized_text(F.col(text_col)))
-    grams = F.when(F.size(toks) < k, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - k),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
-        )
-    )
-    fps = F.transform(grams, lambda g, i: F.struct(
-        i.cast("bigint").alias("pos"),
-        rolling_fingerprint(g).alias("fp"),
-    ))
-    base = widen(docs).select(F.col(id_col).alias("doc_id"), fps.alias("fps"))
-    m = F.size("fps")
-    # window starts: 0 .. m-w (one window when 0 < m < w)
-    starts = F.when(m == 0, F.array().cast("array<int>")).otherwise(
-        F.sequence(F.lit(0), F.greatest(m - w, F.lit(0)))
-    )
-    sentinel = F.struct(
-        F.lit(-1).cast("bigint").alias("pos"), F.lit(FP_MOD).cast("long").alias("fp")
-    )
-    sel = F.transform(
-        starts,
-        lambda j: F.aggregate(
-            F.slice(F.col("fps"), j + 1, w),
-            sentinel,
-            lambda acc, x: F.when(
-                (x["fp"] < acc["fp"]) | ((x["fp"] == acc["fp"]) & (x["pos"] > acc["pos"])),
-                x,
-            ).otherwise(acc),
-        ),
-    )
-    # array_distinct already collapses repeat selections within the doc
-    # and ``id_col`` is a key, so the rows are globally distinct with NO
-    # shuffle — the sketch never leaves the scan stage.
-    return base.select(
-        "doc_id", F.explode(F.array_distinct(sel)).alias("s")
-    ).select("doc_id", F.col("s.pos").alias("pos"), F.col("s.fp").alias("fp"))
-
-
-def winnow_dedup_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    w: int = 4,
-    threshold: float = 0.5,
-    max_fp_df: int = 1000,
-) -> DataFrame:
-    """(id_a, id_b, jaccard) near-dup candidates from the winnowing
-    sketch — the MOSS pipeline's matching stage.
-
-    Identical candidate-join shape to `ngram_jaccard_pairs`, but the
-    posting list is the winnowed fingerprint sample instead of the full
-    distinct-gram set: ~w× fewer postings, so the self-join (the O(n²)
-    pressure point at corpus scale) shrinks quadratically in the overlap
-    regions while the winnowing guarantee keeps every shared run of
-    ≥ w + k − 1 tokens discoverable.  Jaccard here is sketch-set
-    resemblance (selected-fp sets), a biased-but-monotone estimate of
-    gram Jaccard — standard for candidate GENERATION; verify with the
-    exact op if exactness matters.  ``max_fp_df`` df-prunes boilerplate
-    fingerprints exactly like the stop-gram cap.
-    """
-    sketch = (
-        winnow_fingerprints(docs, id_col=id_col, text_col=text_col, k=k, w=w)
-        .select("doc_id", "fp")
-        .distinct()
-        .persist()
-    )
-    sizes = sketch.groupBy("doc_id").agg(F.count("*").alias("n_fps"))
-    rare = (
-        sketch.groupBy("fp")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= max_fp_df)
-        .select("fp")
-    )
-    posting = sketch.join(rare, "fp")
-    inter = (
-        posting.alias("a")
-        .join(posting.alias("b"), "fp")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_fps").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_fps").alias("nb"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("inter").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("inter")).cast("double")
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def char_shingle_table(
-    names: DataFrame, name_col: str = "title", k: int = 9
-) -> DataFrame:
-    """(name, g): the DISTINCT character k-shingles of each name under
-    MinHash normalization (upper + whitespace collapse; a string shorter
-    than k is its own single shingle) — the exact-set twin of the hashed
-    shingles inside make_minhash_udf, generated natively (transform over
-    a sequence, whole-stage codegen; no Python)."""
-    s = F.regexp_replace(F.upper(F.trim(F.col(name_col))), r"\s+", " ")
-    arr = F.when(F.length(s) <= k, F.array(s)).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.length(s) - k + 1),
-            lambda i: s.substr(i, F.lit(k)),
-        )
-    )
-    return (
-        names.select(F.col(name_col).alias("name"), F.explode(F.array_distinct(arr)).alias("g"))
-        .filter(F.col("g") != "")
-        .distinct()
-    )
-
-
-def blocking_quality(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 64,
-    bands: int = 16,
-    shingle_k: int = 9,
-    threshold: float = 0.5,
-    seed: int = 42,
-    max_bucket_size: int = 50,
-    sample_mod: int | None = None,
-) -> DataFrame:
-    """ER blocking-quality audit of the MinHash-LSH blocker (Christen
-    2012's three standard blocking metrics) → ONE row:
-
-      (n_names, n_total_pairs, n_cand, n_truth, n_hit,
-       reduction_ratio, pairs_completeness, pairs_quality)
-
-    Ground truth = ALL name pairs with exact shingle-set Jaccard >=
-    threshold (inverted-index join over the distinct-shingle table — the
-    exact quadratic baseline, no df pruning, no banding).  Candidates =
-    the production blocker's PRE-verification output
-    (linking.minhash_candidate_pairs with the hot-bucket cap, i.e. the
-    pairs the verify stage would actually score).  Then
-      reduction_ratio    = 1 - n_cand / C(n,2)   (work saved by blocking)
-      pairs_completeness = n_hit / n_truth        (recall of true pairs)
-      pairs_quality      = n_hit / n_cand         (precision of candidates)
-
-    This audits the north-rule canonicalization stage itself: banding
-    parameters (num_perm, bands) trade completeness against reduction,
-    and this op measures where the deployed configuration actually sits
-    on that curve.  The exact side is O(sum of squared posting lists) —
-    the dominant gate cost at sf0.1 (651 s: it is the deliberately
-    unpruned quadratic baseline).  ``sample_mod=k`` is the corpus-scale
-    path: keep the deterministic 1/k of names with
-    pmod(rolling_fingerprint(title), k) == 0 — the shared cross-engine
-    hash family, so the SQL oracle applies the identical filter — and
-    audit the blocker on that subcorpus — the three metrics are ratio estimates, stable under
-    uniform name sampling (both truth and candidate pair sets restrict
-    to the SAME sampled name universe, so numerators and denominators
-    shrink together).  ``sample_mod=None``/1 is exact and is what the
-    gate checks; the candidate side is the production blocker and
-    scales as it does.
-
-    All five counts are exact bigints; the three ratios are single IEEE
-    divisions of those counts, so a SQL oracle reproduces every column
-    bit-for-bit.  Zero denominators yield NULL (nullif), never a crash.
-    """
-    named = (
-        docs.select(normalized_text(F.col(text_col)).alias("title"))
-        .filter(F.col("title") != "")
-        .distinct()
-    )
-    if sample_mod is not None and sample_mod > 1:
-        # shared cross-engine rolling-hash family (not xxhash64), so the
-        # SQL oracle can apply the IDENTICAL deterministic subuniverse
-        named = named.filter(
-            F.pmod(rolling_fingerprint(F.col("title")), F.lit(sample_mod)) == 0
-        )
-    named = named.persist()
-    # every multi-consumer frame is persisted: the metric row fans out
-    # into four 1-row aggregates, and without the persists each count
-    # re-runs the signature UDF / shingle explode from the text scan
-    cand = minhash_candidate_pairs(
-        named,
-        name_col="title",
-        num_perm=num_perm,
-        bands=bands,
-        shingle_k=shingle_k,
-        seed=seed,
-        max_bucket_size=max_bucket_size,
-    ).persist()
-    sh = char_shingle_table(named, name_col="title", k=shingle_k).persist()
-    sizes = sh.groupBy("name").agg(F.count("*").alias("n_sh"))
-    inter = (
-        sh.select(F.col("name").alias("name_a"), "g")
-        .join(sh.select(F.col("name").alias("name_b"), "g"), "g")
-        .filter(F.col("name_a") < F.col("name_b"))
-        .groupBy("name_a", "name_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    truth = (
-        inter.join(
-            sizes.select(F.col("name").alias("name_a"), F.col("n_sh").alias("na")),
-            "name_a",
-        )
-        .join(
-            sizes.select(F.col("name").alias("name_b"), F.col("n_sh").alias("nb")),
-            "name_b",
-        )
-        .filter(
-            F.col("inter").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("inter")).cast("double")
-            >= F.lit(threshold)
-        )
-        .select("name_a", "name_b")
-        .persist()
-    )
-    hit = truth.join(cand, ["name_a", "name_b"], "left_semi")
-    c_names = named.agg(F.count("*").cast("bigint").alias("n_names"))
-    c_cand = cand.agg(F.count("*").cast("bigint").alias("n_cand"))
-    c_truth = truth.agg(F.count("*").cast("bigint").alias("n_truth"))
-    c_hit = hit.agg(F.count("*").cast("bigint").alias("n_hit"))
-    return (
-        c_names.crossJoin(c_cand)
-        .crossJoin(c_truth)
-        .crossJoin(c_hit)
-        .select(
-            "n_names",
-            (F.col("n_names") * (F.col("n_names") - 1) / 2)
-            .cast("bigint")
-            .alias("n_total_pairs"),
-            "n_cand",
-            "n_truth",
-            "n_hit",
-            (
-                F.lit(1.0)
-                - F.col("n_cand").cast("double")
-                / F.nullif(
-                    (F.col("n_names") * (F.col("n_names") - 1) / 2).cast("double"),
-                    F.lit(0.0),
-                )
-            ).alias("reduction_ratio"),
-            (
-                F.col("n_hit").cast("double")
-                / F.nullif(F.col("n_truth").cast("double"), F.lit(0.0))
-            ).alias("pairs_completeness"),
-            (
-                F.col("n_hit").cast("double")
-                / F.nullif(F.col("n_cand").cast("double"), F.lit(0.0))
-            ).alias("pairs_quality"),
-        )
-    )
-
-
-def tfidf_cosine_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold_micro: int = 500_000,
-    max_df: int = 1000,
-    n: int = 1,
-) -> DataFrame:
-    """Sparse tf-idf cosine near-duplicate pairs → (id_a, id_b, dot,
-    sim_micro) for pairs with cosine ≥ threshold_micro/1e6.
-
-    The WEIGHTED complement of `ngram_jaccard_pairs`: Jaccard treats
-    every shared n-gram equally, while tf-idf cosine up-weights rare
-    terms and down-weights boilerplate — the Broder-vs-Salton pair every
-    dedup stack ends up running side by side (templated docs score high
-    on Jaccard but low here; topical near-dups the reverse).  Weights are
-    exact int64: w = tf · idf_bits with idf_bits = floor(log2(n_docs //
-    df)) — the same bit-length IDF device as `keywords.bm25_top_terms` —
-    so dot products and norms are integers on both engines; only the
-    final cosine normalization runs ONE identical IEEE-double expression
-    (floor(1e6 · dot / sqrt(na·nb))), bit-reproducible cross-engine.
-
-    Scale shape: the classic df-pruned inverted-index self-join (Bayardo
-    et al. WWW'07 family): tf reduces on (doc, term) FIRST — the shuffle
-    key includes doc_id, so the stop-word head never funnels one task —
-    terms with df > max_df or idf_bits = 0 drop out of the posting list
-    BEFORE the candidate join (they are the O(n²) skew bomb and carry
-    near-zero weight anyway), and the pair aggregate is map-side
-    combinable.  The weighted posting table feeds three consumers →
-    persisted.  The persist is session-lifetime by design: the returned
-    frame's lineage still reads it (an unpersist here would only disable
-    the cache and triple-compute the postings), and the default
-    MEMORY_AND_DISK level leaves eviction to the block manager's LRU —
-    same convention as the other mid-lineage hub persists.  ``n`` sets the token n-gram order of the term space
-    (n = 1: plain unigram tf-idf; n >= 2: shingled cosine - rarer terms,
-    sharper idf spectrum, the w-shingling middle ground between unigram
-    cosine and n-gram Jaccard)."""
-    from .keywords import doc_term_freq
-
-    if n == 1:
-        tf = doc_term_freq(docs, id_col, text_col)
-    else:
-        tf = (
-            widen(docs)
-            .select(
-                F.col(id_col).alias("doc_id"),
-                F.explode(token_ngrams(F.col(text_col), n)).alias("term"),
-            )
-            .groupBy("doc_id", "term")
-            .agg(F.count("*").cast("bigint").alias("tf"))
-        )
-    dfreq = tf.groupBy("term").agg(F.count("*").cast("bigint").alias("df"))
-    n_docs = tf.groupBy("doc_id").count().agg(
-        F.count("*").cast("bigint").alias("n_docs")
-    )
-    weighted = (
-        tf.join(dfreq.filter(F.col("df") <= max_df), "term")
-        .crossJoin(F.broadcast(n_docs))
-        .withColumn(
-            "idf_bits", (F.length(F.bin(F.expr("n_docs DIV df"))) - 1).cast("bigint")
-        )
-        .filter(F.col("idf_bits") > 0)
-        .select("doc_id", "term", (F.col("tf") * F.col("idf_bits")).alias("w"))
-        .persist()
-    )
-    norms = weighted.groupBy("doc_id").agg(
-        F.sum(F.col("w") * F.col("w")).cast("bigint").alias("norm2")
-    )
-    dots = (
-        weighted.alias("a")
-        .join(weighted.alias("b"), "term")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(F.sum(F.col("a.w") * F.col("b.w")).cast("bigint").alias("dot"))
-    )
-    na = norms.select(F.col("doc_id").alias("id_a"), F.col("norm2").alias("na"))
-    nb = norms.select(F.col("doc_id").alias("id_b"), F.col("norm2").alias("nb"))
-    return (
-        dots.join(na, "id_a")
-        .join(nb, "id_b")
-        .withColumn(
-            "sim_micro",
-            F.floor(
-                F.lit(1_000_000.0)
-                * F.col("dot").cast("double")
-                / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double"))
-            ).cast("bigint"),
-        )
-        .filter(F.col("sim_micro") >= threshold_micro)
-        .select("id_a", "id_b", "dot", "sim_micro")
-    )
-
-
-def quality_survivors(
-    clusters: DataFrame,
-    scores: DataFrame,
-    id_col: str = "doc_id",
-    cluster_col: str = "canonical_id",
-    score_col: str = "quality_micro",
-) -> DataFrame:
-    """Quality-aware survivor selection: within each near-dup cluster
-    keep the HIGHEST-scoring member instead of ``dedup_clusters``'s
-    min-id convention → input columns + ``keep``.
-
-    Min-id survivors are the right default for reproducibility, but a
-    training-data mixer wants the best-written copy of each duplicated
-    document (the near-dup members differ in boilerplate, truncation,
-    OCR noise); this swaps the survivor policy without touching cluster
-    membership.  Total order (score DESC, id ASC) makes the pick
-    deterministic under score ties.  Scores should be exact integers
-    (e.g. the QC profile's quality floored to micros) so both engines
-    agree bit-for-bit.
-
-    Scale shape: one equi-join on id + a top-1 row_number window
-    partitioned by cluster — rank<=1 pushes map-side (WindowGroupLimit),
-    so a pathological mega-cluster ships O(parts) rows, not its
-    population.
-
-    The score join is LEFT so cluster membership is preserved even when
-    ``scores`` misses a member (the documented contract): unscored rows
-    sort after every scored one (NULL → long-min sentinel, still id-
-    tie-broken) rather than silently vanishing from the output."""
-    j = clusters.join(scores.select(id_col, score_col), id_col, "left").withColumn(
-        score_col, F.coalesce(F.col(score_col), F.lit(-(2**63)).cast("long"))
-    )
-    w = Window.partitionBy(cluster_col).orderBy(
-        F.desc(score_col), F.asc(id_col)
-    )
-    return (
-        j.withColumn("_rk", F.row_number().over(w))
-        .withColumn("keep", F.col("_rk") == 1)
-        .drop("_rk")
     )

@@ -779,54 +779,6 @@ def bfs_hops(
     return dist
 
 
-def neighbor_sample(
-    edges: DataFrame,
-    k: int = 5,
-    perm_index: int = 31,
-    src: str = "source",
-    dst: str = "target",
-) -> DataFrame:
-    """Deterministic per-node neighbor sampling → (node, neighbor, rk),
-    rk 1..k: each node keeps its ``k`` hash-ranked neighbors over the
-    symmetrized edge set — the fixed-fanout sampling GraphSAGE-style
-    training pipelines use to bound per-node compute on power-law
-    graphs.  Hash-ranked with the shared SQL-expressible family
-    (perm_{perm_index}(poly_hash(node '#' neighbor))) instead of an RNG
-    so the sample is reproducible across runs AND engines — the DuckDB
-    oracle evaluates the identical arithmetic; (h, neighbor) is a total
-    order within a node.
-
-    Scale shape: one node-keyed window; WindowGroupLimit keeps only k
-    rows per node map-side, so a 10^5-degree hub contributes k rows to
-    the sort, not 10^5."""
-    from .sketches import perm_col, poly_hash_col
-
-    sym = _symmetric_pairs(edges, src, dst)
-    h = perm_col(
-        poly_hash_col(F.concat_ws("#", F.col("node"), F.col("neighbor"))),
-        perm_index,
-    )
-    w = Window.partitionBy("node").orderBy("h", "neighbor")
-    return (
-        sym.withColumn("h", h)
-        .withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= k)
-        .select("node", "neighbor", "rk")
-    )
-
-
-def _symmetric_pairs(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    """Distinct symmetrized (node, neighbor) pairs."""
-    e = edges.select(F.col(src).alias("node"), F.col(dst).alias("neighbor"))
-    return (
-        e.unionByName(
-            edges.select(F.col(dst).alias("node"), F.col(src).alias("neighbor"))
-        )
-        .filter(F.col("node") != F.col("neighbor"))
-        .distinct()
-    )
-
-
 WIDEST_SEED_STRENGTH = 1 << 40
 
 
@@ -1675,65 +1627,6 @@ def coarsen_communities(
                 cur, matching, src="a", dst="b", weight_col="w", count_col="n_multi"
             ).localCheckpoint(eager=True)
     return out
-
-
-def edge_pmi(edges: DataFrame) -> DataFrame:
-    """PMI re-weighting of the co-occurrence KG → (source, target, c_ab,
-    pmi_bits): floor(log2( c_ab * N / (c_a * c_b) )) per edge, computed
-    as a DIFFERENCE OF INTEGER BIT LENGTHS — floor(log2(c_ab*N)) -
-    floor(log2(c_a*c_b)) — so both engines agree bit-for-bit (the same
-    device as BM25's idf_bits; raw float log2 is libm-dependent).
-
-    Raw co-occurrence weight over-credits promiscuous hubs; pointwise
-    mutual information (Church & Hanks 1990) normalizes each edge by its
-    endpoints' marginals — the standard re-weighting before embedding or
-    community-detecting a co-occurrence graph (word2vec's implicit
-    matrix is shifted PMI, Levy & Goldberg 2014).  ``pmi_bits`` is the
-    integer-bits PMI (within 1 bit of the real value, monotone in the
-    odds ratio); positive ⇒ the pair co-occurs more than independence
-    predicts.
-
-    Scale shape: one explode+sum for the marginals (map-side
-    combinable), a 1-row total broadcast, two broadcast joins of the
-    (|V|-sized) marginal table onto edges — the with_edge_rank shape.
-    Precondition: c_ab*N and c_a*c_b < 2^63 (at larger corpus mass,
-    right-shift all counts by a common k first — PMI is shift-invariant
-    up to the floor).
-    """
-    e = edges.select(
-        "source", "target", F.col("weight").cast("bigint").alias("c_ab")
-    )
-    marg = (
-        e.select(F.explode(F.array("source", "target")).alias("title"), "c_ab")
-        .groupBy("title")
-        .agg(F.sum("c_ab").alias("c_m"))
-    )
-    total = e.agg(F.sum("c_ab").alias("n_tot"))
-    bits = lambda c: (F.length(F.bin(c)) - 1).cast("bigint")  # noqa: E731
-    return (
-        e.join(
-            F.broadcast(
-                marg.select(F.col("title").alias("source"), F.col("c_m").alias("c_a"))
-            ),
-            "source",
-        )
-        .join(
-            F.broadcast(
-                marg.select(F.col("title").alias("target"), F.col("c_m").alias("c_b"))
-            ),
-            "target",
-        )
-        .crossJoin(F.broadcast(total))
-        .select(
-            "source",
-            "target",
-            "c_ab",
-            (
-                bits(F.col("c_ab") * F.col("n_tot"))
-                - bits(F.col("c_a") * F.col("c_b"))
-            ).alias("pmi_bits"),
-        )
-    )
 
 
 def negative_samples(

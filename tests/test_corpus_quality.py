@@ -172,92 +172,3 @@ def test_pagerank_int_vs_local(spark):
     assert sum(got.values()) <= 10**12
     # hub c outranks leaf e
     assert got["c"] > got["e"]
-
-
-def _winnow_local(text, k, w):
-    """Pure-Python winnowing replay: k-gram Rabin-Karp fingerprints,
-    window of w fingerprints, rightmost minimum per window, dedup."""
-    from knowledge_graph_spark.functions.textqc import FP_BASE, FP_MOD
-
-    toks = " ".join(text.lower().split()).split(" ") if text.strip() else []
-    if len(toks) < k:
-        return set()
-    fps = []
-    for i in range(len(toks) - k + 1):
-        h = 0
-        for c in " ".join(toks[i : i + k]):
-            h = (h * FP_BASE + ord(c)) % FP_MOD
-        fps.append((i, h))
-    m = len(fps)
-    sel = set()
-    for j in range(max(m - w, 0) + 1):
-        win = fps[j : j + w]
-        best = min(win, key=lambda t: (t[1], -t[0]))
-        sel.add(best)
-    return sel
-
-
-def test_winnow_fingerprints_vs_local(spark):
-    """Spark winnowing equals the local replay per doc, including the
-    sub-window (one window) and sub-k (empty) edge cases."""
-    from knowledge_graph_spark.operators.dedup import winnow_fingerprints
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog again and again"),
-        (2, "alpha beta gamma delta epsilon zeta"),  # 2 grams < w: one window
-        (3, "too short"),                            # < k tokens: no grams
-        (4, "x x x x x x x x x x"),                  # all-equal fps: dedup to 1
-    ]
-    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    out = winnow_fingerprints(docs, k=5, w=4)
-    got = defaultdict(set)
-    for r in out.collect():
-        got[r.doc_id].add((r.pos, r.fp))
-    for doc_id, text in rows:
-        assert got[doc_id] == _winnow_local(text, 5, 4), doc_id
-    assert not got[3]  # sub-k doc emits nothing
-    assert len({fp for _, fp in got[4]}) == 1  # one fp value, w-spaced picks
-
-
-def test_winnow_guarantee_shared_run(spark):
-    """The winnowing guarantee: two docs sharing a token run of length
-    >= w + k - 1 share at least one selected fingerprint value."""
-    from knowledge_graph_spark.operators.dedup import winnow_fingerprints
-
-    shared = " ".join(f"s{i}" for i in range(8))  # w + k - 1 = 8 tokens
-    rows = [
-        (1, " ".join(f"a{i}" for i in range(7)) + " " + shared),
-        (2, shared + " " + " ".join(f"b{i}" for i in range(7))),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    by_doc = defaultdict(set)
-    for r in winnow_fingerprints(docs, k=5, w=4).collect():
-        by_doc[r.doc_id].add(r.fp)
-    assert by_doc[1] & by_doc[2]
-
-
-def test_winnow_dedup_pairs_vs_local(spark):
-    """Sketch-set Jaccard from the local winnow replay matches the Spark
-    pair output; disjoint docs produce no pair; df-pruning kills pairs
-    whose only shared fps are corpus-wide boilerplate."""
-    from knowledge_graph_spark.operators.dedup import winnow_dedup_pairs
-
-    shared = " ".join(f"s{i}" for i in range(30))
-    rows = [
-        (1, shared + " " + " ".join(f"a{i}" for i in range(10))),
-        (2, shared + " " + " ".join(f"b{i}" for i in range(10))),
-        (3, " ".join(f"c{i}" for i in range(40))),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    got = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in winnow_dedup_pairs(docs, k=5, w=4, threshold=0.0).collect()
-    }
-    sk = {d: {fp for _, fp in _winnow_local(t, 5, 4)} for d, t in rows}
-    want = len(sk[1] & sk[2]) / len(sk[1] | sk[2])
-    assert abs(got[(1, 2)] - want) < 1e-12
-    assert (1, 3) not in got and (2, 3) not in got
-    # every fp shared by all docs + df cap of 2 -> boilerplate pruned
-    boiler = [(i, shared) for i in range(1, 5)]
-    bdocs = spark.createDataFrame(boiler, "doc_id bigint, text string")
-    assert winnow_dedup_pairs(bdocs, k=5, w=4, threshold=0.0, max_fp_df=2).count() == 0

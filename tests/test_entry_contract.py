@@ -39,8 +39,6 @@ CHECK = [
     "partition_agreement",
     "kg_diff",
     "copurchase_rank",
-    "entity_lifecycle",
-    "temporal_salience",
     "kg_nodes",
     "kg_edges",
     "edge_rank",
@@ -70,7 +68,6 @@ CHECK = [
     "neighborhood_fn",
     "harmonic_centrality",
     "eff_diameter",
-    "neighbor_sample",
     "pagerank_w",
     "contrastive_pairs",
     "ccnet_buckets",
@@ -92,8 +89,7 @@ CHECK = [
     "length_quantiles",
     "hll_lang",
     "degree_hist",
-    # fifth-session families: agent-trace, graph additions, ANN audits,
-    # PQ, temporal windows
+    # fifth-session families: agent trace, widest paths, BPE pairs, HITS
     "tool_transitions",
     "turn_latency",
     "tool_latency",
@@ -102,28 +98,20 @@ CHECK = [
     "widest_paths",
     "bpe_pairs",
     "hits",
-    "event_sliding",
-    "sessions_native",
     # round-3 additions
-    "winnow_fp",
-    "winnow_dedup",
     "katz",
     "betweenness",
     "kg_asof",
-    "kg_growth",
     "type_mixing",
     # late round-3 waves: every remaining gate family
     "k_truss",
     "typed_lpa",
     "max_matching",
-    "blocking_audit",
-    "comention_bursts",
     "topic_segments",
-    "edge_pmi",
     "negative_samples",
     "jp_coloring",
     "kg_retract",
-    # wave 11: language-ID model + multilevel coarsening
+    # wave 11: multilevel coarsening
     "coarsen",
     "coarsen_l2",
     # wave 12/13: Borůvka MSF family, peeling, ranking eval, telemetry
@@ -131,26 +119,20 @@ CHECK = [
     "densest",
     "knn_graph",
     "lp_ranking",
-    "edge_decay",
     "heaps_law",
     "bpe_fertility",
-    # wave 14: SSSP, C4 census, trained-LM filter, phrase search,
-    # Matryoshka prefix recall
+    # wave 14: SSSP, C4 census
     "sssp",
     "four_cycles",
-    # wave 15: double-sweep diameter, 1-WL colors, lateness audit, hourly
-    # KG churn, distinct-n diversity, tf-idf cosine pairs
+    # wave 15: double-sweep diameter, 1-WL colors, distinct-n diversity
     "diameter_lb",
     "wl_colors",
-    "lateness",
     "ngram_diversity",
-    "tfidf_pairs",
     # wave 16: TextRank turn salience, weak supervision, source rollup
     "textrank",
     "weak_votes",
     "weak_lf_stats",
     "source_profile",
-    "best_of_cluster",
 ]
 
 
@@ -241,3 +223,35 @@ def test_namespaced_prelude_covers_every_cte():
         )
     )
     assert names == set(entry._PRELUDE_CTE_NAMES)
+
+
+def test_entry_module_has_no_orphans():
+    """Every module-level function, class and assigned name in
+    __spark_entry__.py, other than the entry points ``entry``,
+    ``queries`` and ``oracle_sql``, is read somewhere else in the
+    module.  Deleting a gate must take its query, oracle helpers and
+    constants with it; a leftover fails here."""
+    import ast
+
+    tree = ast.parse(Path(entry_mod.__file__).read_text())
+    defined: set[str] = set()
+    loaded: set[str] = set()
+    for stmt in tree.body:
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            binds = {stmt.name}
+        elif isinstance(stmt, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+            binds = {
+                n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)
+            }
+        else:
+            binds = set()
+        defined |= binds
+        # a name read only by its own definition (recursion, X = X + ...)
+        # is still an orphan
+        loaded |= {
+            n.id
+            for n in ast.walk(stmt)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+        } - binds
+    assert defined - loaded - {"entry", "queries", "oracle_sql"} == set()

@@ -399,19 +399,6 @@ def test_global_search_has_no_single_partition_window(spark):
     assert "BroadcastHashJoin" in p
 
 
-def test_neighbor_sample_uses_window_group_limit(spark):
-    """Fixed-fanout sampling must push the rk<=k filter map-side
-    (WindowGroupLimit): a hub's 10^5 neighbors contribute k rows to the
-    per-node sort, not 10^5."""
-    from knowledge_graph_spark.operators.graphops import neighbor_sample
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("a", "c"), ("b", "c")], "source string, target string"
-    )
-    p = plan(neighbor_sample(edges, k=2))
-    assert "WindowGroupLimit" in p
-
-
 def test_partition_agreement_aggregates_contingency_no_python(spark):
     """partition_agreement's sums past the node join run over the
     contingency table: the plan has partial (map-side) aggregation, no
@@ -450,26 +437,6 @@ def test_kg_version_diff_single_shuffle_join_no_python(spark):
     assert "PythonUDF" not in p
     assert "Window" not in p
     # one exchange per side of the join, nothing else
-    assert p.count("Exchange") <= 2
-
-
-def test_entity_lifecycle_single_aggregate_no_python(spark):
-    """entity_lifecycle is native regexp + explode + the exact-distinct
-    aggregate: no Python, no window, Expand feeding exactly two
-    partial-aggregated exchanges (distinct-key dedupe, then the
-    per-title fold)."""
-    import datetime
-
-    from knowledge_graph_spark.operators.temporal import entity_lifecycle
-
-    df = spark.createDataFrame(
-        [("c1", 0, "user", "ALPHA met BETA", "", datetime.datetime(2024, 1, 1))],
-        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
-    )
-    p = plan(entity_lifecycle(df))
-    assert "PythonUDF" not in p
-    assert "Window" not in p
-    assert "Expand" in p and "partial_count" in p
     assert p.count("Exchange") <= 2
 
 

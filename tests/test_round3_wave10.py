@@ -1,7 +1,7 @@
-"""Round-3 wave-10 operators: topic_segments (assemble.py), edge_pmi /
+"""Round-3 wave-10 operators: topic_segments (assemble.py),
 negative_samples / jp_coloring (graphops.py).
 
-topic_segments and edge_pmi are checked against hand-computed values;
+topic_segments is checked against hand-computed values;
 negative_samples against a pure-Python replay of the shared hash family;
 jp_coloring against the proper-coloring invariant (no decided edge is
 monochrome) plus mex-boundedness.
@@ -61,27 +61,6 @@ def test_topic_segments_case_fold(spark):
     out = {r.turn_idx: r.is_boundary for r in topic_segments(t).collect()}
     # overlap {foo, bar}=2, union 5 -> 2/5 >= 1/4: same segment
     assert out[1] is False
-
-
-def test_edge_pmi_exact(spark):
-    from knowledge_graph_spark.operators.graphops import edge_pmi
-
-    edges = [("a", "b", 6.0), ("a", "c", 1.0), ("b", "c", 1.0)]
-    e = spark.createDataFrame(edges, "source string, target string, weight double")
-    out = {(r.source, r.target): (r.c_ab, r.pmi_bits) for r in edge_pmi(e).collect()}
-    n = 8  # total mass
-    marg = {"a": 7, "b": 7, "c": 2}
-
-    def bits(x):
-        return x.bit_length() - 1
-
-    for s, t, w in edges:
-        c = int(w)
-        exp = bits(c * n) - bits(marg[s] * marg[t])
-        assert out[(s, t)] == (c, exp), (s, t)
-    # the hub pair (a,b) must out-PMI nothing vs the rare (a,c)/(b,c)
-    # pairs relative to raw weight: PMI normalizes by the marginals
-    assert out[("a", "b")][1] <= out[("a", "c")][1]
 
 
 def test_negative_samples_replay(spark):

@@ -306,29 +306,6 @@ def test_heaps_profile_mirror(spark):
         assert r.cum_types == len(seen)
 
 
-def test_edge_recency_weights_fixture(spark):
-    from knowledge_graph_spark.operators.temporal import edge_recency_weights
-
-    day = 86400
-    t0 = 1_700_000_000
-    rows = [
-        ("a", "b", t0, 3),            # freshest: age 0, decay 1e6
-        ("a", "c", t0 - day, 2),      # 1 bucket: 500000
-        ("b", "c", t0 - 3 * day, 1),  # 3 buckets: 125000
-        ("c", "d", t0 - 25 * day, 4), # past the cap: 0
-    ]
-    d = spark.createDataFrame(
-        rows, "source string, target string, last_seen_epoch long, n_convs long"
-    )
-    out = {(r.source, r.target): r for r in edge_recency_weights(d).collect()}
-    assert out[("a", "b")].decay_micro == 1_000_000
-    assert out[("a", "b")].support_decayed_micro == 3_000_000
-    assert out[("a", "c")].decay_micro == 500_000
-    assert out[("b", "c")].decay_micro == 125_000
-    assert out[("c", "d")].decay_micro == 0
-    assert out[("c", "d")].age_buckets == 25
-
-
 def test_bpe_fertility_mirror(spark):
     from knowledge_graph_spark.operators.corpus import bpe_fertility, bpe_segment
 

@@ -1,25 +1,17 @@
 """Round-3 wave-15 operators: double-sweep diameter lower bound, 1-WL
-color refinement, event-time lateness audit, KG hour-over-hour churn,
-distinct-n diversity, tf-idf cosine near-dup pairs.
+color refinement, distinct-n diversity.
 
 WL colors are checked value-for-value against a pure-python mirror of the
 shared polynomial hash (the strongest cross-engine exactness proof short
-of the DuckDB gate); tfidf against a python mirror of the exact integer
-weights; the rest against hand fixtures.
+of the DuckDB gate); the rest against hand fixtures.
 """
-
-import math
-
-from pyspark.sql import functions as F
 
 from knowledge_graph_spark.functions.hashing import poly_hash
 from knowledge_graph_spark.operators.corpus import ngram_diversity
-from knowledge_graph_spark.operators.dedup import tfidf_cosine_pairs
 from knowledge_graph_spark.operators.graphops import (
     double_sweep_diameter,
     wl_refinement,
 )
-from knowledge_graph_spark.operators.temporal import lateness_profile
 
 
 def _edges(spark, rows):
@@ -103,24 +95,6 @@ def test_wl_isolated_node_keeps_refining(spark):
 # --- lateness --------------------------------------------------------------
 
 
-def test_lateness_profile_out_of_order_turn(spark):
-    rows = [
-        ("c1", 0, "2024-01-01 10:00:00"),
-        ("c1", 1, "2024-01-01 10:05:00"),
-        ("c1", 2, "2024-01-01 10:03:00"),
-        ("c1", 3, "2024-01-01 10:10:00"),
-        ("c2", 0, "2024-01-01 09:00:00"),
-    ]
-    t = spark.createDataFrame(rows, "conv_id string, turn_idx int, ts_s string").withColumn(
-        "ts", F.to_timestamp("ts_s")
-    )
-    got = {r["conv_id"]: r for r in lateness_profile(t).collect()}
-    assert got["c1"].n_turns == 4 and got["c1"].n_late == 1
-    assert got["c1"].max_late_us == 120_000_000
-    assert got["c1"].total_late_us == 120_000_000
-    assert got["c2"].n_late == 0 and got["c2"].max_late_us == 0
-
-
 # --- distinct-n diversity ---------------------------------------------------
 
 
@@ -142,113 +116,3 @@ def test_ngram_diversity_hand_fixture(spark):
 
 
 # --- tf-idf cosine ----------------------------------------------------------
-
-
-def _tfidf_mirror(docs: dict, threshold_micro: int, max_df: int) -> dict:
-    toks = {d: t.lower().split() for d, t in docs.items()}
-    tf = {d: {} for d in docs}
-    for d, ts in toks.items():
-        for w in ts:
-            tf[d][w] = tf[d].get(w, 0) + 1
-    df = {}
-    for d in tf:
-        for w in tf[d]:
-            df[w] = df.get(w, 0) + 1
-    n_docs = sum(1 for d in tf if tf[d])
-    weights = {
-        d: {
-            w: c * ((n_docs // df[w]).bit_length() - 1)
-            for w, c in tf[d].items()
-            if df[w] <= max_df and (n_docs // df[w]).bit_length() - 1 > 0
-        }
-        for d in tf
-    }
-    norms = {d: sum(v * v for v in ws.values()) for d, ws in weights.items()}
-    out = {}
-    ids = sorted(docs)
-    for i, a in enumerate(ids):
-        for b in ids[i + 1 :]:
-            dot = sum(weights[a][w] * weights[b].get(w, 0) for w in weights[a])
-            if dot <= 0:
-                continue
-            sim = math.floor(1e6 * dot / math.sqrt(float(norms[a]) * float(norms[b])))
-            if sim >= threshold_micro:
-                out[(a, b)] = (dot, sim)
-    return out
-
-
-def test_tfidf_cosine_matches_python_mirror(spark):
-    docs = {
-        1: "alpha beta gamma delta",
-        2: "alpha beta gamma epsilon",
-        3: "zeta eta theta iota",
-        4: "alpha common common common",
-        5: "zeta eta theta kappa",
-    }
-    sdf = spark.createDataFrame(list(docs.items()), "doc_id bigint, text string")
-    got = {
-        (r.id_a, r.id_b): (r.dot, r.sim_micro)
-        for r in tfidf_cosine_pairs(sdf, threshold_micro=100_000).collect()
-    }
-    want = _tfidf_mirror(docs, threshold_micro=100_000, max_df=1000)
-    assert got == want
-    assert (1, 2) in got and (3, 5) in got  # the two near-dup pairs survive
-
-
-def test_tfidf_df_pruning_drops_stop_terms(spark):
-    # a term in EVERY doc has idf_bits = 0 and must not create candidates
-    docs = [(i, "common filler%d" % i) for i in range(1, 5)]
-    sdf = spark.createDataFrame(docs, "doc_id bigint, text string")
-    assert tfidf_cosine_pairs(sdf, threshold_micro=1).count() == 0
-
-
-def _ngram_toks(text: str, n: int):
-    t = text.lower().split()
-    if len(t) < n:
-        return []
-    return [" ".join(t[i : i + n]) for i in range(len(t) - n + 1)]
-
-
-def test_tfidf_bigram_terms_match_mirror(spark):
-    docs = {
-        1: "the quick brown fox jumps",
-        2: "the quick brown fox sleeps",
-        3: "lazy dogs sleep all day",
-        4: "lazy dogs sleep all night",
-    }
-    sdf = spark.createDataFrame(list(docs.items()), "doc_id bigint, text string")
-    got = {
-        (r.id_a, r.id_b): (r.dot, r.sim_micro)
-        for r in tfidf_cosine_pairs(sdf, threshold_micro=100_000, n=2).collect()
-    }
-    grams = {d: _ngram_toks(t, 2) for d, t in docs.items()}
-    # hand-rolled mirror on bigram terms
-    tf = {d: {} for d in docs}
-    for d, ts in grams.items():
-        for w in ts:
-            tf[d][w] = tf[d].get(w, 0) + 1
-    df = {}
-    for d in tf:
-        for w in tf[d]:
-            df[w] = df.get(w, 0) + 1
-    n_docs = len(docs)
-    weights = {
-        d: {
-            w: c * ((n_docs // df[w]).bit_length() - 1)
-            for w, c in tf[d].items()
-            if (n_docs // df[w]).bit_length() - 1 > 0
-        }
-        for d in tf
-    }
-    norms = {d: sum(v * v for v in ws.values()) for d, ws in weights.items()}
-    want = {}
-    ids = sorted(docs)
-    for i, a in enumerate(ids):
-        for b in ids[i + 1 :]:
-            dot = sum(weights[a][w] * weights[b].get(w, 0) for w in weights[a])
-            if dot <= 0:
-                continue
-            sim = math.floor(1e6 * dot / math.sqrt(float(norms[a]) * float(norms[b])))
-            if sim >= 100_000:
-                want[(a, b)] = (dot, sim)
-    assert got == want and (1, 2) in got and (3, 4) in got

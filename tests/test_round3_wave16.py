@@ -214,43 +214,6 @@ def test_weak_lf_stats_custom_lfs(spark):
 # --- quality survivors -------------------------------------------------------
 
 
-def test_quality_survivors_picks_best_and_breaks_ties(spark):
-    from knowledge_graph_spark.operators.dedup import quality_survivors
-
-    clusters = spark.createDataFrame(
-        [(1, 1), (2, 1), (3, 1), (4, 4), (5, 5), (6, 5)],
-        "doc_id long, canonical_id long",
-    )
-    scores = spark.createDataFrame(
-        [(1, 10), (2, 30), (3, 30), (4, 7), (5, 2), (6, 2)],
-        "doc_id long, quality_micro long",
-    )
-    got = {r["doc_id"]: r for r in quality_survivors(clusters, scores).collect()}
-    kept = {d for d, r in got.items() if r["keep"]}
-    # best score wins; score ties break to the smaller doc_id; singletons keep
-    assert kept == {2, 4, 5}
-    # membership is untouched — every input row survives with its cluster
-    assert {(d, r["canonical_id"]) for d, r in got.items()} == {
-        (1, 1), (2, 1), (3, 1), (4, 4), (5, 5), (6, 5)
-    }
-
-
-def test_quality_survivors_preserves_unscored_members(spark):
-    """A cluster member missing from ``scores`` must stay in the output
-    (sorted after every scored member), not silently vanish — and must
-    not be elected over a scored one."""
-    from knowledge_graph_spark.operators.dedup import quality_survivors
-
-    clusters = spark.createDataFrame(
-        [(1, 1), (2, 1), (3, 3)], "doc_id long, canonical_id long"
-    )
-    scores = spark.createDataFrame([(2, 5)], "doc_id long, quality_micro long")
-    got = {r["doc_id"]: r for r in quality_survivors(clusters, scores).collect()}
-    assert set(got) == {1, 2, 3}  # nothing dropped
-    assert got[2]["keep"] and not got[1]["keep"]
-    assert got[3]["keep"]  # fully-unscored singleton still elects itself
-
-
 def test_weak_stats_zero_doc_counter_reads_zero_coverage(spark):
     """A counter row folded from an empty corpus (n_docs = 0) must read
     coverage 0, not NULL (or a division error in the oracle mirror)."""

@@ -1,22 +1,17 @@
-"""Session-9 operator wave: seeded type propagation, maximal matching,
-ER blocking-quality audit, turn-level co-mention bursts.
+"""Session-9 operator wave: seeded type propagation, maximal matching.
 
 Each operator's gate is hash-checked against its DuckDB oracle by
 tools/check_entry.py; these tests pin the SEMANTIC properties the hash
-can't express — matching validity/maximality, seed clamping, metric
-identities, burst-rule arithmetic — on small closed-form fixtures.
+can't express — matching validity/maximality, seed clamping — on small
+closed-form fixtures.
 """
 
 import networkx as nx
-import pytest
-from pyspark.sql import functions as F
 
-from knowledge_graph_spark.operators.dedup import blocking_quality, char_shingle_table
 from knowledge_graph_spark.operators.graphops import (
     maximal_matching,
     seeded_type_propagation,
 )
-from knowledge_graph_spark.operators.temporal import comention_burst_profile
 
 
 def _edges_df(spark, edges, weighted=False):
@@ -180,201 +175,6 @@ def test_maximal_matching_dedups_multi_edges(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_blocking_quality_identities(spark):
-    """Metric identities on a corpus with planted near-dups: counts are
-    consistent (hit <= min(cand, truth)), ratios reproduce the counts,
-    and exact duplicates are always both truth and candidates."""
-    rows = []
-    base = "the quick brown fox jumps over the lazy dog near the river bank"
-    for i in range(30):
-        rows.append((i, f"document {i} " + " ".join(f"tok{i}_{j}" for j in range(12))))
-    # planted near-dup pair: one-token edit of a long shared text
-    rows.append((100, base))
-    rows.append((101, base.replace("lazy", "sleepy")))
-    rows.append((102, base))  # exact dup of 100 — SAME normalized name
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = blocking_quality(docs, threshold=0.5).collect()[0]
-    assert out.n_names == 32  # 33 docs, one exact-dup collapse
-    assert out.n_total_pairs == 32 * 31 // 2
-    assert out.n_hit <= min(out.n_cand, out.n_truth)
-    assert out.n_truth >= 1  # the planted near-dup pair
-    assert out.reduction_ratio == pytest.approx(1 - out.n_cand / out.n_total_pairs)
-    if out.n_truth:
-        assert out.pairs_completeness == pytest.approx(out.n_hit / out.n_truth)
-    if out.n_cand:
-        assert out.pairs_quality == pytest.approx(out.n_hit / out.n_cand)
-
-
-def test_char_shingle_table_exact_sets(spark):
-    """Shingle table == the Python shingle set of each normalized name
-    (linking._shingles), including the short-string whole-name case."""
-    from knowledge_graph_spark.operators.linking import _shingles
-
-    names = ["hello world document text", "tiny", "  spaced   out  name  "]
-    df = spark.createDataFrame([(n,) for n in names], "title string")
-    got = {}
-    for r in char_shingle_table(df, k=9).collect():
-        got.setdefault(r.name, set()).add(r.g)
-    for n in names:
-        assert got[n] == _shingles(n, 9)
-
-
-def test_blocking_quality_empty_truth_nulls(spark):
-    """All-distinct corpus: zero truth pairs → completeness is NULL, not
-    a crash; reduction ratio still computes."""
-    docs = spark.createDataFrame(
-        [(i, f"utterly unique text number {i} " + "x" * i) for i in range(8)],
-        "doc_id long, text string",
-    )
-    out = blocking_quality(docs, threshold=0.9).collect()[0]
-    assert out.n_truth == 0 and out.pairs_completeness is None
-    assert out.reduction_ratio is not None
-
-
 # ---------------------------------------------------------------------------
 # comention_burst_profile
 # ---------------------------------------------------------------------------
-
-
-def _turns(spark, rows):
-    return spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    )
-
-
-def test_comention_bursts_rule_arithmetic(spark):
-    """Plant a pair mentioned 1/hr for 3 hours then 5x in hour 4: the
-    spike hour is a burst, the steady hours are not (after warmup)."""
-    import datetime as dt
-
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    rows = []
-    k = 0
-    for h in range(3):
-        rows.append(("c", k, "user", "ALPHA met BETA", "", t0 + dt.timedelta(hours=h)))
-        k += 1
-    for i in range(5):
-        rows.append(
-            ("c", k, "user", "ALPHA met BETA", "", t0 + dt.timedelta(hours=3, minutes=i))
-        )
-        k += 1
-    out = {
-        r.hour_epoch: r
-        for r in comention_burst_profile(_turns(spark, rows)).collect()
-    }
-    epochs = sorted(out)
-    assert [out[e].cnt for e in epochs] == [1, 1, 1, 5]
-    # hour 0: cnt=1 < min_count → not a burst
-    assert not out[epochs[0]].is_burst
-    # hours 1-2: cnt=1 below min_count
-    assert not out[epochs[1]].is_burst and not out[epochs[2]].is_burst
-    # hour 3: trail_sum=3, 3*5 > 2*3 and 5 >= 2 → burst
-    assert out[epochs[3]].trail_sum == 3 and out[epochs[3]].is_burst
-
-
-def test_comention_bursts_trailing_window_slides(spark):
-    """The trailing frame covers exactly the previous 3 buckets: a count
-    4 hours old no longer suppresses a spike."""
-    import datetime as dt
-
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    rows = []
-    k = 0
-    # 9 mentions in hour 0, silence, then 3 in hour 5 — trail empty again
-    for i in range(9):
-        rows.append(("c", k, "user", "GAMMA met DELTA", "", t0 + dt.timedelta(minutes=i)))
-        k += 1
-    for i in range(3):
-        rows.append(
-            ("c", k, "user", "GAMMA met DELTA", "", t0 + dt.timedelta(hours=5, minutes=i))
-        )
-        k += 1
-    out = {r.hour_epoch: r for r in comention_burst_profile(_turns(spark, rows)).collect()}
-    late = max(out)
-    assert out[late].trail_sum == 0 and out[late].is_burst
-
-
-def test_comention_bursts_pairs_within_turn_only(spark):
-    """Mentions in different turns never pair; within a turn all
-    unordered distinct pairs count once (duplicates collapse)."""
-    import datetime as dt
-
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    rows = [
-        ("c", 0, "user", "AAA saw BBB and CCC and BBB", "", t0),
-        ("c", 1, "user", "DDD alone here", "", t0),
-    ]
-    out = comention_burst_profile(_turns(spark, rows)).collect()
-    pairs = {(r.source, r.target) for r in out}
-    assert pairs == {("AAA", "BBB"), ("AAA", "CCC"), ("BBB", "CCC")}
-    assert all(r.cnt == 1 for r in out)
-
-
-def test_blocking_quality_sample_mod(spark):
-    """sample_mod: 1/None are exact-identical; k>1 audits the
-    deterministic 1/k name subuniverse — counts shrink together and the
-    metric identities keep holding (the corpus-scale estimator path)."""
-    rows = [
-        (i, f"document {i} " + " ".join(f"tok{i}_{j}" for j in range(12)))
-        for i in range(40)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    full = blocking_quality(docs, threshold=0.5).collect()[0]
-    same = blocking_quality(docs, threshold=0.5, sample_mod=1).collect()[0]
-    assert full.asDict() == same.asDict()
-    sampled = blocking_quality(docs, threshold=0.5, sample_mod=4).collect()[0]
-    assert 0 < sampled.n_names < full.n_names
-    assert sampled.n_total_pairs == sampled.n_names * (sampled.n_names - 1) // 2
-    assert sampled.n_hit <= min(sampled.n_cand if sampled.n_cand else 0,
-                                sampled.n_truth if sampled.n_truth else 0) or (
-        sampled.n_cand == 0 or sampled.n_truth == 0
-    )
-
-
-def test_blocking_quality_exact_matches_brute_force(spark):
-    """Pins the EXACT path now that the blocking_audit gate runs on the
-    sample_mod subuniverse (VERDICT r4 #3): on a small corpus the
-    operator's exact truth-pair count equals an all-pairs Python
-    Jaccard loop over the normalized-name shingle sets, and n_hit
-    equals the brute-force truth ∩ candidate intersection."""
-    from knowledge_graph_spark.operators.linking import (
-        _shingles,
-        minhash_candidate_pairs,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog near the river bank"
-    rows = [(i, f"document {i} " + " ".join(f"tok{i}_{j}" for j in range(10)))
-            for i in range(25)]
-    rows += [
-        (100, base),
-        (101, base.replace("lazy", "sleepy")),
-        (103, base.replace("river", "creek")),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = blocking_quality(docs, threshold=0.5).collect()[0]
-
-    from knowledge_graph_spark.functions.textqc import normalized_text
-    names = sorted(
-        r.title
-        for r in docs.select(normalized_text(F.col("text")).alias("title"))
-        .filter("title <> ''").distinct().collect()
-    )
-    sets = {n: _shingles(n, 9) for n in names}
-    truth = set()
-    for i, a in enumerate(names):
-        for b in names[i + 1:]:
-            inter = len(sets[a] & sets[b])
-            if inter and inter / len(sets[a] | sets[b]) >= 0.5:
-                truth.add((a, b))
-    assert out.n_names == len(names)
-    assert out.n_truth == len(truth) and len(truth) >= 2  # planted near-dups
-    ndf = docs.select(normalized_text(F.col("text")).alias("title")).filter(
-        "title <> ''"
-    ).distinct()
-    cand = {
-        (r.name_a, r.name_b)
-        for r in minhash_candidate_pairs(
-            ndf, name_col="title", num_perm=64, bands=16, shingle_k=9
-        ).collect()
-    }
-    assert out.n_hit == len(truth & cand)

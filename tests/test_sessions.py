@@ -55,42 +55,3 @@ def test_single_shuffle_plan(spark):
     # may add one more — anything beyond that means the windows stopped
     # sharing their sort
     assert n_exchanges <= 2, plan
-
-
-def test_session_window_boundary_and_sliding(spark):
-    """F.session_window semantics at the exact-gap boundary (MERGES —
-    measured, not assumed; the oracle mirrors this with the same `>`
-    convention as session_stats) and sliding-window multiplicity."""
-    from pyspark.sql import functions as F
-
-    from knowledge_graph_spark.operators.temporal import (
-        session_rollup,
-        sliding_rollup,
-    )
-
-    base = 1_700_000_000
-    rows = [
-        ("u1", 1, base, 1.0),          # session A
-        ("u1", 2, base + 100, 2.0),    # merges (gap 100s < 1800s)
-        ("u1", 3, base + 100 + 1800, 4.0),  # EXACTLY gap later -> still merges
-        ("u1", 5, base + 100 + 1800 + 1801, 16.0),  # gap exceeded -> new
-        ("u2", 4, base, 8.0),
-    ]
-    ev = spark.createDataFrame(
-        rows, "user_id string, event_id long, sec long, value double"
-    ).select("user_id", "event_id", F.timestamp_seconds("sec").alias("ts"), "value")
-
-    sess = {
-        (r.user_id, r.start_us): (r.n_events, r.end_us, r.total_value)
-        for r in session_rollup(ev, "30 minutes").collect()
-    }
-    b_us = base * 1_000_000
-    assert sess == {
-        ("u1", b_us): (3, (base + 1900 + 1800) * 1_000_000, 7.0),
-        ("u1", (base + 3701) * 1_000_000): (1, (base + 3701 + 1800) * 1_000_000, 16.0),
-        ("u2", b_us): (1, (base + 1800) * 1_000_000, 8.0),
-    }
-
-    # sliding 1h/30m: every event appears in exactly two windows
-    slid = sliding_rollup(ev, "1 hour", "30 minutes", dims=["user_id"]).collect()
-    assert sum(r.n_events for r in slid) == 2 * len(rows)

@@ -54,7 +54,6 @@ AUDIT = [
     ("tool_transitions", "agent-trace Markov transitions (conv-keyed window)"),
     ("widest_paths", "fixed-round bottleneck-path Pregel joins"),
     ("bpe_pairs", "BPE pair counts, TakeOrderedAndProject top-k"),
-    ("sessions_native", "F.session_window gap sessions"),
     ("dsir_select", "DSIR: broadcast bucket model + heap top-K"),
     ("tool_scc", "fixed-round FW-BW SCC peeling joins"),
     ("bpe_merges", "BPE training rounds over the word-frequency table"),
@@ -64,20 +63,13 @@ AUDIT = [
     ("conv_context", "recency-biased token-budget prefix (two conv windows)"),
     ("pagerank_w", "weighted PageRank rounds (weight-share contributions)"),
     ("global_search", "map score + distributed two-phase budget prefix sum"),
-    ("neighbor_sample", "fixed-fanout sampling (WindowGroupLimit per node)"),
-    ("winnow_fp", "winnowing sketch (row-local array algebra, no shuffle)"),
-    ("winnow_dedup", "winnow-sketch candidate join (df-pruned postings)"),
     ("katz", "fixed-round integer Katz centrality joins"),
     ("betweenness", "sampled Brandes: frontier joins + level-filtered backward joins"),
     ("kg_asof", "midpoint-filtered full pipeline rebuild (broadcast 1-row cutoff)"),
-    ("kg_growth", "first-seen hour rollup over the edge lineage join"),
     ("type_mixing", "two type-map joins + pair-canonical groupBy"),
     ("typed_lpa", "seeded type propagation rounds (clamped-seed Pregel)"),
     ("max_matching", "symmetric-proposal matching rounds (min-agg + peel)"),
-    ("blocking_audit", "LSH candidates vs exact shingle truth, 1-row metrics"),
-    ("comention_bursts", "pair x hour counts + trailing RANGE frame"),
     ("topic_segments", "turn-Jaccard boundary rule + running-sum segment ids"),
-    ("edge_pmi", "bit-length PMI re-weighting (two degree joins)"),
     ("negative_samples", "perm-family corruption + broadcast node map + anti-join"),
     ("jp_coloring", "Jones-Plassmann rounds (min-agg + peel, color by round)"),
     ("kg_retract", "conv anti-join on persisted records + re-merge (no re-extract)"),
@@ -86,13 +78,11 @@ AUDIT = [
     ("densest", "peel rounds: combinable degree agg + scalar-bound anti-joins"),
     ("knn_graph", "per-node top-k edges (WindowGroupLimit) + kept_by groupBy"),
     ("lp_ranking", "corruption candidates + blocked common-neighbor scoring + rank groupBy"),
-    ("edge_decay", "edge lineage + 1-row t_max broadcast + row-local decay"),
     ("heaps_law", "first-occurrence identity + two-phase prefix sums"),
     ("bpe_fertility", "BPE dictionary join folded per language"),
     ("sssp", "Bellman-Ford relaxation rounds (min-agg per frontier join)"),
     ("four_cycles", "common-neighbor pair counting (wedge join + C(c,2) fold)"),
     ("wl_colors", "1-WL re-hash rounds (sorted neighbor-color fold joins)"),
-    ("tfidf_pairs", "df-pruned inverted-index cosine (weighted postings join)"),
     ("diameter_lb", "double-sweep BFS rounds + two argmax TakeOrdered"),
     ("textrank", "dense per-conv Arrow kernel (ONE cogroup shuffle, no round joins)"),
     ("weak_lf_stats", "row-local LF probes + one constant-width aggregate + stack"),
@@ -101,7 +91,6 @@ AUDIT = [
     ("kg_diff", "ONE co-partitioned full-outer join on the edge key"),
     ("partition_agreement", "contingency groupBy + tiny 1-row combines"),
     ("cluster_drift", "two LPA chains folded to the pair-counting tail"),
-    ("entity_lifecycle", "regexp explode + exact-distinct Expand aggregate"),
 ]
 
 PY_NODES = (

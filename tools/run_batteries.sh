@@ -1,8 +1,7 @@
 #!/usr/bin/env bash
 # End-of-session battery: full gate sweeps + test suite + a quiet bench
 # sample, each logged under /tmp.  Run from the repo root; takes ~45 min
-# at sf0.01 scope, ~95 min with SWEEP_SF01=1 (adds the sf0.1 sweep,
-# whose wall is dominated by blocking_audit's exact-truth pass).
+# at sf0.01 scope, longer with SWEEP_SF01=1 (adds the sf0.1 gate sweep).
 set -uo pipefail
 cd "$(dirname "$0")/.."
 
