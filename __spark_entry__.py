@@ -1055,27 +1055,6 @@ def q_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_top_terms(_docs(spark, sf_dir), k_top=TT_K)
 
 
-def q_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frequency-ranked vocabulary with two-phase dense token ids."""
-    from knowledge_graph_spark.operators.corpus import build_vocab
-
-    return build_vocab(_docs(spark, sf_dir))
-
-
-def q_node_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyed snapshot diff: merged nodes vs canonicalized nodes
-    (added/removed/changed/unchanged audit view for incremental runs)."""
-    from knowledge_graph_spark.operators.corpus import snapshot_diff
-    from knowledge_graph_spark.operators.linking import apply_canonicalization
-
-    s = _stages(spark, sf_dir)
-    old = s["nodes"].select("title", "type", "description")
-    cn, _ = apply_canonicalization(s["nodes"], s["edges"], _alias_only_map(spark, s))
-    return snapshot_diff(
-        old, cn.select("title", "type", "description"), ["title"], ["type", "description"]
-    )
-
-
 def q_hll_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw-HLL distinct-token estimate: every register and the estimate
     itself reproduced exactly by the oracle (shared hash family)."""
@@ -1129,14 +1108,6 @@ def q_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from knowledge_graph_spark.operators.sketches import log2_histogram
 
     return log2_histogram(q_degrees(spark, sf_dir).select("degree"), "degree")
-
-
-def q_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """p50/p90/p99 token-length per language read off the log2 histogram
-    — integer-exact (100·cum ≥ pct·total, no division)."""
-    from knowledge_graph_spark.operators.sketches import histogram_quantiles
-
-    return histogram_quantiles(q_length_hist(spark, sf_dir), strata_col="lang")
 
 
 def q_bloom_words(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1682,52 +1653,12 @@ def q_hyperball(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hyperball(_stages(spark, sf_dir)["edges"], rounds=HYPERBALL_ROUNDS)
 
 
-def q_neighborhood_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The KG's neighborhood function N(r) for r = 0..3 (per-round
-    HyperBall totals) — the effective-diameter / average-distance
-    summary."""
-    from knowledge_graph_spark.operators.sketches import neighborhood_function
-
-    return neighborhood_function(
-        _stages(spark, sf_dir)["edges"], rounds=HYPERBALL_ROUNDS
-    )
-
-
-def q_harmonic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Truncated harmonic centrality from the per-round HyperBall ball
-    sizes (Boldi & Vigna 2013's headline application) — closeness-style
-    salience without all-pairs BFS."""
-    from knowledge_graph_spark.operators.sketches import harmonic_centrality
-
-    return harmonic_centrality(
-        _stages(spark, sf_dir)["edges"], rounds=HYPERBALL_ROUNDS
-    )
-
-
-def q_eff_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Effective diameter (90% pair coverage) read off the neighborhood
-    function — the HyperBall/ANF summary statistic."""
-    from knowledge_graph_spark.operators.sketches import effective_diameter
-
-    return effective_diameter(
-        _stages(spark, sf_dir)["edges"], rounds=HYPERBALL_ROUNDS
-    )
-
-
 def q_turn_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-conversation assistant response-latency profile in exact
     integer microseconds (epoch-us lag subtraction, no float durations)."""
     from knowledge_graph_spark.operators.agent_trace import turn_latency
 
     return turn_latency(transcripts_from_events(spark, sf_dir))
-
-
-def q_tool_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-tool execution latency: gap from each tool-call turn to the
-    next turn in the conversation (exact int64 micros)."""
-    from knowledge_graph_spark.operators.agent_trace import tool_latency
-
-    return tool_latency(transcripts_from_events(spark, sf_dir))
 
 
 def q_role_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1743,60 +1674,6 @@ def q_role_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat_ws(":", "conv_id", F.col("turn_idx").cast("string")).alias("doc_id"),
     )
     return length_profile(p, strata_col="role")
-
-
-def q_tool_latency_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """p50/p90/p99 tool-execution latency per tool, read off the
-    mergeable log2 histogram of gap_us — the ops-monitoring composition
-    of tool_latency's gaps with the sketch family (integer-exact
-    read-off, no division)."""
-    from pyspark.sql import Window
-
-    from knowledge_graph_spark.operators.sketches import (
-        histogram_quantiles,
-        log2_histogram,
-    )
-
-    t = transcripts_from_events(spark, sf_dir)
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    gaps = (
-        t.select(
-            "conv_id",
-            "turn_idx",
-            "role",
-            "tool",
-            F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        )
-        .withColumn("next_us", F.lead("ts_us").over(w))
-        .filter(
-            (F.col("role") == "tool") & (F.col("tool") != "") & F.col("next_us").isNotNull()
-        )
-        .select("tool", (F.col("next_us") - F.col("ts_us")).alias("gap_us"))
-    )
-    hist = log2_histogram(gaps, "gap_us", "tool")
-    return histogram_quantiles(hist, strata_col="tool")
-
-
-TOOL_NGRAM_N = 3
-TOOL_NGRAM_TOPK = 32
-
-
-def q_tool_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top tool-call trigrams — recurring multi-step agent routines
-    (retry storms, search→fetch loops) as heavy sequences."""
-    from knowledge_graph_spark.operators.agent_trace import tool_ngrams
-
-    return tool_ngrams(
-        transcripts_from_events(spark, sf_dir), n=TOOL_NGRAM_N, k_top=TOOL_NGRAM_TOPK
-    )
-
-
-def q_conv_shapes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-conversation structural profile: role balance, tool usage,
-    truncation signal (last_role), exact duration."""
-    from knowledge_graph_spark.operators.agent_trace import conversation_shapes
-
-    return conversation_shapes(transcripts_from_events(spark, sf_dir))
 
 
 WIDEST_ROUNDS = 3
@@ -1819,17 +1696,6 @@ def q_widest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-BPE_TOPK = 64
-
-
-def q_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One BPE training round: corpus-wide adjacent-token-pair counts,
-    top-64 merge candidates under a tie-free total order."""
-    from knowledge_graph_spark.operators.corpus import merge_pair_counts
-
-    return merge_pair_counts(_docs(spark, sf_dir), k_top=BPE_TOPK)
-
-
 BPE_ROUNDS = 3
 
 
@@ -1840,24 +1706,6 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from knowledge_graph_spark.operators.corpus import bpe_train_merges
 
     return bpe_train_merges(_docs(spark, sf_dir), rounds=BPE_ROUNDS)
-
-
-def q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Apply the freshly-trained BPE tokenizer: per-document token counts
-    via a broadcast dictionary join against the trained word→symbols
-    table (tokenization never re-runs the merges per occurrence)."""
-    from knowledge_graph_spark.operators.corpus import bpe_segment
-
-    return bpe_segment(_docs(spark, sf_dir), rounds=BPE_ROUNDS)
-
-
-def q_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer fertility (BPE tokens per whitespace word) per language
-    — the tokenizer-equity audit over the freshly-trained BPE merges;
-    exact integer micros."""
-    from knowledge_graph_spark.operators.corpus import bpe_fertility
-
-    return bpe_fertility(_docs(spark, sf_dir), rounds=BPE_ROUNDS)
 
 
 HITS_ROUNDS = 3
@@ -2470,7 +2318,7 @@ LEFT JOIN scored s ON d.doc_id = s.doc_id
 LEFT JOIN sel s2 ON d.doc_id = s2.doc_id
 """
 
-def _bpe_oracle(rounds: int, segment: bool = False) -> str:
+def _bpe_oracle(rounds: int) -> str:
     """Unrolled BPE-training oracle: per round, weighted adjacent-pair
     counts over the word-frequency table, tie-free argmax, and the SAME
     newline-anchored replace construction the Spark side uses for the
@@ -2503,7 +2351,7 @@ def _bpe_oracle(rounds: int, segment: bool = False) -> str:
             f"best{r} AS MATERIALIZED "
             f"(SELECT l, r, n FROM pairs{r} ORDER BY n DESC, l, r LIMIT 1)"
         )
-        if segment or r < rounds:  # merges-only mode skips the last one
+        if r < rounds:  # nothing reads the segmentation after the last round
             ctes.append(
                 f"""syms{r} AS MATERIALIZED (
   SELECT word, cnt,
@@ -2516,17 +2364,6 @@ def _bpe_oracle(rounds: int, segment: bool = False) -> str:
     FROM syms{k} s CROSS JOIN best{r} b
   ))"""
             )
-    if segment:
-        body = f"""dwords AS (SELECT doc_id, unnest(t) AS w FROM dtoks),
-seg AS (SELECT word, CAST(len(syms) AS BIGINT) AS n_syms FROM syms{rounds})
-SELECT d.doc_id,
-       CAST(coalesce(c.n_words, 0) AS BIGINT) AS n_words,
-       CAST(coalesce(c.n_bpe, 0) AS BIGINT) AS n_bpe_tokens
-FROM documents d LEFT JOIN (
-  SELECT doc_id, count(*) AS n_words, sum(n_syms) AS n_bpe
-  FROM dwords JOIN seg ON dwords.w = seg.word GROUP BY doc_id
-) c ON d.doc_id = c.doc_id"""
-        return "WITH " + ",\n".join(ctes) + ",\n" + body
     union = "\nUNION ALL\n".join(
         f"SELECT CAST({r} AS INT) AS round, l AS left_tok, r AS right_tok, "
         f"n AS n_pairs FROM best{r}"
@@ -2683,7 +2520,7 @@ SELECT c.vec_id, c.cluster,
 FROM kcells c LEFT JOIN knearest n ON c.vec_id = n.vec_id
 """
 
-# --- BM25 top-terms / vocabulary (operators/keywords.py, corpus.py) --------
+# --- BM25 top-terms (operators/keywords.py) --------------------------------
 
 from knowledge_graph_spark.operators.keywords import BM25_B, BM25_K1, SCORE_SCALE
 
@@ -2711,29 +2548,6 @@ SELECT doc_id, term, tf, df, idf_bits, score_micro,
                                ORDER BY score_micro DESC, term) AS INT) AS rk
 FROM scored WHERE idf_bits > 0
 QUALIFY rk <= {TT_K}
-"""
-
-
-_VOCAB_SQL = f"""
-WITH {_DTOKS_CTE},
-tok AS (SELECT unnest(t) AS token FROM dtoks),
-counts AS (SELECT token, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY token)
-SELECT token, cnt,
-       CAST(row_number() OVER (ORDER BY cnt DESC, token) - 1 AS BIGINT) AS token_id
-FROM counts
-"""
-
-_BPE_PAIRS_SQL = f"""
-WITH {_DTOKS_CTE},
-bp AS (
-  SELECT t[ci] AS left_tok, t[ci + 1] AS right_tok
-  FROM dtoks, LATERAL unnest(range(1, len(t))) u(ci)
-  WHERE len(t) >= 2
-)
-SELECT left_tok, right_tok, CAST(count(*) AS BIGINT) AS n_pairs
-FROM bp GROUP BY left_tok, right_tok
-ORDER BY n_pairs DESC, left_tok, right_tok
-LIMIT {BPE_TOPK}
 """
 
 
@@ -2789,16 +2603,11 @@ SELECT CAST({_HLL_M} AS BIGINT) AS m,
 FROM hagg
 """
 
-def _hyperball_oracle(
-    rounds: int, nf: bool = False, hc: bool = False, ed: bool = False
-) -> str:
+def _hyperball_oracle(rounds: int) -> str:
     """Unrolled HyperBall oracle over the prelude's kg_edges: singleton
     sketches from the shared hash family, register MAX-merge over the
     symmetrized adjacency per round, then the standard raw-HLL estimate
-    arithmetic per node — or, with ``nf``, the per-round neighborhood
-    function N(r) (0..rounds) summed over nodes — or, with ``hc``, the
-    per-node truncated harmonic centrality Σ_r (est_r − est_{r−1})·10^6
-    // r (sketches.harmonic_centrality)."""
+    arithmetic per node."""
     poly = _POLY.format(s="node")
     ctes = [
         """hb_adj AS MATERIALIZED (
@@ -2826,64 +2635,6 @@ def _hyperball_oracle(
   ) GROUP BY node, register)"""
         )
     est_num = (_HLL_ALPHA * float(_HLL_M * _HLL_M)) * float(_sk.HLL_SCALE)
-    if hc:  # harmonic centrality: Σ_r (est_r − est_{r−1}) · scale // r
-        for r in range(rounds + 1):
-            ctes.append(
-                f"""hest{r} AS (
-  SELECT node, CAST(floor(CAST({est_num!r} AS DOUBLE)
-               / CAST(s_hit + ({_HLL_M} - n_regs) * {_sk.HLL_SCALE} AS DOUBLE))
-               AS BIGINT) AS est
-  FROM (SELECT node, CAST(count(*) AS BIGINT) AS n_regs,
-               CAST(sum({_sk.HLL_SCALE} >> max_rank) AS BIGINT) AS s_hit
-        FROM hbr{r} GROUP BY node))"""
-            )
-        terms = " + ".join(
-            f"((hest{r}.est - hest{r - 1}.est) * 1000000) // {r}"
-            for r in range(1, rounds + 1)
-        )
-        joins = " ".join(
-            f"JOIN hest{r} ON hest{r}.node = hest0.node"
-            for r in range(1, rounds + 1)
-        )
-        return (
-            ", "
-            + ",\n".join(ctes)
-            + f"\nSELECT hest0.node AS node, CAST({terms} AS BIGINT) AS harmonic_micro,"
-            f" CAST(hest{rounds}.est AS BIGINT) AS ball_est FROM hest0 {joins}"
-        )
-    if nf or ed:  # per-round totals over the estimates
-        for r in range(rounds + 1):
-            ctes.append(
-                f"""lvl{r} AS (
-  SELECT CAST({r} AS INT) AS r, CAST(count(*) AS BIGINT) AS n_nodes,
-         CAST(sum(est) AS BIGINT) AS total_ball_est
-  FROM (SELECT CAST(floor(CAST({est_num!r} AS DOUBLE)
-               / CAST(s_hit + ({_HLL_M} - n_regs) * {_sk.HLL_SCALE} AS DOUBLE))
-               AS BIGINT) AS est
-        FROM (SELECT node, CAST(count(*) AS BIGINT) AS n_regs,
-                     CAST(sum({_sk.HLL_SCALE} >> max_rank) AS BIGINT) AS s_hit
-              FROM hbr{r} GROUP BY node)))"""
-            )
-        union = "\nUNION ALL\n".join(
-            f"SELECT r, n_nodes, total_ball_est FROM lvl{r}"
-            for r in range(rounds + 1)
-        )
-        if ed:  # effective diameter: smallest r covering >= 90% of N(R)
-            ctes.append(f"nfall AS ({union})")
-            ctes.append(
-                f"nftot AS (SELECT total_ball_est AS tot FROM lvl{rounds})"
-            )
-            return (
-                ", "
-                + ",\n".join(ctes)
-                + """
-SELECT CAST(min(r) AS INT) AS eff_diameter,
-       CAST(arg_min(total_ball_est, r) AS BIGINT) AS covered_pairs,
-       CAST(max(tot) AS BIGINT) AS total_pairs
-FROM nfall, nftot WHERE total_ball_est * 10 >= 9 * tot
-"""
-            )
-        return ", " + ",\n".join(ctes) + "\n" + union
     body = f"""hbagg AS (
   SELECT node, CAST(count(*) AS BIGINT) AS n_regs,
          CAST(sum({_sk.HLL_SCALE} >> max_rank) AS BIGINT) AS s_hit
@@ -4371,56 +4122,6 @@ LEFT JOIN hits_h{rounds} h ON h.title = n.title
     return "".join(parts)
 
 
-_TOOL_LATENCY_BODY = """
-, tg AS (
-  SELECT conv_id, role, tool, epoch_us(ts) AS ts_us,
-         lead(epoch_us(ts)) OVER (PARTITION BY conv_id ORDER BY turn_idx)
-           AS next_us
-  FROM transcripts
-)
-SELECT tool,
-       CAST(count(*) AS BIGINT) AS n_calls,
-       CAST(count(next_us - ts_us) AS BIGINT) AS n_timed,
-       CAST(coalesce(sum(next_us - ts_us), 0) AS BIGINT) AS total_gap_us,
-       CAST(coalesce(max(next_us - ts_us), 0) AS BIGINT) AS max_gap_us
-FROM tg WHERE role = 'tool' AND tool <> ''
-GROUP BY tool
-"""
-
-_TOOL_LAT_Q_BODY = """
-, tlq_g AS (
-  SELECT tool,
-         lead(epoch_us(ts)) OVER (PARTITION BY conv_id ORDER BY turn_idx)
-           - epoch_us(ts) AS gap_us,
-         role
-  FROM transcripts
-),
-tlq_gaps AS (
-  SELECT tool, gap_us FROM tlq_g
-  WHERE role = 'tool' AND tool <> '' AND gap_us IS NOT NULL
-),
-tlq_hist AS (
-  SELECT tool,
-         CAST(CASE WHEN gap_us <= 0 THEN 0
-                   ELSE length(bin(CAST(gap_us AS BIGINT))) END AS INT) AS bucket,
-         CAST(count(*) AS BIGINT) AS n
-  FROM tlq_gaps GROUP BY 1, 2
-),
-tlq_c AS (
-  SELECT tool, bucket,
-         CAST(SUM(n) OVER (PARTITION BY tool ORDER BY bucket) AS BIGINT) AS cum,
-         CAST(SUM(n) OVER (PARTITION BY tool) AS BIGINT) AS total
-  FROM tlq_hist
-),
-tlq_p AS (SELECT unnest([50, 90, 99]) AS pct)
-SELECT tool, CAST(pct AS INT) AS pct,
-       CAST(MIN(bucket) AS INT) AS bucket,
-       CAST((CAST(1 AS BIGINT) << MIN(bucket)) - 1 AS BIGINT) AS upper
-FROM tlq_c CROSS JOIN tlq_p
-WHERE cum * 100 >= pct * total
-GROUP BY tool, pct
-"""
-
 _ROLE_PROFILE_BODY = """
 , rp AS (
   SELECT role,
@@ -4442,36 +4143,6 @@ SELECT role, CAST(count(*) AS BIGINT) AS n_docs,
 FROM rr GROUP BY role
 """
 
-_TOOL_NGRAMS_BODY = """
-, tng_calls AS (
-  SELECT conv_id, turn_idx, tool FROM transcripts
-  WHERE role = 'tool' AND tool <> ''
-),
-tng_seq AS (
-  SELECT lag(tool, 2) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS g1,
-         lag(tool, 1) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS g2,
-         tool AS g3
-  FROM tng_calls
-)
-SELECT g1, g2, g3, CAST(count(*) AS BIGINT) AS n_occurrences
-FROM tng_seq WHERE g1 IS NOT NULL AND g2 IS NOT NULL
-GROUP BY g1, g2, g3
-ORDER BY n_occurrences DESC, g1, g2, g3
-LIMIT 32
-"""
-
-_CONV_SHAPES_BODY = """
-SELECT conv_id,
-       CAST(count(*) AS BIGINT) AS n_turns,
-       CAST(sum(CASE WHEN role = 'user' THEN 1 ELSE 0 END) AS BIGINT) AS n_user,
-       CAST(sum(CASE WHEN role = 'assistant' THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_assistant,
-       CAST(sum(CASE WHEN role = 'tool' AND tool <> '' THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_tool_calls,
-       max_by(role, turn_idx) AS last_role,
-       CAST(max(epoch_us(ts)) - min(epoch_us(ts)) AS BIGINT) AS duration_us
-FROM transcripts GROUP BY conv_id
-"""
 
 def _scc_oracle_body(inner: int, outer: int) -> str:
     """Unrolled FW-BW min-label SCC oracle over the tool-transition
@@ -5233,15 +4904,6 @@ def q_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     return negative_samples(s["nodes"].select("title"), s["edges"], k=NEGS_K)
 
 
-def q_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heaps vocabulary-growth curve over the documents corpus: per doc
-    in id order, exact cumulative token and distinct-type counts via the
-    first-occurrence identity + two-phase prefix sums."""
-    from knowledge_graph_spark.operators.corpus import heaps_profile
-
-    return heaps_profile(_docs(spark, sf_dir))
-
-
 LP_K = 5
 
 
@@ -5511,8 +5173,7 @@ def q_emb_prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 15: double-sweep diameter bound, 1-WL color refinement, distinct-n
-# diversity.
+# Wave 15: double-sweep diameter bound, 1-WL color refinement.
 # ---------------------------------------------------------------------------
 
 DS_HOPS = 4
@@ -5520,9 +5181,8 @@ WL_ROUNDS = 3
 
 
 def q_diameter_lb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Double-sweep BFS diameter lower bound (Magnien et al. 2009) — the
-    exact-arithmetic floor under hyperball's eff_diameter ceiling; two
-    bounded-round BFS sweeps, argmax restart."""
+    """Double-sweep BFS diameter lower bound (Magnien et al. 2009) in
+    exact arithmetic; two bounded-round BFS sweeps, argmax restart."""
     from knowledge_graph_spark.operators.graphops import double_sweep_diameter
 
     return double_sweep_diameter(_stages(spark, sf_dir)["edges"], hops=DS_HOPS)
@@ -5539,15 +5199,6 @@ def q_wl_colors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wl_refinement(
         s["nodes"].select("title", "type"), s["edges"], rounds=WL_ROUNDS
     )
-
-
-def q_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct-n diversity profile (Li et al. 2016) per document — the
-    in-document repetition filter (decoding loops, boilerplate) in exact
-    integer micros; entirely row-local Column algebra."""
-    from knowledge_graph_spark.operators.corpus import ngram_diversity
-
-    return ngram_diversity(_docs(spark, sf_dir))
 
 
 def _ds_body(hops: int = DS_HOPS) -> str:
@@ -5617,39 +5268,8 @@ FROM wl_c{rounds}"""
     return sql
 
 
-_NGRAM_DIVERSITY_SQL = """
-WITH dtoks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'),
-                     '\\s+'), x -> x <> '') AS t
-  FROM documents
-),
-g AS (
-  SELECT doc_id, t,
-         list_transform(range(1, CASE WHEN len(t) < 2 THEN 1 ELSE len(t) END),
-                        i -> t[CAST(i AS INT)] || ' ' || t[CAST(i AS INT) + 1]) AS g2,
-         list_transform(range(1, CASE WHEN len(t) < 3 THEN 1 ELSE len(t) - 1 END),
-                        i -> t[CAST(i AS INT)] || ' ' || t[CAST(i AS INT) + 1]
-                             || ' ' || t[CAST(i AS INT) + 2]) AS g3
-  FROM dtoks
-)
-SELECT doc_id,
-       CAST(len(t) AS BIGINT) AS n_tokens,
-       CAST(len(list_distinct(t)) AS BIGINT) AS distinct_1,
-       CAST(len(list_distinct(t)) * 1000000
-            // greatest(CAST(1 AS BIGINT), len(t)) AS BIGINT) AS ratio_micro_1,
-       CAST(len(list_distinct(g2)) AS BIGINT) AS distinct_2,
-       CAST(len(list_distinct(g2)) * 1000000
-            // greatest(CAST(1 AS BIGINT), len(t) - 1) AS BIGINT) AS ratio_micro_2,
-       CAST(len(list_distinct(g3)) AS BIGINT) AS distinct_3,
-       CAST(len(list_distinct(g3)) * 1000000
-            // greatest(CAST(1 AS BIGINT), len(t) - 2) AS BIGINT) AS ratio_micro_3
-FROM g
-"""
-
-
 # ---------------------------------------------------------------------------
-# Wave 16: TextRank turn salience, weak-supervision audit, per-source rollup.
+# Wave 16: TextRank turn salience, per-source rollup.
 # ---------------------------------------------------------------------------
 
 TEXTRANK_ROUNDS = 5
@@ -5731,92 +5351,6 @@ txr_r{k} AS MATERIALIZED (
         f"\nSELECT conv_id, node AS turn_idx, rank_scaled FROM txr_r{rounds}"
     )
     return "".join(parts)
-
-
-def q_weak_votes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snorkel-style label matrix + deterministic majority vote over the
-    documents table (corpus.weak_label_matrix)."""
-    from knowledge_graph_spark.operators.corpus import weak_label_matrix
-
-    return weak_label_matrix(_docs(spark, sf_dir))
-
-
-def q_weak_lf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-labeling-function coverage/overlap/conflict audit
-    (corpus.weak_lf_stats) — the data-programming health table."""
-    from knowledge_graph_spark.operators.corpus import weak_lf_stats
-
-    return weak_lf_stats(_docs(spark, sf_dir))
-
-
-def _wl_matrix_ctes() -> str:
-    """Shared CTE chain for the weak-label oracles — built from the SAME
-    corpus.WEAK_LFS spec the Spark side applies (substring probes via
-    strpos ≡ F.instr, both 1-based / 0-absent)."""
-    from knowledge_graph_spark.operators.corpus import WEAK_LFS
-
-    def fired(terms):
-        return " AND ".join(f"strpos(lower(text), '{t}') > 0" for t in terms)
-
-    lf_cols = ",\n         ".join(
-        f"CAST(CASE WHEN {fired(terms)} THEN {label} END AS INT) AS {name}"
-        for name, terms, label in WEAK_LFS
-    )
-    n_pos = " + ".join(
-        f"CASE WHEN {name} = 1 THEN 1 ELSE 0 END" for name, _, _ in WEAK_LFS
-    )
-    n_neg = " + ".join(
-        f"CASE WHEN {name} = 0 THEN 1 ELSE 0 END" for name, _, _ in WEAK_LFS
-    )
-    return f"""
-wl_m0 AS (
-  SELECT doc_id,
-         {lf_cols}
-  FROM documents),
-wl_m AS (
-  SELECT *, CAST({n_pos} AS INT) AS n_pos, CAST({n_neg} AS INT) AS n_neg
-  FROM wl_m0),
-wl_v AS (
-  SELECT *, CAST(CASE WHEN n_pos > n_neg THEN 1
-                      WHEN n_neg > n_pos THEN 0
-                      WHEN n_pos > 0 THEN 0 END AS INT) AS vote
-  FROM wl_m)
-"""
-
-
-def _wl_stats_sql() -> str:
-    from knowledge_graph_spark.operators.corpus import WEAK_LFS
-
-    agg_parts = []
-    row_parts = []
-    for name, _, label in WEAK_LFS:
-        others = [o for o, _, _ in WEAK_LFS if o != name]
-        of = " OR ".join(f"{o} IS NOT NULL" for o in others)
-        oc = " OR ".join(f"({o} IS NOT NULL AND {o} <> {name})" for o in others)
-        agg_parts.append(
-            f"CAST(sum(CASE WHEN {name} IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)"
-            f" AS f_{name},\n"
-            f"  CAST(sum(CASE WHEN {name} IS NOT NULL AND ({of}) THEN 1 ELSE 0 END)"
-            f" AS BIGINT) AS o_{name},\n"
-            f"  CAST(sum(CASE WHEN {name} IS NOT NULL AND ({oc}) THEN 1 ELSE 0 END)"
-            f" AS BIGINT) AS c_{name},\n"
-            f"  CAST(sum(CASE WHEN {name} IS NOT NULL AND vote = {name} THEN 1 ELSE 0 END)"
-            f" AS BIGINT) AS a_{name}"
-        )
-        row_parts.append(
-            f"SELECT '{name}' AS lf, CAST({label} AS INT) AS label,"
-            f" f_{name} AS n_fired,"
-            f" CAST(f_{name} * 1000000 // greatest(n_docs, 1) AS BIGINT)"
-            f" AS coverage_micro,"
-            f" o_{name} AS n_overlap, c_{name} AS n_conflict,"
-            f" a_{name} AS n_agree_vote FROM wl_agg"
-        )
-    aggs = ",\n  ".join(agg_parts)
-    rows = "\nUNION ALL ".join(row_parts)
-    return (
-        f"WITH {_wl_matrix_ctes()}, "
-        f"wl_agg AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,\n  {aggs} FROM wl_v)\n{rows}"
-    )
 
 
 def q_source_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5943,16 +5477,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kmeans_cells": q_kmeans,
         "semantic_dedup_km": q_semantic_dedup_km,
         "top_terms": q_top_terms,
-        "vocab": q_vocab,
-        "node_diff": q_node_diff,
         "hll_tokens": q_hll_tokens,
         "hyperball": q_hyperball,
-        "neighborhood_fn": q_neighborhood_fn,
-        "harmonic_centrality": q_harmonic,
-        "eff_diameter": q_eff_diameter,
         "cms_counts": q_cms_counts,
         "length_hist": q_length_hist,
-        "length_quantiles": q_length_quantiles,
         "hll_lang": q_hll_lang,
         "degree_hist": q_degree_hist,
         "bloom_words": q_bloom_words,
@@ -5973,12 +5501,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "emb_prefix_topk": q_emb_prefix_topk,
         "diameter_lb": q_diameter_lb,
         "wl_colors": q_wl_colors,
-        "ngram_diversity": q_ngram_diversity,
         "msf": q_msf,
         "densest": q_densest,
         "knn_graph": q_knn_graph,
         "lp_ranking": q_lp_ranking,
-        "heaps_law": q_heaps,
         "topic_segments": q_topic_segments,
         "negative_samples": q_negative_samples,
         "jp_coloring": q_jp_coloring,
@@ -6005,21 +5531,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tool_transitions": q_tool_transitions,
         "tool_scc": q_tool_scc,
         "turn_latency": q_turn_latency,
-        "tool_latency": q_tool_latency,
-        "conv_shapes": q_conv_shapes,
-        "tool_ngrams": q_tool_ngrams,
         "role_profile": q_role_profile,
-        "tool_latency_q": q_tool_latency_quantiles,
         "widest_paths": q_widest_paths,
         "hits": q_hits,
-        "bpe_pairs": q_bpe_pairs,
         "bpe_merges": q_bpe_merges,
-        "bpe_tokenize": q_bpe_tokenize,
-        "bpe_fertility": q_bpe_fertility,
         "event_hourly": q_event_hourly,
         "textrank": q_textrank,
-        "weak_votes": q_weak_votes,
-        "weak_lf_stats": q_weak_lf_stats,
         "source_profile": q_source_profile,
     }
 
@@ -6485,12 +6002,8 @@ FROM pos p JOIN neg n USING (anchor_id)
         "kmeans_cells": _KMEANS_SQL,
         "semantic_dedup_km": _SEMANTIC_DEDUP_KM_SQL,
         "top_terms": _TOP_TERMS_SQL,
-        "vocab": _VOCAB_SQL,
         "hll_tokens": _HLL_SQL,
         "hyperball": _oracle(_hyperball_oracle(HYPERBALL_ROUNDS)),
-        "neighborhood_fn": _oracle(_hyperball_oracle(HYPERBALL_ROUNDS, nf=True)),
-        "harmonic_centrality": _oracle(_hyperball_oracle(HYPERBALL_ROUNDS, hc=True)),
-        "eff_diameter": _oracle(_hyperball_oracle(HYPERBALL_ROUNDS, ed=True)),
         "cms_counts": _CMS_SQL,
         "length_hist": _LENGTH_HIST_SQL,
         "hll_lang": _HLL_LANG_SQL,
@@ -6499,49 +6012,10 @@ SELECT CAST(CASE WHEN degree <= 0 THEN 0
                  ELSE length(bin(CAST(degree AS BIGINT))) END AS INT) AS bucket,
        CAST(count(*) AS BIGINT) AS n
 FROM degrees GROUP BY 1"""),
-        "length_quantiles": f"""
-WITH hist AS ({_LENGTH_HIST_SQL}),
-c AS (
-  SELECT lang, bucket,
-         CAST(SUM(n) OVER (PARTITION BY lang ORDER BY bucket) AS BIGINT) AS cum,
-         CAST(SUM(n) OVER (PARTITION BY lang) AS BIGINT) AS total
-  FROM hist
-),
-p AS (SELECT unnest([50, 90, 99]) AS pct)
-SELECT lang, CAST(pct AS INT) AS pct,
-       CAST(MIN(bucket) AS INT) AS bucket,
-       CAST((CAST(1 AS BIGINT) << MIN(bucket)) - 1 AS BIGINT) AS upper
-FROM c CROSS JOIN p
-WHERE cum * 100 >= pct * total
-GROUP BY lang, pct
-""",
         "bloom_words": _BLOOM_WORDS_SQL,
         # the bloom-pruned plan must reproduce the PLAIN decontamination
         # answer bit-for-bit (no false negatives + exact verify)
         "decontam_bloom": _DECONTAM_SQL,
-        "node_diff": _oracle(_CANON_CTE + """
-            , d_old AS (SELECT title, type, description FROM kg_nodes),
-            d_new AS (
-              SELECT t.title, t.type, d.description
-              FROM ctype t JOIN cdesc_agg d USING (title)
-            ),
-            dj AS (
-              SELECT coalesce(o.title, n.title) AS title,
-                     o.title IS NOT NULL AS in_old, n.title IS NOT NULL AS in_new,
-                     o.type AS old_type, o.description AS old_description,
-                     n.type AS new_type, n.description AS new_description
-              FROM d_old o FULL OUTER JOIN d_new n ON o.title = n.title
-            )
-            SELECT title,
-                   CASE WHEN NOT in_old THEN 'added'
-                        WHEN NOT in_new THEN 'removed'
-                        WHEN old_type IS NOT DISTINCT FROM new_type
-                             AND old_description IS NOT DISTINCT FROM new_description
-                             THEN 'unchanged'
-                        ELSE 'changed' END AS status,
-                   old_type, old_description, new_type, new_description
-            FROM dj
-            """),
         "pagerank": _oracle(_pr_body()),
         "katz": _oracle(_katz_body()),
         "betweenness": _oracle(_bw_body()),
@@ -6566,37 +6040,8 @@ GROUP BY least(ta.type, tb.type), greatest(ta.type, tb.type)
         "emb_prefix_topk": _EMB_PREFIX_TOPK_SQL,
         "diameter_lb": _oracle(_ds_body()),
         "wl_colors": _oracle(_wl_body()),
-        "ngram_diversity": _NGRAM_DIVERSITY_SQL,
         "msf": _oracle(_msf_body()),
         "lp_ranking": _oracle(_lp_body()),
-        "heaps_law": _oracle(
-            r"""
-            , hp_base AS MATERIALIZED (
-              SELECT doc_id,
-                     CAST(row_number() OVER (ORDER BY doc_id) AS BIGINT)
-                       AS doc_ord,
-                     list_filter(regexp_split_to_array(lower(trim(text)),
-                                                       '\s+'),
-                                 x -> x <> '') AS toks
-              FROM documents),
-            hp_first AS MATERIALIZED (
-              SELECT token, min(doc_ord) AS first_ord FROM (
-                SELECT doc_ord, unnest(toks) AS token FROM hp_base)
-              GROUP BY token),
-            hp_new AS (
-              SELECT first_ord AS doc_ord,
-                     CAST(count(*) AS BIGINT) AS new_types
-              FROM hp_first GROUP BY first_ord)
-            SELECT d.doc_ord, d.doc_id,
-                   CAST(len(d.toks) AS BIGINT) AS n_tokens,
-                   coalesce(n.new_types, 0) AS new_types,
-                   CAST(sum(len(d.toks)) OVER (ORDER BY d.doc_ord)
-                        AS BIGINT) AS cum_tokens,
-                   CAST(sum(coalesce(n.new_types, 0))
-                        OVER (ORDER BY d.doc_ord) AS BIGINT) AS cum_types
-            FROM hp_base d LEFT JOIN hp_new n USING (doc_ord)
-            """
-        ),
         "densest": _oracle(_densest_body()),
         "knn_graph": _oracle(
             f"""
@@ -6626,28 +6071,8 @@ GROUP BY least(ta.type, tb.type), greatest(ta.type, tb.type)
         "tool_transitions": _oracle(_TOOL_TRANS_BODY),
         "tool_scc": _oracle(_scc_oracle_body(SCC_INNER, SCC_OUTER)),
         "turn_latency": _oracle(_TURN_LATENCY_BODY),
-        "tool_latency": _oracle(_TOOL_LATENCY_BODY),
-        "conv_shapes": _oracle(_CONV_SHAPES_BODY),
-        "tool_ngrams": _oracle(_TOOL_NGRAMS_BODY),
         "role_profile": _oracle(_ROLE_PROFILE_BODY),
-        "tool_latency_q": _oracle(_TOOL_LAT_Q_BODY),
-        "bpe_pairs": _BPE_PAIRS_SQL,
         "bpe_merges": _bpe_oracle(BPE_ROUNDS),
-        "bpe_tokenize": _bpe_oracle(BPE_ROUNDS, segment=True),
-        # composes the full segment statement as a nested WITH (the
-        # _FILTER_AUDIT_SQL pattern); integer fertility micros
-        "bpe_fertility": f"""
-            WITH segd AS ({_bpe_oracle(BPE_ROUNDS, segment=True)})
-            SELECT d.lang,
-                   CAST(count(*) AS BIGINT) AS n_docs,
-                   CAST(sum(s.n_words) AS BIGINT) AS sum_words,
-                   CAST(sum(s.n_bpe_tokens) AS BIGINT) AS sum_bpe,
-                   CAST((1000000 * sum(s.n_bpe_tokens))
-                        // greatest(sum(s.n_words), 1) AS BIGINT)
-                     AS fertility_micro
-            FROM segd s JOIN documents d USING (doc_id)
-            GROUP BY d.lang
-            """,
         "exact_dedup": _EXACT_DEDUP_SQL,
         "ngram_dedup": _NGRAM_DEDUP_SQL,
         "dedup_clusters": _DEDUP_CLUSTERS_SQL,
@@ -6755,7 +6180,5 @@ FROM (SELECT doc_id, canonical_id,
             """
         ),
         "textrank": _oracle(_textrank_body()),
-        "weak_votes": f"WITH {_wl_matrix_ctes()} SELECT * FROM wl_v",
-        "weak_lf_stats": _wl_stats_sql(),
         "source_profile": _SOURCE_PROFILE_SQL.format(profile=_TEXT_PROFILE_SQL),
     }

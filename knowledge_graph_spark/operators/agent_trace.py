@@ -90,103 +90,3 @@ def turn_latency(transcripts: DataFrame, role: str = "assistant") -> DataFrame:
         F.sum("wait_us").cast("bigint").alias("total_wait_us"),
         F.max("wait_us").cast("bigint").alias("max_wait_us"),
     )
-
-
-def tool_latency(transcripts: DataFrame) -> DataFrame:
-    """Per-tool execution-latency profile → (tool, n_calls, n_timed,
-    total_gap_us, max_gap_us).
-
-    For each tool-call turn, the gap to the NEXT turn in the same
-    conversation approximates the tool's execution time (the transcript
-    records the next turn only after the tool returned).  A conversation's
-    final turn has no successor and counts in ``n_calls`` but not
-    ``n_timed``.  Exact int64 epoch-us arithmetic, same contract as
-    turn_latency.
-
-    Scale shape: one conv_id-keyed window (lead) + one combinable groupBy
-    on tool — the tool key set is tiny, and partial aggregation collapses
-    it map-side before the final shuffle.
-    """
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    t = transcripts.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "tool",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-    ).withColumn("next_us", F.lead("ts_us").over(w))
-    calls = t.filter((F.col("role") == "tool") & (F.col("tool") != "")).select(
-        "tool", (F.col("next_us") - F.col("ts_us")).alias("gap_us")
-    )
-    return calls.groupBy("tool").agg(
-        F.count("*").cast("bigint").alias("n_calls"),
-        F.count("gap_us").cast("bigint").alias("n_timed"),
-        F.coalesce(F.sum("gap_us"), F.lit(0)).cast("bigint").alias("total_gap_us"),
-        F.coalesce(F.max("gap_us"), F.lit(0)).cast("bigint").alias("max_gap_us"),
-    )
-
-
-def conversation_shapes(transcripts: DataFrame) -> DataFrame:
-    """Per-conversation structural profile → (conv_id, n_turns, n_user,
-    n_assistant, n_tool_calls, last_role, duration_us).
-
-    The corpus-curation view of dialogue structure: role balance filters
-    (assistant-only monologues, user walls), tool-usage stratification,
-    and truncation detection (a conversation whose last_role is 'user'
-    or 'tool' was cut off mid-exchange — a quality signal for training
-    selection).  One combinable groupBy on conv_id; last_role via max_by
-    on turn_idx (deterministic — turn_idx is unique per conversation).
-    """
-    return transcripts.groupBy("conv_id").agg(
-        F.count("*").cast("bigint").alias("n_turns"),
-        F.sum((F.col("role") == "user").cast("bigint")).cast("bigint").alias("n_user"),
-        F.sum((F.col("role") == "assistant").cast("bigint"))
-        .cast("bigint")
-        .alias("n_assistant"),
-        F.sum(((F.col("role") == "tool") & (F.col("tool") != "")).cast("bigint"))
-        .cast("bigint")
-        .alias("n_tool_calls"),
-        F.max_by("role", "turn_idx").alias("last_role"),
-        (
-            F.max(F.unix_micros(F.col("ts").cast("timestamp")))
-            - F.min(F.unix_micros(F.col("ts").cast("timestamp")))
-        )
-        .cast("bigint")
-        .alias("duration_us"),
-    )
-
-
-def tool_ngrams(
-    transcripts: DataFrame, n: int = 3, k_top: int = 32
-) -> DataFrame:
-    """Top-``k_top`` tool-call n-grams (default trigrams) across the
-    corpus → (g1..gn, n_occurrences) — the sequence-mining upgrade of
-    ``tool_transitions`` (which is this with n=2, un-topped): recurring
-    multi-step tool routines (search→fetch→search loops, retry storms)
-    show up as heavy n-grams.
-
-    Windows never cross conversations (lag partitioned by conv_id); the
-    first n−1 calls of a conversation carry no complete n-gram and are
-    naturally excluded by the non-null filter.  The global top-k is
-    orderBy().limit() — TakeOrderedAndProject — under the tie-free
-    (count DESC, g1..gn ASC) total order.
-    """
-    calls = transcripts.filter(
-        (F.col("role") == "tool") & (F.col("tool") != "")
-    ).select("conv_id", "turn_idx", "tool")
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    cols = {}
-    for i in range(n):
-        lag_i = n - 1 - i  # g1 is the oldest call in the window
-        cols[f"g{i + 1}"] = (
-            F.lag("tool", lag_i).over(w) if lag_i > 0 else F.col("tool")
-        )
-    seq = calls.select(*[c.alias(name) for name, c in cols.items()])
-    complete = seq.dropna(how="any", subset=list(cols))
-    names = list(cols)
-    return (
-        complete.groupBy(*names)
-        .agg(F.count("*").cast("bigint").alias("n_occurrences"))
-        .orderBy(F.desc("n_occurrences"), *[F.asc(c) for c in names])
-        .limit(k_top)
-    )

@@ -31,7 +31,7 @@ claim table.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .extract import TUPLE_DELIM

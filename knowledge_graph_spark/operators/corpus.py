@@ -311,110 +311,6 @@ def length_profile(
     )
 
 
-def build_vocab(docs: DataFrame, text_col: str = "text", min_count: int = 1) -> DataFrame:
-    """Tokenizer-style vocabulary table: (token, cnt, token_id) with ids
-    dense in (cnt DESC, token ASC) order — the conventional
-    frequency-ranked id assignment of BPE/WordPiece vocab files.
-
-    The id comes from ``graphops.with_global_index`` (two-phase
-    range-partitioned numbering), so no stage funnels the vocab through
-    a single task even at a 10^8-token vocabulary.
-    """
-    from .graphops import with_global_index
-
-    counts = unigram_counts(docs, text_col).filter(F.col("cnt") >= min_count)
-    return with_global_index(
-        counts, [F.col("cnt").desc(), F.col("token")], out_col="token_id"
-    ).select("token", "cnt", F.col("token_id").cast("bigint").alias("token_id"))
-
-
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    key_cols: list,
-    compare_cols: list,
-) -> DataFrame:
-    """Keyed diff of two table snapshots → one row per key present in
-    either side with status ∈ {added, removed, changed, unchanged}.
-
-    Per-partition lineage manifests (checkpoint.py) say WHICH stages
-    re-ran; this says WHAT changed between two materializations of the
-    same table — the audit view for incremental runs (old/new nodes
-    before/after canonicalization, yesterday's/today's corpus).  Pure
-    full-outer equi-join on the key: one shuffle, no skew beyond the
-    key's own distribution.
-    """
-    o = old.select(
-        *[F.col(k).alias(f"k_{k}") for k in key_cols],
-        *[F.col(c).alias(f"old_{c}") for c in compare_cols],
-        F.lit(1).alias("_in_old"),
-    )
-    n = new.select(
-        *[F.col(k).alias(f"k_{k}") for k in key_cols],
-        *[F.col(c).alias(f"new_{c}") for c in compare_cols],
-        F.lit(1).alias("_in_new"),
-    )
-    joined = o.join(n, [f"k_{k}" for k in key_cols], "full_outer")
-    same = None
-    for c in compare_cols:
-        eq = F.col(f"old_{c}").eqNullSafe(F.col(f"new_{c}"))
-        same = eq if same is None else (same & eq)
-    status = (
-        F.when(F.col("_in_old").isNull(), F.lit("added"))
-        .when(F.col("_in_new").isNull(), F.lit("removed"))
-        .when(same, F.lit("unchanged"))
-        .otherwise(F.lit("changed"))
-    )
-    return joined.select(
-        *[F.col(f"k_{k}").alias(k) for k in key_cols],
-        status.alias("status"),
-        *[F.col(f"old_{c}") for c in compare_cols],
-        *[F.col(f"new_{c}") for c in compare_cols],
-    )
-
-
-def merge_pair_counts(
-    docs: DataFrame, k_top: int = 64, text_col: str = "text"
-) -> DataFrame:
-    """One BPE training round: corpus-wide adjacent-token-pair counts →
-    the ``k_top`` best merge candidates (left_tok, right_tok, n_pairs).
-
-    Byte-pair-encoding tokenizer training (Sennrich et al. 2016) is
-    repeated rounds of "count all adjacent symbol pairs, merge the most
-    frequent"; this is that counting round over the same normalized
-    whitespace tokens as ``build_vocab``, so the two tables together are
-    the tokenizer-bootstrap statistics (vocab + first merge table).
-
-    Determinism: the top-k total order is (n_pairs DESC, left ASC, right
-    ASC) — no ties survive, so the row SET is stable and hash-checkable.
-
-    Scale shape: pairs explode ~1:1 with tokens (n−1 pairs per doc); the
-    (left,right) groupBy partial-aggregates the Zipf head map-side like
-    unigram_counts, and the global top-k is orderBy().limit() —
-    TakeOrderedAndProject, a per-partition heap + driver merge of k·P
-    rows, never a single-partition sort.
-    """
-    from ..functions.textqc import normalized_text, ws_tokens_col
-
-    toks = widen(docs).select(
-        ws_tokens_col(normalized_text(F.col(text_col))).alias("t")
-    ).filter(F.size("t") >= 2)
-    # F.sequence(1, 0) would be DESCENDING — the size filter guards it.
-    pairs = toks.select(
-        F.explode(
-            F.expr("transform(sequence(1, size(t) - 1), i -> struct(t[i-1] AS l, t[i] AS r))")
-        ).alias("p")
-    )
-    return (
-        pairs.groupBy(
-            F.col("p.l").alias("left_tok"), F.col("p.r").alias("right_tok")
-        )
-        .agg(F.count("*").cast("bigint").alias("n_pairs"))
-        .orderBy(F.desc("n_pairs"), F.asc("left_tok"), F.asc("right_tok"))
-        .limit(k_top)
-    )
-
-
 def dsir_scores(
     docs: DataFrame,
     target: F.Column,
@@ -547,8 +443,7 @@ def bpe_train_merges(
     arXiv:1508.07909): ``rounds`` iterations of "count every adjacent
     symbol pair, merge the most frequent everywhere" → the learned merge
     table (round, left_tok, right_tok, n_pairs), which IS a BPE
-    tokenizer's core artifact.  Extends ``merge_pair_counts`` (one
-    counting round over words) to the full character-level training loop.
+    tokenizer's core artifact.  Training starts from single characters.
 
     Like every real BPE trainer, the loop runs over the WORD-FREQUENCY
     table, not the corpus: the text is scanned once into (word, cnt) —
@@ -637,89 +532,6 @@ def bpe_train_merges(
     return merges
 
 
-def bpe_segment(
-    docs: DataFrame,
-    rounds: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Apply a freshly-trained ``rounds``-merge BPE tokenizer to the
-    corpus → (doc_id, n_words, n_bpe_tokens): the token-count table a
-    packing/budgeting stage consumes once the tokenizer exists.
-
-    Scale design: tokenization is a DICTIONARY JOIN, not a per-occurrence
-    re-run of the merges.  Training already segments every distinct word
-    (the word-frequency table); this keeps that final (word → |symbols|)
-    table — Zipf-bounded, broadcastable — and joins each document's word
-    occurrences against it, summing symbol counts per doc.  The merge
-    loop therefore runs once per ROUND over the vocab, never per word
-    occurrence — the shape that holds at 100 TB.
-    """
-    from ..functions.textqc import normalized_text, ws_tokens_col
-
-    words = widen(docs).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode_outer(ws_tokens_col(normalized_text(F.col(text_col)))).alias("word"),
-    )
-    vocab = (
-        words.filter(F.col("word").isNotNull())
-        .groupBy("word")
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-        .select(
-            "word",
-            F.expr(
-                "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
-            ).alias("syms"),
-            "cnt",
-        )
-        .persist()
-    )
-    merged = F.expr(
-        r"""
-        split(
-          substring(
-            replace(concat('\n', array_join(syms, '\n\n'), '\n'),
-                    concat('\n', _l, '\n\n', _r, '\n'),
-                    concat('\n', _l, _r, '\n')),
-            2,
-            length(replace(concat('\n', array_join(syms, '\n\n'), '\n'),
-                           concat('\n', _l, '\n\n', _r, '\n'),
-                           concat('\n', _l, _r, '\n'))) - 2),
-          '\n\n')
-        """
-    )
-    for _ in range(rounds):
-        pairs = (
-            vocab.select(
-                "cnt",
-                F.explode(
-                    F.expr(
-                        "CASE WHEN size(syms) < 2 THEN CAST(array() AS array<struct<l:string,r:string>>) "
-                        "ELSE transform(sequence(1, size(syms) - 1), "
-                        "i -> struct(syms[i-1] AS l, syms[i] AS r)) END"
-                    )
-                ).alias("p"),
-            )
-            .groupBy(F.col("p.l").alias("_l"), F.col("p.r").alias("_r"))
-            .agg(F.sum("cnt").cast("bigint").alias("_n"))
-        )
-        best = pairs.orderBy(F.desc("_n"), F.asc("_l"), F.asc("_r")).limit(1)
-        vocab = (
-            vocab.crossJoin(F.broadcast(best))
-            .select("word", merged.alias("syms"), "cnt")
-            .persist()
-        )
-    seg = F.broadcast(vocab.select("word", F.size("syms").cast("bigint").alias("n_syms")))
-    return (
-        words.join(seg, "word", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("word").cast("bigint").alias("n_words"),
-            F.coalesce(F.sum("n_syms"), F.lit(0)).cast("bigint").alias("n_bpe_tokens"),
-        )
-    )
-
-
 def tertile_buckets(
     scored: DataFrame,
     strata_col: str = "lang",
@@ -754,329 +566,3 @@ def tertile_buckets(
     return ranked.select(
         id_col, strata_col, score_col, F.col("rk"), bucket.alias("bucket")
     )
-
-
-def heaps_profile(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Heaps/Herdan vocabulary-growth curve → one row per document in
-    ``id_col`` order: (doc_ord, doc_id, n_tokens, new_types, cum_tokens,
-    cum_types).
-
-    cum_types(d) counts DISTINCT normalized whitespace tokens seen in
-    docs 1..d — the V(N) ≈ K·N^β law every tokenizer-budget and
-    vocab-size decision leans on; a corpus whose curve bends early is
-    repetitive (dedup target), one that never bends is noisy (garbage
-    tokens).  Exact integers, no estimation.
-
-    Scale shape: the naive form (cumulative DISTINCT per prefix) is
-    quadratic; the distributed identity used here is
-    cum_types(d) = #{tokens whose FIRST occurrence ord ≤ d} — one
-    min-aggregate per token, one count per first-occurrence ord, then
-    two prefix sums via with_running_sum (two-phase, no
-    single-partition window).  Everything is a map-side-combinable
-    aggregate on (token) or (ord); no driver loops.
-
-    Reference anchor: none (the reference has no corpus telemetry) —
-    this is part of the training-data-pipeline brief, companion to
-    build_vocab / unigram_counts.
-    """
-    from ..functions.textqc import normalized_text, ws_tokens_col
-    from .graphops import with_global_index, with_running_sum
-
-    base = with_global_index(
-        widen(docs).select(
-            F.col(id_col).alias("doc_id"),
-            ws_tokens_col(normalized_text(F.col(text_col))).alias("__toks"),
-        ),
-        ["doc_id"],
-        "doc_ord",
-    ).select(
-        "doc_id",
-        (F.col("doc_ord") + 1).cast("bigint").alias("doc_ord"),
-        "__toks",
-        F.size("__toks").cast("bigint").alias("n_tokens"),
-    )
-    base = base.persist()
-    first_occ = (
-        base.select("doc_ord", F.explode("__toks").alias("token"))
-        .groupBy("token")
-        .agg(F.min("doc_ord").alias("first_ord"))
-    )
-    new_types = first_occ.groupBy(F.col("first_ord").alias("doc_ord")).agg(
-        F.count("*").cast("bigint").alias("new_types")
-    )
-    per_doc = base.join(new_types, "doc_ord", "left").select(
-        "doc_ord",
-        "doc_id",
-        "n_tokens",
-        F.coalesce("new_types", F.lit(0)).cast("bigint").alias("new_types"),
-    )
-    out = with_running_sum(per_doc, ["doc_ord"], "n_tokens", "cum_tokens")
-    out = with_running_sum(out, ["doc_ord"], "new_types", "cum_types")
-    return out.select(
-        "doc_ord",
-        "doc_id",
-        "n_tokens",
-        "new_types",
-        F.col("cum_tokens").cast("bigint").alias("cum_tokens"),
-        F.col("cum_types").cast("bigint").alias("cum_types"),
-    )
-
-
-def bpe_fertility(
-    docs: DataFrame,
-    rounds: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-) -> DataFrame:
-    """Tokenizer fertility audit → one row per language: (lang, n_docs,
-    sum_words, sum_bpe, fertility_micro) where fertility_micro =
-    floor(1e6 · bpe_tokens / words).
-
-    Fertility (BPE tokens emitted per whitespace word) is the standard
-    tokenizer-equity metric: a tokenizer trained on skewed data segments
-    under-represented languages into more pieces, inflating their
-    training cost and truncation rate.  Reuses bpe_segment's dictionary
-    join (the merges run once over the Zipf-bounded vocab, never per
-    occurrence) and folds to one exact-integer row per language.
-    """
-    seg = bpe_segment(docs, rounds=rounds, id_col=id_col, text_col=text_col)
-    tagged = seg.join(
-        docs.select(F.col(id_col).alias("doc_id"), F.col(lang_col).alias("lang")),
-        "doc_id",
-    )
-    return (
-        tagged.groupBy("lang")
-        .agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.sum("n_words").cast("bigint").alias("sum_words"),
-            F.sum("n_bpe_tokens").cast("bigint").alias("sum_bpe"),
-        )
-        .withColumn(
-            "fertility_micro",
-            F.expr("(1000000 * sum_bpe) DIV greatest(sum_words, 1)").cast("bigint"),
-        )
-    )
-
-
-def ngram_diversity(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_n: int = 3,
-) -> DataFrame:
-    """Per-document distinct-n diversity profile → (doc_id, n_tokens,
-    distinct_1..distinct_{max_n}, ratio_micro_1..ratio_micro_{max_n}).
-
-    Li et al. 2016's distinct-n metric as a curation filter: the fraction
-    of n-gram positions occupied by DISTINCT n-grams, in exact integer
-    micros (ratio_micro_n = 1e6 · distinct_n / max(1, positions_n)).
-    Low distinct-2/3 flags degenerate repetition (decoding loops, boiler-
-    plate, keyword stuffing) that per-token QC misses; the corpus-level
-    aggregate tracks diversity drift across dumps.  Complements
-    `textqc.repeated_token_fraction` (adjacent repeats only) and
-    `dedup.repeated_span_profile` (cross-doc spans) with the in-document
-    multiset view.
-
-    Scale shape: entirely ROW-LOCAL Column algebra — tokenize once,
-    slide windows with transform/slice, count distincts with
-    array_distinct — no explode, no shuffle, no UDF; Catalyst keeps the
-    whole computation in one codegen stage over the text scan."""
-    from ..functions.textqc import normalized_text, ws_tokens_col
-
-    toks = ws_tokens_col(normalized_text(F.col(text_col)))
-    out = docs.select(
-        F.col(id_col).alias("doc_id"), toks.alias("t")
-    ).withColumn("n_tokens", F.size("t").cast("bigint"))
-    def _grams(n: int) -> F.Column:
-        # NB: a 1-arg lambda only — F.transform passes (element, index) to
-        # 2-arg callables, which would shadow a default-arg n binding
-        if n == 1:
-            return F.col("t")
-        return F.when(F.size("t") < n, F.expr("CAST(array() AS ARRAY<STRING>)")).otherwise(
-            F.transform(
-                F.sequence(F.lit(0), F.size("t") - n),
-                lambda i: F.concat_ws(" ", F.slice(F.col("t"), i + 1, n)),
-            )
-        )
-
-    for n in range(1, max_n + 1):
-        grams = _grams(n)
-        out = out.withColumn(f"distinct_{n}", F.size(F.array_distinct(grams)).cast("bigint"))
-        out = out.withColumn(
-            f"ratio_micro_{n}",
-            F.expr(
-                f"distinct_{n} * 1000000 DIV greatest(CAST(1 AS BIGINT), n_tokens - {n} + 1)"
-            ).cast("bigint"),
-        )
-    return out.drop("t")
-
-
-# Default labeling functions for the weak-supervision audit: (name,
-# required lowercase substrings, label).  A function fires on a document
-# when every substring occurs; its vote is the attached binary label.
-# The default task separates query-shaped from stream-shaped docs — the
-# two salient registers of this corpus — but any (name, terms, label)
-# list works; terms are matched as plain substrings (no regex) so both
-# engines share exact semantics.
-WEAK_LFS: tuple[tuple[str, tuple[str, ...], int], ...] = (
-    ("lf_query", ("query",), 1),
-    ("lf_join_agg", ("join", "agg"), 1),
-    ("lf_stream", ("stream",), 0),
-    ("lf_batch_window", ("batch", "window"), 0),
-)
-
-
-def _lf_fired(text_low: F.Column, terms: tuple[str, ...]) -> F.Column:
-    cond = F.lit(True)
-    for t in terms:
-        cond = cond & (F.instr(text_low, t) > 0)
-    return cond
-
-
-def weak_label_matrix(
-    docs: DataFrame,
-    lfs: tuple = WEAK_LFS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Data-programming label matrix (Ratner et al. 2017, Snorkel):
-    apply every labeling function to every document and fold the votes →
-    (doc_id, <lf_name> … with NULL = abstain, n_pos, n_neg, vote).
-
-    The learned label model is replaced by a deterministic majority vote
-    (ties break to the smaller label, no-vote docs stay NULL) — the
-    auditable baseline every weak-supervision pipeline starts from; a
-    trained model plugs in where ``vote`` is computed.
-
-    Scale shape: entirely row-local Column algebra — k substring probes
-    and a constant-width CASE per row, zero shuffle, pipelines into
-    whatever consumes the labels."""
-    low = F.lower(F.col(text_col))
-    out = widen(docs).select(F.col(id_col).alias("doc_id"), low.alias("_low"))
-    for name, terms, label in lfs:
-        out = out.withColumn(
-            name, F.when(_lf_fired(F.col("_low"), terms), F.lit(label)).cast("int")
-        )
-    n_pos = sum(
-        (F.when(F.col(name) == 1, 1).otherwise(0) for name, _, _ in lfs), F.lit(0)
-    )
-    n_neg = sum(
-        (F.when(F.col(name) == 0, 1).otherwise(0) for name, _, _ in lfs), F.lit(0)
-    )
-    out = out.withColumn("n_pos", n_pos.cast("int")).withColumn(
-        "n_neg", n_neg.cast("int")
-    )
-    vote = (
-        F.when(F.col("n_pos") > F.col("n_neg"), F.lit(1))
-        .when(F.col("n_neg") > F.col("n_pos"), F.lit(0))
-        .when(F.col("n_pos") > 0, F.lit(0))  # tie with votes → smaller label
-        .otherwise(F.lit(None))
-    )
-    return out.withColumn("vote", vote.cast("int")).drop("_low")
-
-
-def weak_lf_counters(
-    docs: DataFrame,
-    lfs: tuple = WEAK_LFS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Raw per-LF counter table → one row per LF: (lf, label, n_docs,
-    n_fired, n_overlap, n_conflict, n_agree_vote).  Every column is a
-    SUM of per-document indicators, so two counter tables over disjoint
-    corpora merge by summing.
-
-    Scale shape: one pass — the per-doc indicator columns are row-local,
-    folded by a single global aggregate (constant width: 4 counters per
-    LF), then unpivoted driver-free via an inline stack over the 1-row
-    frame.  n_docs rides the same aggregate — no second scan."""
-    m = weak_label_matrix(docs, lfs, id_col, text_col)
-    aggs = [F.count("*").cast("bigint").alias("n_docs")]
-    for name, _, label in lfs:
-        fired = F.col(name).isNotNull()
-        others_fired = F.lit(False)
-        others_conflict = F.lit(False)
-        for oname, _, _ in lfs:
-            if oname == name:
-                continue
-            ofired = F.col(oname).isNotNull()
-            others_fired = others_fired | ofired
-            others_conflict = others_conflict | (
-                ofired & (F.col(oname) != F.col(name))
-            )
-        aggs.append(
-            F.sum(F.when(fired, 1).otherwise(0)).cast("bigint").alias(f"_f_{name}")
-        )
-        aggs.append(
-            F.sum(F.when(fired & others_fired, 1).otherwise(0))
-            .cast("bigint")
-            .alias(f"_o_{name}")
-        )
-        aggs.append(
-            F.sum(F.when(fired & others_conflict, 1).otherwise(0))
-            .cast("bigint")
-            .alias(f"_c_{name}")
-        )
-        aggs.append(
-            F.sum(F.when(fired & (F.col("vote") == F.col(name)), 1).otherwise(0))
-            .cast("bigint")
-            .alias(f"_a_{name}")
-        )
-    one = m.agg(*aggs)
-    stack_args = ", ".join(
-        f"'{name}', CAST({label} AS INT), _f_{name}, _o_{name}, _c_{name}, _a_{name}"
-        for name, _, label in lfs
-    )
-    return one.select(
-        F.expr(
-            f"stack({len(lfs)}, {stack_args}) AS "
-            "(lf, label, n_fired, n_overlap, n_conflict, n_agree_vote)"
-        ),
-        "n_docs",
-    ).select(
-        "lf", "label", "n_docs", "n_fired", "n_overlap", "n_conflict", "n_agree_vote"
-    )
-
-
-def weak_stats_from_counters(counters: DataFrame) -> DataFrame:
-    """Read the audit table off a (possibly stream-folded) counter table:
-    adds coverage_micro = 10^6·n_fired DIV n_docs and drops n_docs —
-    derived quantities are computed at read time, never folded.  The
-    divisor is floor-guarded (greatest 1) so a counter row folded from
-    an empty corpus reads coverage 0 on both engines instead of NULL
-    here / a division error in the oracle."""
-    return counters.select(
-        "lf",
-        "label",
-        "n_fired",
-        F.expr("n_fired * 1000000 DIV greatest(n_docs, 1)")
-        .cast("bigint")
-        .alias("coverage_micro"),
-        "n_overlap",
-        "n_conflict",
-        "n_agree_vote",
-    )
-
-
-def weak_lf_stats(
-    docs: DataFrame,
-    lfs: tuple = WEAK_LFS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-labeling-function audit of the weak-label matrix → one row
-    per LF: (lf, label, n_fired, coverage_micro, n_overlap, n_conflict,
-    n_agree_vote) — Snorkel's coverage/overlap/conflict diagnostics as
-    exact integers (coverage_micro = 10^6·n_fired DIV n_docs).
-
-    n_overlap counts docs where the LF fired and at least one OTHER LF
-    fired; n_conflict where some other firing LF voted differently;
-    n_agree_vote where the LF's vote equals the majority vote.
-
-    One-shot composition of ``weak_lf_counters`` +
-    ``weak_stats_from_counters`` (same scale shape: one scan, one
-    constant-width aggregate)."""
-    return weak_stats_from_counters(weak_lf_counters(docs, lfs, id_col, text_col))

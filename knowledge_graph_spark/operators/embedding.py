@@ -89,8 +89,6 @@ def map_query_to_entities(
 # metadata map), queried by the ANN operators in operators/similarity.py.
 # ---------------------------------------------------------------------------
 
-VECTOR_STORE_COLUMNS = ("vec_id", "embedding", "metadata")
-
 
 def write_vector_store(
     df: DataFrame,

@@ -44,7 +44,6 @@ COMPLETION = "<|COMPLETE|>"  # reference graph_extractor.py:19
 # Planted-entity surface form: uppercase token, >= 3 chars.  Identical
 # semantics in Python re, Java regex and RE2 (DuckDB) for oracle parity.
 MENTION_PATTERN = r"\b[A-Z][A-Z0-9_]{2,}\b"
-_MENTION_RE = re.compile(MENTION_PATTERN)
 
 # Deterministic type rule (default entity types, reference
 # verbs/entities/extraction/entity_extract.py:23).

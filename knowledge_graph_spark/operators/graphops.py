@@ -2430,8 +2430,7 @@ def double_sweep_diameter(
     graphs.  Each sweep is the bounded-round `bfs_hops` kernel, so with a
     fixed ``hops`` budget the reported bound is itself a sound lower
     bound (hop counts are true shortest distances for every reached
-    node).  Pairs with the HyperBall `eff_diameter` estimate: this is
-    the exact-arithmetic floor under that sketched ceiling.
+    node).
 
     Scale shape: 2·hops Pregel rounds (one equi-join + min-aggregate
     each) plus two 1-row argmax reductions (TakeOrderedAndProject — no

@@ -21,9 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-OLD_NEW_FRAME = "Old Information---\n{old}\nNew Information---\n{new}"
-OLD_NEW_EDGE_FRAME = "Old---\n{old}\nNew---\n{new}"
-
 
 def _framed(old_col, new_col, old_tag="Old Information---\n", new_tag="\nNew Information---\n"):
     return F.concat(F.lit(old_tag), old_col, F.lit(new_tag), new_col)

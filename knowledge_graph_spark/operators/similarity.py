@@ -30,7 +30,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 SIM_SCALE = 1_000_000  # floor(sim * SIM_SCALE) — shared with the SQL oracle
 

@@ -191,44 +191,6 @@ def log2_histogram(
     )
 
 
-def histogram_quantiles(
-    hist: DataFrame,
-    pcts: tuple[int, ...] = (50, 90, 99),
-    strata_col: str | None = None,
-) -> DataFrame:
-    """(stratum?, pct, bucket, upper) — quantile read-off over a
-    ``log2_histogram`` table: the smallest bucket whose cumulative count
-    reaches pct% of the stratum total, plus that bucket's inclusive upper
-    value bound (2^bucket − 1; bucket 0 holds values ≤ 0).
-
-    Integer-exact end to end: ``cum ≥ ceil(pct·total/100)`` is evaluated
-    as ``100·cum ≥ pct·total`` (no division, no floats), so both engines
-    agree bit-for-bit.  The histogram is ≤ 64 rows per stratum, so the
-    per-stratum window and the pct cross join are driver-trivial no
-    matter the corpus size — the heavy lifting already happened in the
-    mergeable groupBy that built the histogram."""
-    from pyspark.sql import Window
-
-    keys = [strata_col] if strata_col else []
-    w_cum = Window.partitionBy(*keys).orderBy("bucket")
-    w_tot = Window.partitionBy(*keys)
-    pct = F.explode(F.array(*[F.lit(int(p)) for p in pcts])).alias("pct")
-    c = hist.select(
-        *keys,
-        "bucket",
-        F.sum("n").over(w_cum).cast("bigint").alias("cum"),
-        F.sum("n").over(w_tot).cast("bigint").alias("total"),
-    ).select(*keys, "bucket", "cum", "total", pct)
-    return (
-        c.where(F.col("cum") * 100 >= F.col("pct") * F.col("total"))
-        .groupBy(*keys, "pct")
-        .agg(F.min("bucket").cast("int").alias("bucket"))
-        .withColumn(
-            "upper", F.expr("shiftleft(CAST(1 AS BIGINT), bucket) - 1").cast("bigint")
-        )
-    )
-
-
 CMS_D = 4
 CMS_W = 512
 
@@ -343,161 +305,6 @@ def hyperball(
             .localCheckpoint(eager=False)
         )
     return hll_estimate(regs, p=p, strata_col="node")
-
-
-def neighborhood_function(
-    edges: DataFrame,
-    rounds: int = 3,
-    p: int = HLL_P,
-    src: str = "source",
-    dst: str = "target",
-) -> DataFrame:
-    """The graph's neighborhood function N(r) = Σ_v |ball_r(v)| for
-    r = 0..rounds, estimated from the per-round HyperBall register
-    tables — the summary the effective-diameter / average-distance
-    statistics read off (N(r) flattening ⇒ r covers most pairs).  Same
-    merge loop as ``hyperball``; per round one extra combinable
-    aggregate.  Returns (r, n_nodes, total_ball_est)."""
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).distinct()
-    adj = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    nodes = adj.select(F.col("a").alias("node")).distinct()
-    regs = hll_registers(nodes, col="node", p=p, strata_col="node")
-
-    def level(regs_df: DataFrame, r: int) -> DataFrame:
-        est = hll_estimate(regs_df, p=p, strata_col="node")
-        return est.agg(
-            F.lit(r).cast("int").alias("r"),
-            F.count("*").cast("bigint").alias("n_nodes"),
-            F.sum("estimate").cast("bigint").alias("total_ball_est"),
-        )
-
-    out = level(regs, 0)
-    for r in range(1, rounds + 1):
-        step = (
-            regs.alias("R")
-            .join(adj.alias("E"), F.col("R.node") == F.col("E.b"))
-            .select(
-                F.col("E.a").alias("node"),
-                F.col("R.register").alias("register"),
-                F.col("R.max_rank").alias("max_rank"),
-            )
-        )
-        regs = (
-            regs.unionByName(step)
-            .groupBy("node", "register")
-            .agg(F.max("max_rank").alias("max_rank"))
-            .localCheckpoint(eager=False)
-        )
-        out = out.unionByName(level(regs, r))
-    return out
-
-
-def effective_diameter(
-    edges: DataFrame,
-    rounds: int = 3,
-    p: int = HLL_P,
-    q_num: int = 9,
-    q_den: int = 10,
-    src: str = "source",
-    dst: str = "target",
-) -> DataFrame:
-    """Effective diameter read-off from the neighborhood function → one
-    row (eff_diameter, covered_pairs, total_pairs): the smallest radius
-    r ≤ ``rounds`` whose N(r) covers at least q_num/q_den (default 90%)
-    of N(rounds) — the standard HyperBall summary statistic (Boldi &
-    Vigna 2013 §5; ANF before it).  Integer comparison (N(r)·q_den ≥
-    q_num·N(rounds)), so the SQL unroll matches exactly.  If the graph
-    is wider than ``rounds`` hops, the truncated N(rounds) understates
-    the true denominator — callers grow ``rounds`` until N flattens."""
-    nf = neighborhood_function(edges, rounds=rounds, p=p, src=src, dst=dst)
-    tot = nf.filter(F.col("r") == rounds).select(
-        F.col("total_ball_est").alias("__tot")
-    )
-    hit = nf.crossJoin(F.broadcast(tot)).filter(
-        F.col("total_ball_est") * q_den >= q_num * F.col("__tot")
-    )
-    return hit.agg(
-        F.min("r").cast("int").alias("eff_diameter"),
-        F.min_by("total_ball_est", "r").cast("bigint").alias("covered_pairs"),
-        F.max("__tot").cast("bigint").alias("total_pairs"),
-    )
-
-
-def harmonic_centrality(
-    edges: DataFrame,
-    rounds: int = 3,
-    p: int = HLL_P,
-    src: str = "source",
-    dst: str = "target",
-    scale: int = 1_000_000,
-) -> DataFrame:
-    """Harmonic centrality via HyperBall (Boldi & Vigna 2013 — THE
-    application the algorithm was built for): H(v) = Σ_u 1/d(v,u),
-    truncated at ``rounds`` hops and estimated from the per-round ball
-    sizes as Σ_{r=1..R} (|B_r(v)| − |B_{r−1}(v)|)/r.  The exact version
-    needs all-pairs BFS (O(|V|·|E|)); the sketch version is ``rounds``
-    register MAX-merge joins — centrality for billion-node graphs.
-
-    Integer arithmetic throughout: ball estimates are the floored raw
-    HLL values (hll_estimate), each term is (est_r − est_{r−1})·scale
-    DIV r (diffs are non-negative — registers only grow, so estimates
-    are monotone in r), so a fixed-round SQL unroll reproduces every
-    value bit-for-bit.  Returns (node, harmonic_micro, ball_est) with
-    harmonic_micro in units of 1/``scale``.
-
-    Scale shape: the same one-join-plus-max-aggregate round as
-    ``hyperball``; the final combine is ``rounds`` node-keyed joins of
-    node-sized estimate tables."""
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).distinct()
-    adj = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    nodes = adj.select(F.col("a").alias("node")).distinct()
-    regs = hll_registers(nodes, col="node", p=p, strata_col="node")
-    ests = [
-        hll_estimate(regs, p=p, strata_col="node").select(
-            "node", F.col("estimate").alias("est_0")
-        )
-    ]
-    for r in range(1, rounds + 1):
-        step = (
-            regs.alias("R")
-            .join(adj.alias("E"), F.col("R.node") == F.col("E.b"))
-            .select(
-                F.col("E.a").alias("node"),
-                F.col("R.register").alias("register"),
-                F.col("R.max_rank").alias("max_rank"),
-            )
-        )
-        regs = (
-            regs.unionByName(step)
-            .groupBy("node", "register")
-            .agg(F.max("max_rank").alias("max_rank"))
-            .localCheckpoint(eager=False)
-        )
-        ests.append(
-            hll_estimate(regs, p=p, strata_col="node").select(
-                "node", F.col("estimate").alias(f"est_{r}")
-            )
-        )
-    out = ests[0]
-    for r in range(1, rounds + 1):
-        out = out.join(ests[r], "node")
-    h = None
-    for r in range(1, rounds + 1):
-        term = F.expr(f"(est_{r} - est_{r - 1}) * {scale} DIV {r}")
-        h = term if h is None else h + term
-    return out.select(
-        "node",
-        h.cast("bigint").alias("harmonic_micro"),
-        F.col(f"est_{rounds}").cast("bigint").alias("ball_est"),
-    )
 
 
 def kmv_kmin(

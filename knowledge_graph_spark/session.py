@@ -24,6 +24,14 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 2 * int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory(cap_mb: int = 24 * 1024) -> str:
+    """A quarter of physical RAM, capped at ``cap_mb``, as a Spark size:
+    the driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset, so a job
+    next to another JVM on the same host still leaves both room."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(cap_mb, ram_mb // 4)}m"
+
+
 def get_spark(
     app_name: str = "knowledge_graph_spark",
     master: str | None = None,
@@ -59,7 +67,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_driver_memory()),
+        )
         # deterministic outputs: never silently broadcast a table whose
         # contents we expect to aggregate; AQE still promotes joins it can
         # prove small.  Default 10 MB threshold is kept.

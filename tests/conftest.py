@@ -1,13 +1,10 @@
-import os
-
 import pytest
 
-from knowledge_graph_spark.session import get_spark
+from knowledge_graph_spark.session import default_driver_memory, get_spark
 
 # The suite's one JVM gets a quarter of physical RAM, capped at 8g, so a
 # concurrent job or gate sweep on the same host still has room.
-_RAM_MB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
-DRIVER_MEMORY = f"{min(8192, _RAM_MB // 4)}m"
+DRIVER_MEMORY = default_driver_memory(cap_mb=8192)
 
 
 @pytest.fixture(scope="session")

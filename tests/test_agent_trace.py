@@ -1,11 +1,11 @@
-"""Agent-trace analytics (agent_trace.py) + the session-5 graph/corpus
-operators (widest_paths, merge_pair_counts).
+"""Agent-trace analytics (agent_trace.py) + the session-5 graph
+operators (widest_paths, hits_int).
 
 Each operator is replayed in pure Python over the same small input and
 compared exactly — the unit-level analogue of the DuckDB gate oracles.
 """
 
-from collections import Counter, defaultdict
+from collections import defaultdict
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,7 +14,6 @@ from knowledge_graph_spark.operators.agent_trace import (
     tool_transitions,
     turn_latency,
 )
-from knowledge_graph_spark.operators.corpus import merge_pair_counts
 from knowledge_graph_spark.operators.graphops import (
     WIDEST_SEED_STRENGTH,
     widest_paths,
@@ -107,23 +106,6 @@ def test_widest_paths_matches_local_fixpoint(spark):
     assert got["e"] == 1 and got["c"] == 3 and got["b"] == 5
 
 
-def test_merge_pair_counts(spark):
-    docs = spark.createDataFrame(
-        [(1, "the cat sat"), (2, "the cat ran"), (3, "one"), (4, "")],
-        "doc_id long, text string",
-    )
-    got = [(r.left_tok, r.right_tok, r.n_pairs) for r in merge_pair_counts(docs, 3).collect()]
-    counts = Counter()
-    for t in ("the cat sat", "the cat ran"):
-        toks = t.split()
-        counts.update(zip(toks, toks[1:]))
-    expect = sorted(
-        ((l, r, n) for (l, r), n in counts.items()),
-        key=lambda x: (-x[2], x[0], x[1]),
-    )[:3]
-    assert got == expect
-
-
 def test_hits_int_matches_replay(spark):
     from knowledge_graph_spark.operators.graphops import HITS_NORM_SCALE, hits_int
 
@@ -161,60 +143,10 @@ def test_hits_int_matches_replay(spark):
     assert got["a"][0] == min(v[0] for v in got.values())
 
 
-def test_tool_latency(spark, transcripts):
-    from knowledge_graph_spark.operators.agent_trace import tool_latency
-
-    got = {
-        r.tool: (r.n_calls, r.n_timed, r.total_gap_us, r.max_gap_us)
-        for r in tool_latency(transcripts).collect()
-    }
-    # c1: search@110→118 (8s), fetch@118→130 (12s), search@131 is final
-    # (untimed); c2: fetch@64→99 (35s)
-    assert got == {
-        "search": (2, 1, 8_000_000, 8_000_000),
-        "fetch": (2, 2, 47_000_000, 35_000_000),
-    }
-
-
-def test_conversation_shapes(spark, transcripts):
-    from knowledge_graph_spark.operators.agent_trace import conversation_shapes
-
-    got = {
-        r.conv_id: (r.n_turns, r.n_user, r.n_assistant, r.n_tool_calls,
-                    r.last_role, r.duration_us)
-        for r in conversation_shapes(transcripts).collect()
-    }
-    assert got == {
-        "c1": (6, 1, 2, 3, "tool", 31_000_000),
-        "c2": (3, 0, 2, 1, "assistant", 49_000_000),
-    }
-
-
-def test_tool_ngrams(spark, transcripts):
-    from knowledge_graph_spark.operators.agent_trace import tool_ngrams
-
-    got = [
-        (r.g1, r.g2, r.g3, r.n_occurrences)
-        for r in tool_ngrams(transcripts, n=3, k_top=8).collect()
-    ]
-    # c1's calls: search, fetch, search -> one complete trigram; c2 has
-    # a single call -> none.
-    assert got == [("search", "fetch", "search", 1)]
-    bigrams = {
-        (r.g1, r.g2): r.n_occurrences
-        for r in tool_ngrams(transcripts, n=2, k_top=8).collect()
-    }
-    assert bigrams == {("search", "fetch"): 1, ("fetch", "search"): 1}
-
-
 def test_null_robustness(spark):
     """NULL text / tool / role / ts and duplicate turn_idx must flow
     through the pipeline and every trace operator without ANSI-mode
     throws — ingest garbage is a fact of life at 10^12 turns."""
-    from knowledge_graph_spark.operators.agent_trace import (
-        conversation_shapes,
-        tool_latency,
-    )
     from knowledge_graph_spark.pipeline import PipelineConfig, build_graph
 
     rows = [
@@ -236,6 +168,3 @@ def test_null_robustness(spark):
     assert stages["nodes"].count() == 2 and stages["edges"].count() == 1
     assert tool_transitions(t).count() == 2  # NULL-tool call is excluded
     assert turn_latency(t).count() == 1      # NULL-ts turn yields no wait
-    assert tool_latency(t).count() == 2
-    shapes = {r.conv_id: r.n_tool_calls for r in conversation_shapes(t).collect()}
-    assert shapes == {"c1": 0, "c2": 0, "c3": 2}  # NULL tool != '' is false

@@ -220,50 +220,6 @@ def test_bpe_train_matches_reference_trainer(spark):
     assert any(len(l) > 1 or len(r) > 1 for l, r, _ in got)
 
 
-def test_bpe_segment_counts_match_reference(spark):
-    """Dictionary-join tokenization: per-doc BPE token counts equal the
-    reference trainer's greedy segmentation applied to every word."""
-    from collections import Counter
-
-    from knowledge_graph_spark.operators.corpus import bpe_segment
-
-    texts = ["the theme the", "other brother the the", "aaa aab banana"]
-    rounds = 4
-
-    # reference: train on word freqs, then segment each occurrence
-    vocab = Counter(w for t in texts for w in t.split())
-    words = {w: [c for c in w] for w in vocab}
-    for _ in range(rounds):
-        pairs = Counter()
-        for w, syms in words.items():
-            for i in range(len(syms) - 1):
-                pairs[(syms[i], syms[i + 1])] += vocab[w]
-        (l, r), _n = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
-        for w, syms in words.items():
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == l and syms[i + 1] == r:
-                    out.append(l + r)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            words[w] = out
-    want = {
-        d: (len(t.split()), sum(len(words[w]) for w in t.split()))
-        for d, t in enumerate(texts)
-    }
-
-    docs = spark.createDataFrame(
-        list(enumerate(texts)), "doc_id bigint, text string"
-    )
-    got = {
-        r.doc_id: (r.n_words, r.n_bpe_tokens)
-        for r in bpe_segment(docs, rounds=rounds).collect()
-    }
-    assert got == want
-
-
 def test_anchored_replace_merge_matches_greedy_fold(spark):
     """The newline-anchored replace construction must implement greedy
     left-to-right pair merging EXACTLY, including adversarial shapes:

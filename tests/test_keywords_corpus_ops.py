@@ -1,10 +1,9 @@
-"""BM25 top-terms, vocab build, snapshot diff."""
+"""BM25 top-terms."""
 
 import math
 
 import pytest
 
-from knowledge_graph_spark.operators.corpus import build_vocab, snapshot_diff
 from knowledge_graph_spark.operators.keywords import (
     BM25_B,
     BM25_K1,
@@ -57,34 +56,3 @@ def test_bm25_matches_hand_computation(spark, docs):
         assert [r["rk"] for r in rows] == list(range(1, len(rows) + 1))
         keys = [(-r["score_micro"], r["term"]) for r in rows]
         assert keys == sorted(keys)
-
-
-def test_build_vocab_ids_are_frequency_ranked(spark, docs):
-    v = {r["token"]: r for r in build_vocab(docs).collect()}
-    # apple 5, banana 3, cherry 3, then singletons in lexicographic order
-    assert v["apple"]["token_id"] == 0 and v["apple"]["cnt"] == 5
-    assert v["banana"]["token_id"] == 1  # cnt 3, 'banana' < 'cherry'
-    assert v["cherry"]["token_id"] == 2
-    singles = sorted(t for t, r in v.items() if r["cnt"] == 1)
-    assert [v[t]["token_id"] for t in singles] == [3, 4, 5, 6]
-
-
-def test_snapshot_diff_statuses(spark):
-    old = spark.createDataFrame(
-        [("a", "T1", "d1"), ("b", "T2", "d2"), ("c", "T3", None)],
-        "title: string, type: string, description: string",
-    )
-    new = spark.createDataFrame(
-        [("a", "T1", "d1"), ("b", "T2", "DIFFERENT"), ("d", "T4", "d4")],
-        "title: string, type: string, description: string",
-    )
-    out = {r["title"]: r for r in
-           snapshot_diff(old, new, ["title"], ["type", "description"]).collect()}
-    assert out["a"]["status"] == "unchanged"
-    assert out["b"]["status"] == "changed"
-    assert out["c"]["status"] == "removed" and out["c"]["new_type"] is None
-    assert out["d"]["status"] == "added" and out["d"]["old_type"] is None
-    # null-safe compare: None == None counts as equal
-    old2 = old.filter("title = 'c'")
-    new2 = old2
-    assert snapshot_diff(old2, new2, ["title"], ["type", "description"]).collect()[0]["status"] == "unchanged"

@@ -322,17 +322,6 @@ def test_stratum_cap_uses_window_group_limit(spark):
     assert "PythonUDF" not in p
 
 
-def test_bpe_pairs_uses_distributed_topk(spark, docs):
-    """The global top-k must be TakeOrderedAndProject (per-partition heap
-    + driver merge of k·P rows), never a single-partition global sort."""
-    from knowledge_graph_spark.operators.corpus import merge_pair_counts
-
-    p = plan(merge_pair_counts(docs, 16))
-    assert "TakeOrderedAndProject" in p
-    assert "rangepartitioning" not in p.lower()
-    assert "SinglePartition" not in p
-
-
 def test_agent_trace_no_python_no_global_window(spark):
     """Trace analytics are native window+agg keyed on conv_id — no Python
     stages and no partitionless window funnel."""

@@ -5,12 +5,11 @@ inputs — broader input coverage than the fixed fixtures, bounded example
 counts so the Spark round-trips stay cheap.
 """
 
-from collections import Counter, defaultdict
+from collections import defaultdict
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from knowledge_graph_spark.operators.corpus import merge_pair_counts
 from knowledge_graph_spark.operators.graphops import (
     WIDEST_SEED_STRENGTH,
     widest_paths,
@@ -26,12 +25,6 @@ edges_strategy = st.lists(
     ).filter(lambda e: e[0] != e[1]),
     min_size=1,
     max_size=10,
-)
-
-docs_strategy = st.lists(
-    st.text(alphabet="ab ", min_size=0, max_size=24),
-    min_size=1,
-    max_size=6,
 )
 
 
@@ -66,27 +59,6 @@ def test_widest_paths_converges_to_fixpoint(spark, edges):
     rounds = len(NODES) - 1
     got = {r.title: r.strength for r in widest_paths(df, seeds, rounds).collect()}
     assert got == _widest_fixpoint(edges, seed)
-
-
-@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
-@given(texts=docs_strategy)
-def test_merge_pair_counts_matches_counter(spark, texts):
-    docs = spark.createDataFrame(
-        list(enumerate(texts)), "doc_id long, text string"
-    )
-    got = [
-        (r.left_tok, r.right_tok, r.n_pairs)
-        for r in merge_pair_counts(docs, k_top=50).collect()
-    ]
-    counts = Counter()
-    for t in texts:
-        toks = t.split()
-        counts.update(zip(toks, toks[1:]))
-    expect = sorted(
-        ((l, r, n) for (l, r), n in counts.items()),
-        key=lambda x: (-x[2], x[0], x[1]),
-    )[:50]
-    assert got == expect
 
 
 partitions_strategy = st.lists(

@@ -278,49 +278,3 @@ def test_lp_ranking_prefers_true_edge_in_triangle_lattice(spark):
         assert r.rank == want_rank, (s, t)
         assert r.n_cand == 1 + len(cands), (s, t)
         assert pos > 0  # every true edge sits in a triangle
-
-
-def test_heaps_profile_mirror(spark):
-    from knowledge_graph_spark.operators.corpus import heaps_profile
-
-    rows = [
-        (1, "the cat sat"),
-        (2, "the dog sat down"),
-        (3, ""),
-        (4, "THE  Cat\truns"),
-    ]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_ord: r for r in heaps_profile(d).collect()}
-    seen, cum_tok = set(), 0
-    for i, (did, text) in enumerate(sorted(rows), start=1):
-        toks = text.lower().split()
-        new = [t for t in toks if t not in seen and toks.index(t) == toks.index(t)]
-        fresh = set(toks) - seen
-        seen |= set(toks)
-        cum_tok += len(toks)
-        r = out[i]
-        assert r.doc_id == did
-        assert r.n_tokens == len(toks)
-        assert r.new_types == len(fresh)
-        assert r.cum_tokens == cum_tok
-        assert r.cum_types == len(seen)
-
-
-def test_bpe_fertility_mirror(spark):
-    from knowledge_graph_spark.operators.corpus import bpe_fertility, bpe_segment
-
-    rows = [
-        (1, "aa bb aa", "xx"),
-        (2, "aa aa", "xx"),
-        (3, "cc dd", "yy"),
-    ]
-    d = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    seg = {r.doc_id: r for r in bpe_segment(d, rounds=2).collect()}
-    out = {r.lang: r for r in bpe_fertility(d, rounds=2).collect()}
-    for lang, ids in (("xx", [1, 2]), ("yy", [3])):
-        sw = sum(seg[i].n_words for i in ids)
-        sb = sum(seg[i].n_bpe_tokens for i in ids)
-        assert out[lang].n_docs == len(ids)
-        assert out[lang].sum_words == sw
-        assert out[lang].sum_bpe == sb
-        assert out[lang].fertility_micro == (1_000_000 * sb) // max(sw, 1)

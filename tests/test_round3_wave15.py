@@ -1,5 +1,5 @@
-"""Round-3 wave-15 operators: double-sweep diameter lower bound, 1-WL
-color refinement, distinct-n diversity.
+"""Round-3 wave-15 operators: double-sweep diameter lower bound and 1-WL
+color refinement.
 
 WL colors are checked value-for-value against a pure-python mirror of the
 shared polynomial hash (the strongest cross-engine exactness proof short
@@ -7,7 +7,6 @@ of the DuckDB gate); the rest against hand fixtures.
 """
 
 from knowledge_graph_spark.functions.hashing import poly_hash
-from knowledge_graph_spark.operators.corpus import ngram_diversity
 from knowledge_graph_spark.operators.graphops import (
     double_sweep_diameter,
     wl_refinement,
@@ -96,23 +95,6 @@ def test_wl_isolated_node_keeps_refining(spark):
 
 
 # --- distinct-n diversity ---------------------------------------------------
-
-
-def test_ngram_diversity_hand_fixture(spark):
-    docs = spark.createDataFrame(
-        [(1, "a a a a"), (2, "w x y z"), (3, "")], "doc_id bigint, text string"
-    )
-    got = {r["doc_id"]: r for r in ngram_diversity(docs).collect()}
-    d1 = got[1]
-    assert (d1.n_tokens, d1.distinct_1, d1.distinct_2, d1.distinct_3) == (4, 1, 1, 1)
-    assert d1.ratio_micro_1 == 250_000
-    assert d1.ratio_micro_2 == 333_333
-    assert d1.ratio_micro_3 == 500_000
-    d2 = got[2]
-    assert (d2.distinct_1, d2.distinct_2, d2.distinct_3) == (4, 3, 2)
-    assert d2.ratio_micro_1 == 1_000_000
-    d3 = got[3]
-    assert d3.n_tokens == 0 and d3.distinct_1 == 0 and d3.ratio_micro_1 == 0
 
 
 # --- tf-idf cosine ----------------------------------------------------------

@@ -1,19 +1,13 @@
 """Round-3 wave-16 operators: per-group integer PageRank (the TextRank
-kernel), TextRank turn salience, and the Snorkel-style weak-supervision
-audit.
+kernel) and TextRank turn salience.
 
 grouped_pagerank is checked for exact agreement with pagerank_int on a
 single-group graph (the two loops share the same integer arithmetic, so
 the values must be bit-identical) and for per-group teleport independence
-on a multi-group frame; the weak-label ops against hand fixtures.
+on a multi-group frame.
 """
 
 from knowledge_graph_spark.operators.assemble import textrank_turns
-from knowledge_graph_spark.operators.corpus import (
-    WEAK_LFS,
-    weak_label_matrix,
-    weak_lf_stats,
-)
 from knowledge_graph_spark.operators.graphops import grouped_pagerank, pagerank_int
 
 
@@ -163,66 +157,4 @@ def test_textrank_arrow_kernel_matches_relational_edge_cases(spark):
 # --- weak labels ------------------------------------------------------------
 
 
-def _docs(spark):
-    return spark.createDataFrame(
-        [
-            (1, "run the query and join agg now"),  # two positive LFs
-            (2, "stream batch window pipeline"),  # two negative LFs
-            (3, "plain text nothing"),  # all abstain
-            (4, "query the stream"),  # 1 vs 0 tie -> vote 0
-        ],
-        "doc_id long, text string",
-    )
-
-
-def test_weak_label_matrix_votes(spark):
-    got = {r["doc_id"]: r for r in weak_label_matrix(_docs(spark)).collect()}
-    assert got[1]["vote"] == 1 and got[1]["n_pos"] == 2 and got[1]["n_neg"] == 0
-    assert got[2]["vote"] == 0 and got[2]["n_neg"] == 2
-    assert got[3]["vote"] is None and got[3]["n_pos"] == got[3]["n_neg"] == 0
-    # tie breaks to the smaller label
-    assert got[4]["n_pos"] == got[4]["n_neg"] == 1 and got[4]["vote"] == 0
-    # abstains are NULL, fires carry the LF's label
-    assert got[1]["lf_query"] == 1 and got[1]["lf_stream"] is None
-    assert got[2]["lf_batch_window"] == 0
-
-
-def test_weak_lf_stats_counts(spark):
-    got = {r["lf"]: r for r in weak_lf_stats(_docs(spark)).collect()}
-    assert set(got) == {name for name, _, _ in WEAK_LFS}
-    q = got["lf_query"]  # fires on docs 1 and 4
-    assert q["n_fired"] == 2 and q["coverage_micro"] == 500_000
-    assert q["n_overlap"] == 2  # doc1 with lf_join_agg, doc4 with lf_stream
-    assert q["n_conflict"] == 1  # doc4: lf_stream voted 0
-    assert q["n_agree_vote"] == 1  # doc1 only (doc4's vote is 0)
-    s = got["lf_stream"]  # fires on docs 2 and 4, agrees with both votes
-    assert s["n_fired"] == 2 and s["n_conflict"] == 1 and s["n_agree_vote"] == 2
-    j = got["lf_join_agg"]  # doc1 only, overlaps lf_query, no conflict
-    assert j["n_fired"] == 1 and j["n_overlap"] == 1 and j["n_conflict"] == 0
-
-
-def test_weak_lf_stats_custom_lfs(spark):
-    lfs = (("lf_a", ("alpha",), 1), ("lf_b", ("beta",), 0))
-    d = spark.createDataFrame(
-        [(1, "alpha beta"), (2, "alpha"), (3, "nothing")], "doc_id long, text string"
-    )
-    got = {r["lf"]: r for r in weak_lf_stats(d, lfs=lfs).collect()}
-    assert got["lf_a"]["n_fired"] == 2 and got["lf_a"]["n_conflict"] == 1
-    assert got["lf_b"]["coverage_micro"] == 333_333
-
-
 # --- quality survivors -------------------------------------------------------
-
-
-def test_weak_stats_zero_doc_counter_reads_zero_coverage(spark):
-    """A counter row folded from an empty corpus (n_docs = 0) must read
-    coverage 0, not NULL (or a division error in the oracle mirror)."""
-    from knowledge_graph_spark.operators.corpus import weak_stats_from_counters
-
-    counters = spark.createDataFrame(
-        [("lf_a", 1, 0, 0, 0, 0, 0)],
-        "lf string, label int, n_docs long, n_fired long,"
-        " n_overlap long, n_conflict long, n_agree_vote long",
-    )
-    row = weak_stats_from_counters(counters).collect()[0]
-    assert row["coverage_micro"] == 0

@@ -127,66 +127,6 @@ def test_log2_histogram_buckets_and_merge(spark):
     assert merged == got
 
 
-def test_histogram_quantiles_property_random_strata(spark):
-    """Semantic property on 40 random strata (one Spark job): the chosen
-    bucket is the SMALLEST whose value-range covers the pct-th value —
-    i.e. #(v: bit_length(v) ≤ bucket) ≥ ceil(pct·n/100) and the previous
-    bucket falls short.  Implementation-independent check."""
-    import numpy as np
-
-    rng = np.random.default_rng(617)
-    strata = {}
-    rows = []
-    for g in range(40):
-        n = int(rng.integers(1, 200))
-        vals = rng.choice(
-            [0, 1, 2, 3, 7, 8, 100, 1023, 1024, 10**6, 2**40], size=n
-        ).tolist()
-        strata[f"g{g}"] = vals
-        rows += [(int(v), f"g{g}") for v in vals]
-    df = spark.createDataFrame(rows, "v: long, g: string")
-    got = {
-        (r["g"], r["pct"]): r["bucket"]
-        for r in sk.histogram_quantiles(
-            sk.log2_histogram(df, "v", "g"), strata_col="g"
-        ).collect()
-    }
-
-    def blen(v):
-        return 0 if v <= 0 else int(v).bit_length()
-
-    for g, vals in strata.items():
-        n = len(vals)
-        for pct in (50, 90, 99):
-            need = -(-pct * n // 100)  # ceil
-            b = got[(g, pct)]
-            assert sum(1 for v in vals if blen(v) <= b) >= need
-            assert sum(1 for v in vals if blen(v) <= b - 1) < need
-
-
-def test_histogram_quantiles_readoff(spark):
-    # stratum "a": buckets 1×b0, 1×b1, 2×b2 (total 4); stratum "b":
-    # 1×b3, 1×b4, 1×b10 (total 3) — hand-check the ceil inequality.
-    rows = [(0, "a"), (1, "a"), (2, "a"), (3, "a"), (7, "b"), (8, "b"), (1023, "b")]
-    df = spark.createDataFrame(rows, "v: long, g: string")
-    hist = sk.log2_histogram(df, "v", "g")
-    got = {
-        (r["g"], r["pct"]): (r["bucket"], r["upper"])
-        for r in sk.histogram_quantiles(hist, strata_col="g").collect()
-    }
-    assert got == {
-        # a: cum = b0:1, b1:2, b2:4 of 4 → p50 needs cum≥2 → b1;
-        #    p90 needs 100·cum ≥ 360 → b2; p99 → b2
-        ("a", 50): (1, 1),
-        ("a", 90): (2, 3),
-        ("a", 99): (2, 3),
-        # b: cum = b3:1, b4:2, b10:3 of 3 → p50 needs 100·cum ≥ 150 → b4
-        ("b", 50): (4, 15),
-        ("b", 90): (10, 1023),
-        ("b", 99): (10, 1023),
-    }
-
-
 def test_hyperball_registers_equal_true_ball_union(spark):
     """The round recursion ball_k(v) = {v} ∪ ⋃_{u∈N(v)} ball_{k-1}(u)
     must hold EXACTLY in sketch space: after R rounds, node v's register
@@ -295,62 +235,3 @@ def test_kmv_overlap_estimates(spark):
     assert r2.n_a == 10 and r2.a_est == 10 and r2.b_est == 10
     assert r2.n_match == 0 and r2.jaccard_micro == 0 and r2.inter_est == 0
     assert r2.union_est == 20  # below k: the union sample IS the union
-
-
-def test_harmonic_centrality_from_ball_estimates(spark):
-    """harmonic_micro must equal Σ_r (est_r − est_{r−1})·10^6 DIV r
-    computed from hyperball's OWN per-round estimates (exactness of the
-    combine, independent of estimator bias), and on a star graph the hub
-    must dominate every leaf (all leaves are 1 hop from the hub; leaves
-    reach each other only at 2 hops)."""
-    from knowledge_graph_spark.operators.sketches import (
-        harmonic_centrality,
-        hyperball,
-    )
-
-    hub = "HUB"
-    leaves = [f"L{i:02d}" for i in range(12)]
-    e = spark.createDataFrame(
-        [(hub, l) for l in leaves], "source string, target string"
-    )
-    rounds = 2
-    ests = {
-        r: {row.node: row.estimate for row in hyperball(e, rounds=r).collect()}
-        for r in range(rounds + 1)
-    }
-    got = {
-        row.node: (row.harmonic_micro, row.ball_est)
-        for row in harmonic_centrality(e, rounds=rounds).collect()
-    }
-    for v, (h, ball) in got.items():
-        want = sum(
-            (ests[r][v] - ests[r - 1][v]) * 1_000_000 // r
-            for r in range(1, rounds + 1)
-        )
-        assert h == want
-        assert ball == ests[rounds][v]
-    assert all(got[hub][0] > got[l][0] for l in leaves)
-
-
-def test_effective_diameter_consistent_with_neighborhood_fn(spark):
-    """eff_diameter must be exactly the SMALLEST r whose N(r) covers
-    ≥ 90% of N(rounds), recomputed independently from the neighborhood
-    function.  (On toy graphs raw-HLL small-set bias can make N(0)
-    already cover 90% — the read-off is about arithmetic consistency,
-    not small-graph statistics.)"""
-    from knowledge_graph_spark.operators.sketches import (
-        effective_diameter,
-        neighborhood_function,
-    )
-
-    e = spark.createDataFrame(
-        [("p1", "p2"), ("p2", "p3"), ("p3", "p4"), ("p4", "p5")],
-        "source string, target string",
-    )
-    rounds = 4
-    nf = {r.r: r.total_ball_est for r in neighborhood_function(e, rounds=rounds).collect()}
-    want_r = min(r for r in nf if nf[r] * 10 >= 9 * nf[rounds])
-    row = effective_diameter(e, rounds=rounds).collect()[0]
-    assert row.eff_diameter == want_r
-    assert row.covered_pairs == nf[want_r]
-    assert row.total_pairs == nf[rounds]

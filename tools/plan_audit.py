@@ -53,7 +53,6 @@ AUDIT = [
     ("length_hist", "mergeable log2 length histogram"),
     ("tool_transitions", "agent-trace Markov transitions (conv-keyed window)"),
     ("widest_paths", "fixed-round bottleneck-path Pregel joins"),
-    ("bpe_pairs", "BPE pair counts, TakeOrderedAndProject top-k"),
     ("dsir_select", "DSIR: broadcast bucket model + heap top-K"),
     ("tool_scc", "fixed-round FW-BW SCC peeling joins"),
     ("bpe_merges", "BPE training rounds over the word-frequency table"),
@@ -78,14 +77,11 @@ AUDIT = [
     ("densest", "peel rounds: combinable degree agg + scalar-bound anti-joins"),
     ("knn_graph", "per-node top-k edges (WindowGroupLimit) + kept_by groupBy"),
     ("lp_ranking", "corruption candidates + blocked common-neighbor scoring + rank groupBy"),
-    ("heaps_law", "first-occurrence identity + two-phase prefix sums"),
-    ("bpe_fertility", "BPE dictionary join folded per language"),
     ("sssp", "Bellman-Ford relaxation rounds (min-agg per frontier join)"),
     ("four_cycles", "common-neighbor pair counting (wedge join + C(c,2) fold)"),
     ("wl_colors", "1-WL re-hash rounds (sorted neighbor-color fold joins)"),
     ("diameter_lb", "double-sweep BFS rounds + two argmax TakeOrdered"),
     ("textrank", "dense per-conv Arrow kernel (ONE cogroup shuffle, no round joins)"),
-    ("weak_lf_stats", "row-local LF probes + one constant-width aggregate + stack"),
     ("source_profile", "profile-join rollup (count-distinct + integer-micro sums)"),
     ("pr_warm", "warm-start PR: init-rank left join + the standard round joins"),
     ("kg_diff", "ONE co-partitioned full-outer join on the edge key"),
