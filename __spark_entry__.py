@@ -12,10 +12,10 @@ The probabilistic operators (MinHash/SimHash dedup, hyperplane-LSH
 near-dup, feature-hash entity search) run on the SQL-expressible
 deterministic hash family (knowledge_graph_spark/functions/hashing.py),
 so they are FULLY hash-checked against DuckDB — as is MinHash+CC
-canonicalization (recursive-CTE reachability oracle).  Only the
-vote-based iterative ops (LPA communities, hierarchical LPA) stay
-rows-only; their semantics are pytest-verified against vendored
-sequential fixpoint oracles instead (tests/).
+canonicalization (recursive-CTE reachability oracle).  The iterative
+graph ops (LPA communities, hierarchical LPA, PageRank, matching,
+peeling, coloring, …) run a fixed round count, so their oracles are
+unrolled CTE chains (``_unroll``): every gate has a DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -192,6 +192,58 @@ alias_dict(alias, canonical_name, score) AS (VALUES {_ALIAS_VALUES})
 
 def _oracle(body: str) -> str:
     return f"WITH RECURSIVE {ORACLE_PRELUDE} {body}"
+
+
+def _unroll(rounds: int, step: Callable[[int], str]) -> str:
+    """The CTE chain of a fixed-round unroll, continuing a WITH list
+    after its round-0 CTEs: ``step(r)`` returns round r's CTEs, named
+    with the round number and reading round r-1's, for r = 1..rounds,
+    each round chained on with its leading comma.
+
+    AS MATERIALIZED is load-bearing on every round CTE that a later CTE
+    reads more than once: DuckDB inlines a plain CTE at each reference,
+    so a round that reads the previous round twice doubles the plan per
+    round (2^rounds)."""
+    return "".join(f",\n{step(r)}" for r in range(1, rounds + 1))
+
+
+# The seed of the BFS, double-sweep, widest-path and SSSP oracles: the
+# highest-degree title, ties to the least.
+_TOP_DEGREE_SEED = "SELECT title FROM degrees ORDER BY degree DESC, title ASC LIMIT 1"
+
+
+def _min_hop_rounds(hops: int, d: str, adj: str) -> str:
+    """``hops`` BFS rounds after the (title, hop) seed CTE ``{d}0``:
+    round r keeps every title reached so far at its least hop count,
+    one hop over the (a, b) adjacency ``adj`` beyond round r-1."""
+    return _unroll(
+        hops,
+        lambda r: f"""{d}{r} AS MATERIALIZED (
+  SELECT title, min(hop) AS hop FROM (
+    SELECT title, hop FROM {d}{r - 1}
+    UNION ALL
+    SELECT {adj}.b AS title, {d}{r - 1}.hop + 1 AS hop
+    FROM {d}{r - 1} JOIN {adj} ON {d}{r - 1}.title = {adj}.a
+  ) GROUP BY title)""",
+    )
+
+
+# Connected components of the KG as a recursive min-reachability CTE:
+# reach holds (node, r) for every title r reachable from node, so
+# min(r) per node is its component.
+_CC_REACH = """sym AS (
+  SELECT source AS a, target AS b FROM kg_edges
+  UNION SELECT target AS a, source AS b FROM kg_edges
+),
+reach(node, r) AS (
+  SELECT title, title FROM kg_nodes
+  UNION
+  SELECT s.a, reach.r FROM sym s JOIN reach ON s.b = reach.node
+)"""
+_CC_BODY = f"""
+, {_CC_REACH}
+SELECT node AS title, min(r) AS component FROM reach GROUP BY node
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -1988,18 +2040,9 @@ def _cp_hier3_sql(levels: int = CP_HIER_LEVELS, rounds: int = MM_ROUNDS) -> str:
     one composed-map advance (LEFT join on the current supernode), and —
     below the last level — one contraction.  Standalone (derives from
     the lineitem view, no pipeline prelude)."""
-    sql = f"""WITH {_CP_EDGES_SQL},
-ch_nodes AS MATERIALIZED (
-  SELECT DISTINCT t FROM (
-    SELECT source AS t FROM cp_edges UNION ALL SELECT target FROM cp_edges)),
-ch_e1 AS MATERIALIZED (
-  SELECT source AS a, target AS b, CAST(1 AS DOUBLE) AS w,
-         CAST(1 AS BIGINT) AS n_multi
-  FROM cp_edges),
-chm0 AS MATERIALIZED (SELECT t, t AS s FROM ch_nodes)"""
-    for k in range(1, levels + 1):
-        sql += f""",
-ch_ne{k} AS (SELECT a AS source, b AS target FROM ch_e{k} WHERE a <> b)"""
+
+    def level(k: int) -> str:
+        sql = f"ch_ne{k} AS (SELECT a AS source, b AS target FROM ch_e{k} WHERE a <> b)"
         sql += _mm_body(
             rounds=rounds, as_cte=f"chmm{k}", src=f"ch_ne{k}", prefix=f"chp{k}"
         )
@@ -2022,12 +2065,22 @@ ch_e{k + 1} AS MATERIALIZED (
     LEFT JOIN chstep{k} ms ON e.a = ms.n
     LEFT JOIN chstep{k} mt ON e.b = mt.n)
   GROUP BY least(msn, mtn), greatest(msn, mtn))"""
+        return sql
+
     leveled_union = "\n  UNION ALL ".join(
         f"SELECT t AS title, s AS community, CAST({levels - k} AS INT) AS level "
         f"FROM chm{k}"
         for k in range(1, levels + 1)
     )
-    sql += f""",
+    return f"""WITH {_CP_EDGES_SQL},
+ch_nodes AS MATERIALIZED (
+  SELECT DISTINCT t FROM (
+    SELECT source AS t FROM cp_edges UNION ALL SELECT target FROM cp_edges)),
+ch_e1 AS MATERIALIZED (
+  SELECT source AS a, target AS b, CAST(1 AS DOUBLE) AS w,
+         CAST(1 AS BIGINT) AS n_multi
+  FROM cp_edges),
+chm0 AS MATERIALIZED (SELECT t, t AS s FROM ch_nodes){_unroll(levels, level)},
 ch_leveled AS MATERIALIZED (
   {leveled_union}),
 ch_joined AS (
@@ -2045,20 +2098,16 @@ SELECT DISTINCT o.parent AS community, o.level, o.sub_community,
        CAST(s.sub_size AS INT) AS sub_community_size
 FROM ch_overlap o JOIN ch_sub_sizes s ON o.sub_community = s.sub_community
 WHERE o.overlap = s.sub_size"""
-    return sql
 
 
 def _ktruss_body(k: int = TRUSS_K, rounds: int = TRUSS_ROUNDS) -> str:
     """Unrolled k-truss peel over kg_edges (prelude table).  Each round:
     ordered-wedge triangles, per-edge support, LEFT-join filter at
     support >= k-2 (left join so zero-support edges survive when k <= 2,
-    matching the Spark kernel exactly).  AS MATERIALIZED — each round's
-    edge table is referenced three times by the triangle join."""
-    sql = """
-, kt_e0 AS MATERIALIZED (SELECT source AS a, target AS b FROM kg_edges)"""
-    for r in range(rounds + 1):
-        sql += f""",
-kt_tr{r} AS MATERIALIZED (
+    matching the Spark kernel exactly)."""
+
+    def support(r: int) -> str:
+        return f"""kt_tr{r} AS MATERIALIZED (
   SELECT ab.a, ab.b, bc.b AS c
   FROM kt_e{r} ab JOIN kt_e{r} bc ON ab.b = bc.a
   JOIN kt_e{r} ac ON ac.a = ab.a AND ac.b = bc.b),
@@ -2067,41 +2116,33 @@ kt_s{r} AS MATERIALIZED (
     SELECT a AS x, b AS y FROM kt_tr{r}
     UNION ALL SELECT a, c FROM kt_tr{r}
     UNION ALL SELECT b, c FROM kt_tr{r}) GROUP BY x, y)"""
-        if r < rounds:
-            sql += f""",
-kt_e{r + 1} AS MATERIALIZED (
-  SELECT e.a, e.b FROM kt_e{r} e
-  LEFT JOIN kt_s{r} s ON e.a = s.x AND e.b = s.y
-  WHERE coalesce(s.sup, 0) >= {k - 2})"""
-    sql += f"""
+
+    def step(r: int) -> str:
+        return f"""kt_e{r} AS MATERIALIZED (
+  SELECT e.a, e.b FROM kt_e{r - 1} e
+  LEFT JOIN kt_s{r - 1} s ON e.a = s.x AND e.b = s.y
+  WHERE coalesce(s.sup, 0) >= {k - 2}),
+{support(r)}"""
+
+    return f"""
+, kt_e0 AS MATERIALIZED (SELECT source AS a, target AS b FROM kg_edges),
+{support(0)}{_unroll(rounds, step)}
 SELECT e.a AS source, e.b AS target,
        CAST(coalesce(s.sup, 0) AS BIGINT) AS support
 FROM kt_e{rounds} e
 LEFT JOIN kt_s{rounds} s ON e.a = s.x AND e.b = s.y"""
-    return sql
 
 
 # BFS oracle: unrolled min-hop rounds from the top-degree seed (prelude
-# provides kg_edges/degrees); AS MATERIALIZED — each d{r} is referenced
-# twice per round.
+# provides kg_edges/degrees).
 def _bfs_body(hops: int = BFS_HOPS) -> str:
-    sql = """
-, bseed AS MATERIALIZED (SELECT title FROM degrees ORDER BY degree DESC, title ASC LIMIT 1),
+    return f"""
+, bseed AS MATERIALIZED ({_TOP_DEGREE_SEED}),
 badj AS MATERIALIZED (
   SELECT source AS a, target AS b FROM kg_edges
   UNION SELECT target AS a, source AS b FROM kg_edges),
-d0 AS MATERIALIZED (SELECT title, 0 AS hop FROM bseed)"""
-    for r in range(hops):
-        sql += f""",
-d{r + 1} AS MATERIALIZED (
-  SELECT title, min(hop) AS hop FROM (
-    SELECT title, hop FROM d{r}
-    UNION ALL
-    SELECT badj.b AS title, d{r}.hop + 1 AS hop FROM d{r} JOIN badj ON d{r}.title = badj.a
-  ) GROUP BY title)"""
-    sql += f"""
+d0 AS MATERIALIZED (SELECT title, 0 AS hop FROM bseed){_min_hop_rounds(hops, 'd', 'badj')}
 SELECT title, CAST(hop AS INT) AS hop FROM d{hops}"""
-    return sql
 
 
 _LENGTH_STATS_SQL = f"""
@@ -2337,23 +2378,19 @@ def _bpe_oracle(rounds: int) -> str:
   FROM vocab0
 )""",
     ]
-    for r in range(1, rounds + 1):
+
+    def step(r: int) -> str:
         k = r - 1
-        ctes.append(
-            f"""pairs{r} AS MATERIALIZED (
+        sql = f"""pairs{r} AS MATERIALIZED (
   SELECT syms[CAST(i AS INT) + 1] AS l, syms[CAST(i AS INT) + 2] AS r,
          CAST(sum(cnt) AS BIGINT) AS n
   FROM syms{k}, LATERAL unnest(range(0, CASE WHEN len(syms) < 2 THEN 0
                                              ELSE len(syms) - 1 END)) u(i)
-  GROUP BY 1, 2)"""
-        )
-        ctes.append(
-            f"best{r} AS MATERIALIZED "
-            f"(SELECT l, r, n FROM pairs{r} ORDER BY n DESC, l, r LIMIT 1)"
-        )
+  GROUP BY 1, 2),
+best{r} AS MATERIALIZED (SELECT l, r, n FROM pairs{r} ORDER BY n DESC, l, r LIMIT 1)"""
         if r < rounds:  # nothing reads the segmentation after the last round
-            ctes.append(
-                f"""syms{r} AS MATERIALIZED (
+            sql += f""",
+syms{r} AS MATERIALIZED (
   SELECT word, cnt,
          str_split(substr(s2, 2, length(s2) - 2), chr(10) || chr(10)) AS syms
   FROM (
@@ -2363,13 +2400,14 @@ def _bpe_oracle(rounds: int) -> str:
                    chr(10) || b.l || b.r || chr(10)) AS s2
     FROM syms{k} s CROSS JOIN best{r} b
   ))"""
-            )
+        return sql
+
     union = "\nUNION ALL\n".join(
         f"SELECT CAST({r} AS INT) AS round, l AS left_tok, r AS right_tok, "
         f"n AS n_pairs FROM best{r}"
         for r in range(1, rounds + 1)
     )
-    return "WITH " + ",\n".join(ctes) + "\n" + union
+    return "WITH " + ",\n".join(ctes) + _unroll(rounds, step) + "\n" + union
 
 
 # Mixer-audit oracle: composes the text-profile and decontamination
@@ -2473,24 +2511,24 @@ def _kmeans_ctes(k: int, iterations: int) -> tuple[str, str]:
     Returns (cte_block, final_assign_cte_name)."""
     from knowledge_graph_spark.operators.kmeans import Q_SCALE
 
-    parts = [
-        f"""qpts AS MATERIALIZED (
+    seed = f"""qpts AS MATERIALIZED (
   SELECT vec_id,
          list_transform(CAST(embedding AS DOUBLE[]),
                         x -> CAST(floor(x * {Q_SCALE}.0) AS BIGINT)) AS q
   FROM embeddings
-)""",
-        f"""c0 AS MATERIALIZED (
+),
+c0 AS MATERIALIZED (
   SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cid, q AS c
   FROM (SELECT vec_id, q FROM qpts ORDER BY vec_id LIMIT {k})
-)""",
-    ]
-    for r in range(1, iterations + 1):
-        parts.append(_km_assign_cte(f"ka{r}", f"c{r - 1}"))
-        parts.append(_km_update_cte(f"c{r}", f"ka{r}", f"c{r - 1}"))
+)"""
+    rounds = _unroll(
+        iterations,
+        lambda r: _km_assign_cte(f"ka{r}", f"c{r - 1}")
+        + ",\n"
+        + _km_update_cte(f"c{r}", f"ka{r}", f"c{r - 1}"),
+    )
     final = f"ka{iterations + 1}"
-    parts.append(_km_assign_cte(final, f"c{iterations}"))
-    return ",\n".join(parts), final
+    return seed + rounds + ",\n" + _km_assign_cte(final, f"c{iterations}"), final
 
 
 _KM_BLOCK, _KM_FINAL = _kmeans_ctes(KM_K, KM_ITERS)
@@ -2624,16 +2662,16 @@ def _hyperball_oracle(rounds: int) -> str:
   FROM (SELECT node, {_perm('x', '0')} AS h
         FROM (SELECT node, {poly} AS x FROM hb_nodes)))""",
     ]
-    for r in range(1, rounds + 1):
-        ctes.append(
-            f"""hbr{r} AS MATERIALIZED (
+    merge = _unroll(
+        rounds,
+        lambda r: f"""hbr{r} AS MATERIALIZED (
   SELECT node, register, max(max_rank) AS max_rank FROM (
     SELECT node, register, max_rank FROM hbr{r - 1}
     UNION ALL
     SELECT e.a AS node, x.register, x.max_rank
     FROM hb_adj e JOIN hbr{r - 1} x ON x.node = e.b
-  ) GROUP BY node, register)"""
-        )
+  ) GROUP BY node, register)""",
+    )
     est_num = (_HLL_ALPHA * float(_HLL_M * _HLL_M)) * float(_sk.HLL_SCALE)
     body = f"""hbagg AS (
   SELECT node, CAST(count(*) AS BIGINT) AS n_regs,
@@ -2646,7 +2684,7 @@ SELECT node, CAST({_HLL_M} AS BIGINT) AS m,
             / CAST(s_hit + ({_HLL_M} - n_regs) * {_sk.HLL_SCALE} AS DOUBLE)) AS BIGINT)
          AS estimate
 FROM hbagg"""
-    return ", " + ",\n".join(ctes) + ",\n" + body
+    return ", " + ",\n".join(ctes) + merge + ",\n" + body
 
 
 def _mis_oracle(rounds: int) -> str:
@@ -2654,7 +2692,7 @@ def _mis_oracle(rounds: int) -> str:
     same per-round packed priority key (perm_r(id)·2^31 + (id mod 2^31),
     full id as lexicographic tiebreak — int64-safe for any bigint id),
     strict local-minimum selection, and neighbour/member peeling the
-    Spark kernel runs.  AS MATERIALIZED on every multiply-referenced CTE."""
+    Spark kernel runs."""
     pk = 1 << 31
     ctes = [
         _DTOKS_CTE.strip(),
@@ -2680,45 +2718,35 @@ def _mis_oracle(rounds: int) -> str:
         "UNION SELECT id_b AS a, id_a AS b FROM mpairs)",
         "act1 AS MATERIALIZED (SELECT doc_id AS node FROM documents)",
     ]
-    for r in range(1, rounds + 1):
+
+    def step(r: int) -> str:
         a_r = (HASH_A * (r + 1)) % HASH_M31
         b_r = (HASH_B * (r + 1) + HASH_C) % HASH_M31
         # ((x % m) + m) % m mirrors Spark's pmod for negative ids too —
         # DuckDB's bare % is signed, which would diverge on negative keys
-        ctes.append(
-            f"""mk{r} AS MATERIALIZED (
+        return f"""mk{r} AS MATERIALIZED (
   SELECT node,
          (({a_r} * (((node % {textqc.FP_MOD}) + {textqc.FP_MOD}) % {textqc.FP_MOD}) + {b_r}) % {HASH_M31}) * {pk} + (((node % {pk}) + {pk}) % {pk}) AS key
-  FROM act{r})"""
-        )
-        ctes.append(
-            f"""mn{r} AS MATERIALIZED (
+  FROM act{r}),
+mn{r} AS MATERIALIZED (
   SELECT e.a AS node, min({{'k': k.key, 'n': k.node}}) AS nm
-  FROM me{r} e JOIN mk{r} k ON k.node = e.b GROUP BY e.a)"""
-        )
-        ctes.append(
-            f"""mis{r} AS MATERIALIZED (
+  FROM me{r} e JOIN mk{r} k ON k.node = e.b GROUP BY e.a),
+mis{r} AS MATERIALIZED (
   SELECT k.node FROM mk{r} k LEFT JOIN mn{r} n ON k.node = n.node
   WHERE n.nm IS NULL OR k.key < n.nm.k
-     OR (k.key = n.nm.k AND k.node < n.nm.n))"""
-        )
-        ctes.append(
-            f"""mdom{r} AS MATERIALIZED (
+     OR (k.key = n.nm.k AND k.node < n.nm.n)),
+mdom{r} AS MATERIALIZED (
   SELECT DISTINCT e.a AS node FROM me{r} e JOIN mis{r} m ON e.b = m.node
-  WHERE e.a NOT IN (SELECT node FROM mis{r}))"""
-        )
-        ctes.append(
-            f"""act{r + 1} AS MATERIALIZED (
+  WHERE e.a NOT IN (SELECT node FROM mis{r})),
+act{r + 1} AS MATERIALIZED (
   SELECT node FROM act{r}
   WHERE node NOT IN (SELECT node FROM mis{r})
-    AND node NOT IN (SELECT node FROM mdom{r}))"""
-        )
-        ctes.append(
-            f"""me{r + 1} AS MATERIALIZED (
+    AND node NOT IN (SELECT node FROM mdom{r})),
+me{r + 1} AS MATERIALIZED (
   SELECT a, b FROM me{r}
   WHERE a IN (SELECT node FROM act{r + 1})
     AND b IN (SELECT node FROM act{r + 1}))"""
-        )
+
     union = "\nUNION ALL\n".join(
         f"SELECT node, 'in_mis' AS status, CAST({r} AS INT) AS round FROM mis{r}\n"
         f"UNION ALL\n"
@@ -2728,6 +2756,7 @@ def _mis_oracle(rounds: int) -> str:
     return (
         "WITH "
         + ",\n".join(ctes)
+        + _unroll(rounds, step)
         + f"""
 {union}
 UNION ALL
@@ -3305,36 +3334,30 @@ def _lpa_rounds_sql(nodes_cte: str, sym_cte: str, prefix: str,
     replaces the self-label round 0 — the warm-start mirror of
     community.label_propagation's ``init_labels``.
     """
-    # AS MATERIALIZED is load-bearing: each round references the previous
-    # labels CTE twice, so DuckDB's default CTE inlining would double the
-    # plan per round (2^rounds blowup).
     l0 = (
         f"SELECT node, label FROM {init_cte}"
         if init_cte
         else f"SELECT node, node AS label FROM {nodes_cte}"
     )
-    parts = [f"{prefix}l0 AS MATERIALIZED ({l0})"]
-    for k in range(1, rounds + 1):
+
+    def step(k: int) -> str:
         prev = f"{prefix}l{k - 1}"
-        parts.append(
+        return (
             f"{prefix}s{k} AS MATERIALIZED (\n"
             f"  SELECT e.a, l.label, sum(e.w) AS score\n"
             f"  FROM {sym_cte} e JOIN {prev} l ON l.node = e.b\n"
-            f"  GROUP BY e.a, l.label\n)"
-        )
-        parts.append(
+            f"  GROUP BY e.a, l.label\n),\n"
             f"{prefix}b{k} AS MATERIALIZED (\n"
             f"  SELECT a, min(label) AS nl FROM (\n"
             f"    SELECT a, label, score, max(score) OVER (PARTITION BY a) AS mx\n"
             f"    FROM {prefix}s{k}\n"
-            f"  ) WHERE score = mx GROUP BY a\n)"
-        )
-        parts.append(
+            f"  ) WHERE score = mx GROUP BY a\n),\n"
             f"{prefix}l{k} AS MATERIALIZED (\n"
             f"  SELECT l.node, coalesce(b.nl, l.label) AS label\n"
             f"  FROM {prev} l LEFT JOIN {prefix}b{k} b ON b.a = l.node\n)"
         )
-    return ",\n".join(parts)
+
+    return f"{prefix}l0 AS MATERIALIZED ({l0})" + _unroll(rounds, step)
 
 
 def _pr_body(
@@ -3347,11 +3370,10 @@ def _pr_body(
 ) -> str:
     """Unrolled fixed-round integer PageRank over ``edges_cte`` (default
     kg_edges) — mirrors graphops.pagerank_int bit-for-bit (all-BIGINT
-    arithmetic, `//` ≡ Spark's DIV on positives).  AS MATERIALIZED for
-    the same reason as the LPA unroll: each round references the
-    previous twice.  With ``weighted``, mass splits by each edge's share
-    of the source's total incident weight (pagerank_int's weight= path);
-    ``edges_cte`` must expose (source, target[, weight]).
+    arithmetic, `//` ≡ Spark's DIV on positives).  With ``weighted``,
+    mass splits by each edge's share of the source's total incident
+    weight (pagerank_int's weight= path); ``edges_cte`` must expose
+    (source, target[, weight]).
 
     ``prefix`` namespaces the CTEs so two unrolls compose in one query;
     ``init_cte`` names a (title, rank_scaled) CTE that seeds round 0 —
@@ -3380,8 +3402,11 @@ def _pr_body(
               AS BIGINT) AS rank_scaled
   FROM {p}nodes n LEFT JOIN {init_cte} i ON i.title = n.title
 )"""
-    parts = [
-        f"""
+    base = (
+        f"(SELECT ({PR_SCALE} * {PR_DAMP_DEN - PR_DAMP_NUM}) "
+        f"// ({PR_DAMP_DEN} * n) FROM {p}n)"
+    )
+    sql = f"""
 , {p}sym AS MATERIALIZED (
   SELECT source AS u, target AS v, {w_expr} AS w FROM {edges_cte}
   UNION ALL
@@ -3393,16 +3418,9 @@ def _pr_body(
   SELECT e.u, e.v, e.w, o.outw
   FROM {p}sym e JOIN (SELECT u, CAST(sum(w) AS BIGINT) AS outw
                       FROM {p}sym GROUP BY u) o ON e.u = o.u
-),{r0}"""
-    ]
-    base = (
-        f"(SELECT ({PR_SCALE} * {PR_DAMP_DEN - PR_DAMP_NUM}) "
-        f"// ({PR_DAMP_DEN} * n) FROM {p}n)"
-    )
-    for k in range(1, rounds + 1):
-        parts.append(
-            f""",
-{p}c{k} AS MATERIALIZED (
+),{r0}""" + _unroll(
+        rounds,
+        lambda k: f"""{p}c{k} AS MATERIALIZED (
   SELECT a.v, CAST(sum((r.rank_scaled * {PR_DAMP_NUM} * a.w) // ({PR_DAMP_DEN} * a.outw))
                    AS BIGINT) AS inflow
   FROM {p}adj a JOIN {p}r{k - 1} r ON r.title = a.u GROUP BY a.v
@@ -3410,11 +3428,11 @@ def _pr_body(
 {p}r{k} AS MATERIALIZED (
   SELECT n.title, CAST({base} + coalesce(c.inflow, 0) AS BIGINT) AS rank_scaled
   FROM {p}nodes n LEFT JOIN {p}c{k} c ON c.v = n.title
-)"""
-        )
+)""",
+    )
     if final_select:
-        parts.append(f"\nSELECT title, rank_scaled FROM {p}r{rounds}\n")
-    return "".join(parts)
+        sql += f"\nSELECT title, rank_scaled FROM {p}r{rounds}\n"
+    return sql
 
 
 def _katz_body(rounds: int = KATZ_ITER) -> str:
@@ -3428,22 +3446,8 @@ def _katz_body(rounds: int = KATZ_ITER) -> str:
         KATZ_SCALE,
     )
 
-    parts = [
-        """
-, kz_sym AS MATERIALIZED (
-  SELECT source AS u, target AS v FROM kg_edges
-  UNION ALL
-  SELECT target AS u, source AS v FROM kg_edges
-),
-kz_nodes AS MATERIALIZED (SELECT DISTINCT u AS title FROM kz_sym),
-kz_x0 AS MATERIALIZED (
-  SELECT title, CAST(0 AS BIGINT) AS katz_scaled FROM kz_nodes
-)"""
-    ]
-    for k in range(1, rounds + 1):
-        parts.append(
-            f""",
-kz_c{k} AS MATERIALIZED (
+    def step(k: int) -> str:
+        return f"""kz_c{k} AS MATERIALIZED (
   SELECT e.v, CAST(sum((x.katz_scaled * {KATZ_ATT_NUM}) // {KATZ_ATT_DEN})
                    AS BIGINT) AS inflow
   FROM kz_sym e JOIN kz_x{k - 1} x ON x.title = e.u GROUP BY e.v
@@ -3452,9 +3456,19 @@ kz_x{k} AS MATERIALIZED (
   SELECT n.title, CAST({KATZ_SCALE} + coalesce(c.inflow, 0) AS BIGINT) AS katz_scaled
   FROM kz_nodes n LEFT JOIN kz_c{k} c ON c.v = n.title
 )"""
-        )
-    parts.append(f"\nSELECT title, katz_scaled FROM kz_x{rounds}\n")
-    return "".join(parts)
+
+    return f"""
+, kz_sym AS MATERIALIZED (
+  SELECT source AS u, target AS v FROM kg_edges
+  UNION ALL
+  SELECT target AS u, source AS v FROM kg_edges
+),
+kz_nodes AS MATERIALIZED (SELECT DISTINCT u AS title FROM kz_sym),
+kz_x0 AS MATERIALIZED (
+  SELECT title, CAST(0 AS BIGINT) AS katz_scaled FROM kz_nodes
+){_unroll(rounds, step)}
+SELECT title, katz_scaled FROM kz_x{rounds}
+"""
 
 
 def _tlp_body(rounds: int = TLP_ROUNDS, mask_mod: int = TLP_MASK_MOD) -> str:
@@ -3463,24 +3477,9 @@ def _tlp_body(rounds: int = TLP_ROUNDS, mask_mod: int = TLP_MASK_MOD) -> str:
     masked nodes adopt the max-weight (tie → min) neighbour type each
     round; all scores are BIGINT sums of the integer edge weights."""
     poly = _POLY.format(s="title")
-    parts = [
-        f"""
-, tlp_base AS MATERIALIZED (
-  SELECT title, type AS true_type, ({poly}) % {mask_mod} <> 0 AS is_seed
-  FROM kg_nodes),
-tlp_adj AS MATERIALIZED (
-  SELECT source AS a, target AS b, CAST(weight AS BIGINT) AS w
-  FROM kg_edges WHERE source <> target
-  UNION ALL
-  SELECT target, source, CAST(weight AS BIGINT)
-  FROM kg_edges WHERE source <> target),
-tlp_l0 AS (
-  SELECT title, CASE WHEN is_seed THEN true_type END AS label FROM tlp_base)"""
-    ]
-    for r in range(1, rounds + 1):
-        parts.append(
-            f""",
-tlp_s{r} AS (
+
+    def step(r: int) -> str:
+        return f"""tlp_s{r} AS (
   SELECT e.a AS title, l.label, CAST(sum(e.w) AS BIGINT) AS score
   FROM tlp_adj e JOIN tlp_l{r - 1} l ON e.b = l.title
   WHERE l.label IS NOT NULL GROUP BY e.a, l.label),
@@ -3493,15 +3492,23 @@ tlp_b{r} AS (
 tlp_l{r} AS MATERIALIZED (
   SELECT n.title, CASE WHEN n.is_seed THEN n.true_type ELSE b.label END AS label
   FROM tlp_base n LEFT JOIN tlp_b{r} b USING (title))"""
-        )
-    parts.append(
-        f"""
+
+    return f"""
+, tlp_base AS MATERIALIZED (
+  SELECT title, type AS true_type, ({poly}) % {mask_mod} <> 0 AS is_seed
+  FROM kg_nodes),
+tlp_adj AS MATERIALIZED (
+  SELECT source AS a, target AS b, CAST(weight AS BIGINT) AS w
+  FROM kg_edges WHERE source <> target
+  UNION ALL
+  SELECT target, source, CAST(weight AS BIGINT)
+  FROM kg_edges WHERE source <> target),
+tlp_l0 AS (
+  SELECT title, CASE WHEN is_seed THEN true_type END AS label FROM tlp_base){_unroll(rounds, step)}
 SELECT n.title, n.is_seed, n.true_type, l.label AS pred_type,
        (l.label = n.true_type) AS correct
 FROM tlp_base n JOIN tlp_l{rounds} l USING (title)
 """
-    )
-    return "".join(parts)
 
 
 def _msf_body(rounds: int = MSF_ROUNDS, as_cte: str | None = None) -> str:
@@ -3512,21 +3519,9 @@ def _msf_body(rounds: int = MSF_ROUNDS, as_cte: str | None = None) -> str:
     edge), then components contract to the min label reachable over the
     SELECTED edges (one recursive min-reach CTE per round, the same
     fixpoint the Spark side's pointer-doubling CC computes)."""
-    parts = [
-        """
-, msf_e0 AS MATERIALIZED (
-  SELECT least(source, target) AS a, greatest(source, target) AS b,
-         min(weight) AS w
-  FROM kg_edges WHERE source <> target GROUP BY 1, 2),
-msf_es AS (SELECT a, b, w, a || '|' || b AS estr FROM msf_e0),
-msf_c0 AS MATERIALIZED (
-  SELECT DISTINCT node, node AS comp FROM (
-    SELECT a AS node FROM msf_es UNION ALL SELECT b FROM msf_es))"""
-    ]
-    for r in range(1, rounds + 1):
-        parts.append(
-            f""",
-msf_ec{r} AS MATERIALIZED (
+
+    def step(r: int) -> str:
+        return f"""msf_ec{r} AS MATERIALIZED (
   SELECT ca.comp AS c1, cb.comp AS c2, e.a, e.b, e.w, e.estr
   FROM msf_es e
   JOIN msf_c{r - 1} ca ON e.a = ca.node
@@ -3554,17 +3549,26 @@ msf_cm{r} AS MATERIALIZED (
   SELECT c AS comp, min(t) AS newc FROM msf_reach{r} GROUP BY c),
 msf_c{r} AS MATERIALIZED (
   SELECT n.node, m.newc AS comp FROM msf_c{r - 1} n JOIN msf_cm{r} m USING (comp))"""
-        )
+
     union = "\nUNION ALL\n".join(
         f"SELECT a AS source, b AS target, CAST(w AS DOUBLE) AS weight,"
         f" CAST({r} AS INT) AS round FROM msf_sel{r}"
         for r in range(1, rounds + 1)
     )
+    sql = """
+, msf_e0 AS MATERIALIZED (
+  SELECT least(source, target) AS a, greatest(source, target) AS b,
+         min(weight) AS w
+  FROM kg_edges WHERE source <> target GROUP BY 1, 2),
+msf_es AS (SELECT a, b, w, a || '|' || b AS estr FROM msf_e0),
+msf_c0 AS MATERIALIZED (
+  SELECT DISTINCT node, node AS comp FROM (
+    SELECT a AS node FROM msf_es UNION ALL SELECT b FROM msf_es))""" + _unroll(
+        rounds, step
+    )
     if as_cte:
-        parts.append(f",\n{as_cte} AS MATERIALIZED (\n{union}\n)")
-    else:
-        parts.append("\n" + union + "\n")
-    return "".join(parts)
+        return sql + f",\n{as_cte} AS MATERIALIZED (\n{union}\n)"
+    return sql + "\n" + union + "\n"
 
 
 def _densest_body(rounds: int = DN_ROUNDS, eps_num: int = 11, eps_den: int = 10) -> str:
@@ -3574,19 +3578,9 @@ def _densest_body(rounds: int = DN_ROUNDS, eps_num: int = 11, eps_den: int = 10)
     survivors into the same rule), record the prefix stats, and pick the
     argmax-(2E/V) prefix (double division — identical IEEE754 on both
     engines), ties to the earliest round."""
-    parts = [
-        """
-, dn_e0 AS MATERIALIZED (
-  SELECT DISTINCT least(source, target) AS a, greatest(source, target) AS b
-  FROM kg_edges WHERE source <> target),
-dn_n0 AS MATERIALIZED (
-  SELECT DISTINCT node FROM (
-    SELECT a AS node FROM dn_e0 UNION ALL SELECT b FROM dn_e0))"""
-    ]
-    for r in range(1, rounds + 1):
-        parts.append(
-            f""",
-dn_st{r} AS MATERIALIZED (
+
+    def step(r: int) -> str:
+        return f"""dn_st{r} AS MATERIALIZED (
   SELECT (SELECT count(*) FROM dn_n{r - 1}) AS nv,
          (SELECT count(*) FROM dn_e{r - 1}) AS ne),
 dn_deg{r} AS (
@@ -3605,15 +3599,20 @@ dn_e{r} AS MATERIALIZED (
   SELECT e.a, e.b FROM dn_e{r - 1} e
   WHERE e.a IN (SELECT node FROM dn_n{r})
     AND e.b IN (SELECT node FROM dn_n{r}))"""
-        )
+
     peel_union = "\nUNION ALL\n".join(
         f"SELECT node, {r} AS pr FROM dn_drop{r}" for r in range(1, rounds + 1)
     )
     stats_union = "\nUNION ALL\n".join(
         f"SELECT {r - 1} AS rp, nv, ne FROM dn_st{r}" for r in range(1, rounds + 1)
     )
-    parts.append(
-        f""",
+    return f"""
+, dn_e0 AS MATERIALIZED (
+  SELECT DISTINCT least(source, target) AS a, greatest(source, target) AS b
+  FROM kg_edges WHERE source <> target),
+dn_n0 AS MATERIALIZED (
+  SELECT DISTINCT node FROM (
+    SELECT a AS node FROM dn_e0 UNION ALL SELECT b FROM dn_e0)){_unroll(rounds, step)},
 dn_peel AS ({peel_union}),
 dn_stats AS ({stats_union}),
 dn_best AS (
@@ -3626,8 +3625,6 @@ FROM dn_n0 n
 LEFT JOIN dn_peel p USING (node)
 CROSS JOIN dn_best b
 """
-    )
-    return "".join(parts)
 
 
 def _mm_body(
@@ -3645,24 +3642,9 @@ def _mm_body(
     levels can coexist in one oracle (the coarsening hierarchy)."""
     poly = _POLY.format(s="estr")
     p = prefix
-    parts = [
-        f"""
-, {p}_e0 AS (
-  SELECT DISTINCT least(source, target) AS a, greatest(source, target) AS b
-  FROM {src} WHERE source <> target),
-{p}_s0 AS (SELECT a, b, a || '|' || b AS estr FROM {p}_e0),
-"""
-        + f"{p}_k0 AS (SELECT a, b, estr, {poly} AS ex FROM {p}_s0),"
-        + f"""
-{p}_er0 AS MATERIALIZED (
-  SELECT a, b, ex, estr FROM {p}_k0
-  UNION ALL SELECT b, a, ex, estr FROM {p}_k0)"""
-    ]
-    for r in range(1, rounds + 1):
-        pri = _perm("ex", str(r))
-        parts.append(
-            f""",
-{p}_key{r} AS (SELECT a, b, estr, {pri} AS pri FROM {p}_er{r - 1}),
+
+    def step(r: int) -> str:
+        return f"""{p}_key{r} AS (SELECT a, b, estr, {_perm('ex', str(r))} AS pri FROM {p}_er{r - 1}),
 {p}_prop{r} AS (
   SELECT a, estr AS pestr FROM (
     SELECT a, estr, row_number() OVER (PARTITION BY a ORDER BY pri, estr) AS rn
@@ -3678,26 +3660,28 @@ def _mm_body(
   SELECT e.* FROM {p}_er{r - 1} e
   WHERE e.a NOT IN (SELECT n FROM {p}_mn{r})
     AND e.b NOT IN (SELECT n FROM {p}_mn{r}))"""
-        )
+
     union = "\nUNION ALL\n".join(
         f"SELECT source, target, round FROM {p}_m{r}" for r in range(1, rounds + 1)
     )
+    sql = f"""
+, {p}_e0 AS (
+  SELECT DISTINCT least(source, target) AS a, greatest(source, target) AS b
+  FROM {src} WHERE source <> target),
+{p}_s0 AS (SELECT a, b, a || '|' || b AS estr FROM {p}_e0),
+{p}_k0 AS (SELECT a, b, estr, {poly} AS ex FROM {p}_s0),
+{p}_er0 AS MATERIALIZED (
+  SELECT a, b, ex, estr FROM {p}_k0
+  UNION ALL SELECT b, a, ex, estr FROM {p}_k0){_unroll(rounds, step)}"""
     if as_cte:
-        parts.append(f",\n{as_cte} AS MATERIALIZED (\n{union}\n)")
-    else:
-        parts.append(f"\n{union}\n")
-    return "".join(parts)
+        return sql + f",\n{as_cte} AS MATERIALIZED (\n{union}\n)"
+    return sql + f"\n{union}\n"
 
 
-def _coarsen_body() -> str:
-    """Matching contraction over kg_edges — mirrors graphops.
-    coarsen_by_matching on top of the unrolled matching CTEs: matched
-    pairs collapse to their least endpoint, unmatched nodes stay, coarse
-    parallel edges aggregate (a==b rows are the contracted self-loops).
-    """
-    return (
-        _mm_body(as_cte="mm_res")
-        + """
+# One matching contraction over kg_edges: the unrolled matching, the
+# node → supernode map (a matched pair maps to its least endpoint) and
+# the kg_edges rewritten onto supernodes, aggregated by _CO_AGG.
+_CO_CTES = _mm_body(as_cte="mm_res") + """
 , co_map AS (
   SELECT source AS node, source AS super FROM mm_res
   UNION ALL SELECT target AS node, source AS super FROM mm_res
@@ -3709,12 +3693,19 @@ co_e AS (
   FROM kg_edges e
   LEFT JOIN co_map ms ON e.source = ms.node
   LEFT JOIN co_map mt ON e.target = mt.node
-)
-SELECT least(msn, mtn) AS a, greatest(msn, mtn) AS b,
+)"""
+_CO_AGG = """SELECT least(msn, mtn) AS a, greatest(msn, mtn) AS b,
        CAST(sum(w0) AS DOUBLE) AS w, CAST(count(*) AS BIGINT) AS n_multi
-FROM co_e GROUP BY least(msn, mtn), greatest(msn, mtn)
-"""
-    )
+FROM co_e GROUP BY least(msn, mtn), greatest(msn, mtn)"""
+
+
+def _coarsen_body() -> str:
+    """Matching contraction over kg_edges — mirrors graphops.
+    coarsen_by_matching on top of the unrolled matching CTEs: matched
+    pairs collapse to their least endpoint, unmatched nodes stay, coarse
+    parallel edges aggregate (a==b rows are the contracted self-loops).
+    """
+    return f"{_CO_CTES}\n{_CO_AGG}\n"
 
 
 def _coarsen_hier_body() -> str:
@@ -3724,24 +3715,9 @@ def _coarsen_hier_body() -> str:
     non-self-loop edges (namespaced CTEs) + contraction that SUMS the
     carried n_multi so original-edge provenance survives."""
     return (
-        _mm_body(as_cte="mm_res")
-        + """
-, co_map AS (
-  SELECT source AS node, source AS super FROM mm_res
-  UNION ALL SELECT target AS node, source AS super FROM mm_res
-),
-co_e AS (
-  SELECT coalesce(ms.super, e.source) AS msn,
-         coalesce(mt.super, e.target) AS mtn,
-         e.weight AS w0
-  FROM kg_edges e
-  LEFT JOIN co_map ms ON e.source = ms.node
-  LEFT JOIN co_map mt ON e.target = mt.node
-),
+        f"""{_CO_CTES},
 co1 AS MATERIALIZED (
-  SELECT least(msn, mtn) AS a, greatest(msn, mtn) AS b,
-         CAST(sum(w0) AS DOUBLE) AS w, CAST(count(*) AS BIGINT) AS n_multi
-  FROM co_e GROUP BY least(msn, mtn), greatest(msn, mtn)
+{_CO_AGG}
 ),
 co1e AS (SELECT a AS source, b AS target FROM co1 WHERE a <> b)
 """
@@ -3901,8 +3877,42 @@ def _bw_body() -> str:
     )
 
     r_max = BW_ROUNDS
-    parts = [
-        f"""
+
+    def forward(r: int) -> str:
+        return f"""bw_c{r} AS (
+  SELECT v.s, e.b AS title, CAST(sum(v.sigma) AS BIGINT) AS sigma
+  FROM bw_v{r - 1} v JOIN bw_sym e ON e.a = v.title
+  WHERE v.dist = {r - 1} GROUP BY v.s, e.b
+),
+bw_v{r} AS MATERIALIZED (
+  SELECT * FROM bw_v{r - 1}
+  UNION ALL
+  SELECT c.s, c.title, {r} AS dist, c.sigma
+  FROM bw_c{r} c LEFT JOIN bw_v{r - 1} x ON x.s = c.s AND x.title = c.title
+  WHERE x.title IS NULL
+)"""
+
+    def backward(r: int) -> str:
+        # round r of the back-sweep fills bw_d{lvl - 1} from bw_d{lvl}
+        lvl = r_max - r + 1
+        return f"""bw_d{lvl - 1} AS MATERIALIZED (
+  SELECT p.s, p.title, p.sigma, CAST(coalesce(c.delta, 0) AS BIGINT) AS delta
+  FROM (SELECT * FROM bw_v{r_max} WHERE dist = {lvl - 1}) p
+  LEFT JOIN (
+    SELECT p2.s, p2.title,
+           sum((p2.sigma * ({BW_SCALE} + d.delta)) // d.sigma) AS delta
+    FROM (SELECT * FROM bw_v{r_max} WHERE dist = {lvl - 1}) p2
+    JOIN bw_sym e ON e.a = p2.title
+    JOIN bw_d{lvl} d ON d.s = p2.s AND d.title = e.b
+    GROUP BY p2.s, p2.title
+  ) c ON c.s = p.s AND c.title = p.title
+)"""
+
+    acc = " UNION ALL ".join(
+        f"SELECT title, delta FROM bw_d{lvl}" for lvl in range(1, r_max)
+    ) or "SELECT NULL AS title, CAST(0 AS BIGINT) AS delta WHERE FALSE"
+    # Backward: bw_d{lvl} holds δ for nodes at dist lvl; deepest is 0.
+    return f"""
 , bw_sym AS MATERIALIZED (
   SELECT DISTINCT a, b FROM (
     SELECT source AS a, target AS b FROM kg_edges
@@ -3917,72 +3927,36 @@ bw_src AS MATERIALIZED (
 ),
 bw_v0 AS MATERIALIZED (
   SELECT title AS s, title, 0 AS dist, CAST(1 AS BIGINT) AS sigma FROM bw_src
-)"""
-    ]
-    for r in range(1, r_max + 1):
-        parts.append(
-            f""",
-bw_c{r} AS (
-  SELECT v.s, e.b AS title, CAST(sum(v.sigma) AS BIGINT) AS sigma
-  FROM bw_v{r - 1} v JOIN bw_sym e ON e.a = v.title
-  WHERE v.dist = {r - 1} GROUP BY v.s, e.b
-),
-bw_v{r} AS MATERIALIZED (
-  SELECT * FROM bw_v{r - 1}
-  UNION ALL
-  SELECT c.s, c.title, {r} AS dist, c.sigma
-  FROM bw_c{r} c LEFT JOIN bw_v{r - 1} x ON x.s = c.s AND x.title = c.title
-  WHERE x.title IS NULL
-)"""
-        )
-    # Backward: bw_d{lvl} holds δ for nodes at dist lvl; deepest is 0.
-    parts.append(
-        f""",
+){_unroll(r_max, forward)},
 bw_d{r_max} AS MATERIALIZED (
   SELECT s, title, sigma, CAST(0 AS BIGINT) AS delta
   FROM bw_v{r_max} WHERE dist = {r_max}
-)"""
-    )
-    for lvl in range(r_max, 0, -1):
-        parts.append(
-            f""",
-bw_d{lvl - 1} AS MATERIALIZED (
-  SELECT p.s, p.title, p.sigma, CAST(coalesce(c.delta, 0) AS BIGINT) AS delta
-  FROM (SELECT * FROM bw_v{r_max} WHERE dist = {lvl - 1}) p
-  LEFT JOIN (
-    SELECT p2.s, p2.title,
-           sum((p2.sigma * ({BW_SCALE} + d.delta)) // d.sigma) AS delta
-    FROM (SELECT * FROM bw_v{r_max} WHERE dist = {lvl - 1}) p2
-    JOIN bw_sym e ON e.a = p2.title
-    JOIN bw_d{lvl} d ON d.s = p2.s AND d.title = e.b
-    GROUP BY p2.s, p2.title
-  ) c ON c.s = p.s AND c.title = p.title
-)"""
-        )
-    acc = " UNION ALL ".join(
-        f"SELECT title, delta FROM bw_d{lvl}" for lvl in range(1, r_max)
-    ) or "SELECT NULL AS title, CAST(0 AS BIGINT) AS delta WHERE FALSE"
-    parts.append(
-        f"""
+){_unroll(r_max, backward)}
 SELECT n.title,
        CAST(coalesce(t.bc, 0) AS BIGINT) AS betweenness_scaled
 FROM bw_nodes n LEFT JOIN (
   SELECT title, sum(delta) AS bc FROM ({acc}) GROUP BY title
 ) t ON t.title = n.title
 """
-    )
-    return "".join(parts)
 
 
 def _wp_body(rounds: int = WIDEST_ROUNDS) -> str:
     """Unrolled fixed-round widest-path (max-min bottleneck) from the
     top-degree seed — mirrors graphops.widest_paths bit-for-bit (int64
-    edge weights; seed strength WIDEST_SEED_STRENGTH stands in for +inf).
-    AS MATERIALIZED: each round references the previous twice."""
+    edge weights; seed strength WIDEST_SEED_STRENGTH stands in for +inf)."""
     from knowledge_graph_spark.operators.graphops import WIDEST_SEED_STRENGTH
 
-    parts = [
-        f"""
+    def step(k: int) -> str:
+        return f"""wp_s{k} AS MATERIALIZED (
+  SELECT title, CAST(max(strength) AS BIGINT) AS strength FROM (
+    SELECT title, strength FROM wp_s{k - 1}
+    UNION ALL
+    SELECT a.b AS title, least(s.strength, a.w) AS strength
+    FROM wp_s{k - 1} s JOIN wp_adj a ON a.a = s.title
+  ) GROUP BY title
+)"""
+
+    return f"""
 , wp_sym AS MATERIALIZED (
   SELECT source AS a, target AS b, CAST(weight AS BIGINT) AS w FROM kg_edges
   UNION ALL
@@ -3991,32 +3965,28 @@ def _wp_body(rounds: int = WIDEST_ROUNDS) -> str:
 wp_adj AS MATERIALIZED (SELECT a, b, max(w) AS w FROM wp_sym GROUP BY a, b),
 wp_s0 AS MATERIALIZED (
   SELECT title, CAST({WIDEST_SEED_STRENGTH} AS BIGINT) AS strength
-  FROM (SELECT title FROM degrees ORDER BY degree DESC, title LIMIT 1)
-)"""
-    ]
-    for k in range(1, rounds + 1):
-        parts.append(
-            f""",
-wp_s{k} AS MATERIALIZED (
-  SELECT title, CAST(max(strength) AS BIGINT) AS strength FROM (
-    SELECT title, strength FROM wp_s{k - 1}
-    UNION ALL
-    SELECT a.b AS title, least(s.strength, a.w) AS strength
-    FROM wp_s{k - 1} s JOIN wp_adj a ON a.a = s.title
-  ) GROUP BY title
-)"""
-        )
-    parts.append(f"\nSELECT title, strength FROM wp_s{rounds}\n")
-    return "".join(parts)
+  FROM ({_TOP_DEGREE_SEED})
+){_unroll(rounds, step)}
+SELECT title, strength FROM wp_s{rounds}
+"""
 
 
 def _sssp_body(rounds: int = SSSP_ROUNDS) -> str:
     """Unrolled fixed-round Bellman-Ford from the top-degree seed —
     mirrors graphops.sssp_int bit-for-bit (int64 edge weights, additive
-    costs, min-fold).  AS MATERIALIZED: each round references the
-    previous twice."""
-    parts = [
-        """
+    costs, min-fold)."""
+
+    def step(k: int) -> str:
+        return f"""sp_d{k} AS MATERIALIZED (
+  SELECT title, CAST(min(dist) AS BIGINT) AS dist FROM (
+    SELECT title, dist FROM sp_d{k - 1}
+    UNION ALL
+    SELECT a.b AS title, d.dist + a.w AS dist
+    FROM sp_d{k - 1} d JOIN sp_adj a ON a.a = d.title
+  ) GROUP BY title
+)"""
+
+    return f"""
 , sp_sym AS MATERIALIZED (
   SELECT source AS a, target AS b, CAST(weight AS BIGINT) AS w FROM kg_edges
   UNION ALL
@@ -4025,23 +3995,10 @@ def _sssp_body(rounds: int = SSSP_ROUNDS) -> str:
 sp_adj AS MATERIALIZED (SELECT a, b, min(w) AS w FROM sp_sym GROUP BY a, b),
 sp_d0 AS MATERIALIZED (
   SELECT title, CAST(0 AS BIGINT) AS dist
-  FROM (SELECT title FROM degrees ORDER BY degree DESC, title LIMIT 1)
-)"""
-    ]
-    for k in range(1, rounds + 1):
-        parts.append(
-            f""",
-sp_d{k} AS MATERIALIZED (
-  SELECT title, CAST(min(dist) AS BIGINT) AS dist FROM (
-    SELECT title, dist FROM sp_d{k - 1}
-    UNION ALL
-    SELECT a.b AS title, d.dist + a.w AS dist
-    FROM sp_d{k - 1} d JOIN sp_adj a ON a.a = d.title
-  ) GROUP BY title
-)"""
-        )
-    parts.append(f"\nSELECT title, dist FROM sp_d{rounds}\n")
-    return "".join(parts)
+  FROM ({_TOP_DEGREE_SEED})
+){_unroll(rounds, step)}
+SELECT title, dist FROM sp_d{rounds}
+"""
 
 
 _C4_BODY = """
@@ -4073,24 +4030,11 @@ FROM degrees d LEFT JOIN c4_node n ON n.title = d.title
 def _hits_body(rounds: int = HITS_ROUNDS) -> str:
     """Unrolled fixed-round integer HITS over the directed rel_records —
     mirrors graphops.hits_int bit-for-bit (each round rescales by
-    x DIV greatest(1, max(x) DIV 1e6); `//` ≡ Spark's DIV on positives).
-    AS MATERIALIZED: the normalizing max re-reads each round's table."""
+    x DIV greatest(1, max(x) DIV 1e6); `//` ≡ Spark's DIV on positives)."""
     from knowledge_graph_spark.operators.graphops import HITS_NORM_SCALE
 
-    parts = [
-        """
-, hits_e AS MATERIALIZED (SELECT source AS u, target AS v FROM rel_records),
-hits_nodes AS MATERIALIZED (
-  SELECT DISTINCT title FROM (
-    SELECT u AS title FROM hits_e UNION ALL SELECT v AS title FROM hits_e
-  )
-),
-hits_h0 AS MATERIALIZED (SELECT title, CAST(1 AS BIGINT) AS h FROM hits_nodes)"""
-    ]
-    for k in range(1, rounds + 1):
-        parts.append(
-            f""",
-hits_ar{k} AS MATERIALIZED (
+    def step(k: int) -> str:
+        return f"""hits_ar{k} AS MATERIALIZED (
   SELECT e.v AS title, CAST(sum(h.h) AS BIGINT) AS x
   FROM hits_e e JOIN hits_h{k - 1} h ON h.title = e.u GROUP BY e.v
 ),
@@ -4108,9 +4052,15 @@ hits_h{k} AS MATERIALIZED (
                                       // {HITS_NORM_SCALE}) AS BIGINT) AS h
   FROM hits_hr{k}
 )"""
-        )
-    parts.append(
-        f"""
+
+    return f"""
+, hits_e AS MATERIALIZED (SELECT source AS u, target AS v FROM rel_records),
+hits_nodes AS MATERIALIZED (
+  SELECT DISTINCT title FROM (
+    SELECT u AS title FROM hits_e UNION ALL SELECT v AS title FROM hits_e
+  )
+),
+hits_h0 AS MATERIALIZED (SELECT title, CAST(1 AS BIGINT) AS h FROM hits_nodes){_unroll(rounds, step)}
 SELECT n.title,
        CAST(coalesce(a.a, 0) AS BIGINT) AS authority,
        CAST(coalesce(h.h, 0) AS BIGINT) AS hub
@@ -4118,8 +4068,6 @@ FROM hits_nodes n
 LEFT JOIN hits_a{rounds} a ON a.title = n.title
 LEFT JOIN hits_h{rounds} h ON h.title = n.title
 """
-    )
-    return "".join(parts)
 
 
 _ROLE_PROFILE_BODY = """
@@ -4144,72 +4092,9 @@ FROM rr GROUP BY role
 """
 
 
-def _scc_oracle_body(inner: int, outer: int) -> str:
-    """Unrolled FW-BW min-label SCC oracle over the tool-transition
-    edges — mirrors graphops.scc_fixed_rounds round for round (same
-    peeling, same '' sentinel for unresolved).  AS MATERIALIZED on every
-    per-round CTE: each is referenced twice downstream (the 2^rounds
-    inlining blowup the LPA oracle hit)."""
-    ctes = [
-        """tt_calls AS (
-  SELECT conv_id, turn_idx, tool FROM transcripts
-  WHERE role = 'tool' AND tool <> ''
-)""",
-        """tt_seq AS (
-  SELECT conv_id, tool,
-         coalesce(lag(tool) OVER (PARTITION BY conv_id ORDER BY turn_idx),
-                  '^START') AS prev_tool
-  FROM tt_calls
-)""",
-        "er1 AS MATERIALIZED (SELECT DISTINCT prev_tool AS a, tool AS b FROM tt_seq)",
-        "rem1 AS MATERIALIZED (SELECT a AS node FROM er1 UNION SELECT b FROM er1)",
-    ]
-    res_names = []
-    for r in range(1, outer + 1):
-        for tag, frm, to in (("f", "a", "b"), ("bk", "b", "a")):
-            ctes.append(f"{tag}{r}_0 AS (SELECT node, node AS lab FROM rem{r})")
-            for i in range(1, inner + 1):
-                ctes.append(
-                    f"""{tag}{r}_{i} AS MATERIALIZED (
-  SELECT node, min(lab) AS lab FROM (
-    SELECT node, lab FROM {tag}{r}_{i - 1}
-    UNION ALL
-    SELECT e.{to} AS node, l.lab
-    FROM er{r} e JOIN {tag}{r}_{i - 1} l ON l.node = e.{frm}
-  ) GROUP BY node)"""
-                )
-        ctes.append(
-            f"""res{r} AS MATERIALIZED (
-  SELECT f.node, f.lab AS scc_id, CAST({r} AS INT) AS resolved_round
-  FROM f{r}_{inner} f JOIN bk{r}_{inner} b ON f.node = b.node AND f.lab = b.lab)"""
-        )
-        res_names.append(f"res{r}")
-        ctes.append(
-            f"rem{r + 1} AS MATERIALIZED "
-            f"(SELECT node FROM rem{r} ANTI JOIN res{r} USING (node))"
-        )
-        ctes.append(
-            f"""er{r + 1} AS MATERIALIZED (
-  SELECT a, b FROM er{r}
-  WHERE a IN (SELECT node FROM rem{r + 1})
-    AND b IN (SELECT node FROM rem{r + 1}))"""
-        )
-    union = "\nUNION ALL\n".join(
-        f"SELECT node, scc_id, resolved_round FROM {n}" for n in res_names
-    )
-    return (
-        ", "
-        + ",\n".join(ctes)
-        + f"""
-{union}
-UNION ALL
-SELECT node, '' AS scc_id, CAST(0 AS INT) AS resolved_round FROM rem{outer + 1}
-"""
-    )
-
-
-_TOOL_TRANS_BODY = """
-, tt_calls AS (
+# Per-conversation tool-call sequence: each tool call with the tool
+# called before it ('^START' for the first).
+_TT_SEQ_CTES = """tt_calls AS (
   SELECT conv_id, turn_idx, tool FROM transcripts
   WHERE role = 'tool' AND tool <> ''
 ),
@@ -4218,7 +4103,55 @@ tt_seq AS (
          coalesce(lag(tool) OVER (PARTITION BY conv_id ORDER BY turn_idx),
                   '^START') AS prev_tool
   FROM tt_calls
-)
+)"""
+
+
+def _scc_oracle_body(inner: int, outer: int) -> str:
+    """Unrolled FW-BW min-label SCC oracle over the tool-transition
+    edges — mirrors graphops.scc_fixed_rounds round for round (same
+    peeling, same '' sentinel for unresolved).  Each outer round runs an
+    ``inner``-round forward and backward min-label sweep over the
+    remaining edges, resolves the nodes whose two labels agree and peels
+    them."""
+
+    def sweep(r: int, tag: str, frm: str, to: str) -> str:
+        return f"{tag}{r}_0 AS (SELECT node, node AS lab FROM rem{r})" + _unroll(
+            inner,
+            lambda i: f"""{tag}{r}_{i} AS MATERIALIZED (
+  SELECT node, min(lab) AS lab FROM (
+    SELECT node, lab FROM {tag}{r}_{i - 1}
+    UNION ALL
+    SELECT e.{to} AS node, l.lab
+    FROM er{r} e JOIN {tag}{r}_{i - 1} l ON l.node = e.{frm}
+  ) GROUP BY node)""",
+        )
+
+    def step(r: int) -> str:
+        return f"""{sweep(r, 'f', 'a', 'b')},
+{sweep(r, 'bk', 'b', 'a')},
+res{r} AS MATERIALIZED (
+  SELECT f.node, f.lab AS scc_id, CAST({r} AS INT) AS resolved_round
+  FROM f{r}_{inner} f JOIN bk{r}_{inner} b ON f.node = b.node AND f.lab = b.lab),
+rem{r + 1} AS MATERIALIZED (SELECT node FROM rem{r} ANTI JOIN res{r} USING (node)),
+er{r + 1} AS MATERIALIZED (
+  SELECT a, b FROM er{r}
+  WHERE a IN (SELECT node FROM rem{r + 1})
+    AND b IN (SELECT node FROM rem{r + 1}))"""
+
+    union = "\nUNION ALL\n".join(
+        f"SELECT node, scc_id, resolved_round FROM res{r}" for r in range(1, outer + 1)
+    )
+    return f""", {_TT_SEQ_CTES},
+er1 AS MATERIALIZED (SELECT DISTINCT prev_tool AS a, tool AS b FROM tt_seq),
+rem1 AS MATERIALIZED (SELECT a AS node FROM er1 UNION SELECT b FROM er1){_unroll(outer, step)}
+{union}
+UNION ALL
+SELECT node, '' AS scc_id, CAST(0 AS INT) AS resolved_round FROM rem{outer + 1}
+"""
+
+
+_TOOL_TRANS_BODY = f"""
+, {_TT_SEQ_CTES}
 SELECT prev_tool, tool,
        CAST(count(*) AS BIGINT) AS n_transitions,
        CAST(count(DISTINCT conv_id) AS BIGINT) AS n_convs
@@ -4356,16 +4289,8 @@ lpa_sym AS MATERIALIZED (
 ),
 {_lpa_rounds_sql('lpa_nodes', 'lpa_sym', 'lpa_')},
 pa_a AS (SELECT node AS title, label AS la FROM lpa_l{LPA_MAX_ITER}),
-pag_sym AS (
-  SELECT source AS a, target AS b FROM kg_edges
-  UNION SELECT target AS a, source AS b FROM kg_edges
-),
-pag_reach(node, r) AS (
-  SELECT title, title FROM kg_nodes
-  UNION
-  SELECT s.a, pag_reach.r FROM pag_sym s JOIN pag_reach ON s.b = pag_reach.node
-),
-pa_b AS (SELECT node AS title, min(r) AS lb FROM pag_reach GROUP BY node),
+{_CC_REACH},
+pa_b AS (SELECT node AS title, min(r) AS lb FROM reach GROUP BY node),
 {_pag_sql('pa_a', 'pa_b')}"""
 
 
@@ -4466,21 +4391,10 @@ def _local_search_body() -> str:
 , esel AS {_embed(_ENTITY_SEARCH_BODY)},
 sel AS (SELECT title, rk AS entity_order FROM esel),
 reps AS {_embed(_REPORTS_BODY)},
-lcomm AS {_embed('''
-, sym AS (
-  SELECT source AS a, target AS b FROM kg_edges
-  UNION SELECT target AS a, source AS b FROM kg_edges
-),
-reach(node, r) AS (
-  SELECT title, title FROM kg_nodes
-  UNION
-  SELECT s.a, reach.r FROM sym s JOIN reach ON s.b = reach.node
-)
-SELECT node AS title, min(r) AS community FROM reach GROUP BY node
-''')},
+lcomm AS {_embed(_CC_BODY)},
 lclaims AS {_embed(_CLAIMS_BODY)},
 sel_comms AS (
-  SELECT DISTINCT c.community FROM lcomm c JOIN sel USING (title)
+  SELECT DISTINCT c.component AS community FROM lcomm c JOIN sel USING (title)
 ),
 rep_rows AS (
   SELECT r.rank, r.community, r.full_content AS line,
@@ -4741,16 +4655,7 @@ SELECT source, target, description,
 FROM epacked
 """
 
-_REPORTS_BODY = """
-, sym AS (
-  SELECT source AS a, target AS b FROM kg_edges
-  UNION SELECT target AS a, source AS b FROM kg_edges
-),
-reach(node, r) AS (
-  SELECT title, title FROM kg_nodes
-  UNION
-  SELECT s.a, reach.r FROM sym s JOIN reach ON s.b = reach.node
-),
+_REPORTS_BODY = "\n, " + _CC_REACH + """,
 comm AS (SELECT node AS title, min(r) AS community FROM reach GROUP BY node),
 nctx AS (
   SELECT n.title, n.type,
@@ -5047,87 +4952,64 @@ def _jp_body(rounds: int = JP_ROUNDS) -> str:
     for the kernel's edge peeling (equivalent: winner and used joins
     constrain the peeled side to active/winner nodes anyway)."""
     poly = _POLY.format(s="node")
-    ctes = [
-        """jp_e AS MATERIALIZED (
-  SELECT source AS a, target AS b FROM kg_edges WHERE source <> target
-  UNION
-  SELECT target AS a, source AS b FROM kg_edges WHERE source <> target)""",
-        "jp_act1 AS MATERIALIZED (SELECT title AS node FROM kg_nodes)",
-    ]
-    for r in range(1, rounds + 1):
+
+    def step(r: int) -> str:
         a_r = (HASH_A * (r + 1)) % HASH_M31
         b_r = (HASH_B * (r + 1) + HASH_C) % HASH_M31
-        ctes.append(
-            f"""jp_k{r} AS MATERIALIZED (
+        sql = f"""jp_k{r} AS MATERIALIZED (
   SELECT node, (({a_r} * ({poly}) + {b_r}) % {HASH_M31}) AS key
-  FROM jp_act{r})"""
-        )
-        ctes.append(
-            f"""jp_n{r} AS MATERIALIZED (
+  FROM jp_act{r}),
+jp_n{r} AS MATERIALIZED (
   SELECT e.a AS node, max({{'k': k.key, 'n': k.node}}) AS nm
-  FROM jp_e e JOIN jp_k{r} k ON k.node = e.b GROUP BY e.a)"""
-        )
-        ctes.append(
-            f"""jp_w{r} AS MATERIALIZED (
+  FROM jp_e e JOIN jp_k{r} k ON k.node = e.b GROUP BY e.a),
+jp_w{r} AS MATERIALIZED (
   SELECT k.node FROM jp_k{r} k LEFT JOIN jp_n{r} n ON k.node = n.node
   WHERE n.nm IS NULL OR k.key > n.nm.k
-     OR (k.key = n.nm.k AND k.node > n.nm.n))"""
-        )
+     OR (k.key = n.nm.k AND k.node > n.nm.n)),
+"""
         if r == 1:
-            ctes.append(
+            sql += (
                 "jp_c1 AS MATERIALIZED (SELECT node, CAST(0 AS INT) AS color, "
-                "CAST(1 AS INT) AS round FROM jp_w1)"
-            )
-            ctes.append(
+                "CAST(1 AS INT) AS round FROM jp_w1),\n"
                 "jp_all1 AS MATERIALIZED (SELECT node, color FROM jp_c1)"
             )
         else:
-            ctes.append(
-                f"""jp_u{r} AS MATERIALIZED (
+            sql += f"""jp_u{r} AS MATERIALIZED (
   SELECT DISTINCT e.a AS node, c.color AS ucolor
   FROM jp_e e JOIN jp_w{r} w ON e.a = w.node
-  JOIN jp_all{r - 1} c ON e.b = c.node)"""
-            )
-            ctes.append(
-                f"jp_m{r} AS (SELECT node, count(*) AS m FROM jp_u{r} GROUP BY node)"
-            )
-            ctes.append(
-                f"""jp_cand{r} AS (
+  JOIN jp_all{r - 1} c ON e.b = c.node),
+jp_m{r} AS (SELECT node, count(*) AS m FROM jp_u{r} GROUP BY node),
+jp_cand{r} AS (
   SELECT w.node, CAST(u.c AS INT) AS c
   FROM jp_w{r} w LEFT JOIN jp_m{r} m ON w.node = m.node,
-  LATERAL unnest(range(0, coalesce(m.m, 0) + 1)) AS u(c))"""
-            )
-            ctes.append(
-                f"""jp_c{r} AS MATERIALIZED (
+  LATERAL unnest(range(0, coalesce(m.m, 0) + 1)) AS u(c)),
+jp_c{r} AS MATERIALIZED (
   SELECT cd.node, CAST(min(cd.c) AS INT) AS color, CAST({r} AS INT) AS round
   FROM jp_cand{r} cd
   LEFT JOIN jp_u{r} u ON cd.node = u.node AND cd.c = u.ucolor
-  WHERE u.ucolor IS NULL GROUP BY cd.node)"""
-            )
-            ctes.append(
-                f"""jp_all{r} AS MATERIALIZED (
+  WHERE u.ucolor IS NULL GROUP BY cd.node),
+jp_all{r} AS MATERIALIZED (
   SELECT node, color FROM jp_all{r - 1}
   UNION ALL SELECT node, color FROM jp_c{r})"""
-            )
-        ctes.append(
-            f"""jp_act{r + 1} AS MATERIALIZED (
+        return sql + f""",
+jp_act{r + 1} AS MATERIALIZED (
   SELECT node FROM jp_act{r}
   WHERE node NOT IN (SELECT node FROM jp_c{r}))"""
-        )
+
     union = "\nUNION ALL\n".join(
         f"SELECT node, color, round FROM jp_c{r}" for r in range(1, rounds + 1)
     )
-    return (
-        ", "
-        + ",\n".join(ctes)
-        + f"""
+    return f""", jp_e AS MATERIALIZED (
+  SELECT source AS a, target AS b FROM kg_edges WHERE source <> target
+  UNION
+  SELECT target AS a, source AS b FROM kg_edges WHERE source <> target),
+jp_act1 AS MATERIALIZED (SELECT title AS node FROM kg_nodes){_unroll(rounds, step)}
 SELECT node AS title, color, round FROM (
 {union}
 UNION ALL
 SELECT node, CAST(-1 AS INT) AS color, CAST(0 AS INT) AS round
 FROM jp_act{rounds + 1})
 """
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -5204,68 +5086,45 @@ def q_wl_colors(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ds_body(hops: int = DS_HOPS) -> str:
     """Double-sweep oracle: two unrolled BFS expansions with an argmax
     restart between them (namespaced ds_ so _bfs_body can coexist)."""
-    sql = """
+    return f"""
 , ds_adj AS MATERIALIZED (
   SELECT source AS a, target AS b FROM kg_edges
   UNION SELECT target AS a, source AS b FROM kg_edges),
-ds_seed1 AS MATERIALIZED (
-  SELECT title FROM degrees ORDER BY degree DESC, title ASC LIMIT 1),
-ds_a0 AS MATERIALIZED (SELECT title, 0 AS hop FROM ds_seed1)"""
-    for r in range(hops):
-        sql += f""",
-ds_a{r + 1} AS MATERIALIZED (
-  SELECT title, min(hop) AS hop FROM (
-    SELECT title, hop FROM ds_a{r}
-    UNION ALL
-    SELECT ds_adj.b AS title, ds_a{r}.hop + 1 AS hop
-    FROM ds_a{r} JOIN ds_adj ON ds_a{r}.title = ds_adj.a
-  ) GROUP BY title)"""
-    sql += f""",
+ds_seed1 AS MATERIALIZED ({_TOP_DEGREE_SEED}),
+ds_a0 AS MATERIALIZED (SELECT title, 0 AS hop FROM ds_seed1){_min_hop_rounds(hops, 'ds_a', 'ds_adj')},
 ds_seed2 AS MATERIALIZED (
   SELECT title FROM ds_a{hops} ORDER BY hop DESC, title ASC LIMIT 1),
-ds_b0 AS MATERIALIZED (SELECT title, 0 AS hop FROM ds_seed2)"""
-    for r in range(hops):
-        sql += f""",
-ds_b{r + 1} AS MATERIALIZED (
-  SELECT title, min(hop) AS hop FROM (
-    SELECT title, hop FROM ds_b{r}
-    UNION ALL
-    SELECT ds_adj.b AS title, ds_b{r}.hop + 1 AS hop
-    FROM ds_b{r} JOIN ds_adj ON ds_b{r}.title = ds_adj.a
-  ) GROUP BY title)"""
-    sql += f"""
+ds_b0 AS MATERIALIZED (SELECT title, 0 AS hop FROM ds_seed2){_min_hop_rounds(hops, 'ds_b', 'ds_adj')}
 SELECT (SELECT title FROM ds_seed1) AS seed_a,
        (SELECT title FROM ds_seed2) AS seed_b,
        (SELECT CAST(max(hop) AS INT) FROM ds_a{hops}) AS ecc_a_lb,
        CAST(max(hop) AS INT) AS diameter_lb,
        CAST(count(*) AS BIGINT) AS n_reached
 FROM ds_b{hops}"""
-    return sql
 
 
 def _wl_body(rounds: int = WL_ROUNDS) -> str:
     """Unrolled 1-WL refinement: per round, numeric-sorted neighbour-color
     string_agg + the shared polynomial hash of 'color|c1,c2,...'."""
-    sql = f"""
-, wl_adj AS MATERIALIZED (
-  SELECT source AS a, target AS b FROM kg_edges WHERE source <> target
-  UNION SELECT target AS a, source AS b FROM kg_edges WHERE source <> target),
-wl_c0 AS MATERIALIZED (SELECT title, {_POLY.format(s="type")} AS c FROM kg_nodes)"""
     sig = _POLY.format(s="(CAST(c AS VARCHAR) || '|' || coalesce(sig, ''))")
-    for r in range(1, rounds + 1):
-        sql += f""",
-wl_n{r} AS (
+
+    def step(r: int) -> str:
+        return f"""wl_n{r} AS (
   SELECT x.title, x.c, n.sig FROM wl_c{r - 1} x LEFT JOIN (
     SELECT wl_adj.a AS title,
            string_agg(CAST(y.c AS VARCHAR), ',' ORDER BY y.c) AS sig
     FROM wl_adj JOIN wl_c{r - 1} y ON y.title = wl_adj.b
     GROUP BY wl_adj.a) n USING (title)),
 wl_c{r} AS MATERIALIZED (SELECT title, {sig} AS c FROM wl_n{r})"""
-    sql += f"""
+
+    return f"""
+, wl_adj AS MATERIALIZED (
+  SELECT source AS a, target AS b FROM kg_edges WHERE source <> target
+  UNION SELECT target AS a, source AS b FROM kg_edges WHERE source <> target),
+wl_c0 AS MATERIALIZED (SELECT title, {_POLY.format(s="type")} AS c FROM kg_nodes){_unroll(rounds, step)}
 SELECT title, CAST(c AS BIGINT) AS wl_color,
        CAST(count(*) OVER (PARTITION BY c) AS BIGINT) AS class_size
 FROM wl_c{rounds}"""
-    return sql
 
 
 # ---------------------------------------------------------------------------
@@ -5292,16 +5151,30 @@ def q_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _textrank_body(rounds: int = TEXTRANK_ROUNDS) -> str:
     """Unrolled per-conversation integer PageRank over the turn-similarity
     graph — mirrors assemble.textrank_turns / graphops.grouped_pagerank
-    bit-for-bit (`//` ≡ Spark DIV on positives; AS MATERIALIZED because
-    each round references the previous twice)."""
+    bit-for-bit (`//` ≡ Spark DIV on positives)."""
     from knowledge_graph_spark.operators.graphops import (
         PR_DAMP_DEN,
         PR_DAMP_NUM,
         PR_SCALE,
     )
 
-    parts = [
-        f"""
+    def step(k: int) -> str:
+        return f"""txr_c{k} AS MATERIALIZED (
+  SELECT a.conv_id, a.v AS node,
+         CAST(sum((r.rank_scaled * {PR_DAMP_NUM} * a.w)
+                  // ({PR_DAMP_DEN} * a.outw)) AS BIGINT) AS inflow
+  FROM txr_adj a
+  JOIN txr_r{k - 1} r ON r.conv_id = a.conv_id AND r.node = a.u
+  GROUP BY a.conv_id, a.v),
+txr_r{k} AS MATERIALIZED (
+  SELECT n.conv_id, n.node,
+         CAST(({PR_SCALE} * {PR_DAMP_DEN - PR_DAMP_NUM})
+                // ({PR_DAMP_DEN} * n.n_g)
+              + coalesce(c.inflow, 0) AS BIGINT) AS rank_scaled
+  FROM txr_nodes n
+  LEFT JOIN txr_c{k} c ON n.conv_id = c.conv_id AND n.node = c.node)"""
+
+    return f"""
 , txr_tok AS MATERIALIZED (
   SELECT conv_id, turn_idx AS i,
          unnest(list_distinct(list_filter(regexp_split_to_array(lower(trim(text)),
@@ -5327,30 +5200,8 @@ txr_adj AS MATERIALIZED (
     ON s.conv_id = o.conv_id AND s.u = o.u),
 txr_r0 AS MATERIALIZED (
   SELECT conv_id, node, CAST({PR_SCALE} // n_g AS BIGINT) AS rank_scaled
-  FROM txr_nodes)"""
-    ]
-    for k in range(1, rounds + 1):
-        parts.append(
-            f""",
-txr_c{k} AS MATERIALIZED (
-  SELECT a.conv_id, a.v AS node,
-         CAST(sum((r.rank_scaled * {PR_DAMP_NUM} * a.w)
-                  // ({PR_DAMP_DEN} * a.outw)) AS BIGINT) AS inflow
-  FROM txr_adj a
-  JOIN txr_r{k - 1} r ON r.conv_id = a.conv_id AND r.node = a.u
-  GROUP BY a.conv_id, a.v),
-txr_r{k} AS MATERIALIZED (
-  SELECT n.conv_id, n.node,
-         CAST(({PR_SCALE} * {PR_DAMP_DEN - PR_DAMP_NUM})
-                // ({PR_DAMP_DEN} * n.n_g)
-              + coalesce(c.inflow, 0) AS BIGINT) AS rank_scaled
-  FROM txr_nodes n
-  LEFT JOIN txr_c{k} c ON n.conv_id = c.conv_id AND n.node = c.node)"""
-        )
-    parts.append(
-        f"\nSELECT conv_id, node AS turn_idx, rank_scaled FROM txr_r{rounds}"
-    )
-    return "".join(parts)
+  FROM txr_nodes){_unroll(rounds, step)}
+SELECT conv_id, node AS turn_idx, rank_scaled FROM txr_r{rounds}"""
 
 
 def q_source_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5596,31 +5447,10 @@ def oracle_sql() -> dict[str, str]:
             FROM kg_nodes n LEFT JOIN alias_dict a ON upper(n.title) = upper(a.alias)
             """
         ),
-        "connected_components": _oracle(
-            """
-            , sym AS (
-                SELECT source AS a, target AS b FROM kg_edges
-                UNION SELECT target AS a, source AS b FROM kg_edges
-            ),
-            reach(node, r) AS (
-                SELECT title, title FROM kg_nodes
-                UNION
-                SELECT s.a, reach.r FROM sym s JOIN reach ON s.b = reach.node
-            )
-            SELECT node AS title, min(r) AS component FROM reach GROUP BY node
-            """
-        ),
+        "connected_components": _oracle(_CC_BODY),
         "largest_component": _oracle(
-            """
-            , sym AS (
-              SELECT source AS a, target AS b FROM kg_edges
-              UNION SELECT target AS a, source AS b FROM kg_edges
-            ),
-            reach(node, r) AS (
-              SELECT title, title FROM kg_nodes
-              UNION
-              SELECT s.a, reach.r FROM sym s JOIN reach ON s.b = reach.node
-            ),
+            f"""
+            , {_CC_REACH},
             comp AS (SELECT node AS title, min(r) AS component FROM reach GROUP BY node),
             top AS (
               SELECT component FROM comp GROUP BY component
@@ -5631,37 +5461,11 @@ def oracle_sql() -> dict[str, str]:
         ),
         "communities_lpa": _oracle(_lpa_body()),
         # distributed-path twins: identical fixpoints, so identical oracles
-        "cc_dist": _oracle(
-            """
-            , sym AS (
-                SELECT source AS a, target AS b FROM kg_edges
-                UNION SELECT target AS a, source AS b FROM kg_edges
-            ),
-            reach(node, r) AS (
-                SELECT title, title FROM kg_nodes
-                UNION
-                SELECT s.a, reach.r FROM sym s JOIN reach ON s.b = reach.node
-            )
-            SELECT node AS title, min(r) AS component FROM reach GROUP BY node
-            """
-        ),
+        "cc_dist": _oracle(_CC_BODY),
         "lpa_dist": _oracle(_lpa_body()),
         # warm-start CC converges to the same init-independent fixpoint,
         # so its oracle is the plain full-graph min-reachability CTE
-        "cc_warm": _oracle(
-            """
-            , sym AS (
-                SELECT source AS a, target AS b FROM kg_edges
-                UNION SELECT target AS a, source AS b FROM kg_edges
-            ),
-            reach(node, r) AS (
-                SELECT title, title FROM kg_nodes
-                UNION
-                SELECT s.a, reach.r FROM sym s JOIN reach ON s.b = reach.node
-            )
-            SELECT node AS title, min(r) AS component FROM reach GROUP BY node
-            """
-        ),
+        "cc_warm": _oracle(_CC_BODY),
         "lpa_warm": _oracle(_lpa_warm_body()),
         "pr_warm": _oracle(_pr_warm_body()),
         "partition_agreement": _oracle(_partition_agreement_body()),
@@ -5833,16 +5637,8 @@ def oracle_sql() -> dict[str, str]:
             """
         ),
         "community_weight": _oracle(
-            """
-            , sym AS (
-              SELECT source AS a, target AS b FROM kg_edges
-              UNION SELECT target AS a, source AS b FROM kg_edges
-            ),
-            reach(node, r) AS (
-              SELECT title, title FROM kg_nodes
-              UNION
-              SELECT s.a, reach.r FROM sym s JOIN reach ON s.b = reach.node
-            ),
+            f"""
+            , {_CC_REACH},
             comm AS (SELECT node AS title, min(r) AS community FROM reach GROUP BY node),
             member_units AS (
               SELECT DISTINCT c.community, unnest(string_split(n.source_ids, ',')) AS unit

@@ -208,10 +208,6 @@ class TableIO:
         finally:
             stream.close()
 
-    def text_exists(self, relpath: str) -> bool:
-        fs, p = self._fs_path(relpath)
-        return fs.exists(p)
-
     def remove(self, relpath: str) -> None:
         """Recursively delete a file or directory under ``base``."""
         fs, p = self._fs_path(relpath)

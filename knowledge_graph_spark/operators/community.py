@@ -310,7 +310,6 @@ def hierarchical_lpa(
     max_cluster_size: int = 10,
     max_levels: int = 3,
     node_col: str = "title",
-    iter_schedule: list[int] | None = None,
     **kwargs,
 ) -> DataFrame:
     """Emulates hierarchical clustering (reference hierarchical Leiden,
@@ -320,35 +319,12 @@ def hierarchical_lpa(
     Returns (title, community, level) with one row per node per level at
     which that node's community was (re)assigned — mirroring the
     reference's {level → node → community} map (leiden.py:12-42).
-
-    ``iter_schedule``: per-level LPA round budgets, e.g. [10, 2, 1] —
-    level L runs max_iter=iter_schedule[min(L, len-1)].  Synchronous LPA
-    is deterministic, so re-running the SAME budget on an oversized
-    community whose induced subgraph equals its full-graph label
-    environment (e.g. the community is a whole connected component)
-    reproduces itself and can never split — the multi-level analogue of
-    Leiden's resolution is a DECREASING round budget: fewer rounds bound
-    label spread to fewer hops, so each re-cluster is genuinely finer
-    (reference leiden.py:45-61 gets the same effect from graspologic's
-    internal re-seeding).  None (default) keeps the single-budget
-    behavior bit-identical to previous releases.
+    ``kwargs`` pass through to every level's label_propagation.
     """
-
-    if iter_schedule is not None and not iter_schedule:
-        raise ValueError("iter_schedule must be None or a non-empty list")
-
-    def _iters(level: int) -> dict:
-        if iter_schedule is None:
-            return kwargs
-        return {
-            **kwargs,
-            "max_iter": iter_schedule[min(level, len(iter_schedule) - 1)],
-        }
-
     out = None
-    current = label_propagation(
-        nodes, edges, node_col=node_col, **_iters(0)
-    ).withColumn("level", F.lit(0))
+    current = label_propagation(nodes, edges, node_col=node_col, **kwargs).withColumn(
+        "level", F.lit(0)
+    )
     for level in range(max_levels):
         out = current if out is None else out.unionByName(current)
         sizes = current.groupBy("community").agg(F.count("*").alias("n"))
@@ -372,9 +348,7 @@ def hierarchical_lpa(
             .drop("_cs", "_ct")
         )
         sub_nodes = member.select(node_col)
-        relabel = label_propagation(
-            sub_nodes, e, node_col=node_col, **_iters(level + 1)
-        )
+        relabel = label_propagation(sub_nodes, e, node_col=node_col, **kwargs)
         # qualify labels so communities from different parents never merge
         current = (
             relabel.join(member.select(node_col, F.col("community").alias("parent")), node_col)

@@ -104,6 +104,28 @@ def _ordinal() -> Column:
     return F.struct(F.col("conv_id"), F.col("text_unit_id"), F.col("rec_idx"))
 
 
+def _merged_node_columns(merged: DataFrame, max_source_ids: int | None) -> DataFrame:
+    """Node columns from the merged (name, descs, sids, last_type) groups:
+    the last non-empty type, the sorted descriptions joined by newline,
+    and the (optionally capped) sorted source ids."""
+    sids = F.col("sids") if max_source_ids is None else F.slice("sids", 1, max_source_ids)
+    merged = merged.withColumn("source_id", sids)
+    return merged.select(
+        F.col("name").alias("title"),
+        F.coalesce(F.col("last_type.type"), F.lit("")).alias("type"),
+        # drop empty descriptions contributed by auto-created endpoints when
+        # a real description exists; join like the reference ("\n")
+        F.concat_ws(
+            "\n",
+            F.when(
+                F.size(F.filter(F.col("descs"), lambda d: d != F.lit(""))) > 0,
+                F.filter(F.col("descs"), lambda d: d != F.lit("")),
+            ).otherwise(F.col("descs")),
+        ).alias("description"),
+        "source_id",
+    )
+
+
 def merge_nodes_single(
     entities: DataFrame,
     auto_nodes: DataFrame | None = None,
@@ -127,22 +149,7 @@ def merge_nodes_single(
         F.array_sort(F.collect_set("source_id")).alias("sids"),
         F.max(F.when(F.col("type") != "", F.struct("ord", "type"))).alias("last_type"),
     )
-    sids = F.col("sids") if max_source_ids is None else F.slice("sids", 1, max_source_ids)
-    merged = merged.withColumn("source_id", sids)
-    return merged.select(
-        F.col("name").alias("title"),
-        F.coalesce(F.col("last_type.type"), F.lit("")).alias("type"),
-        # drop empty descriptions contributed by auto-created endpoints when
-        # a real description exists; join like the reference ("\n")
-        F.concat_ws(
-            "\n",
-            F.when(
-                F.size(F.filter(F.col("descs"), lambda d: d != F.lit(""))) > 0,
-                F.filter(F.col("descs"), lambda d: d != F.lit("")),
-            ).otherwise(F.col("descs")),
-        ).alias("description"),
-        "source_id",
-    )
+    return _merged_node_columns(merged, max_source_ids)
 
 
 def merge_nodes(
@@ -177,20 +184,7 @@ def merge_nodes(
         F.array_sort(F.array_distinct(F.flatten(F.collect_list("sids")))).alias("sids"),
         F.max("last_type").alias("last_type"),
     )
-    sids = F.col("sids") if max_source_ids is None else F.slice("sids", 1, max_source_ids)
-    merged = merged.withColumn("source_id", sids)
-    return merged.select(
-        F.col("name").alias("title"),
-        F.coalesce(F.col("last_type.type"), F.lit("")).alias("type"),
-        F.concat_ws(
-            "\n",
-            F.when(
-                F.size(F.filter(F.col("descs"), lambda d: d != F.lit(""))) > 0,
-                F.filter(F.col("descs"), lambda d: d != F.lit("")),
-            ).otherwise(F.col("descs")),
-        ).alias("description"),
-        "source_id",
-    )
+    return _merged_node_columns(merged, max_source_ids)
 
 
 def merge_edges(relationships: DataFrame) -> DataFrame:

@@ -1,8 +1,6 @@
 """Chunker semantics (SURVEY.md C1/C2): window size/step, short tail,
 deterministic content-hash ids."""
 
-from pyspark.sql import functions as F
-
 from knowledge_graph_spark.operators.chunk import chunk_windows, split_text_units
 
 

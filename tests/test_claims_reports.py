@@ -6,7 +6,6 @@ from __future__ import annotations
 import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
 from knowledge_graph_spark.operators import claims as C
 from knowledge_graph_spark.operators import reports as R

@@ -339,67 +339,11 @@ def test_lpa_warm_start_from_converged_labels_is_stable(spark):
 
 
 # ---------------------------------------------------------------------------
-# Round-5: depth-L hierarchy (VERDICT r4 #5) — coarsen_communities +
-# hierarchical_lpa iter_schedule.
+# Round-5: depth-L hierarchy (VERDICT r4 #5) — coarsen_communities.
 # ---------------------------------------------------------------------------
 
 from hypothesis import HealthCheck, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
-
-
-def test_hierarchical_lpa_iter_schedule_constant_is_default(spark):
-    """iter_schedule=[k, k, ...] with k = the default max_iter must be
-    bit-identical to omitting the schedule (the opt-in path changes
-    nothing unless the budgets actually differ)."""
-    edges = []
-    for base in (0, 4):
-        for i in range(4):
-            for j in range(i + 1, 4):
-                edges.append((f"n{base + i}", f"n{base + j}", 5.0))
-    edges.append(("n0", "n4", 0.1))
-    nodes = spark.createDataFrame([(f"n{i}",) for i in range(8)], "title string")
-    e = spark.createDataFrame(edges, "source string, target string, weight double")
-    plain = sorted(
-        map(tuple, hierarchical_lpa(nodes, e, max_cluster_size=4, max_levels=3).collect())
-    )
-    sched = sorted(
-        map(
-            tuple,
-            hierarchical_lpa(
-                nodes, e, max_cluster_size=4, max_levels=3, iter_schedule=[10, 10, 10]
-            ).collect(),
-        )
-    )
-    assert plain == sched
-
-
-def test_hierarchical_lpa_iter_schedule_containment(spark):
-    """A decreasing round budget per level still yields legal R10
-    containment: every level-(L+1) community's members share ONE
-    level-L community (qualified labels make this structural)."""
-    import itertools
-
-    names = [f"C{c}_{i}" for c in range(2) for i in range(10)]
-    nodes = spark.createDataFrame([(x,) for x in names], "title string")
-    rows = []
-    for c in range(2):
-        members = [f"C{c}_{i}" for i in range(10)]
-        rows += [(a, b, 5.0) for a, b in itertools.combinations(members, 2)]
-    rows.append(("C0_0", "C1_0", 0.1))
-    e = spark.createDataFrame(rows, "source string, target string, weight double")
-    lev = hierarchical_lpa(
-        nodes, e, max_cluster_size=4, max_levels=3, iter_schedule=[10, 2, 1]
-    )
-    rows_ = lev.collect()
-    by_level = {}
-    for r in rows_:
-        by_level.setdefault(r.level, {})[r.title] = r.community
-    levels = sorted(by_level)
-    for lo, hi in zip(levels, levels[1:]):
-        parents = {}
-        for t, c in by_level[hi].items():
-            parents.setdefault(c, set()).add(by_level[lo][t])
-        assert all(len(p) == 1 for p in parents.values()), (lo, hi, parents)
 
 
 @pytest.mark.usefixtures("spark")

@@ -262,9 +262,10 @@ ORPHAN_EXEMPT_NAMES = {
 def test_package_has_no_orphans():
     """Every module-level function, class and assigned name in the
     package is read somewhere in the repo (the package, the jobs, the
-    tools, the bench, the gates or the tests), and every module-level
-    import is read by its own module.  A kernel deleted with its gate
-    must not leave its helpers, constants or imports behind.
+    tools, the bench, the gates or the tests), and every import in any
+    of those files, at module level or inside a function, is read in
+    its own file.  A kernel deleted with its gate must not leave its
+    helpers, constants or imports behind.
 
     Names match by spelling alone, which over-approximates what is
     read: a read is a Name load, an attribute name or a name imported
@@ -288,18 +289,18 @@ def test_package_has_no_orphans():
                 elif isinstance(n, ast.ImportFrom):
                     names |= {a.name for a in n.names}
             reads.append((stmt, names))
+        file_loads = _loads(tree)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                for a in node.names:
+                    bound = a.asname or a.name.split(".")[0]
+                    if bound not in file_loads:
+                        orphans.append(f"{rel}:{node.lineno}: import {bound}")
         if not rel.startswith("knowledge_graph_spark/") or rel in ORPHAN_EXEMPT_FILES:
             continue
-        module_loads = _loads(tree)
-        for stmt in tree.body:
-            defs.append((rel, stmt))
-            if isinstance(stmt, ast.ImportFrom) and stmt.module == "__future__":
-                continue
-            if isinstance(stmt, (ast.Import, ast.ImportFrom)):
-                for a in stmt.names:
-                    bound = a.asname or a.name.split(".")[0]
-                    if bound not in module_loads:
-                        orphans.append(f"{rel}: import {bound}")
+        defs.extend((rel, stmt) for stmt in tree.body)
     for rel, stmt in defs:
         for name in sorted(_module_bindings(stmt)):
             if name.startswith("__") and name.endswith("__"):

@@ -3,7 +3,6 @@
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from knowledge_graph_spark.operators.graph_embedding import (
     as_vectors,

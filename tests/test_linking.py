@@ -1,7 +1,5 @@
 """Alias linking, MinHash-LSH blocking, canonicalization via CC."""
 
-from pyspark.sql import functions as F
-
 from knowledge_graph_spark.operators.linking import (
     apply_canonicalization,
     canonical_map,

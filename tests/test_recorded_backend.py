@@ -17,7 +17,6 @@ backend.
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F

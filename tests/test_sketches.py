@@ -178,7 +178,6 @@ def test_hyperball_registers_equal_true_ball_union(spark):
     e = spark.createDataFrame(edges, "source string, target string")
     # reach inside: re-run the merge loop and inspect the register table
     from pyspark.sql import functions as F
-    from knowledge_graph_spark.operators.sketches import hll_estimate
 
     # replicate hyperball's internals up to the register table
     ee = e.select(F.col("source").alias("a"), F.col("target").alias("b")).distinct()
